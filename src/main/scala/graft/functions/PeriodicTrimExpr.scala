@@ -19,14 +19,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * `s − k`; every token covered by a redundant gram drops; kept tokens
   * re-join with single spaces. Trailing partial repeats survive.
   *
-  * Tokens are whitespace-delimited byte spans (java.util.regex \s without
-  * UNICODE_CHARACTER_CLASS — same scan as [[ShingleHashesExpr]]: no
-  * multi-byte UTF-8 unit contains an ASCII byte, so byte scanning equals
-  * the `\s+` split). Gram equality reduces to per-position span equality
-  * folded into run lengths, so the whole kernel is O(tokens) compares +
-  * one output copy — no gram materialization. Capability analogue of the
-  * reference's code-generated scalar calls
-  * (flink-libraries/flink-table/.../codegen/CodeGenerator.scala). */
+  * Tokens are whitespace-delimited byte spans from the shared
+  * [[ShingleHashesExpr.tokenize]] scan (the `\s+` split). Gram equality
+  * reduces to per-position span equality folded into run lengths, so the
+  * whole kernel is O(tokens) compares + one output copy — no gram
+  * materialization. Capability analogue of the reference's code-generated
+  * scalar calls (flink-libraries/flink-table/.../codegen/CodeGenerator.scala). */
 case class PeriodicTrimExpr(child: Expression, k: Int) extends UnaryExpression {
   require(k >= 1, s"period must be >= 1, got $k")
 
@@ -48,32 +46,9 @@ case class PeriodicTrimExpr(child: Expression, k: Int) extends UnaryExpression {
 }
 
 object PeriodicTrimExpr {
-  // java.util.regex \s without UNICODE_CHARACTER_CLASS: [ \t\n\x0B\f\r]
-  private def isWs(b: Byte): Boolean =
-    b == 0x20 || b == 0x09 || b == 0x0A || b == 0x0B || b == 0x0C || b == 0x0D
-
   /** Referenced from generated code — must stay public and static-shaped. */
   def trim(s: UTF8String, k: Int): UTF8String = {
-    val bytes = s.getBytes
-    // token spans
-    var cap = 16
-    var starts = new Array[Int](cap)
-    var ends = new Array[Int](cap)
-    var n = 0
-    var i = 0
-    while (i < bytes.length) {
-      while (i < bytes.length && isWs(bytes(i))) i += 1
-      if (i < bytes.length) {
-        val st = i
-        while (i < bytes.length && !isWs(bytes(i))) i += 1
-        if (n == cap) {
-          cap *= 2
-          starts = java.util.Arrays.copyOf(starts, cap)
-          ends = java.util.Arrays.copyOf(ends, cap)
-        }
-        starts(n) = st; ends(n) = i; n += 1
-      }
-    }
+    val TokenSpans(bytes, starts, ends, n) = ShingleHashesExpr.tokenize(s)
     if (n == 0) return UTF8String.EMPTY_UTF8
 
     def spanEq(a: Int, b: Int): Boolean = {

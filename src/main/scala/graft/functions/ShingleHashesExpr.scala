@@ -66,10 +66,6 @@ object ShingleHashesExpr {
   /** Referenced from generated code — must stay public and static-shaped. */
   def empty(): ArrayData = UnsafeArrayData.fromPrimitiveArray(Array.emptyLongArray)
 
-  // java.util.regex \s without UNICODE_CHARACTER_CLASS: [ \t\n\x0B\f\r]
-  private def isWs(b: Byte): Boolean =
-    b == 0x20 || b == 0x09 || b == 0x0A || b == 0x0B || b == 0x0C || b == 0x0D
-
   /** Referenced from generated code — must stay public and static-shaped.
     * Bit-identical to `Hashes.shingleHashes(text, n)`: FNV-1a over each
     * n-token window's bytes joined by single spaces, deduped and sorted
@@ -97,8 +93,15 @@ object ShingleHashesExpr {
   def posHashes(s: UTF8String, n: Int): ArrayData =
     UnsafeArrayData.fromPrimitiveArray(raw(s, n))
 
-  /** One pass over the UTF8String bytes → window hashes in position order. */
-  private def raw(s: UTF8String, n: Int): Array[Long] = {
+  // java.util.regex \s without UNICODE_CHARACTER_CLASS: [ \t\n\x0B\f\r]
+  private def isWs(b: Byte): Boolean =
+    b == 0x20 || b == 0x09 || b == 0x0A || b == 0x0B || b == 0x0C || b == 0x0D
+
+  /** The byte-span tokenizer every text kernel here shares: the `\s+`
+    * split with empty tokens dropped, as whitespace-delimited spans of the
+    * UTF8String bytes (no multi-byte UTF-8 unit contains an ASCII byte, so
+    * byte scanning equals the regex split). */
+  def tokenize(s: UTF8String): TokenSpans = {
     val bytes = s.getBytes
     val len = bytes.length
     var starts = new Array[Int](16)
@@ -119,6 +122,12 @@ object ShingleHashesExpr {
         nt += 1
       }
     }
+    TokenSpans(bytes, starts, ends, nt)
+  }
+
+  /** One pass over the UTF8String bytes → window hashes in position order. */
+  private def raw(s: UTF8String, n: Int): Array[Long] = {
+    val TokenSpans(bytes, starts, ends, nt) = tokenize(s)
     if (nt < n) return Array.emptyLongArray
     val m = nt - n + 1
     val out = new Array[Long](m)
@@ -192,3 +201,6 @@ object PosShingleHashesExpr {
   def apply(c: Column, n: Int): Column =
     GraftExprBridge.column(PosShingleHashesExpr(GraftExprBridge.expression(c), n))
 }
+
+/** Token t of `bytes` is the span [starts(t), ends(t)), for t < count. */
+final case class TokenSpans(bytes: Array[Byte], starts: Array[Int], ends: Array[Int], count: Int)

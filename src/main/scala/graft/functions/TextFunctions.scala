@@ -8,7 +8,9 @@ import org.apache.spark.sql.functions._
   *
   * Everything here is a `Column` expression over built-in functions (no UDF)
   * unless a genuine per-row imperative loop is required (MinHash/SimHash
-  * signatures — see [[Hashes]]); expressions keep the hot path inside
+  * signatures — see [[Hashes]] — and the sorted n-gram run scans of the
+  * repetition signals — see [[NgramRepetitionExpr]]), which run as native
+  * codegen'd Catalyst expressions; expressions keep the hot path inside
   * Catalyst and make the math replicable by an external SQL oracle.
   */
 object TextFunctions {
@@ -103,17 +105,6 @@ object TextFunctions {
       greatest(size(toks), lit(1)).cast("double")
   }
 
-  /** Word n-grams in document order, duplicates KEPT (contrast
-    * [[wordShingles]], the distinct set) — the occurrence stream the
-    * repetition signals below count over. */
-  def posNgrams(text: Column, n: Int): Column = {
-    val toks = tokens(text)
-    when(size(toks) >= n,
-      transform(sequence(lit(0), size(toks) - n),
-        i => array_join(slice(toks, i + 1, lit(n)), " ")))
-      .otherwise(lit(Array.empty[String]))
-  }
-
   /** Gopher repetition signal: fraction of n-gram OCCURRENCES that are
     * duplicates of an earlier occurrence — (total - distinct) / total, 0
     * for docs shorter than n tokens. Counted over hashed windows
@@ -131,44 +122,18 @@ object TextFunctions {
     * covered by occurrences of its MOST FREQUENT n-gram (count × n-gram
     * char length / text char length). Tie-break: lexicographically
     * smallest among the most frequent — a total order, so deterministic.
-    * One sorted-array run scan via the `aggregate` HOF, still per-row. */
-  def topNgramCharFrac(text: Column, n: Int): Column = {
-    val sorted = array_sort(posNgrams(text, n))
-    val best = aggregate(sorted,
-      struct(lit("").as("prev"), lit(0).as("run"), lit("").as("best"), lit(0).as("bestRun")),
-      (acc, x) => {
-        val run = when(acc.getField("prev") === x, acc.getField("run") + 1).otherwise(lit(1))
-        val better = run > acc.getField("bestRun")
-        struct(x.as("prev"), run.as("run"),
-          when(better, x).otherwise(acc.getField("best")).as("best"),
-          when(better, run).otherwise(acc.getField("bestRun")).as("bestRun"))
-      })
-    (best.getField("bestRun").cast("double") * length(best.getField("best")).cast("double")) /
-      greatest(length(text), lit(1)).cast("double")
-  }
+    * Native kernel [[NgramRepetitionExpr]]: one sort of the token windows
+    * by byte order and one run scan, inside whole-stage codegen. */
+  def topNgramCharFrac(text: Column, n: Int): Column =
+    NgramRepetitionExpr(text, n, dup = false)
 
   /** Gopher repetition signal (the 5..10-gram family): fraction of the
     * document's characters inside DUPLICATED n-grams — sum over n-grams
     * occurring >= 2 times of count × char length, over text char length.
-    * Same per-row sorted run scan, accumulating closed runs. */
-  def dupNgramCharFrac(text: Column, n: Int): Column = {
-    val sorted = array_sort(posNgrams(text, n))
-    val total = aggregate(sorted,
-      struct(lit("").as("prev"), lit(0).as("run"), lit(0L).as("acc")),
-      (acc, x) => {
-        val cont = acc.getField("prev") === x
-        val closed = when(!cont && acc.getField("run") >= 2,
-          acc.getField("run").cast("long") * length(acc.getField("prev")).cast("long"))
-          .otherwise(lit(0L))
-        struct(x.as("prev"),
-          when(cont, acc.getField("run") + 1).otherwise(lit(1)).as("run"),
-          (acc.getField("acc") + closed).as("acc"))
-      },
-      acc => acc.getField("acc") + when(acc.getField("run") >= 2,
-        acc.getField("run").cast("long") * length(acc.getField("prev")).cast("long"))
-        .otherwise(lit(0L)))
-    total.cast("double") / greatest(length(text), lit(1)).cast("double")
-  }
+    * Same native kernel [[NgramRepetitionExpr]], accumulating the runs of
+    * length >= 2. */
+  def dupNgramCharFrac(text: Column, n: Int): Column =
+    NgramRepetitionExpr(text, n, dup = true)
 
   /** Type-token ratio (lexical diversity). */
   def typeTokenRatio(text: Column): Column =

@@ -82,6 +82,14 @@ object GraphOps {
     * Ranks are integer micro-units: rank0 = 1e6; each round
     * rank' = 150000 + (85 * sum(rank(src) div outdeg(src))) div 100. */
   def pageRankScaled(edges: DataFrame, iters: Int): DataFrame = {
+    // fuse cadence: how many rounds compile into one job between
+    // localCheckpoints (A/B-able via -Dgraft.loop.fuse, default 2 —
+    // see Iterations.iterate for the small-graph amortization account);
+    // read before any job runs so a bad value fails fast
+    val fuse = sys.props.get("graft.loop.fuse").fold(2) { v =>
+      v.trim.toIntOption.filter(_ >= 1).getOrElse(throw new IllegalArgumentException(
+        s"graft.loop.fuse must be a positive integer, got '$v'"))
+    }
     val e = edges.select("src", "dst").distinct().cache()
     val n = e.count() // materializes the cache and sizes the loop profile
     val maybeB = Iterations.maybeBroadcast(n)
@@ -94,10 +102,6 @@ object GraphOps {
       val eWithDeg = e.join(outdeg, "src")
         .select(col("src").as("node"), col("dst"), col("d")).cache()
       val verts = vertices(e).cache()
-      // fuse cadence: how many rounds compile into one job between
-      // localCheckpoints (A/B-able via -Dgraft.loop.fuse, default 2 —
-      // see Iterations.iterate for the small-graph amortization account)
-      val fuse = sys.props.get("graft.loop.fuse").map(_.toInt).getOrElse(2)
       val ranks = Iterations.iterate(verts.withColumn("rank", lit(1000000L)), iters, fuse = fuse) { cur =>
         // `div` = exact integer division (Spark's `/` would be double division)
         val contribs = eWithDeg.join(maybeB(cur), "node")

@@ -18,6 +18,7 @@ object Iterations {
     * scale the per-round shuffles dominate and fusing is neutral. */
   def iterate(initial: DataFrame, maxIter: Int, fuse: Int = 1)(
       step: DataFrame => DataFrame): DataFrame = {
+    require(fuse >= 1, s"iterate: fuse must be >= 1, got $fuse") // 0 never advances
     var cur = initial
     var i = 0
     while (i < maxIter) {

@@ -96,13 +96,20 @@ object Partitioning {
     val spark = df.sparkSession
     val p = if (partitions > 0) partitions
       else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    // withColumn would silently REPLACE a caller column named like the
+    // internal value column or the output column
+    val caseSensitive = spark.conf.get("spark.sql.caseSensitive").toBoolean
+    val clash = df.columns.find(c => Seq("_psv", outCol).exists(x =>
+      if (caseSensitive) c == x else c.equalsIgnoreCase(x)))
+    require(clash.isEmpty, s"prefixSum: input column '${clash.getOrElse("")}' " +
+      s"clashes with the internal '_psv' or the output '$outCol' column")
     val sorted = df.withColumn("_psv", col(valCol).cast("long"))
       .repartitionByRange(p, col(orderCol))
       .sortWithinPartitions(orderCol)
     val rdd = sorted.rdd
     rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val vi = sorted.schema.fieldNames.length - 1 // _psv is last
+      val vi = sorted.schema.fieldIndex("_psv")
       val sums = rdd.mapPartitionsWithIndex { (i, it) =>
         var s = 0L; it.foreach(r => s += r.getLong(vi)); Iterator((i, s))
       }.collect().sortBy(_._1).map(_._2)
@@ -110,13 +117,13 @@ object Partitioning {
       val out = rdd.mapPartitionsWithIndex { (i, it) =>
         var acc = bases(i)
         it.map { r =>
-          val row = org.apache.spark.sql.Row.fromSeq(r.toSeq.init :+ acc)
+          val row = org.apache.spark.sql.Row.fromSeq(r.toSeq.patch(vi, Nil, 1) :+ acc)
           acc += r.getLong(vi)
           row
         }
       }
       val schema = org.apache.spark.sql.types.StructType(
-        sorted.schema.fields.init :+
+        sorted.schema.fields.patch(vi, Nil, 1) :+
           org.apache.spark.sql.types.StructField(outCol,
             org.apache.spark.sql.types.LongType, nullable = false))
       // materialize before unpersist so the cached scan feeds both passes

@@ -318,7 +318,7 @@ object ExtensionQueries {
     // The published Gopher REPETITION signals proper (q8h's rule set only
     // carries the type-token-ratio proxy): duplicate n-gram fraction for
     // n=2..4, top-bigram character coverage, duplicated-5-gram character
-    // coverage. Entirely per-row HOF expressions fused into the scan —
+    // coverage. Entirely per-row native kernels fused into the scan —
     // zero shuffle at any corpus size. Spark counts hashed windows where
     // only multiplicity matters (dup2..4); the oracle replays on strings.
     Entry("qcg_repetition_signals",

@@ -149,6 +149,17 @@ class DataSelectionSpec extends SparkSpec {
     assert(got.size === rows.size)
   }
 
+  test("prefixSum rejects an input column named like its internal or output column") {
+    val df = Seq((1L, 2L, 5L), (2L, 3L, 6L)).toDF("id", "v", "w")
+    for ((clashing, outCol) <- Seq("_psv" -> "off", "_PSV" -> "off", "off" -> "off")) {
+      val err = intercept[IllegalArgumentException] {
+        graft.operators.Partitioning.prefixSum(df.withColumnRenamed("w", clashing),
+          "id", "v", outCol)
+      }
+      assert(err.getMessage.contains(s"'$clashing'"), err.getMessage)
+    }
+  }
+
   test("groupedRank equals the group-keyed window reference, including a " +
     "dominant group spanning partitions") {
     val rnd = new scala.util.Random(23)

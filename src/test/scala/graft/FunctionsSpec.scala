@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.{TextFunctions, VectorFunctions}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 class FunctionsSpec extends SparkSpec {
@@ -194,6 +195,111 @@ class FunctionsSpec extends SparkSpec {
     assert(math.abs(got(1)._3 - 15.0 / 11) < 1e-12)
     // single token: every signal 0, no division blowups
     assert(got(2) === ((0.0, 0.0, 0.0, 0.0)))
+  }
+
+  /** Reference for [[graft.functions.NgramRepetitionExpr]]: the
+    * higher-order-function formulation of the character-coverage signals
+    * (word n-grams in document order as joined strings, array_sort, then
+    * one `aggregate` run scan). */
+  private object HofRepetition {
+    private def posNgrams(text: Column, n: Int) = {
+      val toks = TextFunctions.tokens(text)
+      when(size(toks) >= n,
+        transform(sequence(lit(0), size(toks) - n),
+          i => array_join(slice(toks, i + 1, lit(n)), " ")))
+        .otherwise(lit(Array.empty[String]))
+    }
+
+    def top(text: Column, n: Int): Column = {
+      val best = aggregate(array_sort(posNgrams(text, n)),
+        struct(lit("").as("prev"), lit(0).as("run"), lit("").as("best"), lit(0).as("bestRun")),
+        (acc, x) => {
+          val run = when(acc.getField("prev") === x, acc.getField("run") + 1).otherwise(lit(1))
+          val better = run > acc.getField("bestRun")
+          struct(x.as("prev"), run.as("run"),
+            when(better, x).otherwise(acc.getField("best")).as("best"),
+            when(better, run).otherwise(acc.getField("bestRun")).as("bestRun"))
+        })
+      (best.getField("bestRun").cast("double") * length(best.getField("best")).cast("double")) /
+        greatest(length(text), lit(1)).cast("double")
+    }
+
+    def dup(text: Column, n: Int): Column = {
+      val total = aggregate(array_sort(posNgrams(text, n)),
+        struct(lit("").as("prev"), lit(0).as("run"), lit(0L).as("acc")),
+        (acc, x) => {
+          val cont = acc.getField("prev") === x
+          val closed = when(!cont && acc.getField("run") >= 2,
+            acc.getField("run").cast("long") * length(acc.getField("prev")).cast("long"))
+            .otherwise(lit(0L))
+          struct(x.as("prev"),
+            when(cont, acc.getField("run") + 1).otherwise(lit(1)).as("run"),
+            (acc.getField("acc") + closed).as("acc"))
+        },
+        acc => acc.getField("acc") + when(acc.getField("run") >= 2,
+          acc.getField("run").cast("long") * length(acc.getField("prev")).cast("long"))
+          .otherwise(lit(0L)))
+      total.cast("double") / greatest(length(text), lit(1)).cast("double")
+    }
+  }
+
+  test("NgramRepetitionExpr is bit-identical to the HOF reference on the " +
+    "codegen and interpreted paths (fuzz + whitespace/UTF-8/tie/prefix edges)") {
+    import graft.functions.NgramRepetitionExpr
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    val edges = Seq[String](null, "", "   ", " \t\n ",
+      "a\tb\u000Bc\fd\re a\tb\u000Bc", // every \s separator; \u000B is one
+      " lead and trail  ", "h\u00e9llo w\u00f6rld h\u00e9llo w\u00f6rld \u65e5\u672c \u65e5\u672c x",
+      "\ud83d\ude00 a \ud83d\ude00 a", // 4-byte code points: chars != bytes
+      "one two", "solo",
+      "bb a bb a cc", // tied top unigrams of different lengths: "a" wins
+      "a b a b a bc a bc a bc", // prefix pair "a b" / "a bc"
+      "a\u0001 z a\u0001 z a b a b", // control byte < 0x20 sorts before the joiner
+      "a\u007f z a\u007f z a b a b", "x\u00a0y x\u00a0y x y") // NBSP is not \s
+    val vocab = Seq("a", "ab", "abc", "b", "a\u0001", "\u00e9", "\u00e9t\u00e9",
+      "\u65e5", "\ud83d\ude00", "z")
+    val seps = Seq(" ", " ", " ", "  ", "\t", "\n", "\u000B", "\f", "\r", " \r\n")
+    val rnd = new scala.util.Random(2026L)
+    val fuzz = (1 to 150).map { _ =>
+      val k = rnd.nextInt(40)
+      val toks = Seq.fill(k)(vocab(rnd.nextInt(1 + rnd.nextInt(vocab.length))))
+      (if (rnd.nextInt(4) == 0) seps(rnd.nextInt(seps.length)) else "") +
+        toks.map(_ + seps(rnd.nextInt(seps.length))).mkString
+    }
+    val texts = edges ++ fuzz
+    // an RDD-backed frame: a local relation would be folded by the
+    // optimizer through the interpreted path
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(texts.map(org.apache.spark.sql.Row(_)), 3),
+      StructType(Seq(StructField("text", StringType))))
+    for (n <- 1 to 5) {
+      // kernel and reference in separate projections: the reference's
+      // CodegenFallback lambdas would keep a shared one out of codegen
+      val q = df.select($"text",
+        NgramRepetitionExpr($"text", n, dup = false), NgramRepetitionExpr($"text", n, dup = true))
+      assert(q.queryExecution.executedPlan.toString.contains("*(1) Project [text"),
+        "the kernel must run inside whole-stage codegen")
+      val rows = q.collect()
+      val ref = df.select(HofRepetition.top($"text", n), HofRepetition.dup($"text", n))
+        .collect().map(r => (r.getDouble(0), r.getDouble(1)))
+      assert(rows.map(_.getString(0)).toSeq === texts)
+      rows.zip(ref).foreach { case (r, (top, dup)) =>
+        val t = r.getString(0)
+        assert(r.getDouble(1) === top, s"top n=$n $t")
+        assert(r.getDouble(2) === dup, s"dup n=$n $t")
+        val textLit = Literal.create(t, StringType)
+        assert(NgramRepetitionExpr(textLit, n, dup = false).eval() === top,
+          s"interpreted top n=$n $t")
+        assert(NgramRepetitionExpr(textLit, n, dup = true).eval() === dup,
+          s"interpreted dup n=$n $t")
+      }
+      if (n == 1) {
+        // the tie goes to the smallest unigram, not the longest: 2 * 1 / 12
+        val tie = rows.find(_.getString(0) == "bb a bb a cc").get
+        assert(tie.getDouble(1) === 2.0 / 12)
+      }
+    }
   }
 
   test("MinHashSigExpr matches the local kernel; text→sig composition holds") {

@@ -38,6 +38,24 @@ class GraphOpsSpec extends SparkSpec {
     assert(pr(3L) > pr(2L)) // 3 receives from 2 which receives from 1
   }
 
+  test("graft.loop.fuse: a non-positive or non-numeric value fails fast, naming knob and value") {
+    val prev = sys.props.get("graft.loop.fuse")
+    for (bad <- Seq("0", "-3", "two")) {
+      System.setProperty("graft.loop.fuse", bad)
+      val err = try intercept[IllegalArgumentException] {
+        GraphOps.pageRankScaled(edges, iters = 3)
+      } finally prev match {
+        case Some(v) => System.setProperty("graft.loop.fuse", v)
+        case None => System.clearProperty("graft.loop.fuse")
+      }
+      assert(err.getMessage.contains("graft.loop.fuse") && err.getMessage.contains(s"'$bad'"),
+        err.getMessage)
+    }
+    intercept[IllegalArgumentException] {
+      graft.operators.Iterations.iterate(edges, 2, fuse = 0)(identity)
+    }
+  }
+
   test("withLoopProfile restores session conf after a small-frame loop") {
     val key = "spark.sql.shuffle.partitions"
     val before = spark.conf.get(key)

@@ -119,6 +119,11 @@ class PlanQualitySpec extends SparkSpec {
     assert(!plan.contains("UDF"), s"signals must stay native:\n$plan")
     assert(plan.contains("posshinglehashesexpr"),
       s"dup-fraction must count hashed windows via the native kernel:\n$plan")
+    assert(plan.contains("ngramrepetitionexpr"),
+      s"char-coverage signals must run on the native kernel:\n$plan")
+    assert(!plan.contains("array_sort") && !plan.contains("aggregate(") &&
+      !plan.contains("lambdafunction"),
+      s"no interpreted array_sort/aggregate lambda may remain:\n$plan")
   }
 
   test("qcf shared spans: hashed-seed joins, no UDF, no string shuffle key") {
