@@ -1,14 +1,18 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Generic per-query stage profiler (round 20) — times registry queries
   * with job/stage accounting, the evidence tool behind the
   * OPTIMIZATION_r20.md "what dominates" claims. Usage:
   *   SPARK_GRAFT_SF_DIR=... sbt "runMain graft.QProfile q1,q2[,...]"
-  * Each query runs `rounds` times (default 3) after one warmup; stages
-  * with > 0.3 core-s of executor run time print with run/cpu/gc split so
-  * contention (run >> cpu) is visible. */
+  * Each query runs `rounds` times (default 3) after one warmup (printed
+  * as r0); stages with > 0.3 core-s of executor run time print with
+  * run/cpu/gc split so contention (run >> cpu) is visible. Each round
+  * line also reports the Janino compiles (`compiles=`) and their time
+  * (`compile=`, ms) the round paid: a warm round with compiles > 0 is
+  * codegen-cache eviction. */
 object QProfile {
   def main(args: Array[String]): Unit = {
     val names = args.headOption.map(_.split(",").toSeq).getOrElse(Seq.empty)
@@ -49,21 +53,24 @@ object QProfile {
             taskNanos.addAndGet(t.taskMetrics.executorRunTime * 1000000L)
       })
 
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       graft.queries.Registry.prepares.get(name).foreach(p => p(spark, sfDir))
-      // warmup
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      spark.catalog.clearCache()
-      for (r <- 1 to rounds) {
+      // r0 is the warmup: its compiles are the query's cold codegen-cache
+      // entries
+      for (r <- 0 to rounds) {
         verbose.set(r == rounds) // stage detail on the last (warmest) round
         val j0 = jobs.get(); val n0 = taskNanos.get()
+        val c0 = compiles.getCount; val cn0 = CodeGenerator.compileTime
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         val wall = (System.nanoTime() - t0) / 1e9
         Thread.sleep(150)
         println(f"[qprof] $name%-28s r$r  $wall%6.2f s  " +
-          f"(jobs=${jobs.get() - j0}%3d, core-s=${(taskNanos.get() - n0) / 1e9}%7.2f)")
+          f"(jobs=${jobs.get() - j0}%3d, core-s=${(taskNanos.get() - n0) / 1e9}%7.2f, " +
+          f"compiles=${compiles.getCount - c0}%3d, " +
+          f"compile=${(CodeGenerator.compileTime - cn0) / 1e6}%7.1f)")
         spark.catalog.clearCache()
       }
     }

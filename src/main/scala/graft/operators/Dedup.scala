@@ -1000,10 +1000,10 @@ object Dedup {
     *     confirm by exact text count >= 2 — a true duplicate's occurrences
     *     all share its hash, so counting text over candidate rows equals
     *     the global text count; hash collisions surface here and drop;
-    *  4. confirmed windows [pos, pos+L) union-merge per doc (one
-    *     gaps-and-islands window) and each doc rebuilds in ONE aggregate
-    *     fold over its sorted interval array — gap substrings concatenate
-    *     directly, no character explode.
+    *  4. confirmed window starts collect per doc (one doc-keyed
+    *     aggregate) and the native [[graft.functions.ExciseSpansExpr]]
+    *     merges the [pos, pos+L) windows and rebuilds the doc in one pass
+    *     over its bytes — no character explode, no per-span fold.
     *
     * Output: (idCol, clean_text, n_spans, n_removed) for EVERY input doc;
     * untouched and shorter-than-L docs pass through with n_spans =
@@ -1020,12 +1020,20 @@ object Dedup {
   def exactSubstrRemove(df: DataFrame, idCol: String, textCol: String,
                         minLen: Int): DataFrame = {
     require(minLen >= 2, s"minLen must be >= 2, got $minLen")
-    import org.apache.spark.sql.expressions.Window
-    val L = minLen
-    val docs = df.select(col(idCol).as("_d"), col(textCol).as("_t"),
+    val docs = exactSubstrDocs(df, idCol, textCol)
+    excise(docs, dupWindowStarts(docs, minLen), minLen, idCol)
+  }
+
+  /** (_d, _t, _len) — the document frame every ExactSubstr operator
+    * starts from. */
+  private def exactSubstrDocs(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    df.select(col(idCol).as("_d"), col(textCol).as("_t"),
       length(col(textCol)).cast("long").as("_len"))
-    // (doc, pos, h): one 8-byte rolling-window hash per character position
-    val grams = docs.select(col("_d"),
+
+  /** (_d, pos, h): one 8-byte rolling-window FNV hash per character
+    * position of `docs` (_d, _t, _len); docs shorter than L emit none. */
+  private def rollingGramHashes(docs: DataFrame, L: Int): DataFrame =
+    docs.select(col("_d"),
         posexplode(when(col("_len") >= L,
           transform(sequence(lit(0L), col("_len") - L), i =>
             graft.functions.Fnv1a64Expr(
@@ -1033,59 +1041,45 @@ object Dedup {
           .otherwise(array().cast("array<bigint>"))))
       .toDF("_d", "pos", "h")
       .withColumn("pos", col("pos").cast("long"))
+
+  /** (_d, pos) starts of the L-windows whose text occurs >= 2 times in
+    * the corpus: hash-count candidates, then the collision-exact text
+    * confirm on the (small) candidate subset. */
+  private def dupWindowStarts(docs: DataFrame, L: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val grams = rollingGramHashes(docs, L)
     val dupHash = grams.groupBy(col("h"))
       .agg(count(lit(1)).as("_c")).filter(col("_c") >= 2).select("h")
-    // collision-exact confirm on the (small) candidate subset
-    val dupPos = grams.join(dupHash, "h")
+    grams.join(dupHash, "h")
       .join(docs.select(col("_d"), col("_t")), "_d")
       .select(col("_d"), col("pos"),
         col("_t").substr((col("pos") + 1).cast("int"), lit(L)).as("g"))
       .withColumn("_n", count(lit(1)).over(Window.partitionBy(col("g"))))
       .filter(col("_n") >= 2)
       .select(col("_d"), col("pos"))
-    excise(docs, dupPos, L, idCol)
   }
+
+  /** `docs` left-joined to its window starts from `pos` (_d, pos),
+    * collected per doc as `_ps` (null for a doc with none): the one
+    * doc-keyed aggregate in front of the span kernels. */
+  private def withWindowStarts(docs: DataFrame, pos: DataFrame): DataFrame =
+    docs.join(pos.groupBy(col("_d")).agg(collect_list(col("pos")).as("_ps")),
+      Seq("_d"), "left")
 
   /** The removal half of the ExactSubstr family, shared by
     * [[exactSubstrRemove]] and [[GramIndex.ingest]]: given `docs`
     * (_d, _t, _len) and the duplicated window starts `dupPos` (_d, pos),
-    * union-merge the [pos, pos+L) intervals per doc (one gaps-and-islands
-    * window, doc-keyed) and rebuild every doc in ONE aggregate fold over
-    * its sorted interval array — gap substrings concatenate directly, no
-    * character explode. Untouched docs pass through with zero counts. */
+    * collect each doc's starts (one doc-keyed aggregate) and cut the
+    * union-merged [pos, pos+L) windows out of its text with the native
+    * [[graft.functions.ExciseSpansExpr]]. Output (idCol, clean_text,
+    * n_spans, n_removed); untouched docs pass through with zero counts. */
   private[graft] def excise(docs: DataFrame, dupPos: DataFrame, L: Int,
-                                idCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ord = Window.partitionBy("_d").orderBy(col("s"), col("e"))
-    val merged = dupPos
-      .select(col("_d"), col("pos").as("s"), (col("pos") + L).as("e"))
-      .withColumn("brk", when(col("s") > coalesce(
-        max(col("e")).over(ord.rowsBetween(Window.unboundedPreceding, -1)),
-        lit(-1L)), 1).otherwise(0))
-      .withColumn("grp", sum(col("brk")).over(ord))
-      .groupBy(col("_d"), col("grp"))
-      .agg(min(col("s")).as("s"), max(col("e")).as("e"))
-    val perDoc = merged.groupBy(col("_d"))
-      .agg(count(lit(1)).cast("long").as("n_spans"),
-        sum(col("e") - col("s")).cast("long").as("n_removed"),
-        array_sort(collect_list(struct(col("s"), col("e")))).as("_ivs"))
-    docs.join(perDoc, Seq("_d"), "left")
-      .select(col("_d").as(idCol),
-        when(col("_ivs").isNull, col("_t")).otherwise(
-          aggregate(col("_ivs"),
-            struct(lit(0L).as("p"), lit("").as("a")),
-            (acc, iv) => struct(
-              iv.getField("e").as("p"),
-              concat(acc.getField("a"), col("_t").substr(
-                (acc.getField("p") + 1).cast("int"),
-                (iv.getField("s") - acc.getField("p")).cast("int"))).as("a")),
-            acc => concat(acc.getField("a"), col("_t").substr(
-              (acc.getField("p") + 1).cast("int"),
-              (col("_len") - acc.getField("p")).cast("int")))))
-          .as("clean_text"),
-        coalesce(col("n_spans"), lit(0L)).as("n_spans"),
-        coalesce(col("n_removed"), lit(0L)).as("n_removed"))
-  }
+                            idCol: String): DataFrame =
+    withWindowStarts(docs, dupPos)
+      .select(col("_d"),
+        graft.functions.ExciseSpansExpr(col("_t"), col("_ps"), L).as("_x"))
+      .select(col("_d").as(idCol), col("_x.clean_text").as("clean_text"),
+        col("_x.n_spans").as("n_spans"), col("_x.n_removed").as("n_removed"))
 
   /** The LOSS-MASKING alternative to [[exactSubstrRemove]] (Lee et al.
     * 2022 §5 discuss masking the training loss on duplicated spans
@@ -1103,53 +1097,18 @@ object Dedup {
     *
     * Same machinery and scale shape as qf8: one rolling-hash pass,
     * hash-count candidates, collision-exact text confirm on the
-    * duplicated subset only, per-doc gaps-and-islands merge. Linear end
-    * to end; only duplicated-gram rows move in the string-keyed join. */
+    * duplicated subset only, and the same per-doc span merge
+    * ([[graft.functions.MergedSpansExpr]]). Linear end to end; only
+    * duplicated-gram rows move in the string-keyed join. */
   def exactSubstrMask(df: DataFrame, idCol: String, textCol: String,
                       minLen: Int): DataFrame = {
     require(minLen >= 2, s"minLen must be >= 2, got $minLen")
-    import org.apache.spark.sql.expressions.Window
-    val L = minLen
-    val docs = df.select(col(idCol).as("_d"), col(textCol).as("_t"),
-      length(col(textCol)).cast("long").as("_len"))
-    val grams = docs.select(col("_d"),
-        posexplode(when(col("_len") >= L,
-          transform(sequence(lit(0L), col("_len") - L), i =>
-            graft.functions.Fnv1a64Expr(
-              col("_t").substr((i + 1).cast("int"), lit(L)))))
-          .otherwise(array().cast("array<bigint>"))))
-      .toDF("_d", "pos", "h")
-      .withColumn("pos", col("pos").cast("long"))
-    val dupHash = grams.groupBy(col("h"))
-      .agg(count(lit(1)).as("_c")).filter(col("_c") >= 2).select("h")
-    val dupPos = grams.join(dupHash, "h")
-      .join(docs.select(col("_d"), col("_t")), "_d")
-      .select(col("_d"), col("pos"),
-        col("_t").substr((col("pos") + 1).cast("int"), lit(L)).as("g"))
-      .withColumn("_n", count(lit(1)).over(Window.partitionBy(col("g"))))
-      .filter(col("_n") >= 2)
-      .select(col("_d"), col("pos"))
-    val ord = Window.partitionBy("_d").orderBy(col("s"), col("e"))
-    val merged = dupPos
-      .select(col("_d"), col("pos").as("s"), (col("pos") + L).as("e"))
-      .withColumn("brk", when(col("s") > coalesce(
-        max(col("e")).over(ord.rowsBetween(Window.unboundedPreceding, -1)),
-        lit(-1L)), 1).otherwise(0))
-      .withColumn("grp", sum(col("brk")).over(ord))
-      .groupBy(col("_d"), col("grp"))
-      .agg(min(col("s")).as("s"), max(col("e")).as("e"))
-    val perDoc = merged.groupBy(col("_d"))
-      .agg(count(lit(1)).cast("long").as("n_mask_spans"),
-        sum(col("e") - col("s")).cast("long").as("n_masked_chars"),
-        concat_ws(";", transform(
-          array_sort(collect_list(struct(col("s"), col("e")))),
-          iv => concat(iv.getField("s"), lit(":"), iv.getField("e"))))
-          .as("mask_spans"))
-    docs.join(perDoc, Seq("_d"), "left")
-      .select(col("_d").as(idCol),
-        coalesce(col("mask_spans"), lit("")).as("mask_spans"),
-        coalesce(col("n_mask_spans"), lit(0L)).as("n_mask_spans"),
-        coalesce(col("n_masked_chars"), lit(0L)).as("n_masked_chars"),
+    val docs = exactSubstrDocs(df, idCol, textCol)
+    withWindowStarts(docs, dupWindowStarts(docs, minLen))
+      .select(col("_d"), col("_len"),
+        graft.functions.MergedSpansExpr(col("_ps"), minLen).as("_m"))
+      .select(col("_d").as(idCol), col("_m.spans").as("mask_spans"),
+        col("_m.n_spans").as("n_mask_spans"), col("_m.n_chars").as("n_masked_chars"),
         col("_len").as("len"))
   }
 
@@ -1168,8 +1127,8 @@ object Dedup {
     * a rare long string can be tiled by common windows — so the metric
     * is defined AT the window length: a position is exposed iff some
     * unique L-window covers it. Same machinery as qf8: one rolling-hash
-    * pass, a count aggregate (map-side partials), the per-doc interval
-    * merge. No text confirm is needed — every occurrence of one text
+    * pass, a count aggregate (map-side partials), the per-doc span merge
+    * ([[graft.functions.MergedSpansExpr]]). No text confirm is needed — every occurrence of one text
     * shares its hash, so hash-count == 1 IMPLIES text-count == 1 and a
     * unique verdict is exact; a cross-gram collision can only HIDE a
     * unique window (counts inflate), never invent one — the usual
@@ -1178,39 +1137,18 @@ object Dedup {
   def memorizationReport(df: DataFrame, idCol: String, textCol: String,
                          windowLen: Int): DataFrame = {
     require(windowLen >= 2, s"windowLen must be >= 2, got $windowLen")
-    import org.apache.spark.sql.expressions.Window
     val L = windowLen
-    val docs = df.select(col(idCol).as("_d"), col(textCol).as("_t"),
-      length(col(textCol)).cast("long").as("_len"))
-    val grams = docs.select(col("_d"),
-        posexplode(when(col("_len") >= L,
-          transform(sequence(lit(0L), col("_len") - L), i =>
-            graft.functions.Fnv1a64Expr(
-              col("_t").substr((i + 1).cast("int"), lit(L)))))
-          .otherwise(array().cast("array<bigint>"))))
-      .toDF("_d", "pos", "h")
-      .withColumn("pos", col("pos").cast("long"))
+    val docs = exactSubstrDocs(df, idCol, textCol)
+    val grams = rollingGramHashes(docs, L)
     val loneHash = grams.groupBy(col("h"))
       .agg(count(lit(1)).as("_c")).filter(col("_c") === 1).select("h")
     val uniquePos = grams.join(loneHash, "h").select(col("_d"), col("pos"))
-    val ord = Window.partitionBy("_d").orderBy(col("s"), col("e"))
-    val merged = uniquePos
-      .select(col("_d"), col("pos").as("s"), (col("pos") + L).as("e"))
-      .withColumn("brk", when(col("s") > coalesce(
-        max(col("e")).over(ord.rowsBetween(Window.unboundedPreceding, -1)),
-        lit(-1L)), 1).otherwise(0))
-      .withColumn("grp", sum(col("brk")).over(ord))
-      .groupBy(col("_d"), col("grp"))
-      .agg(min(col("s")).as("s"), max(col("e")).as("e"))
-    val perDoc = merged.groupBy(col("_d"))
-      .agg(count(lit(1)).cast("long").as("n_unique_spans"),
-        sum(col("e") - col("s")).cast("long").as("n_unique_chars"))
-    docs.join(perDoc, Seq("_d"), "left")
-      .select(col("_d").as(idCol),
-        coalesce(col("n_unique_spans"), lit(0L)).as("n_unique_spans"),
-        coalesce(col("n_unique_chars"), lit(0L)).as("n_unique_chars"),
-        when(col("_len") > 0, expr(
-          "(coalesce(n_unique_chars, 0L) * 1000L) DIV _len"))
+    withWindowStarts(docs, uniquePos)
+      .select(col("_d"), col("_len"),
+        graft.functions.MergedSpansExpr(col("_ps"), L).as("_m"))
+      .select(col("_d").as(idCol), col("_m.n_spans").as("n_unique_spans"),
+        col("_m.n_chars").as("n_unique_chars"),
+        when(col("_len") > 0, expr("(_m.n_chars * 1000L) DIV _len"))
           .otherwise(lit(0L)).as("frac_unique_millis"))
   }
 

@@ -213,7 +213,15 @@ object GramIndex {
     * Cost per delivery: one compiled hash pass over the batch, one
     * batch-sized count shuffle on 8-byte keys, one bucketed probe join
     * that reads the corpus pre-partitioned (only matching-bucket rows),
-    * and the doc-keyed excision — O(batch + matches), no corpus scan. */
+    * and the doc-keyed excision — O(batch + matches), no corpus scan.
+    *
+    * `batch` must be DETERMINISTIC: the returned frame is lazy, and the
+    * caller's action recomputes `batch`'s lineage AFTER the append to
+    * rebuild the text against the checkpointed window skeleton. A batch
+    * whose rows or ids change between evaluations (an unordered `limit`,
+    * `rand`, a source that moves under it) gets positions from one
+    * evaluation cut out of the text of another — materialize such a batch
+    * (e.g. `localCheckpoint()`) before ingesting it. */
   def ingest(batch: DataFrame, idCol: String, textCol: String,
              minLen: Int, ref: Ref, delivery: String): DataFrame = {
     require(minLen >= 2, s"minLen must be >= 2, got $minLen")
@@ -316,7 +324,8 @@ object GramIndex {
     * Crash contract unchanged from the UUID [[ingest]] overload: a
     * crashed call's landed rows wear unknown ids and count as corpus on
     * retry — recoverDelivery first. Returns one cleaned frame per batch,
-    * in order. */
+    * in order; like [[ingest]]'s, each is lazy and recomputes its batch's
+    * lineage after the append, so every batch must be deterministic. */
   def ingestSlices(batches: Seq[DataFrame], idCol: String, textCol: String,
                    minLen: Int, ref: Ref): Seq[DataFrame] = {
     require(minLen >= 2, s"minLen must be >= 2, got $minLen")

@@ -490,52 +490,79 @@ object ML {
     * Exactness device (same family as pageRankScaled/svmScaled): each
     * float coordinate quantizes once to floor(v·scale) micro-units; the
     * assignment metric is the INTEGER squared Euclidean distance (ties to
-    * the lower cell id), and the centroid update is the per-dimension
-    * floor(sum/count) — every round is engine-portable, so the whole
-    * trajectory hash-oracles. Initial centroids: the k lowest-id vectors.
-    * A cell that loses all members drops out (k shrinks, deterministic).
+    * the lower cell id; a distance that overflows Long throws), and the
+    * centroid update is the per-dimension floor(sum/count) — every round
+    * is engine-portable, so the whole trajectory hash-oracles. Initial
+    * centroids: the k lowest-id vectors. A cell that loses all members
+    * drops out (k shrinks, deterministic).
     *
-    * Shape at scale: per round ONE broadcast of k quantized centroids +
-    * one narrow argmin pass + one (cell, dim)-keyed aggregate — no
-    * driver collect, model state lives in a k-row frame. Magnitude: the
-    * update sums |q| ≤ scale·max|v| per member, so the double-floored
-    * division stays exact while cell_members · scale · max|v| < 2^53 —
-    * ~9e9 members per cell at unit-norm embeddings and scale 1e6. */
+    * Shape (the reference's flink-examples-batch/.../clustering/
+    * KMeans.java: centroids as a broadcast set, a plain per-point
+    * `SelectNearestCenter` map): the model lives on the DRIVER as k×dim
+    * longs ([[graft.functions.CentroidModel]]). One collect of the k
+    * lowest-id rows seeds it; each Lloyd round is ONE aggregate job — the
+    * native [[graft.functions.NearestCentroidExpr]] assigns every point,
+    * `posexplode` + a (cell_id, pos) aggregate computes the update — whose
+    * k×dim result is collected into the next model. The final assignment
+    * is one narrow projection and `centroids` is a local frame
+    * (cell_id in the id column's type, cvec array<bigint>). Driver state
+    * and the per-round collect are bounded by k·dim values (8 bytes each:
+    * 6 MB at k = 1024, dim = 768), independent of the row count; the
+    * model ships to tasks inside the plan, so k·dim must stay broadcast-
+    * sized. Magnitude: the update sums |q| ≤ scale·max|v| per member, so
+    * the double-floored division stays exact while cell_members · scale ·
+    * max|v| < 2^53 — ~9e9 members per cell at unit-norm embeddings and
+    * scale 1e6. */
   def kMeansScaled(df: DataFrame, idCol: String, vecCol: String,
                    k: Int, iters: Int, scale: Long = 1000000L): KMeansResult = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(iters >= 0, s"iters must be >= 0, got $iters")
-    import org.apache.spark.sql.expressions.Window
-    val q = df.select(col(idCol).as("_id"),
-        transform(col(vecCol), x => floor(x.cast("double") * scale).cast("long")).as("qv"))
+    import graft.functions.{CentroidModel, NearestCentroidExpr}
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
+    val spark = df.sparkSession
+    // cached once so every round (and the final assignment) sees one
+    // materialization of the caller's lineage
+    val v = df.select(col(idCol).as("_id"), col(vecCol).cast("array<double>").as("_v"))
       .cache()
-    var cents = q.orderBy(col("_id")).limit(k)
-      .select(col("_id").as("cell_id"), col("qv").as("cvec"))
-    // argmin as min(struct(dist, cell_id, qv)): (dist, cell_id) is unique
-    // within a vector's k candidate rows, so the struct ordering never
-    // reaches qv and the tie still falls to the lower cell id — same
-    // result as a row_number window, but as a HASH AGGREGATE with
-    // map-side partial combine instead of a full shuffle + sort of the
-    // n·k candidate frame (the shape that matters at 100× scale)
-    def assign(cs: DataFrame): DataFrame =
-      q.crossJoin(broadcast(cs))
-        .withColumn("dist", aggregate(
-          zip_with(col("qv"), col("cvec"), (a, b) => (a - b) * (a - b)),
-          lit(0L), (acc, x) => acc + x))
-        .groupBy(col("_id"))
-        .agg(min(struct(col("dist"), col("cell_id"), col("qv"))).as("m"))
-        .select(col("_id"), col("m.qv").as("qv"), col("m.cell_id").as("cell_id"))
-    for (_ <- 1 to iters) {
-      cents = assign(cents)
-        .select(col("cell_id"), posexplode(col("qv")))
-        .groupBy("cell_id", "pos")
-        .agg(floor(sum(col("col")).cast("double") / count(lit(1))).cast("long").as("v"))
-        .groupBy("cell_id")
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("v")))),
-          x => x.getField("v")).as("cvec"))
-        .localCheckpoint()
+    val idType = v.schema("_id").dataType
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(idType)
+    val seed = v.orderBy(col("_id")).limit(k).collect()
+    require(seed.forall(r => !r.isNullAt(0) && !r.isNullAt(1)),
+      s"kMeansScaled: null $idCol or $vecCol among the k lowest ids")
+    val dim = if (seed.isEmpty) 0 else seed.head.getSeq[Double](1).length
+    var ids: Array[Any] = seed.map(_.get(0))
+    var cents: Array[Long] = seed.flatMap { r =>
+      val xs = r.getSeq[Double](1)
+      require(xs.length == dim, s"kMeansScaled: seed vector ${r.get(0)} has " +
+        s"${xs.length} coordinates, expected $dim")
+      xs.map(CentroidModel.quantize(_, scale.toDouble))
     }
-    val fin = assign(cents)
-    KMeansResult(fin.select(col("_id").as(idCol), col("cell_id")), cents)
+    def model = new CentroidModel(ids.map(toCatalyst), cents, dim, scale.toDouble)
+    for (_ <- 1 to iters if ids.nonEmpty) {
+      val upd = v.select(NearestCentroidExpr(col("_v"), model, idType).as("cell_id"),
+          posexplode(col("_v")))
+        .groupBy("cell_id", "pos")
+        .agg(floor(sum(floor(col("col") * scale)).cast("double") / count(lit(1)))
+          .cast("long").as("v"))
+        .collect()
+      val byCell = upd.groupBy(_.get(0))
+      ids = ids.filter(byCell.contains) // memberless cells drop out
+      cents = ids.flatMap { id =>
+        val c = new Array[Long](dim)
+        byCell(id).foreach(r => c(r.getInt(1)) = r.getLong(2))
+        c
+      }
+    }
+    val assignments =
+      if (ids.isEmpty) v.select(col("_id").as(idCol), lit(null).cast(idType).as("cell_id"))
+      else v.select(col("_id").as(idCol),
+        NearestCentroidExpr(col("_v"), model, idType).as("cell_id"))
+    val rows = ids.indices.map(c => Row(ids(c), cents.slice(c * dim, (c + 1) * dim).toSeq))
+    val schema = StructType(Seq(StructField("cell_id", idType),
+      StructField("cvec", ArrayType(LongType, containsNull = false), nullable = false)))
+    KMeansResult(assignments,
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema))
   }
 }

@@ -781,4 +781,113 @@ class DedupSpec extends SparkSpec {
       assert(got === exactSubstrBrute(planted, l), s"round $round (L=$l)")
     }
   }
+
+  /** The window formulation Dedup.excise had before its native kernel —
+    * the reference the kernel must equal: two-window gaps-and-islands
+    * merge (break iff s > max(prev e)), a (doc, grp) aggregate, and an
+    * `aggregate` fold of substr over the collect_list(struct) spans. */
+  private def exciseReference(docs: org.apache.spark.sql.DataFrame,
+                              dupPos: org.apache.spark.sql.DataFrame,
+                              L: Int): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val ord = Window.partitionBy("_d").orderBy(col("s"), col("e"))
+    val merged = dupPos
+      .select(col("_d"), col("pos").as("s"), (col("pos") + L).as("e"))
+      .withColumn("brk", when(col("s") > coalesce(
+        max(col("e")).over(ord.rowsBetween(Window.unboundedPreceding, -1)),
+        lit(-1L)), 1).otherwise(0))
+      .withColumn("grp", sum(col("brk")).over(ord))
+      .groupBy(col("_d"), col("grp"))
+      .agg(min(col("s")).as("s"), max(col("e")).as("e"))
+    val perDoc = merged.groupBy(col("_d"))
+      .agg(count(lit(1)).cast("long").as("n_spans"),
+        sum(col("e") - col("s")).cast("long").as("n_removed"),
+        array_sort(collect_list(struct(col("s"), col("e")))).as("_ivs"))
+    docs.join(perDoc, Seq("_d"), "left")
+      .select(col("_d").as("doc_id"),
+        when(col("_ivs").isNull, col("_t")).otherwise(
+          aggregate(col("_ivs"),
+            struct(lit(0L).as("p"), lit("").as("a")),
+            (acc, iv) => struct(
+              iv.getField("e").as("p"),
+              concat(acc.getField("a"), col("_t").substr(
+                (acc.getField("p") + 1).cast("int"),
+                (iv.getField("s") - acc.getField("p")).cast("int"))).as("a")),
+            acc => concat(acc.getField("a"), col("_t").substr(
+              (acc.getField("p") + 1).cast("int"),
+              (col("_len") - acc.getField("p")).cast("int")))))
+          .as("clean_text"),
+        coalesce(col("n_spans"), lit(0L)).as("n_spans"),
+        coalesce(col("n_removed"), lit(0L)).as("n_removed"),
+        concat_ws(";", transform(col("_ivs"),
+          iv => concat(iv.getField("s"), lit(":"), iv.getField("e")))).as("spans"))
+  }
+
+  test("excise kernel equals the window formulation: touching, overlapping, " +
+    "duplicate and end-of-text windows, multi-byte UTF-8, null text, no starts") {
+    val L = 3
+    // (doc, text, window starts) — starts are code-point offsets
+    val cases: Seq[(Long, String, Seq[Long])] = Seq(
+      (1L, "abcdefghij", Seq(0L, 3L)),          // touching: s == prev e
+      (2L, "abcdefghij", Seq(0L, 2L, 7L)),      // overlapping, then a gap
+      (3L, "abcdefghij", Seq(4L, 4L, 5L, 4L)),  // duplicate and nested starts
+      (4L, "abcdefghij", Seq(7L)),              // ends at the end of the text
+      (5L, "abcdefghij", Seq(0L, 1L, 2L, 3L, 4L, 5L, 6L, 7L)), // everything
+      (6L, "h\u00e9llo w\u00f6rld \u00e7a", Seq(1L, 6L, 11L)), // 2-byte chars
+      (7L, "a\ud83d\ude00b\ud83d\ude00c\ud83d\ude00d", Seq(1L, 4L)), // 4-byte
+      (8L, "x\u4e2d\u6587\ud83d\ude00\u00e9yz", Seq(0L, 2L, 4L)), // mixed
+      (9L, null, Seq.empty),                   // null text
+      (10L, "no starts at all", Seq.empty),    // no starts
+      (11L, "", Seq.empty))
+    val rnd = new scala.util.Random(3071)
+    val alphabet = Seq("a", "b", " ", "\u00e9", "\u4e2d", "\ud83d\ude00")
+    val fuzz = (100L until 160L).map { d =>
+      val t = Seq.fill(rnd.nextInt(30))(alphabet(rnd.nextInt(alphabet.size))).mkString
+      val n = t.codePointCount(0, t.length)
+      val starts = if (n < L) Seq.empty[Long]
+        else Seq.fill(rnd.nextInt(6))(rnd.nextInt(n - L + 1).toLong)
+      (d, t, starts)
+    }
+    val all = cases ++ fuzz
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val docs = spark.createDataFrame(spark.sparkContext.parallelize(
+        all.map { case (d, t, _) => Row(d, t) }, 3),
+        StructType(Seq(StructField("_d", LongType), StructField("_t", StringType))))
+      .withColumn("_len", length(col("_t")).cast("long"))
+    val dupPos = spark.createDataFrame(spark.sparkContext.parallelize(
+        all.flatMap { case (d, _, ps) => ps.map(p => Row(d, p)) }, 3),
+        StructType(Seq(StructField("_d", LongType), StructField("pos", LongType))))
+    val got = Dedup.excise(docs, dupPos, L, "doc_id").as[(Long, String, Long, Long)].collect()
+      .map(r => r._1 -> r).toMap
+    val ref = exciseReference(docs, dupPos, L)
+    val want = ref.select("doc_id", "clean_text", "n_spans", "n_removed").as[(Long, String, Long, Long)]
+      .collect().map(r => r._1 -> r).toMap
+    assert(got === want)
+    assert(got(1L) === ((1L, "ghij", 1L, 6L)), "touching windows merge")
+    assert(got(9L) === ((9L, null, 0L, 0L)) && got(10L)._3 === 0L)
+    // the span list (the mask / memorization path) from the same merge
+    val spans = ref.select("doc_id", "spans").as[(Long, String)].collect().toMap
+    for ((d, _, ps) <- all) {
+      val arr = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(ps.toArray)
+      val m = graft.functions.MergedSpansExpr.spans(arr, L)
+      assert(m.getUTF8String(0).toString === Option(spans(d)).getOrElse(""), s"doc $d")
+      assert((m.getLong(1), m.getLong(2)) === ((got(d)._3, got(d)._4)), s"doc $d")
+    }
+    // interpreted eval agrees with the generated-code path; null text with
+    // starts still passes through with counts 0, 0
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    for ((d, t, ps) <- all) {
+      val row = graft.functions.ExciseSpansExpr(Literal.create(t, StringType),
+        Literal.create(ps.toArray, ArrayType(LongType)), L).eval()
+        .asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]
+      val ev = (d, Option(row.getUTF8String(0)).map(_.toString).orNull,
+        row.getLong(1), row.getLong(2))
+      if (t != null) assert(ev === got(d), s"doc $d interpreted")
+      else assert(ev === ((d, null, 0L, 0L)))
+    }
+    assert(graft.functions.ExciseSpansExpr.excise(null,
+      org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(Array(0L)), L)
+      .getLong(1) === 0L)
+  }
 }

@@ -173,4 +173,118 @@ class MLSpec extends SparkSpec {
     val r2 = ML.kMeansScaled(degen, "vec_id", "embedding", k = 2, iters = 2)
     assert(r2.assignments.select("cell_id").as[Long].collect().toSet.size <= 2)
   }
+
+  /** The DataFrame formulation kMeansScaled had before its native
+    * nearest-centroid kernel — the reference the kernel path must equal
+    * row for row: crossJoin against the broadcast centroids, an
+    * aggregate(zip_with) squared distance, a min(struct) argmin (ties to
+    * the lower cell id) and a (cell_id, pos) floor(sum/count) update. */
+  private def kMeansReference(df: org.apache.spark.sql.DataFrame, idCol: String,
+                              vecCol: String, k: Int, iters: Int,
+                              scale: Long = 1000000L): ML.KMeansResult = {
+    val q = df.select(col(idCol).as("_id"),
+        transform(col(vecCol), x => floor(x.cast("double") * scale).cast("long")).as("qv"))
+      .cache()
+    var cents = q.orderBy(col("_id")).limit(k)
+      .select(col("_id").as("cell_id"), col("qv").as("cvec"))
+    def assign(cs: org.apache.spark.sql.DataFrame) =
+      q.crossJoin(broadcast(cs))
+        .withColumn("dist", aggregate(
+          zip_with(col("qv"), col("cvec"), (a, b) => (a - b) * (a - b)),
+          lit(0L), (acc, x) => acc + x))
+        .groupBy(col("_id"))
+        .agg(min(struct(col("dist"), col("cell_id"), col("qv"))).as("m"))
+        .select(col("_id"), col("m.qv").as("qv"), col("m.cell_id").as("cell_id"))
+    for (_ <- 1 to iters) {
+      cents = assign(cents)
+        .select(col("cell_id"), posexplode(col("qv")))
+        .groupBy("cell_id", "pos")
+        .agg(floor(sum(col("col")).cast("double") / count(lit(1))).cast("long").as("v"))
+        .groupBy("cell_id")
+        .agg(transform(array_sort(collect_list(struct(col("pos"), col("v")))),
+          x => x.getField("v")).as("cvec"))
+        .localCheckpoint()
+    }
+    val fin = assign(cents)
+    ML.KMeansResult(fin.select(col("_id").as(idCol), col("cell_id")), cents)
+  }
+
+  /** Rows as comparable lists (arrays as lists), sorted, plus the
+    * column names and types (nullability aside). */
+  private def canon(df: org.apache.spark.sql.DataFrame) = (
+    df.schema.map(f => f.name -> f.dataType.simpleString),
+    df.collect().toSeq.map(_.toSeq.map {
+      case a: scala.collection.Seq[_] => a.toList
+      case x => x
+    }).sortBy(_.toString))
+
+  private def assertSameKMeans(df: org.apache.spark.sql.DataFrame, k: Int,
+                               iters: Int, clue: String): Unit = {
+    val got = ML.kMeansScaled(df, "vec_id", "embedding", k, iters)
+    val ref = kMeansReference(df, "vec_id", "embedding", k, iters)
+    assert(canon(got.assignments) === canon(ref.assignments), s"$clue assignments")
+    assert(canon(got.centroids) === canon(ref.centroids), s"$clue centroids")
+  }
+
+  test("kMeansScaled equals the crossJoin/argmin DataFrame formulation: " +
+    "seeded fuzz over k, iters, ties, empty cells, negative coordinates " +
+    "and int/long ids") {
+    val rnd = new scala.util.Random(20261017)
+    // coordinates on a coarse grid (many exact distance ties) and signed
+    def vec(dim: Int) = Seq.fill(dim)((rnd.nextInt(9) - 4) * 0.25f)
+    def rdd(rows: Seq[(Long, Seq[Float])]) = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 3)).toDF("vec_id", "embedding")
+    for (round <- 0 until 3; k <- Seq(1, 3, 16); iters <- Seq(0, 1, 3)) {
+      val dim = 2 + round
+      val rows = rnd.shuffle((0 until 40).map(i => (i.toLong * 3 - 7, vec(dim))))
+      assertSameKMeans(rdd(rows), k, iters, s"fuzz round $round k=$k iters=$iters")
+    }
+    // k > rows: every row seeds its own cell
+    assertSameKMeans(rdd((0 until 5).map(i => (i.toLong, vec(3)))), 16, 2, "k > rows")
+    // duplicate seeds: cells 0 and 1 sit on the same point, so every
+    // distance ties and cell 0 takes them all; cell 1 loses all members
+    val dup = Seq(0L -> Seq(1f, 1f), 1L -> Seq(1f, 1f), 2L -> Seq(-3f, 2f)) ++
+      (3 until 20).map(i => (i.toLong, vec(2)))
+    assertSameKMeans(rdd(dup), 3, 2, "duplicate seeds")
+    val dupFit = ML.kMeansScaled(rdd(dup), "vec_id", "embedding", 3, 1)
+    assert(!dupFit.centroids.select("cell_id").as[Long].collect().contains(1L),
+      "a cell with no members must drop out")
+    // int ids: cell_id keeps the id column's type
+    val ints = spark.createDataFrame(spark.sparkContext.parallelize(
+      (0 until 30).map(i => (i * 2 + 1, vec(3))), 2)).toDF("vec_id", "embedding")
+    for (iters <- Seq(0, 2)) assertSameKMeans(ints, 4, iters, s"int ids iters=$iters")
+    assert(ML.kMeansScaled(ints, "vec_id", "embedding", 4, 1)
+      .centroids.schema("cell_id").dataType === org.apache.spark.sql.types.IntegerType)
+  }
+
+  test("kMeansScaled: a squared distance that overflows Long throws, " +
+    "never wraps") {
+    // 3e12 · 1e6 = 3e18 micro-units; the difference 6e18 squares past 2^63
+    val df = Seq((0L, Seq(3e12)), (1L, Seq(-3e12)), (2L, Seq(0.0)))
+      .toDF("vec_id", "embedding")
+    def chain(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.toString).mkString(" <- ")
+    val e1 = intercept[Exception](ML.kMeansScaled(df, "vec_id", "embedding", 1, 1))
+    assert(chain(e1).contains("overflow"), chain(e1))
+    val e2 = intercept[Exception](
+      ML.kMeansScaled(df, "vec_id", "embedding", 1, 0).assignments.collect())
+    assert(chain(e2).contains("overflow"), chain(e2))
+  }
+
+  test("NearestCentroidExpr: interpreted eval equals the kernel, ties go " +
+    "to the lower cell, ragged vectors are rejected") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
+    val model = new graft.functions.CentroidModel(Array[Any](5L, 9L, 11L),
+      Array(0L, 0L, 2000000L, 0L, 1000000L, 0L), dim = 2, scale = 1e6)
+    def at(xs: Double*) = graft.functions.NearestCentroidExpr(
+      Literal.create(new GenericArrayData(xs.toArray[Any]), ArrayType(DoubleType)),
+      model, LongType).eval()
+    assert(at(0.1, 0.0) === 5L)
+    assert(at(0.5, 0.0) === 5L) // equidistant from cells 5 and 11
+    assert(at(1.5, 0.0) === 9L) // equidistant from cells 9 and 11
+    assert(at(1.2, -4.0) === 11L)
+    intercept[IllegalArgumentException](at(1.0))
+  }
 }

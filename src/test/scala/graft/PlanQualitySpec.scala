@@ -317,6 +317,21 @@ class PlanQualitySpec extends SparkSpec {
       s"documents scan not pruned to (doc_id, text): $read")
     assert(!plan.contains("CartesianProduct") && !plan.contains("NestedLoop"),
       s"no pairwise regime anywhere in ExactSubstr:\n$plan")
+    assert(plan.contains("excisespansexpr"),
+      s"span merge + rebuild must run on the native excise kernel:\n$plan")
+    assert(!plan.contains("aggregate(") && !plan.contains("collect_list(struct"),
+      s"no interpreted span fold or struct span list may remain:\n$plan")
+  }
+
+  test("qcj k-means: points assign through the native nearest-centroid " +
+    "kernel — no pairwise join, no lambda distance") {
+    val plan = executedPlan("qcj_kmeans")
+    assert(plan.contains("nearestcentroidexpr"),
+      s"assignment must run on the native nearest-centroid kernel:\n$plan")
+    assert(!plan.contains("CartesianProduct") && !plan.contains("NestedLoop"),
+      s"no (point, centroid) pairwise join may remain:\n$plan")
+    assert(!plan.contains("lambdafunction"),
+      s"no interpreted lambda may remain in the k-means plan:\n$plan")
   }
 
   test("qf9 IVF hard negatives: probes broadcast into the cell join; the " +
