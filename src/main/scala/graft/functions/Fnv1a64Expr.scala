@@ -38,9 +38,14 @@ object Fnv1a64Expr {
   /** Referenced from generated code — must stay public and static-shaped. */
   def hash(s: UTF8String): Long = {
     val bytes = s.getBytes
+    hash(bytes, 0, bytes.length)
+  }
+
+  /** FNV-1a 64 of `bytes[from, until)`. */
+  def hash(bytes: Array[Byte], from: Int, until: Int): Long = {
     var h = 0xcbf29ce484222325L
-    var i = 0
-    while (i < bytes.length) {
+    var i = from
+    while (i < until) {
       h ^= (bytes(i) & 0xffL)
       h *= 0x100000001b3L
       i += 1

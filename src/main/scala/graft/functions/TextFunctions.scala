@@ -32,12 +32,6 @@ object TextFunctions {
     array_distinct(transform(idx, i => array_join(slice(toks, i + 1, lit(n)), " ")))
   }
 
-  /** Character n-gram shingles, distinct. */
-  def charShingles(text: Column, n: Int): Column = {
-    val idx = sequence(lit(1), length(text) - (n - 1))
-    array_distinct(transform(idx, i => substring(text, i, lit(n))))
-  }
-
   private val stopwordLists: Map[String, Seq[String]] = Map(
     "en" -> Seq("the", "a", "an", "and", "or", "of", "to", "in", "is", "it",
       "that", "for", "on", "with", "as", "at", "by", "this", "be", "are"),

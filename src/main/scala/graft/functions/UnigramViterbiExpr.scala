@@ -100,7 +100,6 @@ final class UnigramViterbiKernel(pieces: Array[String], costs: Array[Long],
     }
     math.max(1, worst) * maxLen
   }
-  private[graft] def hitBufferSize: Int = maxHits
 
   /** Matching ranks for pieces ENDING at 1-based position `i` — every
     * ENTRY, duplicate chains walked in canonical order; no sort: every

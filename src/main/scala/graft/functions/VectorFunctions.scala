@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   *
   * Capability parity: the reference ships distance metrics as FlinkML
   * classes (reference: flink-libraries/flink-ml/.../ml/metrics/distances/
-  * {Euclidean,SquaredEuclidean,Cosine,Chebyshev,Manhattan,Minkowski,
+  * {Euclidean,SquaredEuclidean,Cosine,Chebyshev,Manhattan,
   * Tanimoto}DistanceMetric.scala); here each is a `Column` expression so
   * Catalyst can fuse it into scans/joins and whole-stage codegen.
   *
@@ -35,9 +35,6 @@ object VectorFunctions {
 
   def normL2(a: Column): Column = sqrt(dot(a, a))
 
-  def normL1(a: Column): Column =
-    aggregate(a, lit(0.0), (acc, v) => acc + abs(d(v)))
-
   def euclidean(a: Column, b: Column): Column =
     sqrt(squaredEuclidean(a, b))
 
@@ -51,10 +48,6 @@ object VectorFunctions {
   def chebyshev(a: Column, b: Column): Column =
     aggregate(zipMin(a, b, (x, y) => abs(d(x) - d(y))), lit(0.0),
       (acc, v) => greatest(acc, v))
-
-  def minkowski(a: Column, b: Column, p: Double): Column =
-    pow(aggregate(zipMin(a, b, (x, y) => pow(abs(d(x) - d(y)), lit(p))),
-      lit(0.0), (acc, v) => acc + v), lit(1.0 / p))
 
   def cosineSimilarity(a: Column, b: Column): Column =
     dot(a, b) / (normL2(a) * normL2(b))
@@ -78,9 +71,6 @@ object VectorFunctions {
       while (i < y.length) { val yi = y(i).toDouble; bb += yi * yi; i += 1 }
       ab / (math.sqrt(aa) * math.sqrt(bb))
     }
-
-  def cosineDistance(a: Column, b: Column): Column =
-    lit(1.0) - cosineSimilarity(a, b)
 
   /** Tanimoto similarity: dot / (|a|^2 + |b|^2 - dot). */
   def tanimoto(a: Column, b: Column): Column = {

@@ -168,8 +168,8 @@ object Dedup {
     * silently probe different buckets. */
   private[operators] def bandedBuckets(sigs: DataFrame, bands: Int, rowsPerBand: Int): DataFrame =
     sigs.select(col("doc"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        b => xxhash64(lit("band"), b, slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand))))))
+      posexplode(array((0 until bands).map(b => xxhash64(lit("band"), lit(b),
+        slice(col("sig"), b * rowsPerBand + 1, rowsPerBand))): _*)))
       .toDF("doc", "band", "bucket")
 
   /** The SCOPED banding definition — [[bandedBuckets]] with the scope
@@ -182,9 +182,8 @@ object Dedup {
   private[graft] def scopedBandedBuckets(sigs: DataFrame, bands: Int,
                                          rowsPerBand: Int): DataFrame =
     sigs.select(col("doc"), col("scope"),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          b => xxhash64(lit("band"), b, col("scope"),
-            slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand))))))
+        posexplode(array((0 until bands).map(b => xxhash64(lit("band"), lit(b),
+          col("scope"), slice(col("sig"), b * rowsPerBand + 1, rowsPerBand))): _*)))
       .toDF("doc", "scope", "band", "bucket")
 
   /** Exact-Jaccard verification of candidate (leftId, rightId) pairs
@@ -572,11 +571,10 @@ object Dedup {
                              nBlocks: Int): DataFrame = {
     require(nBlocks >= 1 && nBlocks <= 64)
     val width = 64 / nBlocks // trailing bits join the last block
-    val blockExprs = transform(sequence(lit(0), lit(nBlocks - 1)), b => {
-      val shifted = call_function("shiftrightunsigned", col("simhash"), b * lit(width))
-      val mask = when(b === nBlocks - 1, lit(-1L)).otherwise(lit((1L << width) - 1))
-      shifted.bitwiseAND(mask)
-    })
+    val blockExprs = array((0 until nBlocks).map { b =>
+      val mask = if (b == nBlocks - 1) -1L else (1L << width) - 1
+      shiftrightunsigned(col("simhash"), b * width).bitwiseAND(lit(mask))
+    }: _*)
     val blocks = sh.select(col("doc"), col("simhash"), posexplode(blockExprs))
       .toDF("doc", "simhash", "blk", "blkval")
     blocks.as("a").join(blocks.as("b"),
@@ -990,9 +988,10 @@ object Dedup {
     * L-gram form is one hash-aggregate instead of a global suffix sort.
     *
     * Algorithm, fully distributed, collision-exact:
-    *  1. one compiled text pass emits (doc, pos, fnv1a64(L-gram)) — the
-    *     rolling window materializes an 8-byte hash per position, never
-    *     the L-char string (no Lx shuffle amplification);
+    *  1. one pass of the native [[graft.functions.GramHashesExpr]]
+    *     window kernel emits (doc, pos, fnv1a64(L-gram)) — an 8-byte
+    *     hash per position off one walk of the doc's bytes, never the
+    *     L-char string (no Lx shuffle amplification);
     *  2. hashes with global count >= 2 are CANDIDATE duplicates (one
     *     corpus-sized count shuffle on an 8-byte key);
     *  3. candidates re-materialize their gram text (join back to the doc
@@ -1030,15 +1029,12 @@ object Dedup {
     df.select(col(idCol).as("_d"), col(textCol).as("_t"),
       length(col(textCol)).cast("long").as("_len"))
 
-  /** (_d, pos, h): one 8-byte rolling-window FNV hash per character
-    * position of `docs` (_d, _t, _len); docs shorter than L emit none. */
+  /** (_d, pos, h): one 8-byte FNV hash per character position of `docs`
+    * (_d, _t, _len), from the native [[graft.functions.GramHashesExpr]]
+    * window kernel (h == fnv1a64(substr(_t, pos + 1, L)), no window
+    * string built); docs shorter than L emit none. */
   private def rollingGramHashes(docs: DataFrame, L: Int): DataFrame =
-    docs.select(col("_d"),
-        posexplode(when(col("_len") >= L,
-          transform(sequence(lit(0L), col("_len") - L), i =>
-            graft.functions.Fnv1a64Expr(
-              col("_t").substr((i + 1).cast("int"), lit(L)))))
-          .otherwise(array().cast("array<bigint>"))))
+    docs.select(col("_d"), posexplode(graft.functions.GramHashesExpr(col("_t"), L)))
       .toDF("_d", "pos", "h")
       .withColumn("pos", col("pos").cast("long"))
 
@@ -1155,26 +1151,19 @@ object Dedup {
   /** (_d, pos, h, h2) double-hash rolling L-gram fingerprints over
     * `docs` (_d, _t, _len) — the cross-run currency of [[GramIndex]]:
     * FNV-1a 64 + xxhash64 of the same window, 16 bytes per character
-    * position, never the L-char string. Two independent 64-bit hashes
-    * agree on different grams with probability ~2^-128 per comparison —
-    * the same hash-equivalence contract the shingle family documents,
-    * squared. */
+    * position, never the L-char string. Both hashes come off one walk of
+    * each doc's bytes in the native [[graft.functions.GramHashesExpr]]
+    * kernel (h == fnv1a64(substr(_t, pos + 1, L)), h2 == xxhash64 of the
+    * same substr), and the explode carries only `carryCols` and `_d`,
+    * never the text. Two independent 64-bit hashes agree on different
+    * grams with probability ~2^-128 per comparison — the same
+    * hash-equivalence contract the shingle family documents, squared. */
   private[graft] def charGramFingerprints(docs: DataFrame, L: Int,
-                                          carryCols: Seq[String] = Nil): DataFrame = {
-    // round 20: explode a PRIMITIVE position array and hash post-explode.
-    // The previous `transform(seq, i => struct(fnv(g), xxhash64(g)))`
-    // built an object array of structs per document with TWO substring
-    // copies per position inside the lambda — measured ~30x the CPU of
-    // this shape (boxing + allocation + GC, and lambda bodies are outside
-    // top-level subexpression elimination). Here the explode carries only
-    // a long, and the single top-level Project computes the window once
-    // (codegen CSE shares the substr between the two hashes).
-    val g = col("_t").substr((col("pos") + 1).cast("int"), lit(L))
-    docs.select((carryCols.map(col) :+ col("_d") :+ col("_t")) :+
-        explode(when(col("_len") >= L, sequence(lit(0L), col("_len") - L))
-          .otherwise(array().cast("array<bigint>"))).as("pos"): _*)
+                                          carryCols: Seq[String] = Nil): DataFrame =
+    docs.select((carryCols.map(col) :+ col("_d")) :+
+        posexplode(graft.functions.GramHashesExpr.withXxhash(col("_t"), L))
+          .as(Seq("pos", "_g")): _*)
       .select((carryCols.map(col) :+ col("_d")) :+
-        col("pos") :+
-        graft.functions.Fnv1a64Expr(g).as("h") :+ xxhash64(g).as("h2"): _*)
-  }
+        col("pos").cast("long").as("pos") :+
+        col("_g.h").as("h") :+ col("_g.h2").as("h2"): _*)
 }

@@ -45,12 +45,43 @@ object Partitioning {
     *
     * `keys` should be a stable row identity (doc id): hash partitioning
     * on a deterministic key is retry-safe without round-robin's
-    * sort-before-repartition pass. */
+    * sort-before-repartition pass.
+    *
+    * The decision reads [[plannedPartitions]], never `df.rdd`: under AQE
+    * `Dataset.rdd` materializes every upstream query stage, so a probe
+    * would run a caller's shuffles once at compose time and again at the
+    * action. Composing this operator launches no job. */
   def fanOutForCompute(df: DataFrame, keys: Column*): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= target) df
+    if (plannedPartitions(df) >= target) df
     else if (keys.nonEmpty) df.repartition(target, keys: _*)
     else df.repartition(target)
+  }
+
+  /** The partition count `df` is planned to run with, read from its
+    * physical plan without executing any of it: the output partitioning
+    * when the plan states one (an exchange's planned count — AQE may
+    * still coalesce it at run time), else the splits of the row-feeding
+    * scans (file splits, an RDD's or a local relation's partitions, a
+    * cached frame's plan; a union adds its children, any other node takes
+    * its widest child — a broadcast side plans as one partition).
+    * A leaf of any other kind counts as already wide. */
+  private def plannedPartitions(df: DataFrame): Int = {
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    def parts(p: SparkPlan): Long = p match {
+      // the plan AQE starts from, exchanges in place; nothing has run
+      case a: AdaptiveSparkPlanExec => parts(a.initialPlan)
+      case _ if p.outputPartitioning.numPartitions > 0 => p.outputPartitioning.numPartitions
+      case s: FileSourceScanExec => s.inputRDD.getNumPartitions
+      case s: RDDScanExec => s.rdd.getNumPartitions
+      case s: LocalTableScanExec => s.execute().getNumPartitions
+      case m: columnar.InMemoryTableScanExec => parts(m.relation.cachedPlan)
+      case u: UnionExec => u.children.map(parts).sum
+      case l if l.children.isEmpty => Int.MaxValue
+      case o => o.children.map(parts).max
+    }
+    math.min(parts(df.queryExecution.executedPlan), Int.MaxValue).toInt
   }
 
   /** sortPartition: per-partition local sort (no shuffle). */

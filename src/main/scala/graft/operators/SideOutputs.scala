@@ -8,9 +8,9 @@ import org.apache.spark.sql.functions._
   * -java/.../api/datastream/{SplitStream,SingleOutputStreamOperator}.java).
   *
   * Spark model: a sink per output re-executes the source, so a single-pass
-  * demux materializes the tagged union once (`persist` in batch,
-  * `foreachBatch` in streaming) and filters per tag — the documented
-  * equivalent of side outputs.
+  * demux materializes the tagged union once (`persist`) and filters per
+  * tag — the documented equivalent of side outputs. A stream tags with
+  * [[tagged]] and routes per tag inside its own `foreachBatch`.
   */
 object SideOutputs {
 
@@ -32,16 +32,4 @@ object SideOutputs {
     (routes.map(_._1) :+ defaultTag).distinct
       .map(tag => tag -> t.filter(col("_tag") === tag).drop("_tag")).toMap
   }
-
-  /** Streaming demux: one query, one pass per micro-batch, many sinks. */
-  def demuxStream(df: DataFrame, routes: Seq[(String, Column)],
-                  writer: (String, DataFrame) => Unit,
-                  defaultTag: String = "default"): org.apache.spark.sql.streaming.StreamingQuery =
-    tagged(df, routes, defaultTag).writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val cached = batch.persist()
-        try (routes.map(_._1) :+ defaultTag).distinct.foreach { tag =>
-          writer(tag, cached.filter(col("_tag") === tag).drop("_tag"))
-        } finally { cached.unpersist(); () }
-      }.start()
 }

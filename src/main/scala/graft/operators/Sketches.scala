@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.functions.Fnv1a64Expr
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftExprBridge}
+import org.apache.spark.sql.catalyst.expressions.{BitwiseAnd, Concat, CreateArray, Expression, Literal}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -227,16 +228,21 @@ object Sketches {
     case _ => { val m = 1 << p; 0.7213 / (1.0 + 1.079 / m) }
   }
 
-  /** The d per-row buckets of a key: FNV-1a over "i|key" masked to the low
-    * log2(w) bits. Seeding by string prefix keeps the d hashes independent
-    * while staying one primitive any engine can replay. */
+  /** Row `i`'s bucket of a string key: FNV-1a over "i|key" masked to the
+    * low log2(w) bits. Seeding by string prefix keeps the d hashes
+    * independent while staying one primitive any engine can replay. The
+    * one bucket definition: [[seededBuckets]] builds its column from it and
+    * [[dyadicHeavyHitters]]' driver-side descent evaluates it on literal
+    * keys. */
+  private def seededBucket(i: Int, key: Expression, w: Int): Expression =
+    BitwiseAnd(Fnv1a64Expr(Concat(Seq(Literal(s"$i|"), key))), Literal((w - 1).toLong))
+
+  /** The d per-row [[seededBucket]]s of a key. */
   private def seededBuckets(key: org.apache.spark.sql.Column, w: Int, d: Int) = {
     require(w >= 2 && (w & (w - 1)) == 0, s"w must be a power of two, got $w")
     require(d >= 1 && d <= 8, s"d must be in [1, 8], got $d")
-    array((0 until d).map { i =>
-      Fnv1a64Expr(concat(lit(s"$i|"), key.cast("string")))
-        .bitwiseAND(lit((w - 1).toLong))
-    }: _*)
+    val k = GraftExprBridge.expression(key.cast("string"))
+    GraftExprBridge.column(CreateArray((0 until d).map(seededBucket(_, k, w))))
   }
 
   /** KMV (k-minimum-values / bottom-k) distinct sketch (Bar-Yossef et al.,
@@ -493,6 +499,14 @@ object Sketches {
                          d: Int, minCount: Long): DataFrame = {
     require(bits >= 2 && bits <= 62, s"bits must be in [2, 62], got $bits")
     require(minCount >= 1, s"minCount must be >= 1, got $minCount")
+    // the descent's counter key packs (l, cm_row, cm_bucket) as
+    // l << 40 | row << 32 | bucket: l < 62, row < d, bucket < w
+    require(d >= 1 && d <= 8,
+      s"dyadicHeavyHitters packs cm_row into bits 32-39: d must be in [1, 8], got $d")
+    require(w >= 2 && w <= (1 << 30),
+      s"dyadicHeavyHitters packs cm_bucket below bit 32: w must be in [2, 2^30], got $w")
+    def pack(l: Int, row: Int, bucket: Long): Long =
+      (l.toLong << 40) | (row.toLong << 32) | bucket
     val hv = Fnv1a64Expr(Fnv1a64Expr(col(keyCol).cast("string")).cast("string"))
       .bitwiseAND(lit((1L << bits) - 1))
     // fan a single-split scan out BEFORE the sketch build: the per-row
@@ -512,17 +526,15 @@ object Sketches {
     val counters = dyadicLevelCounters(hashed, "hv", bits, w, d)
     val cmap = new java.util.HashMap[Long, Long]()
     counters.collect().foreach { r =>
-      // key packs (l, cm_row, cm_bucket): l < 62, row < 8, bucket < w
-      cmap.put((r.getInt(0).toLong << 40) | (r.getInt(1).toLong << 32) |
-        r.getLong(2), r.getLong(3))
+      cmap.put(pack(r.getInt(0), r.getInt(1), r.getLong(2)), r.getLong(3))
     }
-    def est(l: Int, node: Long): Long = (0 until d).map { i =>
-      // replicates seededBuckets exactly: FNV-1a of "i|<node>" AND (w-1)
-      val b = graft.functions.Fnv1a64Expr.hash(
-        org.apache.spark.unsafe.types.UTF8String.fromString(s"$i|$node")) &
-        (w - 1).toLong
-      cmap.getOrDefault((l.toLong << 40) | (i.toLong << 32) | b, 0L)
-    }.min
+    def est(l: Int, node: Long): Long = {
+      val key = Literal(node.toString)
+      (0 until d).map { i =>
+        val b = seededBucket(i, key, w).eval().asInstanceOf[Long]
+        cmap.getOrDefault(pack(l, i, b), 0L)
+      }.min
+    }
     var frontier: Seq[Long] = Seq(0L, 1L)
     var frontierEst: Map[Long, Long] = Map.empty
     for (l <- (bits - 1) to 0 by -1) {

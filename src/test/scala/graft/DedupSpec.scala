@@ -890,4 +890,128 @@ class DedupSpec extends SparkSpec {
       org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(Array(0L)), L)
       .getLong(1) === 0L)
   }
+
+  /** The rolling-hash formulation Dedup.rollingGramHashes had before the
+    * native window kernel — the reference the kernel must equal bit for
+    * bit: one interpreted lambda per character position hashing
+    * substr(_t, i + 1, L). */
+  private def gramHashesReference(docs: org.apache.spark.sql.DataFrame,
+                                  L: Int): org.apache.spark.sql.DataFrame =
+    docs.select(col("_d"),
+        posexplode(when(length(col("_t")) >= L,
+          transform(sequence(lit(0L), length(col("_t")).cast("long") - L), i =>
+            graft.functions.Fnv1a64Expr(col("_t").substr((i + 1).cast("int"), lit(L)))))
+          .otherwise(array().cast("array<bigint>"))))
+      .toDF("_d", "pos", "h")
+      .withColumn("pos", col("pos").cast("long"))
+
+  /** 400 seeded texts of 0-60 code points over 1-, 2-, 3- and 4-byte
+    * UTF-8, tabs and NULs, plus null, empty, and texts around L. */
+  private def gramHashTexts: Seq[(Long, String)] = {
+    val rnd = new scala.util.Random(4057)
+    val alphabet = Seq("a", "b", "c", " ", "\t", "\u0000", "\u00e9", "\u00df",
+      "\u4e2d", "\u20ac", "\ud83d\ude00", "\ud834\udd1e")
+    val fuzz = (0L until 400L).map { d =>
+      d -> Seq.fill(rnd.nextInt(61))(alphabet(rnd.nextInt(alphabet.size))).mkString
+    }
+    fuzz ++ Seq(1000L -> null, 1001L -> "", 1002L -> "x", 1003L -> "xy",
+      1004L -> "abcde", 1005L -> "\u00e9\u4e2d\ud83d\ude00\u00e9\u4e2d",
+      1006L -> ("ab\u00e9" * 20), 1007L -> ("\ud83d\ude00" * 40))
+  }
+
+  test("GramHashesExpr equals the per-position lambda bit for bit, on the " +
+    "generated-code and interpreted paths (fuzzed multi-byte UTF-8, null, " +
+    "empty, len < L, len == L, L = 1)") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.types._
+    val texts = gramHashTexts
+    val docs = spark.createDataFrame(spark.sparkContext.parallelize(
+        texts.map { case (d, t) => Row(d, t) }, 3),
+      StructType(Seq(StructField("_d", LongType), StructField("_t", StringType))))
+    for (l <- Seq(1, 2, 5, 40)) {
+      val want = gramHashesReference(docs, l).as[(Long, Long, Long)].collect()
+      val got = docs.select(col("_d"), posexplode(graft.functions.GramHashesExpr(col("_t"), l)))
+        .as[(Long, Int, Long)].collect().map { case (d, p, h) => (d, p.toLong, h) }
+      assert(got.sorted.toSeq === want.sorted.toSeq, s"L=$l")
+      assert(want.length > 500, s"L=$l: the fuzz must produce windows")
+      val byDoc = want.groupBy(_._1).map { case (d, rs) => d -> rs.sortBy(_._2).map(_._3).toSeq }
+      for ((d, t) <- texts) {
+        val ev = graft.functions.GramHashesExpr(Literal.create(t, StringType), l, withXx = false)
+          .eval().asInstanceOf[ArrayData].toLongArray().toSeq
+        assert(ev === byDoc.getOrElse(d, Seq.empty), s"doc $d, L=$l interpreted")
+      }
+    }
+    val one = docs.filter(col("_d") >= 1000L)
+      .select(col("_d"), size(graft.functions.GramHashesExpr(col("_t"), 5)).as("n"))
+      .as[(Long, Int)].collect().toMap
+    assert(one === Map(1000L -> 0, 1001L -> 0, 1002L -> 0, 1003L -> 0, 1004L -> 1,
+      1005L -> 1, 1006L -> 56, 1007L -> 36), "null, empty and len < L give none; len == L one")
+  }
+
+  test("GramHashesExpr h2 equals xxhash64(substr(...)): charGramFingerprints " +
+    "keeps GramIndex's persisted (h, h2), carry columns included") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.types._
+    val texts = gramHashTexts
+    val docs = spark.createDataFrame(spark.sparkContext.parallelize(
+        texts.map { case (d, t) => Row(d, t, (d % 3).toInt) }, 3),
+      StructType(Seq(StructField("_d", LongType), StructField("_t", StringType),
+        StructField("_slice", IntegerType))))
+      .withColumn("_len", length(col("_t")).cast("long"))
+    for (l <- Seq(1, 5, 40)) {
+      val g = col("_t").substr((col("pos") + 1).cast("int"), lit(l))
+      val want = gramHashesReference(docs, l)
+        .join(docs.select("_d", "_t", "_slice"), "_d")
+        .select(col("_slice"), col("_d"), col("pos"),
+          graft.functions.Fnv1a64Expr(g).as("h"), xxhash64(g).as("h2"))
+        .as[(Int, Long, Long, Long, Long)].collect()
+      val fp = Dedup.charGramFingerprints(docs, l, carryCols = Seq("_slice"))
+      assert(fp.columns.toSeq === Seq("_slice", "_d", "pos", "h", "h2"))
+      val got = fp.as[(Int, Long, Long, Long, Long)].collect()
+      assert(got.sorted.toSeq === want.sorted.toSeq, s"L=$l")
+      val byDoc = want.groupBy(_._2).map { case (d, rs) =>
+        d -> rs.sortBy(_._3).map(r => (r._4, r._5)).toSeq }
+      for ((d, t) <- texts) {
+        val ev = graft.functions.GramHashesExpr(Literal.create(t, StringType), l, withXx = true)
+          .eval().asInstanceOf[ArrayData]
+        val pairs = (0 until ev.numElements()).map { i =>
+          val r = ev.getStruct(i, 2); (r.getLong(0), r.getLong(1)) }
+        assert(pairs === byDoc.getOrElse(d, Seq.empty), s"doc $d, L=$l interpreted")
+      }
+    }
+  }
+
+  test("GramHashesExpr clamps a last code point whose bytes run past the " +
+    "end of the text") {
+    import org.apache.spark.sql.catalyst.expressions.{Literal, XXH64}
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.types._
+    import org.apache.spark.unsafe.Platform
+    import org.apache.spark.unsafe.types.UTF8String
+    // "ab", U+00E9 (2 bytes), then the first byte of U+20AC (3 bytes) alone
+    val bytes = Array[Byte](0x61, 0x62, 0xc3.toByte, 0xa9.toByte, 0xe2.toByte)
+    // code-point byte offsets 0, 1, 2, 4; the last one is cut short at 5
+    val cps = Seq(0, 1, 2, 4, 5)
+    def fnv(from: Int, until: Int) = graft.functions.Fnv1a64Expr.hash(bytes, from, until)
+    def xx(from: Int, until: Int) =
+      XXH64.hashUnsafeBytes(bytes, Platform.BYTE_ARRAY_OFFSET + from, until - from, 42L)
+    val text = UTF8String.fromBytes(bytes)
+    assert(text.numChars() === 4)
+    for (l <- 1 to 5) {
+      val want = (0 to 4 - l).map(i => (fnv(cps(i), cps(i + l)), xx(cps(i), cps(i + l))))
+      // generated-code path: a binary column cast to string keeps the bytes
+      val coded = Seq(bytes).toDF("b").select(col("b").cast("string").as("_t"))
+        .select(graft.functions.GramHashesExpr.withXxhash(col("_t"), l).as("g"))
+        .select(col("g.h"), col("g.h2")).as[(Seq[Long], Seq[Long])].collect().head
+      assert(coded._1.zip(coded._2) === want, s"L=$l generated code")
+      val ev = graft.functions.GramHashesExpr(Literal.create(text, StringType), l, withXx = false)
+        .eval().asInstanceOf[ArrayData].toLongArray().toSeq
+      assert(ev === want.map(_._1), s"L=$l interpreted")
+    }
+  }
 }

@@ -311,7 +311,7 @@ class PlanQualitySpec extends SparkSpec {
     assert(plan.contains("partial_count"),
       s"gram count lost its map-side partial:\n$plan")
     assert(!plan.contains("ScalaUDF"),
-      s"rolling hash + rebuild must stay native HOFs/expressions:\n$plan")
+      s"rolling hash + rebuild must stay native expressions:\n$plan")
     val read = "ReadSchema: [^\n]*".r.findAllIn(plan).mkString(" ")
     assert(!read.contains("lang") && !read.contains("source"),
       s"documents scan not pruned to (doc_id, text): $read")
@@ -321,6 +321,16 @@ class PlanQualitySpec extends SparkSpec {
       s"span merge + rebuild must run on the native excise kernel:\n$plan")
     assert(!plan.contains("aggregate(") && !plan.contains("collect_list(struct"),
       s"no interpreted span fold or struct span list may remain:\n$plan")
+    assertNativeGramHashes(plan)
+  }
+
+  /** The ExactSubstr family hashes its L-windows in the native window
+    * kernel, never one interpreted lambda per character position. */
+  private def assertNativeGramHashes(plan: String): Unit = {
+    assert(plan.contains("gramhashesexpr"),
+      s"window hashes must come from the native GramHashesExpr kernel:\n$plan")
+    assert(!plan.contains("lambdafunction"),
+      s"no interpreted per-position lambda may remain:\n$plan")
   }
 
   test("qcj k-means: points assign through the native nearest-centroid " +
@@ -356,6 +366,7 @@ class PlanQualitySpec extends SparkSpec {
       s"documents scan not pruned to (doc_id, text): $read")
     assert(!plan.contains("CartesianProduct") && !plan.contains("NestedLoop"),
       s"no pairwise regime in the exposure report:\n$plan")
+    assertNativeGramHashes(plan)
   }
 
   test("qfe suffix array: the final order comes off the two-phase scan's " +
@@ -430,6 +441,7 @@ class PlanQualitySpec extends SparkSpec {
       s"rolling hash must stay the codegen expression:\n$plan")
     assert(!plan.matches("(?s).*Window.*SinglePartition.*"),
       s"merge windows must key on doc/gram, never one task:\n$plan")
+    assertNativeGramHashes(plan)
   }
 
   test("qgd domain quota: the rank comes from the two-phase grouped scan " +

@@ -220,6 +220,23 @@ class SketchesSpec extends SparkSpec {
     got.foreach { r => assert(r._4 === (r._3 >= 45L), s"is_heavy wrong: $r") }
   }
 
+  test("dyadicHeavyHitters rejects a w or d its packed counter key cannot " +
+    "hold, naming the value") {
+    val df = spark.range(50).select(($"id" % 5).cast("string").as("k"))
+    val w31 = 1 << 31 // 2^31 as an Int
+    val ew = intercept[IllegalArgumentException](
+      Sketches.dyadicHeavyHitters(df, "k", bits = 8, w = w31, d = 2, minCount = 1L))
+    assert(ew.getMessage.contains("w must be in [2, 2^30]") &&
+      ew.getMessage.contains(s"got $w31"), ew.getMessage)
+    val ed = intercept[IllegalArgumentException](
+      Sketches.dyadicHeavyHitters(df, "k", bits = 8, w = 64, d = 9, minCount = 1L))
+    assert(ed.getMessage.contains("got 9"), ed.getMessage)
+    // the bound itself still packs
+    val top = Sketches.dyadicHeavyHitters(df, "k", bits = 8, w = 1 << 30, d = 2,
+      minCount = 10L).select($"true_cnt").as[Long].collect()
+    assert(top.toSeq.sorted === Seq.fill(5)(10L))
+  }
+
   test("dyadicHeavyHitters descent equals the all-ancestors-pass characterization") {
     val df = spark.range(2000).select(concat(lit("u"), $"id" % 37).as("k"))
     val bits = 8
