@@ -1,6 +1,11 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated parquet fixtures (TESTDATA.md).
   *
@@ -9,6 +14,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * flink-core .../api/common/io/FileInputFormat.java); here the parquet
   * DataSource V2 scan gives vectorized reads + predicate/column pushdown
   * for free.
+  *
+  * Every read passes the file's schema explicitly ([[schema]]), so only a
+  * JVM's first read of a file launches Spark's one-task parquet schema
+  * inference job.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -18,7 +27,54 @@ object Tables {
   def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    if (name == "events") events(spark, dir) else spark.read.parquet(path(dir, name))
+    if (name == "events") events(spark, dir) else read(spark, path(dir, name))
+  }
+
+  private def read(spark: SparkSession, p: String): DataFrame =
+    spark.read.schema(schema(spark, p)).parquet(p)
+
+  /** The session confs parquet schema inference reads: Spark 4.1's
+    * `ParquetToSparkSchemaConverter`, schema merging and the footer
+    * reads. */
+  private val inferenceConfs: Seq[String] = Seq(
+    SQLConf.PARQUET_BINARY_AS_STRING, SQLConf.PARQUET_INT96_AS_TIMESTAMP,
+    SQLConf.CASE_SENSITIVE, SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED,
+    SQLConf.LEGACY_PARQUET_NANOS_AS_LONG, SQLConf.PARQUET_FIELD_ID_READ_ENABLED,
+    SQLConf.PARQUET_IGNORE_VARIANT_ANNOTATION,
+    SQLConf.PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION,
+    SQLConf.PARQUET_SCHEMA_MERGING_ENABLED, SQLConf.PARQUET_SCHEMA_RESPECT_SUMMARIES,
+    SQLConf.IGNORE_CORRUPT_FILES, SQLConf.IGNORE_MISSING_FILES).map(_.key)
+
+  private val schemas =
+    new ConcurrentHashMap[(String, Seq[(String, Long, Long)], Seq[String]), StructType]()
+
+  /** Exactly the schema `spark.read.parquet(path).schema` returns,
+    * memoized per JVM. The key is `path`, every leaf file it names as
+    * (path, length, mtime) and the values of [[inferenceConfs]], so a file
+    * rewritten with a new length or mtime, or a read under different
+    * inference confs, infers again. The one stale case: a file rewritten
+    * in place with the same path, length and mtime keeps its old schema.
+    * A missing path or a failed inference is not memoized (Spark's own
+    * error surfaces). */
+  def schema(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = Seq.newBuilder[(String, Long, Long)]
+    Option(fs.globStatus(p)).getOrElse(Array.empty).foreach { root =>
+      val it = fs.listFiles(root.getPath, true)
+      while (it.hasNext) {
+        val f = it.next()
+        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+    }
+    val key = (path, files.result().sorted, inferenceConfs.map(spark.conf.get))
+    val known = schemas.get(key)
+    if (known != null) known
+    else {
+      val inferred = spark.read.parquet(path).schema
+      schemas.put(key, inferred)
+      inferred
+    }
   }
 
   /** `events.ts` has shipped in three physical layouts across fixture
@@ -34,7 +90,7 @@ object Tables {
     *  - timestamp[us] UTC: already TimestampType, pass through. */
   def events(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeTs(spark.read.parquet(path(dir, "events")))
+    normalizeTs(read(spark, path(dir, "events")))
   }
 
   private[graft] def normalizeTs(raw: DataFrame): DataFrame = {

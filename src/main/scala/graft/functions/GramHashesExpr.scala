@@ -4,11 +4,11 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftExprBridge
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression, UnsafeArrayData, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -70,6 +70,32 @@ object GramHashesExpr {
   /** Spark's `xxhash64` seed. */
   private val XxSeed = 42L
 
+  /** The byte offset of the code point after the one starting at byte `b`:
+    * Spark's `substring` step (`numBytesForFirstByte`), clamped to the end
+    * of `bytes`. The one walk [[hashes]] and [[window]] share, so a window
+    * and its hash cover the same bytes. */
+  private def nextCodePoint(bytes: Array[Byte], b: Int): Int =
+    math.min(bytes.length, b + UTF8String.numBytesForFirstByte(bytes(b)))
+
+  /** Referenced from generated code: the `len`-character window of `s`
+    * at code point `pos`, cut short at the end of the text. Its bytes are
+    * exactly those element `pos` of `hashes(s, len, _)` hashes. */
+  def window(s: UTF8String, pos: Int, len: Int): UTF8String = {
+    val bytes = s.getBytes
+    var b = 0
+    var c = 0
+    while (c < pos && b < bytes.length) {
+      b = nextCodePoint(bytes, b)
+      c += 1
+    }
+    val from = b
+    while (c < pos + len && b < bytes.length) {
+      b = nextCodePoint(bytes, b)
+      c += 1
+    }
+    UTF8String.fromBytes(java.util.Arrays.copyOfRange(bytes, from, b))
+  }
+
   /** Referenced from generated code — must stay public and static-shaped. */
   def hashes(s: UTF8String, len: Int, withXx: Boolean): ArrayData = {
     val bytes = if (s == null) Array.emptyByteArray else s.getBytes
@@ -80,7 +106,7 @@ object GramHashesExpr {
     var b = 0
     while (b < n) {
       off(chars) = b
-      b += UTF8String.numBytesForFirstByte(bytes(b))
+      b = nextCodePoint(bytes, b)
       chars += 1
     }
     off(chars) = n
@@ -107,4 +133,38 @@ object GramHashesExpr {
     * window. */
   def withXxhash(text: Column, len: Int): Column =
     GraftExprBridge.column(GramHashesExpr(GraftExprBridge.expression(text), len, withXx = true))
+}
+
+/** The confirm half of [[GramHashesExpr]]: `(text, pos)` → the
+  * `len`-character window of `text` at code point `pos`
+  * ([[GramHashesExpr.window]]), cut by the same clamped walk as the hash,
+  * so a text whose last code point is cut short never yields bytes past
+  * its end (Spark's `substring` copies them). Null in, null out. */
+case class GramWindowExpr(left: Expression, right: Expression, len: Int)
+    extends BinaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (left.dataType == StringType && right.dataType == IntegerType)
+      TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"gram_window expects (string, int), got (${left.dataType.sql}, ${right.dataType.sql})")
+
+  override def dataType: DataType = StringType
+
+  override protected def nullSafeEval(text: Any, pos: Any): Any =
+    GramHashesExpr.window(text.asInstanceOf[UTF8String], pos.asInstanceOf[Int], len)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (t, p) => s"graft.functions.GramHashesExpr.window($t, $p, $len)")
+
+  override protected def withNewChildrenInternal(newLeft: Expression,
+                                                 newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object GramWindowExpr {
+  /** string: the `len`-character window of `text` at 0-based code point
+    * `pos` (cast to int). */
+  def apply(text: Column, pos: Column, len: Int): Column =
+    GraftExprBridge.column(GramWindowExpr(GraftExprBridge.expression(text),
+      GraftExprBridge.expression(pos.cast(IntegerType)), len))
 }

@@ -23,10 +23,12 @@ final class CentroidModel(val cellIds: Array[Any], val cents: Array[Long],
   def k: Int = cellIds.length
 
   /** Referenced from generated code: the id of the cell nearest to `v`
-    * by integer squared L2 over quantized coordinates, ties to the lower
-    * cell id. Every step is `Math.*Exact`, so a distance that overflows
-    * Long throws instead of wrapping. */
-  def nearest(v: ArrayData): Any = {
+    * ([[nearestIndex]]). */
+  def nearest(v: ArrayData): Any = cellIds(nearestIndex(quantized(v)))
+
+  /** `v`'s coordinates quantized to micro-units; a vector of the wrong
+    * length or with a null coordinate is rejected. */
+  def quantized(v: ArrayData): Array[Long] = {
     if (v.numElements() != dim) throw new IllegalArgumentException(
       s"k-means vector has ${v.numElements()} coordinates, centroids have $dim")
     val q = new Array[Long](dim)
@@ -37,13 +39,20 @@ final class CentroidModel(val cellIds: Array[Any], val cents: Array[Long],
       q(j) = CentroidModel.quantize(v.getDouble(j), scale)
       j += 1
     }
+    q
+  }
+
+  /** The index of the cell nearest to the quantized vector `q` by integer
+    * squared L2, ties to the lower cell. Every step is `Math.*Exact`, so a
+    * distance that overflows Long throws instead of wrapping. */
+  def nearestIndex(q: Array[Long]): Int = {
     var best = -1
     var bestDist = 0L
     var c = 0
     while (c < cellIds.length) {
       val base = c * dim
       var d = 0L
-      j = 0
+      var j = 0
       while (j < dim) {
         val diff = Math.subtractExact(q(j), cents(base + j))
         d = Math.addExact(d, Math.multiplyExact(diff, diff))
@@ -55,7 +64,7 @@ final class CentroidModel(val cellIds: Array[Any], val cents: Array[Long],
       }
       c += 1
     }
-    cellIds(best)
+    best
   }
 
   override def toString: String = s"CentroidModel(k=$k, dim=$dim)"

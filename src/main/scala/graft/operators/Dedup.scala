@@ -1040,7 +1040,8 @@ object Dedup {
 
   /** (_d, pos) starts of the L-windows whose text occurs >= 2 times in
     * the corpus: hash-count candidates, then the collision-exact text
-    * confirm on the (small) candidate subset. */
+    * confirm on the (small) candidate subset, over the very bytes the
+    * hash covered ([[graft.functions.GramWindowExpr]]). */
   private def dupWindowStarts(docs: DataFrame, L: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val grams = rollingGramHashes(docs, L)
@@ -1049,7 +1050,7 @@ object Dedup {
     grams.join(dupHash, "h")
       .join(docs.select(col("_d"), col("_t")), "_d")
       .select(col("_d"), col("pos"),
-        col("_t").substr((col("pos") + 1).cast("int"), lit(L)).as("g"))
+        graft.functions.GramWindowExpr(col("_t"), col("pos"), L).as("g"))
       .withColumn("_n", count(lit(1)).over(Window.partitionBy(col("g"))))
       .filter(col("_n") >= 2)
       .select(col("_d"), col("pos"))

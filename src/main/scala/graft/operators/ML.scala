@@ -1,6 +1,8 @@
 package graft.operators
 
+import graft.functions.CentroidModel
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 
 /** Native model-fitting surface (reference: flink-libraries/flink-ml/.../
@@ -493,37 +495,48 @@ object ML {
     * the lower cell id; a distance that overflows Long throws), and the
     * centroid update is the per-dimension floor(sum/count) — every round
     * is engine-portable, so the whole trajectory hash-oracles. Initial
-    * centroids: the k lowest-id vectors. A cell that loses all members
-    * drops out (k shrinks, deterministic).
+    * centroids: the k lowest-id vectors; an id that repeats among them is
+    * rejected. A cell that loses all members drops out (k shrinks,
+    * deterministic). Null and empty vectors take no part in a round, so a
+    * dim-0 model keeps no cell.
     *
     * Shape (the reference's flink-examples-batch/.../clustering/
     * KMeans.java: centroids as a broadcast set, a plain per-point
-    * `SelectNearestCenter` map): the model lives on the DRIVER as k×dim
-    * longs ([[graft.functions.CentroidModel]]). One collect of the k
-    * lowest-id rows seeds it; each Lloyd round is ONE aggregate job — the
-    * native [[graft.functions.NearestCentroidExpr]] assigns every point,
-    * `posexplode` + a (cell_id, pos) aggregate computes the update — whose
-    * k×dim result is collected into the next model. The final assignment
-    * is one narrow projection and `centroids` is a local frame
-    * (cell_id in the id column's type, cvec array<bigint>). Driver state
-    * and the per-round collect are bounded by k·dim values (8 bytes each:
-    * 6 MB at k = 1024, dim = 768), independent of the row count; the
-    * model ships to tasks inside the plan, so k·dim must stay broadcast-
-    * sized. Magnitude: the update sums |q| ≤ scale·max|v| per member, so
-    * the double-floored division stays exact while cell_members · scale ·
-    * max|v| < 2^53 — ~9e9 members per cell at unit-norm embeddings and
-    * scale 1e6. */
+    * `SelectNearestCenter` map; its bulk iteration runs every superstep
+    * in one job): the model lives on the DRIVER as k×dim longs
+    * ([[graft.functions.CentroidModel]]). One collect of the k lowest-id
+    * rows seeds it; each Lloyd round is then ONE Spark job over the
+    * cached input's internal rows, planned once for all rounds: every
+    * partition assigns its points with the model's nearest-cell loop and
+    * sums k member counts and k×dim quantized coordinates (`addExact`, so
+    * a sum that overflows Long throws), and a depth-2 `treeReduce` merges
+    * the partials. The driver takes in about √P partials of k + k·dim
+    * longs (P = input partitions) and computes the next model. The final
+    * assignment is one narrow projection (the native
+    * [[graft.functions.NearestCentroidExpr]]) and `centroids` is a local
+    * frame (cell_id in the id column's type, cvec array<bigint>). Driver
+    * state is bounded by k·dim values (8 bytes each: 6 MB at k = 1024,
+    * dim = 768) times √P during a merge, independent of the row count;
+    * the model ships to tasks inside the plan, so k·dim must stay
+    * broadcast-sized. Magnitude: the update sums |q| ≤ scale·max|v| per
+    * member, so the double-floored division stays exact while
+    * cell_members · scale · max|v| < 2^53 — ~9e9 members per cell at
+    * unit-norm embeddings and scale 1e6.
+    *
+    * Lifetime: the input is cached once, as its (id, vector) projection,
+    * so every round and `assignments` read one materialization of the
+    * caller's lineage. `assignments` is a lazy projection of that cache,
+    * so it is not unpersisted here: it stays cached until the caller
+    * clears the session's cache (`spark.catalog.clearCache()`). */
   def kMeansScaled(df: DataFrame, idCol: String, vecCol: String,
                    k: Int, iters: Int, scale: Long = 1000000L): KMeansResult = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(iters >= 0, s"iters must be >= 0, got $iters")
-    import graft.functions.{CentroidModel, NearestCentroidExpr}
+    import graft.functions.NearestCentroidExpr
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.catalyst.CatalystTypeConverters
     import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
     val spark = df.sparkSession
-    // cached once so every round (and the final assignment) sees one
-    // materialization of the caller's lineage
     val v = df.select(col(idCol).as("_id"), col(vecCol).cast("array<double>").as("_v"))
       .cache()
     val idType = v.schema("_id").dataType
@@ -533,6 +546,9 @@ object ML {
       s"kMeansScaled: null $idCol or $vecCol among the k lowest ids")
     val dim = if (seed.isEmpty) 0 else seed.head.getSeq[Double](1).length
     var ids: Array[Any] = seed.map(_.get(0))
+    val repeated = ids.zip(ids.drop(1)).collectFirst { case (a, b) if a == b => a }
+    require(repeated.isEmpty,
+      s"kMeansScaled: $idCol ${repeated.orNull} repeats among the k lowest ids")
     var cents: Array[Long] = seed.flatMap { r =>
       val xs = r.getSeq[Double](1)
       require(xs.length == dim, s"kMeansScaled: seed vector ${r.get(0)} has " +
@@ -540,20 +556,16 @@ object ML {
       xs.map(CentroidModel.quantize(_, scale.toDouble))
     }
     def model = new CentroidModel(ids.map(toCatalyst), cents, dim, scale.toDouble)
+    val points = v.queryExecution.toRdd
     for (_ <- 1 to iters if ids.nonEmpty) {
-      val upd = v.select(NearestCentroidExpr(col("_v"), model, idType).as("cell_id"),
-          posexplode(col("_v")))
-        .groupBy("cell_id", "pos")
-        .agg(floor(sum(floor(col("col") * scale)).cast("double") / count(lit(1)))
-          .cast("long").as("v"))
-        .collect()
-      val byCell = upd.groupBy(_.get(0))
-      ids = ids.filter(byCell.contains) // memberless cells drop out
-      cents = ids.flatMap { id =>
-        val c = new Array[Long](dim)
-        byCell(id).foreach(r => c(r.getInt(1)) = r.getLong(2))
-        c
-      }
+      val m = model
+      val acc = points.mapPartitions(rows => Iterator(lloydPartial(m, rows)))
+        .treeReduce(addExactInto)
+      val n = ids.length
+      val kept = ids.indices.filter(c => acc(c) > 0).toArray // memberless cells drop out
+      cents = kept.flatMap(c => Array.tabulate(dim)(j =>
+        math.floor(acc(n + c * dim + j).toDouble / acc(c).toDouble).toLong))
+      ids = kept.map(ids)
     }
     val assignments =
       if (ids.isEmpty) v.select(col("_id").as(idCol), lit(null).cast(idType).as("cell_id"))
@@ -564,5 +576,39 @@ object ML {
       StructField("cvec", ArrayType(LongType, containsNull = false), nullable = false)))
     KMeansResult(assignments,
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema))
+  }
+
+  /** One partition's Lloyd partial under `model`, over (_id, _v) rows: k
+    * member counts, then k×dim `Math.addExact` sums of the members'
+    * quantized coordinates. Null and empty vectors are skipped. */
+  private def lloydPartial(model: CentroidModel, rows: Iterator[InternalRow]): Array[Long] = {
+    val k = model.k
+    val dim = model.dim
+    val acc = new Array[Long](k + k * dim)
+    rows.foreach { r =>
+      val vec = if (r.isNullAt(1)) null else r.getArray(1)
+      if (vec != null && vec.numElements() > 0) {
+        val q = model.quantized(vec)
+        val c = model.nearestIndex(q)
+        acc(c) += 1
+        val base = k + c * dim
+        var j = 0
+        while (j < dim) {
+          acc(base + j) = Math.addExact(acc(base + j), q(j))
+          j += 1
+        }
+      }
+    }
+    acc
+  }
+
+  /** Adds `b` into `a` elementwise (`Math.addExact`); returns `a`. */
+  private def addExactInto(a: Array[Long], b: Array[Long]): Array[Long] = {
+    var i = 0
+    while (i < a.length) {
+      a(i) = Math.addExact(a(i), b(i))
+      i += 1
+    }
+    a
   }
 }

@@ -27,7 +27,7 @@ object StatefulStreamQueries {
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(Tables.path(dir, "events")).schema
+    val schema = Tables.schema(s, Tables.path(dir, "events"))
     val raw = s.readStream.schema(schema).parquet(s"$dir/events*.parquet")
     val withTs = Tables.normalizeTs(raw)
     withTs.withWatermark("ts", "0 seconds")
@@ -1223,7 +1223,7 @@ object StatefulStreamQueries {
         import sp.implicits._
         s.conf.set("spark.sql.streaming.stateStore.providerClass",
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        val schema = s.read.parquet(graft.Tables.path(dir, "documents")).schema
+        val schema = graft.Tables.schema(s, graft.Tables.path(dir, "documents"))
         val raw = s.readStream.schema(schema).parquet(s"$dir/documents*.parquet")
         val banded = graft.operators.Dedup
           .bandBucketsFor(raw, "doc_id", "text", n = 2, k = 128, bands = 64)
@@ -1283,7 +1283,7 @@ object StatefulStreamQueries {
         org.apache.commons.io.FileUtils.deleteQuietly(base)
         val out = new java.io.File(base, "out").getAbsolutePath
         val ckpt = new java.io.File(base, "ckpt").getAbsolutePath
-        val schema = s.read.parquet(graft.Tables.path(dir, "documents")).schema
+        val schema = graft.Tables.schema(s, graft.Tables.path(dir, "documents"))
         val raw = s.readStream.schema(schema).parquet(s"$dir/documents*.parquet")
         val q = graft.operators.LshIndex.startStreamingIngest(raw,
           "doc_id", "text", n = 2, k = 128, bands = 64, threshold = 0.5,
@@ -1336,7 +1336,7 @@ object StatefulStreamQueries {
         org.apache.commons.io.FileUtils.deleteQuietly(base)
         val out = new java.io.File(base, "out").getAbsolutePath
         val ckpt = new java.io.File(base, "ckpt").getAbsolutePath
-        val schema = s.read.parquet(graft.Tables.path(dir, "documents")).schema
+        val schema = graft.Tables.schema(s, graft.Tables.path(dir, "documents"))
         val raw = s.readStream.schema(schema).parquet(s"$dir/documents*.parquet")
         val q = graft.operators.GramIndex.startStreamingIngest(raw,
           "doc_id", "text", minLen = 40, ref, out, ckpt)
@@ -1487,7 +1487,7 @@ object StatefulStreamQueries {
         d.filter(col("doc_id") % 3 =!= 0)
           .groupBy(col("lang")).agg(count(lit(1)).as("n"))
           .write.mode("overwrite").parquet(s"$stateDir/delta/batch_id=999999")
-        val schema = s.read.parquet(graft.Tables.path(dir, "documents")).schema
+        val schema = graft.Tables.schema(s, graft.Tables.path(dir, "documents"))
         val raw = s.readStream.schema(schema)
           .parquet(s"$dir/documents*.parquet")
           .filter(col("doc_id") % 3 === 0)
@@ -1552,7 +1552,7 @@ object StatefulStreamQueries {
           .select(col("lang"),
             floor(sqrt(col("n").cast("double"))).cast("long").as("w"))
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        val schema = s.read.parquet(graft.Tables.path(dir, "documents")).schema
+        val schema = graft.Tables.schema(s, graft.Tables.path(dir, "documents"))
         val raw = s.readStream.schema(schema)
           .parquet(s"$dir/documents*.parquet")
         val q = graft.streaming.StreamingCurriculum.startStrideIngest(raw,
@@ -1594,7 +1594,7 @@ object StatefulStreamQueries {
         val stateDir = new java.io.File(base, "state").getAbsolutePath
         val outDir = new java.io.File(base, "out").getAbsolutePath
         val ckpt = new java.io.File(base, "ckpt").getAbsolutePath
-        val schema = s.read.parquet(graft.Tables.path(dir, "documents")).schema
+        val schema = graft.Tables.schema(s, graft.Tables.path(dir, "documents"))
         val raw = s.readStream.schema(schema)
           .parquet(s"$dir/documents*.parquet")
         val q = graft.streaming.StreamingCurriculum.startCompetenceIngest(raw,
@@ -1634,7 +1634,7 @@ object StatefulStreamQueries {
         val stateDir = new java.io.File(base, "state").getAbsolutePath
         val outDir = new java.io.File(base, "out").getAbsolutePath
         val ckpt = new java.io.File(base, "ckpt").getAbsolutePath
-        val schema = s.read.parquet(graft.Tables.path(dir, "documents")).schema
+        val schema = graft.Tables.schema(s, graft.Tables.path(dir, "documents"))
         val raw = s.readStream.schema(schema)
           .parquet(s"$dir/documents*.parquet")
         val q = graft.streaming.StreamingCurriculum.startMixtureCurriculumIngest(
@@ -1710,7 +1710,7 @@ object StatefulStreamQueries {
         import sp.implicits._
         s.conf.set("spark.sql.streaming.stateStore.providerClass",
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        val schema = s.read.parquet(graft.Tables.path(dir, "documents")).schema
+        val schema = graft.Tables.schema(s, graft.Tables.path(dir, "documents"))
         val raw = s.readStream.schema(schema).parquet(s"$dir/documents*.parquet")
         val docs = raw
           .withColumn("ts", timestamp_micros(col("doc_id") * 1000000L))
@@ -1765,7 +1765,7 @@ object StatefulStreamQueries {
         import sp.implicits._
         s.conf.set("spark.sql.streaming.stateStore.providerClass",
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        val schema = s.read.parquet(graft.Tables.path(dir, "documents")).schema
+        val schema = graft.Tables.schema(s, graft.Tables.path(dir, "documents"))
         val raw = s.readStream.schema(schema).parquet(s"$dir/documents*.parquet")
         val chunks = graft.operators.TextPipeline
           .chunk(raw, "doc_id", "text", chunkSize = 8, overlap = 0)
@@ -1829,7 +1829,7 @@ object StatefulStreamQueries {
         import sp.implicits._
         s.conf.set("spark.sql.streaming.stateStore.providerClass",
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        val schema = s.read.parquet(graft.Tables.path(dir, "documents")).schema
+        val schema = graft.Tables.schema(s, graft.Tables.path(dir, "documents"))
         val raw = s.readStream.schema(schema).parquet(s"$dir/documents*.parquet")
         val chunks = graft.operators.TextPipeline
           .cdcChunks(raw, "doc_id", "text",
@@ -1880,7 +1880,7 @@ object StatefulStreamQueries {
         org.apache.commons.io.FileUtils.deleteQuietly(base)
         val out = new java.io.File(base, "out").getAbsolutePath
         val ckpt = new java.io.File(base, "ckpt").getAbsolutePath
-        val schema = s.read.parquet(graft.Tables.path(dir, "documents")).schema
+        val schema = graft.Tables.schema(s, graft.Tables.path(dir, "documents"))
         val raw = s.readStream.schema(schema).parquet(s"$dir/documents*.parquet")
         val q = graft.operators.ChunkIndex.startStreamingIngest(raw,
           "doc_id", "text", window = 16, divisor = 64L, remainder = 0L,
@@ -1910,7 +1910,7 @@ object StatefulStreamQueries {
         org.apache.commons.io.FileUtils.deleteQuietly(base)
         val out = new java.io.File(base, "out").getAbsolutePath
         val ckpt = new java.io.File(base, "ckpt").getAbsolutePath
-        val schema = s.read.parquet(graft.Tables.path(dir, "documents")).schema
+        val schema = graft.Tables.schema(s, graft.Tables.path(dir, "documents"))
         val raw = s.readStream.schema(schema).parquet(s"$dir/documents*.parquet")
         val q = graft.operators.SimHashIndex.startStreamingIngest(raw,
           "doc_id", "text", maxDist = 3, ref, out, ckpt)
@@ -2109,7 +2109,7 @@ object StatefulStreamQueries {
         val state = new java.io.File(base, "state").getAbsolutePath
         val out = new java.io.File(base, "out").getAbsolutePath
         val ckpt = new java.io.File(base, "ckpt").getAbsolutePath
-        val schema = s.read.parquet(graft.Tables.path(dir, "documents")).schema
+        val schema = graft.Tables.schema(s, graft.Tables.path(dir, "documents"))
         val raw = s.readStream.schema(schema).parquet(s"$dir/documents*.parquet")
           .select(col("source"),
             pmod(col("n_chars"), lit(997L)).as("excess"),
@@ -2137,7 +2137,7 @@ object StatefulStreamQueries {
         import sp.implicits._
         s.conf.set("spark.sql.streaming.stateStore.providerClass",
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        val schema = s.read.parquet(graft.Tables.path(dir, "documents")).schema
+        val schema = graft.Tables.schema(s, graft.Tables.path(dir, "documents"))
         val raw = s.readStream.schema(schema).parquet(s"$dir/documents*.parquet")
         val u = graft.operators.Sampling.unitHash(col("doc_id"), "priority")
         val prio = col("n_chars").cast("double") /
@@ -2180,7 +2180,7 @@ object StatefulStreamQueries {
         import sp.implicits._
         s.conf.set("spark.sql.streaming.stateStore.providerClass",
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        val schema = s.read.parquet(graft.Tables.path(dir, "documents")).schema
+        val schema = graft.Tables.schema(s, graft.Tables.path(dir, "documents"))
         val raw = s.readStream.schema(schema).parquet(s"$dir/documents*.parquet")
         val rows = raw
           .withColumn("ts", timestamp_micros(col("doc_id") * 1000000L))

@@ -16,7 +16,7 @@ object StreamQueries {
 
   private def eventsStream(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(Tables.path(dir, "events")).schema
+    val schema = Tables.schema(s, Tables.path(dir, "events"))
     // file-stream source needs a directory or glob, not a bare file path;
     // Tables.normalizeTs handles every fixture layout (nanos-as-long /
     // TIMESTAMP_NTZ / TimestampType) so `withWatermark` always sees

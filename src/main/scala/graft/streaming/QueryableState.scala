@@ -73,7 +73,7 @@ object QueryableState {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     import s.implicits._
-    val schema = s.read.parquet(Tables.path(dir, "events")).schema
+    val schema = Tables.schema(s, Tables.path(dir, "events"))
     val src = s.readStream.schema(schema).parquet(s"$dir/events*.parquet")
       .select(col("user_id").as("key"),
         round(col("value") * 1000).cast("long").as("valueMillis"))
@@ -277,7 +277,7 @@ object QueryableState {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     import s.implicits._
-    val schema = s.read.parquet(Tables.path(dir, "events")).schema
+    val schema = Tables.schema(s, Tables.path(dir, "events"))
     val src = Tables.normalizeTs(
         s.readStream.schema(schema).parquet(s"$dir/events*.parquet"))
       .withWatermark("ts", "0 seconds")

@@ -1014,4 +1014,29 @@ class DedupSpec extends SparkSpec {
       assert(ev === want.map(_._1), s"L=$l interpreted")
     }
   }
+
+  test("GramWindowExpr, the ExactSubstr confirm window, reads exactly the " +
+    "bytes its hash covered when the last code point is cut short and the " +
+    "buffer runs on past the text") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types._
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.functions.{Fnv1a64Expr, GramHashesExpr, GramWindowExpr}
+    // "ab", U+00E9, the first byte of U+20AC alone; then "zzz" past the end
+    val bytes = Array[Byte](0x61, 0x62, 0xc3.toByte, 0xa9.toByte, 0xe2.toByte)
+    val text = UTF8String.fromBytes(bytes ++ "zzz".getBytes("UTF-8"), 0, bytes.length)
+    val cps = Seq(0, 1, 2, 4, 5)
+    for (l <- 1 to 4; pos <- 0 to 4 - l) {
+      val want = bytes.slice(cps(pos), cps(pos + l)).toSeq
+      val hash = GramHashesExpr.hashes(text, l, withXx = false).getLong(pos)
+      val ev = GramWindowExpr(Literal.create(text, StringType), Literal(pos), l).eval()
+        .asInstanceOf[UTF8String].getBytes.toSeq
+      assert(ev === want, s"L=$l pos=$pos interpreted")
+      assert(Fnv1a64Expr.hash(ev.toArray, 0, ev.length) === hash, s"L=$l pos=$pos hash")
+      val coded = Seq((bytes, pos.toLong)).toDF("b", "pos")
+        .select(GramWindowExpr(col("b").cast("string"), col("pos"), l).cast("binary"))
+        .as[Array[Byte]].collect().head.toSeq
+      assert(coded === want, s"L=$l pos=$pos generated code")
+    }
+  }
 }

@@ -257,6 +257,45 @@ class MLSpec extends SparkSpec {
       .centroids.schema("cell_id").dataType === org.apache.spark.sql.types.IntegerType)
   }
 
+  test("kMeansScaled differential: a dim-0 model keeps no cell after a " +
+    "round; a seed id that repeats among the k lowest is rejected by name") {
+    val dim0 = spark.createDataFrame(spark.sparkContext.parallelize(
+      (0 until 6).map(i => (i.toLong, Seq.empty[Float])), 2)).toDF("vec_id", "embedding")
+    assertSameKMeans(dim0, 2, 0, "dim 0, iters 0")
+    val fit = ML.kMeansScaled(dim0, "vec_id", "embedding", 2, 1)
+    val ref = kMeansReference(dim0, "vec_id", "embedding", 2, 1)
+    assert(canon(fit.centroids) === canon(ref.centroids), "dim 0 centroids")
+    assert(fit.centroids.count() === 0L)
+    assert(fit.assignments.where(col("cell_id").isNotNull).count() === 0L)
+    assert(fit.assignments.count() === 6L)
+    // ids 4 and 9 repeat, but only 4 is among the 3 lowest
+    val rows = Seq(4L -> Seq(1f, 0f), 4L -> Seq(0f, 1f), 2L -> Seq(1f, 1f),
+      9L -> Seq(2f, 2f), 9L -> Seq(3f, 3f))
+    val rep = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2))
+      .toDF("vec_id", "embedding")
+    val e = intercept[IllegalArgumentException](
+      ML.kMeansScaled(rep, "vec_id", "embedding", 3, 2))
+    assert(e.getMessage.contains("vec_id 4 repeats"), e.getMessage)
+    assert(ML.kMeansScaled(rep, "vec_id", "embedding", 2, 2).centroids.count() > 0)
+  }
+
+  test("kMeansScaled runs each Lloyd round as one job over one " +
+    "materialization of its input") {
+    val rnd = new scala.util.Random(11)
+    val rows = (0 until 60).map(i => (i.toLong, Seq.fill(4)(rnd.nextInt(9) - 4f)))
+    val evaluated = spark.sparkContext.longAccumulator("kmeans-input-rows")
+    val counted = spark.sparkContext.parallelize(rows, 4).map { r => evaluated.add(1); r }
+    val df = spark.createDataFrame(counted).toDF("vec_id", "embedding")
+    var fit: ML.KMeansResult = null
+    // one seed collect, then one job per round
+    assert(SparkSpec.jobsOf(spark) { fit = ML.kMeansScaled(df, "vec_id", "embedding", 5, 3) } === 4)
+    val got = (canon(fit.assignments), canon(fit.centroids))
+    // the rounds and the assignment read the cached input's rows
+    assert(evaluated.value === 60L)
+    val ref = kMeansReference(df, "vec_id", "embedding", 5, 3)
+    assert(got === ((canon(ref.assignments), canon(ref.centroids))))
+  }
+
   test("kMeansScaled: a squared distance that overflows Long throws, " +
     "never wraps") {
     // 3e12 · 1e6 = 3e18 micro-units; the difference 6e18 squares past 2^63
@@ -269,6 +308,11 @@ class MLSpec extends SparkSpec {
     val e2 = intercept[Exception](
       ML.kMeansScaled(df, "vec_id", "embedding", 1, 0).assignments.collect())
     assert(chain(e2).contains("overflow"), chain(e2))
+    // two members at the seed itself (distance 0) whose quantized
+    // coordinates saturate to Long.MaxValue: the update's sum overflows
+    val sat = Seq((0L, Seq(1e13)), (1L, Seq(1e13))).toDF("vec_id", "embedding")
+    val e3 = intercept[Exception](ML.kMeansScaled(sat, "vec_id", "embedding", 1, 1))
+    assert(chain(e3).contains("overflow"), chain(e3))
   }
 
   test("NearestCentroidExpr: interpreted eval equals the kernel, ties go " +

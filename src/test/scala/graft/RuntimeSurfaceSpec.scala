@@ -117,45 +117,24 @@ class RuntimeSurfaceSpec extends SparkSpec {
 
   test("fanOutForCompute decides from the plan: composing over an upstream " +
     "exchange launches no job, a single-file parquet scan still fans out") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
-    }
+    def jobsOf(f: => Unit): Int = SparkSpec.jobsOf(spark)(f)
     val sc = spark.sparkContext
-    /** Jobs `f` launches: listener events arrive in order, so once a later
-      * sentinel job is seen every job `f` started has been counted. */
-    def jobsOf(f: => Unit): Int = {
-      groups.clear()
-      sc.setJobGroup("fanout-compose", "compose")
-      try f finally sc.clearJobGroup()
-      sc.setJobGroup("fanout-sentinel", "sentinel")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      var waited = 0
-      while (!groups.contains("fanout-sentinel") && waited < 200) { Thread.sleep(50); waited += 1 }
-      assert(groups.contains("fanout-sentinel"), "sentinel job never reached the listener")
-      groups.toArray.count(_ == "fanout-compose")
-    }
     val dir = java.nio.file.Files.createTempDirectory("graft-fanout").toString + "/one"
-    sc.addSparkListener(listener)
-    try {
-      spark.range(0, 500, 1, 1).select(col("id"), (col("id") % 7).as("k"))
-        .write.parquet(dir)
-      val scan = spark.read.parquet(dir)
-      val target = sc.defaultParallelism
-      assert(scan.rdd.getNumPartitions === 1 && target > 1)
-      val upstream = scan.groupBy(col("k")).agg(count(lit(1)).as("n"))
-      var composed: org.apache.spark.sql.DataFrame = null
-      assert(jobsOf { composed = Partitioning.fanOutForCompute(upstream, col("k")) } === 0,
-        "composing over an upstream exchange must not run it")
-      assert(composed.collect().map(_.getLong(1)).sum === 500L)
-      var fanned: org.apache.spark.sql.DataFrame = null
-      assert(jobsOf { fanned = Partitioning.fanOutForCompute(scan, col("id")) } === 0)
-      assert(fanned.rdd.getNumPartitions === target,
-        "a single-split scan must still fan out to the default parallelism")
-      assert(fanned.count() === 500L)
-    } finally sc.removeSparkListener(listener)
+    spark.range(0, 500, 1, 1).select(col("id"), (col("id") % 7).as("k"))
+      .write.parquet(dir)
+    val scan = spark.read.parquet(dir)
+    val target = sc.defaultParallelism
+    assert(scan.rdd.getNumPartitions === 1 && target > 1)
+    val upstream = scan.groupBy(col("k")).agg(count(lit(1)).as("n"))
+    var composed: org.apache.spark.sql.DataFrame = null
+    assert(jobsOf { composed = Partitioning.fanOutForCompute(upstream, col("k")) } === 0,
+      "composing over an upstream exchange must not run it")
+    assert(composed.collect().map(_.getLong(1)).sum === 500L)
+    var fanned: org.apache.spark.sql.DataFrame = null
+    assert(jobsOf { fanned = Partitioning.fanOutForCompute(scan, col("id")) } === 0)
+    assert(fanned.rdd.getNumPartitions === target,
+      "a single-split scan must still fan out to the default parallelism")
+    assert(fanned.count() === 500L)
   }
 
   test("partitioning facade: byKey co-locates, rebalance evens, global=1") {

@@ -25,4 +25,32 @@ object SparkSpec {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** The Spark jobs `f` launches on this thread, counted by job group with
+    * a SparkListener. Listener events arrive in order, so once a later
+    * sentinel job is seen every job `f` started has been counted. */
+  def jobsOf(spark: SparkSession)(f: => Any): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("jobs-of", "counted")
+      try f finally sc.clearJobGroup()
+      sc.setJobGroup("jobs-of-sentinel", "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      var waited = 0
+      while (!groups.contains("jobs-of-sentinel") && waited < 200) {
+        Thread.sleep(50)
+        waited += 1
+      }
+      if (!groups.contains("jobs-of-sentinel"))
+        throw new IllegalStateException("sentinel job never reached the listener")
+      groups.toArray.count(_ == "jobs-of")
+    } finally sc.removeSparkListener(listener)
+  }
 }
