@@ -35,15 +35,10 @@ import org.apache.spark.sql.functions._
   * chunk appends, so a chunk suppressed in delivery 3 still suppresses
   * delivery 4's copy without re-reading delivery 1.
   *
-  * REPLAY CONTRACT ([[GramIndex]]'s, verbatim): every append is tagged
-  * with the delivery id and the corpus probe EXCLUDES the current
-  * delivery's own rows, so a retried `ingest` with the SAME id is
-  * byte-identical even when the first attempt's append landed (fully or
-  * torn). The only replay residue is duplicate rows for that delivery —
-  * invisible to the existence-only claim rule and cancelled EXACTLY by
-  * [[compact]] (per-delivery max before the cross-delivery sum) or
-  * retracted by [[recoverDelivery]]. Delivery ids must be stable across
-  * retries and unique across deliveries.
+  * REPLAY CONTRACT: [[IndexStore]]'s delivery self-exclusion; a
+  * replay's duplicate rows are invisible to the existence-only claim
+  * rule and cancelled EXACTLY by [[compact]] (per-delivery max before
+  * the cross-delivery sum).
   *
   * Cost per delivery: one codegen'd CDC pass over the batch
   * (CdcCutsExpr), one batch-sized shuffle on the 8-byte h, one bucketed
@@ -54,13 +49,10 @@ import org.apache.spark.sql.functions._
   * (delivery, chunk); [[compact]] merges to one row per distinct corpus
   * chunk and one file per bucket.
   *
-  * Single-writer, enforced on storage with the family's atomic
-  * create-if-absent lease (HDFS/local semantics — see [[LshIndex]] for
-  * the object-store caveat). The table is EXTERNAL: [[attach]]
-  * re-registers the bucketing DDL over the files in a fresh
-  * session/process, and ingest auto-attaches (recovering a crashed
-  * [[compact]]'s rename-aside state) so an on-disk index is never
-  * silently treated as empty. */
+  * The table is EXTERNAL: [[attach]] re-registers the bucketing DDL over
+  * the files in a fresh session/process. The single-writer lease, the
+  * rename-aside swap with its recovery preamble, and the ledgered stream
+  * replay are [[IndexStore]]'s. */
 object ChunkIndex {
 
   /** Names + bucket count of one persistent index. `tag` must be unique
@@ -73,87 +65,19 @@ object ChunkIndex {
     * ids must not collide with it. */
   val CompactedDelivery = "_compacted"
 
-  private def location(spark: SparkSession, table: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"), table)
-  private def hfs(spark: SparkSession, p: org.apache.hadoop.fs.Path)
-      : org.apache.hadoop.fs.FileSystem =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-  private def leaseLoc(spark: SparkSession, ref: Ref): org.apache.hadoop.fs.Path =
-    location(spark, s"graft_chunkidx_lease_${ref.tag}")
+  private def store(ref: Ref) = IndexStore.Layout("ChunkIndex", ref.tag,
+    s"graft_chunkidx_lease_${ref.tag}",
+    Seq(IndexStore.Part(ref.chunksTable, Seq("h"))), ref.buckets)
 
-  private def withLease[T](spark: SparkSession, ref: Ref, who: String)(body: => T): T = {
-    val p = leaseLoc(spark, ref)
-    val f = hfs(spark, p)
-    val out = try f.create(p, false) catch {
-      case _: java.io.IOException =>
-        val holder = try {
-          val in = f.open(p)
-          try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-            java.nio.charset.StandardCharsets.UTF_8)
-          finally in.close()
-        } catch { case _: java.io.IOException => "<unreadable>" }
-        throw new IllegalStateException(
-          s"index '${ref.tag}' is write-leased by '$holder' — concurrent " +
-            s"ingest/compact is a data-loss race; if the holder crashed, " +
-            s"ChunkIndex.breakLease after confirming it is dead")
-    }
-    try {
-      out.write(who.getBytes(java.nio.charset.StandardCharsets.UTF_8)); out.close()
-      body
-    } finally { f.delete(p, false); () }
-  }
-
-  /** Remove a crashed writer's lingering lease. ONLY safe once the
-    * operator has confirmed no ingest/compact is live. */
-  def breakLease(spark: SparkSession, ref: Ref): Unit = {
-    val p = leaseLoc(spark, ref)
-    hfs(spark, p).delete(p, false); ()
-  }
+  /** Remove a crashed writer's lingering lease ([[IndexStore]]). */
+  def breakLease(spark: SparkSession, ref: Ref): Unit =
+    IndexStore.breakLease(spark, store(ref))
 
   /** Destroy the index: catalog entry AND files (lease included). */
-  def drop(spark: SparkSession, ref: Ref): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS ${ref.chunksTable}")
-    val loc = location(spark, ref.chunksTable)
-    hfs(spark, loc).delete(loc, true)
-    breakLease(spark, ref)
-  }
+  def drop(spark: SparkSession, ref: Ref): Unit = IndexStore.drop(spark, store(ref))
 
-  private def register(spark: SparkSession, ref: Ref,
-                       knownSchema: Option[String] = None): Unit = {
-    val loc = location(spark, ref.chunksTable)
-    require(hfs(spark, loc).exists(loc), s"no index files at $loc — nothing to attach")
-    val schema = knownSchema.getOrElse(spark.read.parquet(loc.toString).schema.toDDL)
-    spark.sql(s"""CREATE TABLE ${ref.chunksTable} ($schema) USING parquet
-      CLUSTERED BY (h) SORTED BY (h) INTO ${ref.buckets} BUCKETS
-      LOCATION '${loc.toString}'""")
-  }
-
-  /** Re-register an existing on-disk index in a session whose catalog
-    * does not know it — the files alone carry the data. */
-  def attach(spark: SparkSession, ref: Ref): Unit =
-    if (!spark.catalog.tableExists(ref.chunksTable)) register(spark, ref)
-
-  /** Writer-side preamble: finish a crashed [[compact]]'s rename-aside
-    * swap if one is pending, then register an on-disk index the session
-    * catalog does not know. Returns whether index content exists. */
-  private def attachForWrite(spark: SparkSession, ref: Ref): Boolean = {
-    val loc = location(spark, ref.chunksTable)
-    val oldLoc = location(spark, s"${ref.chunksTable}_old")
-    val f = hfs(spark, loc)
-    if (!f.exists(loc) && f.exists(oldLoc)) LshIndex.mustRename(f, oldLoc, loc)
-    if (spark.catalog.tableExists(ref.chunksTable)) true
-    else if (f.exists(loc)) { register(spark, ref); true }
-    else false
-  }
-
-  private def appendBucketed(df: DataFrame, ref: Ref): Unit = {
-    val spark = df.sparkSession
-    val w = df.write.mode("append").format("parquet")
-      .bucketBy(ref.buckets, "h").sortBy("h")
-    if (spark.catalog.tableExists(ref.chunksTable)) w.saveAsTable(ref.chunksTable)
-    else w.option("path", location(spark, ref.chunksTable).toString)
-      .saveAsTable(ref.chunksTable)
-  }
+  /** Re-register the on-disk index in a session whose catalog lacks it. */
+  def attach(spark: SparkSession, ref: Ref): Unit = IndexStore.attach(spark, store(ref))
 
   /** The batch's CDC chunks with both fingerprints. */
   private def fingerprinted(batch: DataFrame, idCol: String, textCol: String,
@@ -190,11 +114,8 @@ object ChunkIndex {
         col("text_dedup"))
   }
 
-  /** [[ingest]] with a generated unique-per-call delivery id — for
-    * callers who do not need crashed-retry idempotence (a retry MUST
-    * re-use the first attempt's id; with a fresh id the crashed
-    * attempt's claims look like an earlier delivery and the retry
-    * over-suppresses — [[recoverDelivery]] first in that case). */
+  /** [[ingest]] under a fresh delivery id: no crashed-retry idempotence
+    * (a fresh-id retry over-suppresses — [[recoverDelivery]] first). */
   def ingest(batch: DataFrame, idCol: String, textCol: String, window: Int,
              divisor: Long, remainder: Long, ref: Ref): DataFrame =
     ingest(batch, idCol, textCol, window, divisor, remainder, ref,
@@ -210,29 +131,24 @@ object ChunkIndex {
   def ingest(batch: DataFrame, idCol: String, textCol: String, window: Int,
              divisor: Long, remainder: Long, ref: Ref,
              delivery: String): DataFrame = {
-    require(delivery.nonEmpty && delivery != CompactedDelivery,
-      s"delivery id must be non-empty and not '$CompactedDelivery'")
+    IndexStore.requireDelivery(delivery, CompactedDelivery)
     val spark = batch.sparkSession
-    withLease(spark, ref, "ingest") {
-      val hasCorpus = attachForWrite(spark, ref)
+    val l = store(ref)
+    IndexStore.withLease(spark, l, "ingest") {
+      val hasCorpus = IndexStore.hasContent(spark, l)
       val chunks = fingerprinted(batch, idCol, textCol, window, divisor,
         remainder).cache()
       import spark.implicits._
-      // probe on h ALONE (the bucket column — corpus side pre-partitioned,
-      // zero exchange), confirm h2 post-join; exclude THIS delivery's own
-      // rows (a crashed earlier attempt of this same batch, never corpus)
+      // exclude THIS delivery's own rows (a crashed earlier attempt of
+      // this same batch, never corpus)
       val corpusDup =
         if (!hasCorpus) Seq.empty[(Long, Long)].toDF("h", "h2")
-        else spark.table(ref.chunksTable)
-          .filter(col("delivery") =!= lit(delivery))
-          .select(col("h"), col("h2").as("_ih2"))
-          .join(chunks.select("h", "h2").distinct(), Seq("h"))
-          .filter(col("_ih2") - col("h2") === 0L)
-          .select("h", "h2").distinct()
+        else GramIndex.corpusHits(spark.table(ref.chunksTable)
+          .filter(col("delivery") =!= lit(delivery)), chunks.select("h", "h2").distinct())
       val out = keepFirst(chunks, corpusDup, idCol).localCheckpoint()
-      appendBucketed(
+      IndexStore.appendBucketed(
         chunks.groupBy(col("h"), col("h2")).agg(count(lit(1)).as("cnt"))
-          .withColumn("delivery", lit(delivery)), ref)
+          .withColumn("delivery", lit(delivery)), l, l.parts.head)
       chunks.unpersist()
       out
     }
@@ -247,45 +163,9 @@ object ChunkIndex {
     val spark = batch.sparkSession
     attach(spark, ref)
     val chunks = fingerprinted(batch, idCol, textCol, window, divisor, remainder)
-    val corpusDup = spark.table(ref.chunksTable)
-      .select(col("h"), col("h2").as("_ih2"))
-      .join(chunks.select("h", "h2").distinct(), Seq("h"))
-      .filter(col("_ih2") - col("h2") === 0L)
-      .select("h", "h2").distinct()
+    val corpusDup = GramIndex.corpusHits(spark.table(ref.chunksTable),
+      chunks.select("h", "h2").distinct())
     keepFirst(chunks, corpusDup, idCol)
-  }
-
-  /** Rewrite the live table through the family's crash-durable
-    * rename-aside swap ([[GramIndex]]'s discipline: the transformed copy
-    * is complete on storage before the live table is touched; a re-run
-    * recovers in [[attachForWrite]]'s preamble). */
-  private def rewriteTable(spark: SparkSession, ref: Ref)
-                          (transform: DataFrame => DataFrame): Unit = {
-    val tbl = ref.chunksTable
-    val tmp = s"${tbl}_compacting"
-    val tmpLoc = location(spark, tmp)
-    val loc = location(spark, tbl)
-    val oldLoc = location(spark, s"${tbl}_old")
-    val f = hfs(spark, tmpLoc)
-    if (!f.exists(loc) && f.exists(oldLoc)) LshIndex.mustRename(f, oldLoc, loc)
-    if (!spark.catalog.tableExists(tbl)) register(spark, ref)
-    spark.sql(s"DROP TABLE IF EXISTS $tmp")
-    f.delete(tmpLoc, true)
-    // localCheckpoint breaks the scan's logical bucketing so the
-    // repartition genuinely shuffles (see LshIndex.compactOne)
-    val newRows = transform(spark.table(tbl).localCheckpoint(true))
-      .repartition(ref.buckets, col("h"))
-    val schemaDdl = newRows.schema.toDDL
-    val w = newRows.write.mode("append").format("parquet")
-      .bucketBy(ref.buckets, "h").sortBy("h")
-    w.option("path", tmpLoc.toString).saveAsTable(tmp)
-    spark.sql(s"DROP TABLE $tbl")
-    spark.sql(s"DROP TABLE $tmp") // catalog entry only; files stay
-    f.delete(oldLoc, true)
-    LshIndex.mustRename(f, loc, oldLoc)
-    LshIndex.mustRename(f, tmpLoc, loc)
-    register(spark, ref, Some(schemaDdl))
-    f.delete(oldLoc, true); ()
   }
 
   /** Compact: merge to ONE row per distinct corpus chunk and one file
@@ -297,10 +177,8 @@ object ChunkIndex {
     * its retry could no longer self-exclude); retry or
     * [[recoverDelivery]] first. */
   def compact(spark: SparkSession, ref: Ref): Unit =
-    withLease(spark, ref, "compact") {
-      require(attachForWrite(spark, ref),
-        s"no index files for '${ref.tag}' — nothing to compact")
-      rewriteTable(spark, ref) { t =>
+    IndexStore.withLease(spark, store(ref), "compact") {
+      IndexStore.rewriteTables(spark, store(ref)) { t =>
         t.groupBy(col("h"), col("h2"), col("delivery"))
           .agg(max(col("cnt")).as("cnt"))
           .groupBy(col("h"), col("h2")).agg(sum(col("cnt")).as("cnt"))
@@ -308,52 +186,34 @@ object ChunkIndex {
       }
     }
 
-  /** Retract one delivery's claims — the mechanical recovery for a
-    * crashed ingest whose retry cannot re-use the original delivery id.
-    * No-op for ids already collapsed by [[compact]]. */
+  /** [[IndexStore.retractDelivery]]; a no-op for ids [[compact]] collapsed. */
   def recoverDelivery(spark: SparkSession, ref: Ref, delivery: String): Unit =
-    withLease(spark, ref, "recoverDelivery") {
-      require(delivery != CompactedDelivery,
-        s"cannot retract '$CompactedDelivery' — compaction collapsed lineage")
-      if (attachForWrite(spark, ref))
-        rewriteTable(spark, ref)(_.filter(col("delivery") =!= lit(delivery)))
-    }
+    IndexStore.retractDelivery(spark, store(ref), delivery, CompactedDelivery,
+      "compaction collapsed lineage")
 
   /** The stable delivery id a stream's micro-batch `bid` ingests under. */
   def streamDelivery(bid: Long): String = s"stream:$bid"
 
-  /** One micro-batch of [[startStreamingIngest]], exposed for planted
-    * replay tests: ledger check → [[ingest]] under the batch-derived
-    * delivery id → per-batch clean-output OVERWRITE → ledger mark
-    * ([[graft.streaming.IngestLedger]], watermark-compacted). Crash
-    * anywhere and the re-execution is byte-identical. */
+  /** One ledgered micro-batch of [[startStreamingIngest]], exposed for
+    * planted replay tests: [[ingest]] under the batch-derived delivery
+    * id, output OVERWRITTEN per batch — a re-execution is byte-identical. */
   def ingestBatchOnce(batch: DataFrame, idCol: String, textCol: String,
                       window: Int, divisor: Long, remainder: Long, ref: Ref,
-                      outDir: String, bid: Long): Unit = {
-    val spark = batch.sparkSession
-    val ledger = s"$outDir/_ledger"
-    if (!graft.streaming.IngestLedger.isDone(spark, ledger, bid)) {
+                      outDir: String, bid: Long): Unit =
+    graft.streaming.IngestLedger.once(batch.sparkSession, s"$outDir/_ledger", bid) {
       ingest(batch, idCol, textCol, window, divisor, remainder, ref,
           delivery = streamDelivery(bid))
         .write.mode("overwrite")
         .parquet(s"$outDir/dedup/batch_id=$bid")
-      graft.streaming.IngestLedger.markDone(spark, ledger, bid)
     }
-  }
 
-  /** Maintain the index from a document STREAM — the fit-once,
-    * ingest-forever deployment shape the other index families carry,
-    * giving CDC dedup a cross-RUN claim store where
-    * StreamingDedup.ChunkClaim keeps claims in the query's own state. */
+  /** Maintain the index from a document STREAM ([[ingestBatchOnce]] per
+    * micro-batch in [[IndexStore]]'s ledgered loop): a cross-RUN claim
+    * store where StreamingDedup.ChunkClaim keeps claims in query state. */
   def startStreamingIngest(docs: DataFrame, idCol: String, textCol: String,
                            window: Int, divisor: Long, remainder: Long,
                            ref: Ref, outDir: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        ingestBatchOnce(batch.toDF(), idCol, textCol, window, divisor,
-          remainder, ref, outDir, bid)
-      }
-      .start()
+    IndexStore.streamIngest(docs, checkpoint)(
+      ingestBatchOnce(_, idCol, textCol, window, divisor, remainder, ref, outDir, _))
 }

@@ -25,10 +25,11 @@ import org.apache.spark.sql.functions._
   * min), so replayed or torn deliveries leave duplicate rows that are
   * INVISIBLE to every verdict — replay idempotence needs no delivery
   * self-exclusion here, just the ledger that [[startStreamingIngest]]
-  * keeps to skip re-landing completed batches. Writers still take the
-  * same exclusive storage lease as the LSH/gram indexes (concurrent
-  * appends to one bucketed table race on file naming), and the table is
-  * EXTERNAL: [[attach]] re-registers it from the directory alone.
+  * keeps to skip re-landing completed batches. Writers still take
+  * [[IndexStore]]'s exclusive lease (concurrent appends to one bucketed
+  * table race on file naming); the index has no compact, so nothing is
+  * ever swapped. The table is EXTERNAL: [[attach]] re-registers it from
+  * the directory alone.
   *
   * At 100 TB the asymmetry is the whole design: the benchmark side is
   * tiny (eval sets are thousands of docs) and pays one distinct per
@@ -42,68 +43,19 @@ object ContamIndex {
     def gramsTable: String = s"graft_contamidx_grams_$tag"
   }
 
-  private def location(spark: SparkSession, table: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"), table)
-  private def hfs(spark: SparkSession, p: org.apache.hadoop.fs.Path)
-      : org.apache.hadoop.fs.FileSystem =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def store(ref: Ref) = IndexStore.Layout("ContamIndex", ref.tag,
+    s"graft_contamidx_lease_${ref.tag}",
+    Seq(IndexStore.Part(ref.gramsTable, Seq("gram"))), ref.buckets)
 
-  private def leaseLoc(spark: SparkSession, ref: Ref): org.apache.hadoop.fs.Path =
-    location(spark, s"graft_contamidx_lease_${ref.tag}")
-
-  /** Same exclusive-writer storage lease as [[LshIndex]]/[[GramIndex]]
-    * (atomic create-if-absent; HDFS/local-correct, see the caveat
-    * there). */
-  private def withLease[T](spark: SparkSession, ref: Ref, who: String)(body: => T): T = {
-    val p = leaseLoc(spark, ref)
-    val f = hfs(spark, p)
-    val out = try f.create(p, false) catch {
-      case _: java.io.IOException =>
-        val holder = try {
-          val in = f.open(p)
-          try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-            java.nio.charset.StandardCharsets.UTF_8)
-          finally in.close()
-        } catch { case _: java.io.IOException => "<unreadable>" }
-        throw new IllegalStateException(
-          s"contam index '${ref.tag}' is write-leased by '$holder' — if the " +
-            s"holder crashed, ContamIndex.breakLease after confirming it is dead")
-    }
-    try {
-      out.write(who.getBytes(java.nio.charset.StandardCharsets.UTF_8)); out.close()
-      body
-    } finally { f.delete(p, false); () }
-  }
-
-  /** Remove a crashed writer's lingering lease (only once confirmed dead). */
-  def breakLease(spark: SparkSession, ref: Ref): Unit = {
-    val p = leaseLoc(spark, ref)
-    hfs(spark, p).delete(p, false); ()
-  }
+  /** Remove a crashed writer's lingering lease ([[IndexStore]]). */
+  def breakLease(spark: SparkSession, ref: Ref): Unit =
+    IndexStore.breakLease(spark, store(ref))
 
   /** Destroy the index: catalog entry AND files (lease included). */
-  def drop(spark: SparkSession, ref: Ref): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS ${ref.gramsTable}")
-    val loc = location(spark, ref.gramsTable)
-    hfs(spark, loc).delete(loc, true)
-    breakLease(spark, ref)
-  }
-
-  private def register(spark: SparkSession, ref: Ref): Unit = {
-    val loc = location(spark, ref.gramsTable)
-    require(hfs(spark, loc).exists(loc), s"no index files at $loc — nothing to attach")
-    val schema = spark.read.parquet(loc.toString).schema.toDDL
-    spark.sql(s"""CREATE TABLE ${ref.gramsTable} ($schema) USING parquet
-      CLUSTERED BY (gram) SORTED BY (gram) INTO ${ref.buckets} BUCKETS
-      LOCATION '${loc.toString}'""")
-  }
+  def drop(spark: SparkSession, ref: Ref): Unit = IndexStore.drop(spark, store(ref))
 
   /** Re-register an existing on-disk index in a fresh session/process. */
-  def attach(spark: SparkSession, ref: Ref): Unit =
-    if (!spark.catalog.tableExists(ref.gramsTable) &&
-        hfs(spark, location(spark, ref.gramsTable))
-          .exists(location(spark, ref.gramsTable)))
-      register(spark, ref)
+  def attach(spark: SparkSession, ref: Ref): Unit = IndexStore.attach(spark, store(ref))
 
   /** Ingest one benchmark delta: the delta's DISTINCT n-gram hashes land
     * as (gram, snap, delivery) rows, appended bucketed on `gram` — one
@@ -113,19 +65,14 @@ object ContamIndex {
     * aggregates them away bucket-locally. */
   def ingest(bench: DataFrame, textCol: String, snapCol: String, n: Int,
              ref: Ref, delivery: String): Unit = {
-    val spark = bench.sparkSession
-    withLease(spark, ref, "ingest") {
-      attach(spark, ref)
+    val l = store(ref)
+    IndexStore.withLease(bench.sparkSession, l, "ingest") {
       val grams = bench
         .select(col(snapCol).cast("long").as("snap"),
           explode(Hashes.shingleHashCol(col(textCol), n)).as("gram"))
         .groupBy(col("gram")).agg(min(col("snap")).as("snap"))
         .withColumn("delivery", lit(delivery))
-      val w = grams.write.mode("append").format("parquet")
-        .bucketBy(ref.buckets, "gram").sortBy("gram")
-      if (spark.catalog.tableExists(ref.gramsTable)) w.saveAsTable(ref.gramsTable)
-      else w.option("path", location(spark, ref.gramsTable).toString)
-        .saveAsTable(ref.gramsTable)
+      IndexStore.appendBucketed(grams, l, l.parts.head)
     }
   }
 
@@ -164,27 +111,17 @@ object ContamIndex {
   /** The stable delivery id a stream's micro-batch `bid` ingests under. */
   def streamDelivery(bid: Long): String = s"stream:$bid"
 
-  /** Maintain the index from a benchmark-delta STREAM: each micro-batch
-    * runs [[ingest]] inside foreachBatch behind the same watermark-
-    * compacted ledger as the LSH/gram streaming ingests
-    * ([[graft.streaming.IngestLedger]]) — a replayed, already-ledgered
-    * batch is skipped whole; a batch that crashed between append and
-    * ledger re-lands as duplicate rows [[audit]] cannot see. Because
-    * `snap` is content-derived, the accumulated verdict is invariant to
-    * how the source carves micro-batches. */
+  /** Maintain the index from a benchmark-delta STREAM: [[ingest]] per
+    * micro-batch in [[IndexStore]]'s ledgered loop; an unledgered replay
+    * re-lands duplicate rows [[audit]] cannot see. Because `snap` is
+    * content-derived, the accumulated verdict is invariant to how the
+    * source carves micro-batches. */
   def startStreamingIngest(bench: DataFrame, textCol: String, snapCol: String,
                            n: Int, ref: Ref, outDir: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    bench.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        val spark = batch.sparkSession
-        val ledger = s"$outDir/_ledger"
-        if (!graft.streaming.IngestLedger.isDone(spark, ledger, bid)) {
-          ingest(batch.toDF(), textCol, snapCol, n, ref, streamDelivery(bid))
-          graft.streaming.IngestLedger.markDone(spark, ledger, bid)
-        }
-        ()
+    IndexStore.streamIngest(bench, checkpoint) { (batch, bid) =>
+      graft.streaming.IngestLedger.once(batch.sparkSession, s"$outDir/_ledger", bid) {
+        ingest(batch, textCol, snapCol, n, ref, streamDelivery(bid))
       }
-      .start()
+    }
 }

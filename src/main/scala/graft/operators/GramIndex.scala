@@ -35,18 +35,10 @@ import org.apache.spark.sql.functions._
   * removed from the second still dedups, and ingest stays one pass over
   * the batch (no re-hash of the cleaned text).
   *
-  * REPLAY CONTRACT (the retry story for a crashed ingest): every append
-  * is tagged with the delivery id, and the corpus probe EXCLUDES the
-  * current delivery's own rows. A retried `ingest` with the SAME delivery
-  * id therefore produces byte-identical output even when the first
-  * attempt's append already landed (fully or torn) — the batch can never
-  * see its own grams as corpus content. The only residue of a replay is a
-  * duplicate set of rows for that delivery, which is invisible to the
-  * dedup rule (existence-only) and cancelled EXACTLY by [[compact]]
-  * (max-per-delivery before the cross-delivery sum) or retracted by
-  * [[recoverDelivery]]. Delivery ids must be stable across retries and
-  * unique across deliveries; re-using an OLD delivery's id for NEW
-  * content would wrongly self-exclude that old content.
+  * REPLAY CONTRACT: [[IndexStore]]'s delivery self-exclusion. A
+  * replay's duplicate rows are invisible to the existence-only rule and
+  * cancelled EXACTLY by [[compact]] (max-per-delivery before the
+  * cross-delivery sum).
   *
   * Storage: ~32 bytes per distinct (delivery, gram) pair before
   * [[compact]], which merges to one row per distinct corpus gram —
@@ -57,13 +49,13 @@ import org.apache.spark.sql.functions._
   * O(corpus) — the re-dedup a pipeline without an index re-pays per
   * delivery.
   *
-  * Single-writer, enforced on storage: ingest/compact take the same
-  * atomic create-if-absent lease as the rest of the family (HDFS/local
-  * semantics; see [[LshIndex]] for the object-store caveat). The table
-  * is EXTERNAL — [[attach]] re-registers the bucketing DDL over the
-  * files in a fresh session/process; ingest auto-attaches (and recovers a
-  * crashed compact's rename-aside state) so an on-disk index is never
-  * silently treated as empty.
+  * The table is EXTERNAL — [[attach]] re-registers the bucketing DDL
+  * over the files in a fresh session/process. The single-writer lease,
+  * the rename-aside swap with its recovery preamble, and the ledgered
+  * stream replay are [[IndexStore]]'s; an index written before delivery
+  * lineage migrates on the first write, its rows tagged
+  * [[CompactedDelivery]] (their lineage is unknowable — exactly
+  * compact's collapsed state).
   */
 object GramIndex {
 
@@ -77,124 +69,53 @@ object GramIndex {
     * ids must not collide with it. */
   val CompactedDelivery = "_compacted"
 
-  private def location(spark: SparkSession, table: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"), table)
-  private def hfs(spark: SparkSession, p: org.apache.hadoop.fs.Path)
-      : org.apache.hadoop.fs.FileSystem =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-  private def leaseLoc(spark: SparkSession, ref: Ref): org.apache.hadoop.fs.Path =
-    location(spark, s"graft_gramidx_lease_${ref.tag}")
+  private def store(ref: Ref) = IndexStore.Layout("GramIndex", ref.tag,
+    s"graft_gramidx_lease_${ref.tag}",
+    Seq(IndexStore.Part(ref.gramsTable, Seq("h"))), ref.buckets,
+    legacyDelivery = Some(CompactedDelivery))
 
-  /** Run `body` under a Spark job description (guide §1: label your jobs)
-    * so UI/listener evidence attributes each ingest phase; restores the
-    * caller's description after. */
-  private def labeled[T](spark: SparkSession, desc: String)(body: => T): T = {
-    val sc = spark.sparkContext
-    val old = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(desc)
-    try body finally sc.setJobDescription(old)
-  }
-
-  private def withLease[T](spark: SparkSession, ref: Ref, who: String)(body: => T): T = {
-    val p = leaseLoc(spark, ref)
-    val f = hfs(spark, p)
-    val out = try f.create(p, false) catch {
-      case _: java.io.IOException =>
-        val holder = try {
-          val in = f.open(p)
-          try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-            java.nio.charset.StandardCharsets.UTF_8)
-          finally in.close()
-        } catch { case _: java.io.IOException => "<unreadable>" }
-        throw new IllegalStateException(
-          s"index '${ref.tag}' is write-leased by '$holder' — concurrent " +
-            s"ingest/compact is a data-loss race; if the holder crashed, " +
-            s"GramIndex.breakLease after confirming it is dead")
-    }
-    try {
-      out.write(who.getBytes(java.nio.charset.StandardCharsets.UTF_8)); out.close()
-      body
-    } finally { f.delete(p, false); () }
-  }
-
-  /** Remove a crashed writer's lingering lease. ONLY safe once the
-    * operator has confirmed no ingest/compact is live. */
-  def breakLease(spark: SparkSession, ref: Ref): Unit = {
-    val p = leaseLoc(spark, ref)
-    hfs(spark, p).delete(p, false); ()
-  }
+  /** Remove a crashed writer's lingering lease ([[IndexStore]]). */
+  def breakLease(spark: SparkSession, ref: Ref): Unit =
+    IndexStore.breakLease(spark, store(ref))
 
   /** Destroy the index: catalog entry AND files (lease included). */
-  def drop(spark: SparkSession, ref: Ref): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS ${ref.gramsTable}")
-    val loc = location(spark, ref.gramsTable)
-    hfs(spark, loc).delete(loc, true)
-    breakLease(spark, ref)
-  }
+  def drop(spark: SparkSession, ref: Ref): Unit = IndexStore.drop(spark, store(ref))
 
-  private def register(spark: SparkSession, ref: Ref,
-                       knownSchema: Option[String] = None): Unit = {
-    val loc = location(spark, ref.gramsTable)
-    require(hfs(spark, loc).exists(loc), s"no index files at $loc — nothing to attach")
-    val schema = knownSchema.getOrElse(spark.read.parquet(loc.toString).schema.toDDL)
-    spark.sql(s"""CREATE TABLE ${ref.gramsTable} ($schema) USING parquet
-      CLUSTERED BY (h) SORTED BY (h) INTO ${ref.buckets} BUCKETS
-      LOCATION '${loc.toString}'""")
-  }
+  /** Re-register the on-disk index in a session whose catalog lacks it. */
+  def attach(spark: SparkSession, ref: Ref): Unit = IndexStore.attach(spark, store(ref))
 
-  /** Re-register an existing on-disk index in a session whose catalog
-    * does not know it — the files alone carry the data. */
-  def attach(spark: SparkSession, ref: Ref): Unit =
-    if (!spark.catalog.tableExists(ref.gramsTable)) register(spark, ref)
-
-  /** Writer-side preamble: finish a crashed [[compact]]'s rename-aside
-    * swap if one is pending, then register an on-disk index the session
-    * catalog does not know. Returns whether index content exists — false
-    * only for a genuinely brand-new index. Without this, a fresh process
-    * that forgot [[attach]] would silently dedup against an EMPTY corpus. */
-  private def attachForWrite(spark: SparkSession, ref: Ref): Boolean = {
-    val loc = location(spark, ref.gramsTable)
-    val oldLoc = location(spark, s"${ref.gramsTable}_old")
-    val f = hfs(spark, loc)
-    if (!f.exists(loc) && f.exists(oldLoc)) LshIndex.mustRename(f, oldLoc, loc)
-    val has =
-      if (spark.catalog.tableExists(ref.gramsTable)) true
-      else if (f.exists(loc)) { register(spark, ref); true }
-      else false
-    if (has && !spark.table(ref.gramsTable).columns.contains("delivery")) {
-      // pre-delivery-lineage index (round-12 schema (h, h2, cnt)): without
-      // this, the first ingest's `delivery` filter dies with an opaque
-      // unresolved-column error and an append would schema-mismatch.
-      // Migrate in place through the crash-durable rewrite, tagging legacy
-      // rows [[CompactedDelivery]] — their delivery lineage is unknowable,
-      // exactly compact's collapsed state (so recoverDelivery of a
-      // pre-migration delivery is the documented no-op).
-      rewriteTable(spark, ref)(_.withColumn("delivery", lit(CompactedDelivery)))
-    }
-    has
-  }
-
+  /** Append a delivery's counts with the write's partitioning aligned to
+    * the bucket spec (both are murmur3-hash partitioning on h): each task
+    * then holds exactly one bucket and the delivery lands as ONE file per
+    * bucket — without this, every shuffle-partition task writes a file
+    * per bucket it touches (shuffle.partitions × buckets tiny files per
+    * delivery) and every later delivery's probe pays the open cost for
+    * all of them. */
   private def appendBucketed(df: DataFrame, ref: Ref): Unit = {
-    val spark = df.sparkSession
-    // align the write's partitioning with the bucket spec (both are
-    // murmur3-hash partitioning on h): each task then holds exactly one
-    // bucket and the delivery lands as ONE file per bucket — without
-    // this, every shuffle-partition task writes a file per bucket it
-    // touches (shuffle.partitions × buckets tiny files per delivery) and
-    // every later delivery's probe pays the open cost for all of them
-    val w = df.repartition(ref.buckets, col("h"))
-      .write.mode("append").format("parquet")
-      .bucketBy(ref.buckets, "h").sortBy("h")
-    if (spark.catalog.tableExists(ref.gramsTable)) w.saveAsTable(ref.gramsTable)
-    else w.option("path", location(spark, ref.gramsTable).toString)
-      .saveAsTable(ref.gramsTable)
+    val l = store(ref)
+    IndexStore.appendBucketed(df.repartition(ref.buckets, col("h")), l, l.parts.head)
   }
 
-  /** [[ingest]] with a generated unique-per-call delivery id — for
-    * callers who do not need the crashed-retry idempotence (a retry MUST
-    * re-use the first attempt's id to self-exclude; with a fresh id the
-    * crashed attempt's grams look like an earlier delivery and the retry
-    * over-excises — use [[recoverDelivery]] first in that case). */
+  /** The (h, h2) keys of `keys` that `corpus` holds: joined on h ALONE —
+    * the bucket column, so the corpus side reads pre-partitioned with zero
+    * exchange — and h2 confirmed post-join as a difference (an (h, h2)
+    * equi-join is not satisfied by the h-bucketing and would shuffle the
+    * corpus). */
+  private[operators] def corpusHits(corpus: DataFrame, keys: DataFrame): DataFrame =
+    corpus.select(col("h"), col("h2").as("_ih2"))
+      .join(keys, Seq("h"))
+      .filter(col("_ih2") - col("h2") === 0L)
+      .select("h", "h2").distinct()
+
+  /** The batch as (_d, _t, _len) — per-character hashing is a delivery's
+    * compute wall, so a single-split batch scan must not serialize it on
+    * one core. */
+  private def docFrame(batch: DataFrame, idCol: String, textCol: String): DataFrame =
+    Partitioning.fanOutForCompute(batch.select(col(idCol).as("_d"),
+      col(textCol).as("_t"), length(col(textCol)).cast("long").as("_len")), col("_d"))
+
+  /** [[ingest]] under a fresh delivery id: no crashed-retry idempotence
+    * (a fresh-id retry over-excises — [[recoverDelivery]] first). */
   def ingest(batch: DataFrame, idCol: String, textCol: String,
              minLen: Int, ref: Ref): DataFrame =
     ingest(batch, idCol, textCol, minLen, ref,
@@ -203,10 +124,8 @@ object GramIndex {
   /** Ingest one delivery: return the batch CLEANED under the causal
     * cross-delivery ExactSubstr rule — (idCol, clean_text, n_spans,
     * n_removed), every batch doc present — then fold the batch's gram
-    * counts into the index tagged with `delivery`. The corpus probe
-    * excludes `delivery`'s own rows, so a retried ingest with the same id
-    * is byte-idempotent even if the first attempt's append landed (see
-    * the REPLAY CONTRACT in the object doc); the duplicated-window
+    * counts into the index tagged with `delivery` (REPLAY CONTRACT in
+    * the object doc); the duplicated-window
     * positions (the only index-dependent state) materialize BEFORE the
     * append so the common path never reads the index twice.
     *
@@ -225,16 +144,11 @@ object GramIndex {
   def ingest(batch: DataFrame, idCol: String, textCol: String,
              minLen: Int, ref: Ref, delivery: String): DataFrame = {
     require(minLen >= 2, s"minLen must be >= 2, got $minLen")
-    require(delivery.nonEmpty && delivery != CompactedDelivery,
-      s"delivery id must be non-empty and not '$CompactedDelivery'")
+    IndexStore.requireDelivery(delivery, CompactedDelivery)
     val spark = batch.sparkSession
-    withLease(spark, ref, "ingest") {
-      val hasCorpus = attachForWrite(spark, ref)
-      // per-character hashing below is the delivery's compute wall; a
-      // single-split batch scan must not serialize it on one core
-      val docs = Partitioning.fanOutForCompute(
-        batch.select(col(idCol).as("_d"), col(textCol).as("_t"),
-          length(col(textCol)).cast("long").as("_len")), col("_d"))
+    IndexStore.withLease(spark, store(ref), "ingest") {
+      val hasCorpus = IndexStore.hasContent(spark, store(ref))
+      val docs = docFrame(batch, idCol, textCol)
       val grams = Dedup.charGramFingerprints(docs, minLen)
       // ONE (h, h2) count aggregate feeds all three consumers that each
       // used to shuffle the full gram set separately: the within-batch
@@ -258,21 +172,14 @@ object GramIndex {
       cnts.count()
       // within-batch duplicates: remove-all, same as the batch operator
       val withinDup = cnts.filter(col("cnt") >= 2).select("h", "h2")
-      // vs corpus: the probe joins on h ALONE — the bucket column, so the
-      // corpus side reads pre-partitioned with zero exchange — and h2
-      // confirms post-join (a join on (h, h2) would not be satisfied by
-      // the h-bucketing and would shuffle the corpus). Rows tagged with
-      // THIS delivery id are excluded: they can only be a crashed earlier
-      // attempt of this same batch, not earlier corpus content.
+      // vs corpus: rows tagged with THIS delivery id are excluded — they
+      // can only be a crashed earlier attempt of this same batch, not
+      // earlier corpus content
       import spark.implicits._
       val corpusDup =
         if (!hasCorpus) Seq.empty[(Long, Long)].toDF("h", "h2")
-        else spark.table(ref.gramsTable)
-          .filter(col("delivery") =!= lit(delivery))
-          .select(col("h"), col("h2").as("_ih2"))
-          .join(cnts.select("h", "h2"), Seq("h"))
-          .filter(col("_ih2") - col("h2") === 0L)
-          .select("h", "h2").distinct()
+        else corpusHits(spark.table(ref.gramsTable)
+          .filter(col("delivery") =!= lit(delivery)), cnts.select("h", "h2"))
       // The duplicated-KEY set, eagerly cached so its true size reaches
       // the join planner: a lazy post-aggregate estimate defaults high
       // and demotes the semi-join below to a sort-merge that shuffles and
@@ -331,13 +238,10 @@ object GramIndex {
     require(minLen >= 2, s"minLen must be >= 2, got $minLen")
     if (batches.isEmpty) return Seq.empty
     val spark = batches.head.sparkSession
-    withLease(spark, ref, "ingest") {
-      val hasCorpus0 = attachForWrite(spark, ref)
-      val docsBySlice = batches.map { b =>
-        Partitioning.fanOutForCompute(
-          b.select(col(idCol).as("_d"), col(textCol).as("_t"),
-            length(col(textCol)).cast("long").as("_len")), col("_d"))
-      }
+    val l = store(ref)
+    IndexStore.withLease(spark, l, "ingest") {
+      val hasCorpus0 = IndexStore.hasContent(spark, l)
+      val docsBySlice = batches.map(docFrame(_, idCol, textCol))
       val allDocs = docsBySlice.zipWithIndex.map { case (d, k) =>
         d.withColumn("_slice", lit(k)) }.reduce(_ unionByName _)
       // eagerly cached (see ingest's cnts comment: eager blocks the
@@ -349,21 +253,18 @@ object GramIndex {
           carryCols = Seq("_slice"))
         .groupBy(col("_slice"), col("h"), col("h2"))
         .agg(count(lit(1)).as("cnt")).cache()
-      labeled(spark, "gramidx: all-slice gram counts") { cntsAll.count() }
-      // pre-ingest corpus probe, ONCE for every slice: join on h alone
-      // (the bucket column — corpus side reads pre-partitioned, zero
-      // exchange), h2 confirmed post-join
+      IndexStore.labeled(spark, l.label("ingest: all-slice gram counts")) {
+        cntsAll.count()
+      }
+      // pre-ingest corpus probe, ONCE for every slice
       val withFirst = cntsAll.withColumn("_first", min(col("_slice")).over(
         org.apache.spark.sql.expressions.Window.partitionBy("h", "h2")))
       val dupSliced =
         if (!hasCorpus0)
           withFirst.filter(col("cnt") >= 2 || col("_slice") > col("_first"))
         else {
-          val corpusKeys = spark.table(ref.gramsTable)
-            .select(col("h"), col("h2").as("_ih2"))
-            .join(cntsAll.select("h", "h2").distinct(), Seq("h"))
-            .filter(col("_ih2") - col("h2") === 0L)
-            .select("h", "h2").distinct()
+          val corpusKeys = corpusHits(spark.table(ref.gramsTable),
+            cntsAll.select("h", "h2").distinct())
           withFirst
             .join(corpusKeys.withColumn("_chit", lit(1)), Seq("h", "h2"), "left")
             .filter(col("cnt") >= 2 || col("_slice") > col("_first") ||
@@ -371,10 +272,10 @@ object GramIndex {
         }
       // eager dup-key cache: same stats-for-the-planner move as ingest
       val dupKeysAll = dupSliced.select(col("_slice"), col("h"), col("h2")).cache()
-      labeled(spark, "gramidx: dup keys (one probe, all slices)") {
+      IndexStore.labeled(spark, l.label("ingest: dup keys (one probe, all slices)")) {
         dupKeysAll.count()
       }
-      val dupPosAll = labeled(spark, "gramidx: dup-pos skeleton (all slices)") {
+      val dupPosAll = IndexStore.labeled(spark, l.label("ingest: dup-pos skeleton")) {
         Dedup.charGramFingerprints(allDocs, minLen, carryCols = Seq("_slice"))
           .join(dupKeysAll, Seq("_slice", "h", "h2"), "left_semi")
           .select(col("_slice"), col("_d"), col("pos"))
@@ -382,7 +283,7 @@ object GramIndex {
       }
       dupKeysAll.unpersist()
       val deliveries = batches.map(_ => java.util.UUID.randomUUID().toString)
-      labeled(spark, "gramidx: append (one write, all deliveries)") {
+      IndexStore.labeled(spark, l.label("ingest: append (one write, all deliveries)")) {
         appendBucketed(cntsAll
           .withColumn("delivery", element_at(
             array(deliveries.map(lit): _*), col("_slice").cast("int") + 1))
@@ -406,58 +307,16 @@ object GramIndex {
                    minLen: Int, ref: Ref): DataFrame = {
     val spark = batch.sparkSession
     attach(spark, ref)
-    val docs = Partitioning.fanOutForCompute(
-      batch.select(col(idCol).as("_d"), col(textCol).as("_t"),
-        length(col(textCol)).cast("long").as("_len")), col("_d"))
+    val docs = docFrame(batch, idCol, textCol)
     val grams = Dedup.charGramFingerprints(docs, minLen)
     val withinDup = grams.groupBy(col("h"), col("h2"))
       .agg(count(lit(1)).as("_c")).filter(col("_c") >= 2).select("h", "h2")
-    val corpusDup = spark.table(ref.gramsTable)
-      .select(col("h"), col("h2").as("_ih2"))
-      .join(grams.select("h", "h2").distinct(), Seq("h"))
-      .filter(col("_ih2") - col("h2") === 0L)
-      .select("h", "h2").distinct()
+    val corpusDup = corpusHits(spark.table(ref.gramsTable),
+      grams.select("h", "h2").distinct())
     val dupPos = grams
       .join(withinDup.unionByName(corpusDup).distinct(), Seq("h", "h2"), "left_semi")
       .select(col("_d"), col("pos"))
     Dedup.excise(docs, dupPos, minLen, idCol)
-  }
-
-  /** Rewrite the live table through the family's crash-durable
-    * rename-aside swap: the transformed copy lands as a `_compacting`
-    * sibling before the live table is touched, live files rename ASIDE
-    * (never deleted before the replacement is in), and a re-run performs
-    * recovery in its preamble. */
-  private def rewriteTable(spark: SparkSession, ref: Ref)
-                          (transform: DataFrame => DataFrame): Unit = {
-    val tbl = ref.gramsTable
-    val tmp = s"${tbl}_compacting"
-    val tmpLoc = location(spark, tmp)
-    val loc = location(spark, tbl)
-    val oldLoc = location(spark, s"${tbl}_old")
-    val f = hfs(spark, tmpLoc)
-    if (!f.exists(loc) && f.exists(oldLoc)) LshIndex.mustRename(f, oldLoc, loc)
-    if (!spark.catalog.tableExists(tbl)) register(spark, ref)
-    spark.sql(s"DROP TABLE IF EXISTS $tmp")
-    f.delete(tmpLoc, true)
-    // localCheckpoint breaks the scan's logical bucketing so the
-    // repartition genuinely shuffles (see LshIndex.compactOne)
-    val newRows = transform(spark.table(tbl).localCheckpoint(true))
-      .repartition(ref.buckets, col("h"))
-    // re-register under the TRANSFORMED schema — a schema-changing
-    // transform (the legacy-index migration) must not re-attach the files
-    // under the pre-transform DDL
-    val schemaDdl = newRows.schema.toDDL
-    val w = newRows.write.mode("append").format("parquet")
-      .bucketBy(ref.buckets, "h").sortBy("h")
-    w.option("path", tmpLoc.toString).saveAsTable(tmp)
-    spark.sql(s"DROP TABLE $tbl")
-    spark.sql(s"DROP TABLE $tmp") // catalog entry only; files stay
-    f.delete(oldLoc, true)
-    LshIndex.mustRename(f, loc, oldLoc)
-    LshIndex.mustRename(f, tmpLoc, loc)
-    register(spark, ref, Some(schemaDdl))
-    f.delete(oldLoc, true); ()
   }
 
   /** Compact: merge to ONE row per distinct corpus gram and one file per
@@ -472,9 +331,8 @@ object GramIndex {
     * ingest — its retry could no longer self-exclude); retry or
     * [[recoverDelivery]] first. */
   def compact(spark: SparkSession, ref: Ref): Unit =
-    withLease(spark, ref, "compact") {
-      require(attachForWrite(spark, ref), s"no index files for '${ref.tag}' — nothing to compact")
-      rewriteTable(spark, ref) { t =>
+    IndexStore.withLease(spark, store(ref), "compact") {
+      IndexStore.rewriteTables(spark, store(ref)) { t =>
         t.groupBy(col("h"), col("h2"), col("delivery"))
           .agg(max(col("cnt")).as("cnt"))
           .groupBy(col("h"), col("h2")).agg(sum(col("cnt")).as("cnt"))
@@ -482,66 +340,37 @@ object GramIndex {
       }
     }
 
-  /** Retract one delivery's rows from the index — the mechanical recovery
-    * for a crashed batch ingest whose retry cannot re-use the original
-    * delivery id (or whose content should not land at all). After it, a
-    * fresh ingest of the same content under ANY id behaves as if the
-    * crashed attempt never ran. No-op for ids already collapsed by
-    * [[compact]] (lineage is gone — see compact's contract). */
+  /** [[IndexStore.retractDelivery]]: after it, a fresh ingest of the
+    * same content under ANY id behaves as if the crashed attempt never
+    * ran. A no-op for ids [[compact]] collapsed (lineage is gone). */
   def recoverDelivery(spark: SparkSession, ref: Ref, delivery: String): Unit =
-    withLease(spark, ref, "recoverDelivery") {
-      require(delivery != CompactedDelivery,
-        s"cannot retract '$CompactedDelivery' — compaction collapsed lineage")
-      if (attachForWrite(spark, ref))
-        rewriteTable(spark, ref)(_.filter(col("delivery") =!= lit(delivery)))
-    }
+    IndexStore.retractDelivery(spark, store(ref), delivery, CompactedDelivery,
+      "compaction collapsed lineage")
 
-  /** One micro-batch of [[startStreamingIngest]], exposed for planted
-    * replay tests: the idempotent unit a restarted stream re-executes.
-    * Ledger check → [[ingest]] under the batch-derived delivery id →
-    * per-batch clean-output OVERWRITE → ledger append. Crash anywhere
-    * and the re-execution is byte-identical: an already-appended gram set
-    * is self-excluded by the delivery id, the clean output overwrites,
-    * and only then does the ledger mark the batch done. */
+  /** One ledgered micro-batch of [[startStreamingIngest]], exposed for
+    * planted replay tests: [[ingest]] under the batch-derived delivery
+    * id, clean output OVERWRITTEN per batch — a re-execution is
+    * byte-identical (an already-appended gram set self-excludes). */
   def ingestBatchOnce(batch: DataFrame, idCol: String, textCol: String,
-                      minLen: Int, ref: Ref, outDir: String, bid: Long): Unit = {
-    val spark = batch.sparkSession
-    val ledger = s"$outDir/_ledger"
-    if (!graft.streaming.IngestLedger.isDone(spark, ledger, bid)) {
+                      minLen: Int, ref: Ref, outDir: String, bid: Long): Unit =
+    graft.streaming.IngestLedger.once(batch.sparkSession, s"$outDir/_ledger", bid) {
       ingest(batch, idCol, textCol, minLen, ref, delivery = streamDelivery(bid))
         .write.mode("overwrite")
         .parquet(s"$outDir/clean/batch_id=$bid")
-      graft.streaming.IngestLedger.markDone(spark, ledger, bid)
     }
-  }
 
-  /** The stable delivery id a stream's micro-batch `bid` ingests under —
-    * what makes a replayed batch self-exclude. Batch callers of [[ingest]]
-    * sharing the index must avoid the `stream:` prefix. */
+  /** The stable delivery id a stream's micro-batch `bid` ingests under. */
   def streamDelivery(bid: Long): String = s"stream:$bid"
 
-  /** Maintain the index from a document STREAM: each micro-batch runs
-    * [[ingestBatchOnce]] inside foreachBatch — cleaned docs land in
-    * `outDir/clean/batch_id=<id>` with per-batch OVERWRITE and a
-    * `_ledger` records completed batch ids
-    * (watermark-compacted, [[graft.streaming.IngestLedger]] — O(1)
-    * per-commit listing in stream age), so a replayed,
-    * already-ledgered batch is skipped whole. An UNLEDGERED replay
-    * (crash anywhere between the gram append and the ledger write)
-    * re-ingests under the batch's stable delivery id: the probe
-    * self-excludes the crashed attempt's rows, so the replayed cleaning
-    * is byte-identical to an uncrashed run, the clean output overwrites,
-    * and the only residue is duplicate index rows for that delivery —
-    * invisible to the existence-only rule and cancelled exactly by
-    * [[compact]]. */
+  /** Maintain the index from a document STREAM: [[ingestBatchOnce]] per
+    * micro-batch in [[IndexStore]]'s ledgered loop, cleaned docs under
+    * `outDir/clean/batch_id=<id>`. An unledgered replay leaves only
+    * duplicate index rows for its delivery — invisible to the
+    * existence-only rule and cancelled exactly by [[compact]]. */
   def startStreamingIngest(docs: DataFrame, idCol: String, textCol: String,
                            minLen: Int, ref: Ref, outDir: String,
                            checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        ingestBatchOnce(batch.toDF(), idCol, textCol, minLen, ref, outDir, bid)
-      }
-      .start()
+    IndexStore.streamIngest(docs, checkpoint)(
+      ingestBatchOnce(_, idCol, textCol, minLen, ref, outDir, _))
 }

@@ -22,97 +22,48 @@ import org.apache.spark.sql.functions._
   * SQL); [[ingest]] assigns new vectors to the FROZEN centroids and
   * appends their cells — the deployed-ANN maintenance shape (models
   * re-fit offline and rarely; the index grows continuously). Vector ids
-  * must be unique across the index's lifetime. */
+  * must be unique across the index's lifetime. Writers hold
+  * [[IndexStore]]'s lease; `asg/` is its swapped part, recovered by every
+  * writer and by [[search]]. */
 object IvfIndex {
 
   final case class Ref(tag: String) {
     def dirName: String = s"graft_ivfidx_$tag"
   }
 
-  // index location resolves through Hadoop FileSystem against the
-  // warehouse URI, so a non-local warehouse (hdfs://, s3a://) carries the
-  // index on the same storage as the catalog tables — java.io.File would
-  // silently point every operation at a same-named LOCAL path
-  private def root(spark: SparkSession, ref: Ref): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), ref.dirName)
-  private def fs(spark: SparkSession, ref: Ref): org.apache.hadoop.fs.FileSystem =
-    root(spark, ref).getFileSystem(spark.sparkContext.hadoopConfiguration)
   private def centsPath(spark: SparkSession, ref: Ref): String =
-    new org.apache.hadoop.fs.Path(root(spark, ref), "cents").toString
+    IndexStore.location(spark, s"${ref.dirName}/cents").toString
   private def asgPath(spark: SparkSession, ref: Ref): String =
-    new org.apache.hadoop.fs.Path(root(spark, ref), "asg").toString
+    IndexStore.location(spark, s"${ref.dirName}/asg").toString
+
+  private def store(ref: Ref) = IndexStore.Layout("IvfIndex", ref.tag,
+    s"${ref.dirName}_lease", Seq(IndexStore.Part(s"${ref.dirName}/asg")))
 
   /** Destroy the index files (lease included). */
-  def drop(spark: SparkSession, ref: Ref): Unit = {
-    val p = root(spark, ref)
-    fs(spark, ref).delete(p, true)
-    breakLease(spark, ref)
-  }
+  def drop(spark: SparkSession, ref: Ref): Unit =
+    IndexStore.drop(spark, store(ref), ref.dirName)
 
-  // single-writer contract, enforced like LshIndex's: ingest and compact
-  // both mutate the cell directories, and a compact racing an ingest
-  // loses the ingest's appends (the rebuild snapshots before they land).
-  // Writers take an exclusive on-storage lease; a second writer fails
-  // fast with the holder's tag. After a crash the lease lingers —
-  // break it explicitly once the operator confirms no writer is live.
-  // Storage assumption as LshIndex.withLease documents: atomic
-  // create-if-absent holds on HDFS/local but NOT on object stores (no
-  // atomic exclusive create on s3a) — there, use a store-side primitive.
-  private def leasePath(spark: SparkSession, ref: Ref): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), s"${ref.dirName}_lease")
-
-  // rename reports failure as `false`; a silently-failed swap step voids
-  // the crash-durability contract (see LshIndex.mustRename)
-  private def mustRename(f: org.apache.hadoop.fs.FileSystem,
-                         src: org.apache.hadoop.fs.Path,
-                         dst: org.apache.hadoop.fs.Path): Unit =
-    require(f.rename(src, dst), s"rename $src -> $dst failed")
-
-  private def withLease[T](spark: SparkSession, ref: Ref, who: String)(body: => T): T = {
-    val p = leasePath(spark, ref)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = try f.create(p, false) catch {
-      case _: java.io.IOException =>
-        val holder = try {
-          val in = f.open(p)
-          try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-            java.nio.charset.StandardCharsets.UTF_8)
-          finally in.close()
-        } catch { case _: java.io.IOException => "<unreadable>" }
-        throw new IllegalStateException(
-          s"index '${ref.tag}' is write-leased by '$holder' — concurrent " +
-            s"ingest/compact is a data-loss race; if the holder crashed, " +
-            s"breakLease after confirming it is dead")
-    }
-    try {
-      out.write(who.getBytes(java.nio.charset.StandardCharsets.UTF_8)); out.close()
-      body
-    } finally { f.delete(p, false); () }
-  }
-
-  /** Remove a crashed writer's lingering lease. ONLY safe once the
-    * operator has confirmed no ingest/compact is live. */
-  def breakLease(spark: SparkSession, ref: Ref): Unit = {
-    val p = leasePath(spark, ref)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, false); ()
-  }
+  /** Remove a crashed writer's lingering lease ([[IndexStore]]). */
+  def breakLease(spark: SparkSession, ref: Ref): Unit =
+    IndexStore.breakLease(spark, store(ref))
 
   /** The frozen coarse quantizer. */
   def centroids(spark: SparkSession, ref: Ref): DataFrame =
     spark.read.parquet(centsPath(spark, ref))
 
   /** Fit-and-load: seed `nCells` centroids from the corpus's lowest-id
-    * vectors, persist them, then [[ingest]] the corpus itself. */
+    * vectors, persist them, then [[ingest]] the corpus itself — one
+    * writer, under the lease. */
   def build(corpus: DataFrame, idCol: String, vecCol: String, nCells: Int,
             ref: Ref): Unit = {
     require(nCells >= 1)
     val spark = corpus.sparkSession
-    corpus.orderBy(col(idCol)).limit(nCells)
-      .select(col(idCol).as("cell_id"), col(vecCol).as("centroid"))
-      .write.mode("overwrite").parquet(centsPath(spark, ref))
-    ingest(corpus, idCol, vecCol, ref)
+    IndexStore.withLease(spark, store(ref), "build") {
+      corpus.orderBy(col(idCol)).limit(nCells)
+        .select(col(idCol).as("cell_id"), col(vecCol).as("centroid"))
+        .write.mode("overwrite").parquet(centsPath(spark, ref))
+      append(corpus, idCol, vecCol, ref)
+    }
   }
 
   /** Assign a batch to the frozen centroids (argmin squared distance,
@@ -126,9 +77,13 @@ object IvfIndex {
     * (per-query rank dedups them; spec-pinned) and removed at rest by
     * [[compact]]. No delivery bookkeeping is needed because ingest
     * returns nothing a replay could change. */
-  def ingest(batch: DataFrame, idCol: String, vecCol: String, ref: Ref): Unit = {
+  def ingest(batch: DataFrame, idCol: String, vecCol: String, ref: Ref): Unit =
+    IndexStore.withLease(batch.sparkSession, store(ref), "ingest")(
+      append(batch, idCol, vecCol, ref))
+
+  private def append(batch: DataFrame, idCol: String, vecCol: String,
+                     ref: Ref): Unit = {
     val spark = batch.sparkSession
-    withLease(spark, ref, "ingest") {
     batch.select(col(idCol).as("nbr_id"), col(vecCol).as("cvec"))
       .crossJoin(broadcast(centroids(spark, ref)))
       .withColumn("cdist",
@@ -139,68 +94,44 @@ object IvfIndex {
         col("m.cell_id").as("cell_id"))
       .write.mode("append").partitionBy("cell_id")
       .parquet(asgPath(spark, ref))
-    }
   }
 
   /** Compact the cell directories: every [[ingest]] appends one file per
     * touched cell, so a long-lived index accumulates smallFiles × cells —
     * rewrite the corpus once, one task per cell hash (each cell's rows
-    * land in one task, so the writer emits ONE file per cell), and swap
-    * by RENAME-ASIDE: the compacted copy is complete on storage as an
-    * `asg_compacting` sibling before the live directory is touched, then
-    * live renames to `asg_old`, the copy renames in, and `asg_old`
-    * deletes last — the live data is never deleted before its
-    * replacement is in place. A crash between the two renames leaves
-    * both complete copies; the recovery preamble (or a manual
-    * `asg_old` → `asg` rename) restores service. Cell-local at scale (rows never
-    * change cells), so a real deployment compacts cells independently;
-    * single-writer like every compaction here. Also collapses any
-    * crash-window duplicate rows ([[search]]'s de-dup, applied once at
-    * rest instead of per query). */
-  def compact(spark: SparkSession, ref: Ref): Unit = withLease(spark, ref, "compact") {
-    val live = new org.apache.hadoop.fs.Path(root(spark, ref), "asg")
-    val tmp = new org.apache.hadoop.fs.Path(root(spark, ref), "asg_compacting")
-    val old = new org.apache.hadoop.fs.Path(root(spark, ref), "asg_old")
-    val f = fs(spark, ref)
-    if (!f.exists(live) && f.exists(old)) mustRename(f, old, live)
-    f.delete(old, true)
-    f.delete(tmp, true)
-    val snapshot = spark.read.parquet(live.toString).localCheckpoint(true)
-    val nCells = centroids(spark, ref).count().toInt
-    snapshot.dropDuplicates("cell_id", "nbr_id")
-      .repartition(nCells, col("cell_id"))
-      .write.partitionBy("cell_id").parquet(tmp.toString)
-    mustRename(f, live, old)
-    mustRename(f, tmp, live)
-    f.delete(old, true); ()
-  }
+    * land in one task, so the writer emits ONE file per cell), through
+    * [[IndexStore]]'s rename-aside swap under the write lease.
+    * Cell-local at scale (rows never change cells), so a real deployment
+    * compacts cells independently. Also collapses any crash-window
+    * duplicate rows ([[search]]'s de-dup, applied once at rest instead
+    * of per query). */
+  def compact(spark: SparkSession, ref: Ref): Unit =
+    IndexStore.withLease(spark, store(ref), "compact") {
+      val snapshot = spark.read.parquet(asgPath(spark, ref)).localCheckpoint(true)
+      val nCells = centroids(spark, ref).count().toInt
+      IndexStore.swap(spark, store(ref).parts.head) { tmp =>
+        snapshot.dropDuplicates("cell_id", "nbr_id")
+          .repartition(nCells, col("cell_id"))
+          .write.partitionBy("cell_id").parquet(tmp.toString)
+      }
+    }
 
   /** Maintain the index from an embedding STREAM: each micro-batch runs
-    * [[ingest]] inside foreachBatch against the frozen quantizer. Same
-    * replay discipline as [[LshIndex.startStreamingIngest]]: a `_ledger`
-    * records completed batch ids (watermark-compacted,
-    * [[graft.streaming.IngestLedger]] — O(1) per-commit listing in
-    * stream age), so an already-ledgered replayed
-    * batch is skipped whole and the append runs once per batch (the
+    * [[ingest]] against the frozen quantizer inside [[IndexStore]]'s
+    * ledgered loop (ledger under the index directory). The
     * crash-between-append-and-ledger window duplicates index rows for
     * that batch — storage only: [[search]] de-dups (cell_id, nbr_id) on
-    * the pruned scan, so results are unaffected; a transactional target
-    * closes the storage cost too). */
+    * the pruned scan, so results are unaffected. */
   def startStreamingIngest(vectors: DataFrame, idCol: String, vecCol: String,
                            ref: Ref, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        val spark = batch.sparkSession
-        val ledger = s"${root(spark, ref)}/_ledger"
-        if (!graft.streaming.IngestLedger.isDone(spark, ledger, bid)) {
-          ingest(batch.toDF(), idCol, vecCol, ref)
-          graft.streaming.IngestLedger.markDone(spark, ledger, bid)
-        }
-        ()
+    IndexStore.streamIngest(vectors, checkpoint) { (batch, bid) =>
+      val spark = batch.sparkSession
+      graft.streaming.IngestLedger.once(spark,
+          IndexStore.location(spark, s"${ref.dirName}/_ledger").toString, bid) {
+        ingest(batch, idCol, vecCol, ref)
       }
-      .start()
+    }
 
   /** Probe the index: per query, rank the `nProbe` nearest cells against
     * the frozen centroids, then scan ONLY those cells' directories (the
@@ -212,6 +143,7 @@ object IvfIndex {
              k: Int, nProbe: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val spark = queries.sparkSession
+    IndexStore.attach(spark, store(ref)) // finishes a crashed compact's swap
     val cents = broadcast(centroids(spark, ref))
     val probeW = Window.partitionBy("query_id")
       .orderBy(col("cdist").asc, col("cell_id"))

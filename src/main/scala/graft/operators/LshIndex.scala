@@ -34,6 +34,10 @@ import org.apache.spark.sql.functions._
   * catalog entry keeps the files, and [[attach]] re-registers them in a
   * fresh session/process from the directory alone — restarts and other
   * jobs (the streaming ingest wrapper, offline audits) see the same index.
+  * The write lease, the rename-aside swap with its recovery, and the
+  * ledgered stream replay are [[IndexStore]]'s; tables written before
+  * delivery lineage migrate on the first write, their rows tagged
+  * [[LegacyDelivery]].
   * Doc ids must be unique across the index's lifetime (re-ingesting an id
   * would propose self-pairs); dedup services key docs by content hash or a
   * monotonically assigned ingest id, both of which satisfy this.
@@ -53,135 +57,21 @@ object LshIndex {
       shTable -> Seq("doc"))
   }
 
-  // locations resolve through Hadoop FileSystem against the warehouse URI
-  // (not java.io.File), so an hdfs:// or s3a:// warehouse carries the
-  // index on the same storage the catalog points at
-  private def location(spark: SparkSession, table: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"), table)
-  private def hfs(spark: SparkSession, p: org.apache.hadoop.fs.Path)
-      : org.apache.hadoop.fs.FileSystem =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def store(ref: Ref) = IndexStore.Layout("LshIndex", ref.tag,
+    s"graft_lshidx_lease_${ref.tag}",
+    ref.layout.map { case (t, cols) => IndexStore.Part(t, cols) }, ref.buckets,
+    legacyDelivery = Some(LegacyDelivery))
 
-  private def leaseLoc(spark: SparkSession, ref: Ref): org.apache.hadoop.fs.Path =
-    location(spark, s"graft_lshidx_lease_${ref.tag}")
-
-  /** The index is SINGLE-WRITER: [[ingest]] and [[compact]] both mutate
-    * the three tables, and a compact racing an ingest loses the ingest's
-    * appends (the rebuild snapshots before they land). The contract is
-    * enforced, not prose: writers take an exclusive on-storage lease —
-    * atomic create-if-absent of a lease file — and a second writer fails
-    * fast with the holder's tag instead of corrupting the index. The
-    * lease releases on completion; after a CRASH it lingers and must be
-    * broken explicitly ([[breakLease]]) once the operator confirms no
-    * writer is live — the standard storage-lease trade-off.
-    *
-    * STORAGE ASSUMPTION: the primitive is `FileSystem.create(path,
-    * overwrite=false)` as an atomic create-if-absent, which HDFS and
-    * local filesystems guarantee but object stores do NOT (s3a has no
-    * atomic exclusive create — two writers can both "win"). On an
-    * object-store warehouse, mutual exclusion needs a store-side
-    * primitive instead (S3 conditional PUT / If-None-Match, or an
-    * external lock table); this lease is HDFS/local-correct only. */
-  /** Hadoop `FileSystem.rename` reports failure as `false`, not an
-    * exception — and a swap step that silently fails voids the
-    * crash-durability story (renaming the compacted copy in while the
-    * live directory still exists nests it INSIDE the live dir on most
-    * implementations). Every swap/recovery rename goes through this. */
-  private[graft] def mustRename(f: org.apache.hadoop.fs.FileSystem,
-                                src: org.apache.hadoop.fs.Path,
-                                dst: org.apache.hadoop.fs.Path): Unit =
-    require(f.rename(src, dst), s"rename $src -> $dst failed")
-
-  private def withLease[T](spark: SparkSession, ref: Ref, who: String)(body: => T): T = {
-    val p = leaseLoc(spark, ref)
-    val f = hfs(spark, p)
-    val out = try f.create(p, false) catch {
-      case _: java.io.IOException =>
-        val holder = try {
-          val in = f.open(p)
-          try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-            java.nio.charset.StandardCharsets.UTF_8)
-          finally in.close()
-        } catch { case _: java.io.IOException => "<unreadable>" }
-        throw new IllegalStateException(
-          s"index '${ref.tag}' is write-leased by '$holder' — concurrent " +
-            s"ingest/compact is a data-loss race; if the holder crashed, " +
-            s"LshIndex.breakLease after confirming it is dead")
-    }
-    try {
-      out.write(who.getBytes(java.nio.charset.StandardCharsets.UTF_8)); out.close()
-      body
-    } finally { f.delete(p, false); () }
-  }
-
-  /** Remove a crashed writer's lingering lease. ONLY safe once the
-    * operator has confirmed no ingest/compact is live. */
-  def breakLease(spark: SparkSession, ref: Ref): Unit = {
-    val p = leaseLoc(spark, ref)
-    hfs(spark, p).delete(p, false); ()
-  }
+  /** Remove a crashed writer's lingering lease ([[IndexStore]]). */
+  def breakLease(spark: SparkSession, ref: Ref): Unit =
+    IndexStore.breakLease(spark, store(ref))
 
   /** Destroy the index: catalog entries AND files (lease included). */
-  def drop(spark: SparkSession, ref: Ref): Unit = {
-    ref.layout.foreach { case (tbl, _) =>
-      spark.sql(s"DROP TABLE IF EXISTS $tbl")
-      val loc = location(spark, tbl)
-      hfs(spark, loc).delete(loc, true)
-    }
-    breakLease(spark, ref)
-  }
+  def drop(spark: SparkSession, ref: Ref): Unit = IndexStore.drop(spark, store(ref))
 
-  /** Register the bucketing DDL for `tbl` over its on-disk files.
-    * `knownSchema` skips the parquet footer inference when the caller
-    * already holds the schema (compact does — it just read the table). */
-  private def register(spark: SparkSession, ref: Ref, tbl: String,
-                       cols: Seq[String],
-                       knownSchema: Option[String] = None): Unit = {
-    val loc = location(spark, tbl)
-    require(hfs(spark, loc).exists(loc), s"no index files at $loc — nothing to attach")
-    val schema = knownSchema.getOrElse(spark.read.parquet(loc.toString).schema.toDDL)
-    val cl = cols.mkString(", ")
-    spark.sql(s"""CREATE TABLE $tbl ($schema) USING parquet
-      CLUSTERED BY ($cl) SORTED BY ($cl) INTO ${ref.buckets} BUCKETS
-      LOCATION '${loc.toString}'""")
-  }
-
-  /** Re-register an existing on-disk index in a session whose catalog does
-    * not know it (fresh process, different job). The files alone carry the
-    * data; this re-asserts the bucketing DDL over them, so bucketed reads
-    * (zero corpus-side exchange) survive restarts. */
-  def attach(spark: SparkSession, ref: Ref): Unit = ref.layout.foreach { case (tbl, cols) =>
-    if (!spark.catalog.tableExists(tbl)) register(spark, ref, tbl, cols)
-  }
-
-  /** Writer-side preamble: finish a crashed [[compact]]'s rename-aside
-    * swap where one is pending, then register any on-disk table the
-    * session catalog does not know. Returns whether index content exists
-    * — false only for a brand-new index. Without this, a fresh process
-    * that forgot [[attach]] would probe an EMPTY corpus and silently
-    * miss every cross-delivery pair. */
-  private def attachForWrite(spark: SparkSession, ref: Ref): Boolean = {
-    ref.layout.foreach { case (tbl, cols) =>
-      val loc = location(spark, tbl)
-      val oldLoc = location(spark, s"${tbl}_old")
-      val f = hfs(spark, loc)
-      if (!f.exists(loc) && f.exists(oldLoc)) mustRename(f, oldLoc, loc)
-      if (!spark.catalog.tableExists(tbl) && f.exists(loc))
-        register(spark, ref, tbl, cols)
-      if (spark.catalog.tableExists(tbl) &&
-          !spark.table(tbl).columns.contains("delivery")) {
-        // pre-delivery-lineage table (round-12 schema): without this, the
-        // first ingest's `delivery` filter dies with an opaque
-        // unresolved-column error and the append would schema-mismatch.
-        // Migrate through the crash-durable rewrite, tagging legacy rows
-        // [[LegacyDelivery]] (their delivery lineage is unknowable, so
-        // recoverDelivery of a pre-migration delivery is a no-op).
-        compactOne(spark, ref, tbl, cols,
-          _.withColumn("delivery", lit(LegacyDelivery)))
-      }
-    }
-    spark.catalog.tableExists(ref.bandedTable)
-  }
+  /** Re-assert the bucketing DDL over the on-disk files in a session
+    * whose catalog lacks them, so bucketed reads survive restarts. */
+  def attach(spark: SparkSession, ref: Ref): Unit = IndexStore.attach(spark, store(ref))
 
   /** Delivery tag the legacy-schema migration rewrites pre-round-13 rows
     * under; user delivery ids must not collide with it. */
@@ -226,13 +116,11 @@ object LshIndex {
     * ingest completed), and the id-uniqueness rule only forbids ids
     * whose artifacts are fully live. */
   def repairTorn(spark: SparkSession, ref: Ref): Long =
-    withLease(spark, ref, "repair") {
+    IndexStore.withLease(spark, store(ref), "repair") {
       val orphans = fsck(spark, ref).select(col("doc")).localCheckpoint(true)
       val n = orphans.count()
-      if (n > 0) ref.layout.foreach { case (tbl, cols) =>
-        compactOne(spark, ref, tbl, cols,
-          df => df.join(broadcast(orphans), Seq("doc"), "left_anti"))
-      }
+      if (n > 0) IndexStore.rewriteTables(spark, store(ref))(
+        _.join(broadcast(orphans), Seq("doc"), "left_anti"))
       n
     }
 
@@ -250,22 +138,9 @@ object LshIndex {
     }
   }
 
-  private def appendBucketed(df: DataFrame, tbl: String, buckets: Int,
-                             cols: Seq[String]): Unit = {
-    val spark = df.sparkSession
-    val w = df.write.mode("append").format("parquet")
-      .bucketBy(buckets, cols.head, cols.tail: _*)
-      .sortBy(cols.head, cols.tail: _*)
-    if (spark.catalog.tableExists(tbl)) w.saveAsTable(tbl)
-    else w.option("path", location(spark, tbl).toString).saveAsTable(tbl)
-  }
-
-  /** [[ingest]] with a generated unique-per-call delivery id — for
-    * callers who do not need the crashed-retry idempotence (a retry MUST
-    * re-use the first attempt's id to self-exclude; with a fresh id the
-    * crashed attempt's appended artifacts look like earlier corpus docs
-    * and the retry reports every batch doc as a duplicate of itself —
-    * use [[recoverDelivery]] first in that case). */
+  /** [[ingest]] under a fresh delivery id: no crashed-retry idempotence
+    * (a fresh-id retry reports every batch doc as a duplicate of itself
+    * — [[recoverDelivery]] first). */
   def ingest(batch: DataFrame, idCol: String, textCol: String,
              n: Int, k: Int, bands: Int, threshold: Double, ref: Ref): DataFrame =
     ingest(batch, idCol, textCol, n, k, bands, threshold, ref,
@@ -280,14 +155,9 @@ object LshIndex {
     * BEFORE the append so a batch never proposes pairs against itself
     * through the index.
     *
-    * REPLAY CONTRACT: every corpus probe EXCLUDES rows tagged with this
-    * `delivery`, so a retried ingest with the SAME id returns the same
-    * pairs byte-for-byte even when the first attempt's appends landed
-    * (fully or torn) — the only residue is duplicate artifact rows for
-    * that delivery, invisible to results (candidate `distinct()` + the
-    * per-doc verification are set-semantics) and removable via
-    * [[recoverDelivery]]. Ids must be stable across retries of one
-    * delivery and unique across deliveries. */
+    * REPLAY CONTRACT: [[IndexStore]]'s delivery self-exclusion; a
+    * replay's duplicate artifact rows are invisible to results (candidate
+    * `distinct()` + per-doc verification are set-semantics). */
   def ingest(batch: DataFrame, idCol: String, textCol: String,
              n: Int, k: Int, bands: Int, threshold: Double, ref: Ref,
              delivery: String): DataFrame =
@@ -331,12 +201,12 @@ object LshIndex {
                          threshold: Double, ref: Ref,
                          delivery: String): DataFrame = {
     require(k % bands == 0, s"k=$k must divide into bands=$bands")
-    require(delivery.nonEmpty && delivery != LegacyDelivery,
-      s"delivery id must be non-empty and not '$LegacyDelivery'")
+    IndexStore.requireDelivery(delivery, LegacyDelivery)
     val r = k / bands
     val spark = batch.sparkSession
-    withLease(spark, ref, "ingest") {
-    val exists = attachForWrite(spark, ref)
+    val l = store(ref)
+    IndexStore.withLease(spark, l, "ingest") {
+    val exists = IndexStore.hasContent(spark, l)
     if (exists) {
       val hasScope = spark.table(ref.sigsTable).columns.contains("scope")
       require(hasScope == scopeCol.isDefined,
@@ -422,39 +292,22 @@ object LshIndex {
     // CONCURRENT Spark jobs (hashing is already computed and cached, so
     // the jobs are write-bound and overlap cleanly; measured: the
     // sequential form paid the three write latencies end to end)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    val appends = ref.layout.zip(Seq(banded, sigs, sh)).map { case ((tbl, cols), df) =>
-      scala.concurrent.Future(appendBucketed(
-        df.withColumn("delivery", lit(delivery)), tbl, ref.buckets, cols))
-    }
-    scala.concurrent.Await.result(
-      scala.concurrent.Future.sequence(appends),
-      scala.concurrent.duration.Duration.Inf)
+    IndexStore.inParallel(l.parts.zip(Seq(banded, sigs, sh)).map { case (p, df) =>
+      () => IndexStore.appendBucketed(df.withColumn("delivery", lit(delivery)), l, p)
+    })
     sh.unpersist(); sigs.unpersist()
     out
     }
   }
 
-  /** Retract one delivery's artifact rows from all three tables — the
-    * mechanical recovery for a crashed batch ingest whose retry cannot
-    * re-use the original delivery id (or whose content should not land
-    * at all). After it, a fresh ingest of the same content under ANY id
-    * behaves as if the crashed attempt never ran. Same rename-aside
-    * rewrite as [[compact]], under the write lease. */
+  /** [[IndexStore.retractDelivery]] over all three tables: after it, a
+    * fresh ingest of the same content under ANY id behaves as if the
+    * crashed attempt never ran. */
   def recoverDelivery(spark: SparkSession, ref: Ref, delivery: String): Unit =
-    withLease(spark, ref, "recoverDelivery") {
-      require(delivery != LegacyDelivery,
-        s"cannot retract '$LegacyDelivery' — pre-migration lineage is collapsed")
-      if (attachForWrite(spark, ref)) ref.layout.foreach { case (tbl, cols) =>
-        compactOne(spark, ref, tbl, cols,
-          _.filter(col("delivery") =!= lit(delivery)))
-      }
-    }
+    IndexStore.retractDelivery(spark, store(ref), delivery, LegacyDelivery,
+      "pre-migration lineage is collapsed")
 
-  /** The stable delivery id a stream's micro-batch `bid` ingests under —
-    * what makes a replayed batch self-exclude. Batch callers of [[ingest]]
-    * sharing the index must avoid the `stream:` prefix. */
+  /** The stable delivery id a stream's micro-batch `bid` ingests under. */
   def streamDelivery(bid: Long): String = s"stream:$bid"
 
   /** Compact the index: every [[ingest]] appends one file per bucket, so
@@ -463,110 +316,32 @@ object LshIndex {
     * (spec-pinned) and bucket-local at scale: rows never cross buckets,
     * so a real deployment compacts buckets independently (concat-style)
     * — this whole-table rewrite is the simple form of that maintenance
-    * window. Runs under the same exclusive write lease as [[ingest]]
-    * (a racing ingest fails fast instead of losing its appends), and is
-    * crash-durable: the compacted copy lands on storage as a `_compacting`
-    * sibling BEFORE the live table is touched, and the swap is
-    * RENAME-ASIDE — live files rename to an `_old` sibling, the copy
-    * renames in, `_old` deletes last — so live data is never deleted
-    * before its replacement is in place. A crash anywhere leaves at
-    * least one complete copy on storage; re-running compact performs
-    * the recovery (rename `_old` back, re-register the catalog entry)
-    * in its preamble. */
+    * window. The three tables rewrite as concurrent jobs. */
   def compact(spark: SparkSession, ref: Ref): Unit =
-    withLease(spark, ref, "compact") {
-      // three independent tables — compact them as concurrent jobs (same
-      // parallelism argument as the ingest appends; DDL targets are
-      // distinct catalog entries)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.global
-      val jobs = ref.layout.map { case (tbl, cols) =>
-        scala.concurrent.Future { compactOne(spark, ref, tbl, cols) }
-      }
-      scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(jobs),
-        scala.concurrent.duration.Duration.Inf); ()
+    IndexStore.withLease(spark, store(ref), "compact") {
+      IndexStore.rewriteTables(spark, store(ref))(identity)
     }
-
-  private def compactOne(spark: SparkSession, ref: Ref, tbl: String,
-                         cols: Seq[String],
-                         transform: DataFrame => DataFrame = identity): Unit = {
-        val tmp = s"${tbl}_compacting"
-        val tmpLoc = location(spark, tmp)
-        val loc = location(spark, tbl)
-        val oldLoc = location(spark, s"${tbl}_old")
-        val f = hfs(spark, tmpLoc)
-        // recovery from a compact that died mid-swap: live files may sit
-        // aside under _old, and the catalog entry may be dropped
-        if (!f.exists(loc) && f.exists(oldLoc)) mustRename(f, oldLoc, loc)
-        if (!spark.catalog.tableExists(tbl)) register(spark, ref, tbl, cols)
-        // durable compacted copy first — the live table is not yet touched
-        spark.sql(s"DROP TABLE IF EXISTS $tmp")
-        f.delete(tmpLoc, true)
-        // the localCheckpoint is NOT for durability (the tmp table is the
-        // durable copy) — it breaks the scan's logical bucket-partitioning
-        // so the repartition actually shuffles: Catalyst otherwise elides
-        // it as redundant, then plans an unbucketed scan whose raw file
-        // splits misalign with bucket ids and fan out file-per-task-bucket
-        val newRows = transform(spark.table(tbl).localCheckpoint(true))
-          .repartition(ref.buckets, cols.map(col): _*)
-        // re-register under the TRANSFORMED schema — a schema-changing
-        // transform (the legacy-index migration) must not re-attach the
-        // files under the pre-transform DDL
-        val schemaDdl = newRows.schema.toDDL
-        appendBucketed(newRows, tmp, ref.buckets, cols)
-        // swap: drop the catalog entries, rename live ASIDE (never
-        // deleted before its replacement is in place), rename the copy
-        // in, re-assert the bucketing DDL, delete the aside copy LAST
-        spark.sql(s"DROP TABLE $tbl")
-        spark.sql(s"DROP TABLE $tmp") // catalog entry only; files stay
-        f.delete(oldLoc, true)
-        mustRename(f, loc, oldLoc)
-        mustRename(f, tmpLoc, loc)
-        register(spark, ref, tbl, cols, Some(schemaDdl))
-        f.delete(oldLoc, true); ()
-  }
 
   /** Maintain the index from a document STREAM — the cross-run flavor of
     * the in-state claim index (streaming/StreamingDedup.scala): each
-    * micro-batch runs [[ingest]] inside foreachBatch, so within-batch and
-    * batch-vs-corpus pairs come from the ONE batch definition, and the
-    * corpus index survives restarts on disk (re-[[attach]] in a fresh
-    * process) instead of living in the state store.
-    *
-    * Replay discipline: pairs land in `outDir/pairs/batch_id=<id>` with
-    * per-batch OVERWRITE (a replayed batch rewrites its own partition),
-    * and a `_ledger` records completed batch ids (watermark-compacted:
-    * [[graft.streaming.IngestLedger]] folds the sequential ids into a
-    * generation, so the per-commit done-check lists O(1) files in
-    * stream age, not O(batches)) — a replayed, already-ledgered batch
-    * is skipped whole. A crash BETWEEN the index
-    * append and the ledger write re-ingests that batch on restart under
-    * its stable delivery id ([[streamDelivery]]): the corpus probes
-    * self-exclude the crashed attempt's rows, so the replayed pair set is
-    * byte-identical to an uncrashed run and the per-batch partition
-    * overwrites; the only residue is duplicate artifact rows for that
-    * delivery (storage, not correctness — [[recoverDelivery]] retracts
+    * micro-batch runs [[ingest]] in [[IndexStore]]'s ledgered loop, pairs
+    * OVERWRITTEN per batch under `outDir/pairs/batch_id=<id>`. An
+    * unledgered replay re-ingests under its stable delivery id
+    * ([[streamDelivery]]), so its pair set is byte-identical; the only
+    * residue is duplicate artifact rows ([[recoverDelivery]] retracts
     * them). The `old_id =!= new_id` guard stays as defense-in-depth for
     * callers who violate the id-uniqueness contract. */
   def startStreamingIngest(docs: DataFrame, idCol: String, textCol: String,
                            n: Int, k: Int, bands: Int, threshold: Double,
                            ref: Ref, outDir: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        val spark = batch.sparkSession
-        val ledger = s"$outDir/_ledger"
-        if (!graft.streaming.IngestLedger.isDone(spark, ledger, bid)) {
-          ingest(batch.toDF(), idCol, textCol, n, k, bands, threshold, ref,
-              delivery = streamDelivery(bid))
-            .filter(col("old_id") =!= col("new_id")) // id-contract-violation guard
-            .write.mode("overwrite")
-            .parquet(s"$outDir/pairs/batch_id=$bid")
-          graft.streaming.IngestLedger.markDone(spark, ledger, bid)
-        }
-        ()
+    IndexStore.streamIngest(docs, checkpoint) { (batch, bid) =>
+      graft.streaming.IngestLedger.once(batch.sparkSession, s"$outDir/_ledger", bid) {
+        ingest(batch, idCol, textCol, n, k, bands, threshold, ref,
+            delivery = streamDelivery(bid))
+          .filter(col("old_id") =!= col("new_id")) // id-contract-violation guard
+          .write.mode("overwrite")
+          .parquet(s"$outDir/pairs/batch_id=$bid")
       }
-      .start()
+    }
 }

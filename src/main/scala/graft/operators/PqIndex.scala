@@ -28,73 +28,28 @@ import org.apache.spark.sql.functions._
   * produced (the fit's final assignment step IS assignment against the
   * final centroids, spec-pinned) — and appends their cells. O(|batch| ·
   * (nCells + m·k)) work, zero corpus contact. Vector ids must be unique
-  * across the index's lifetime. */
+  * across the index's lifetime. Writers hold [[IndexStore]]'s lease;
+  * `codes/` is its swapped part, recovered by every writer and by
+  * [[search]]. */
 object PqIndex {
 
   final case class Ref(tag: String) {
     def dirName: String = s"graft_pqidx_$tag"
   }
 
-  private def root(spark: SparkSession, ref: Ref): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), ref.dirName)
-  private def fs(spark: SparkSession, ref: Ref): org.apache.hadoop.fs.FileSystem =
-    root(spark, ref).getFileSystem(spark.sparkContext.hadoopConfiguration)
   private def sub(spark: SparkSession, ref: Ref, name: String): String =
-    new org.apache.hadoop.fs.Path(root(spark, ref), name).toString
+    IndexStore.location(spark, s"${ref.dirName}/$name").toString
+
+  private def store(ref: Ref) = IndexStore.Layout("PqIndex", ref.tag,
+    s"${ref.dirName}_lease", Seq(IndexStore.Part(s"${ref.dirName}/codes")))
 
   /** Destroy the index files (lease included). */
-  def drop(spark: SparkSession, ref: Ref): Unit = {
-    fs(spark, ref).delete(root(spark, ref), true)
-    breakLease(spark, ref)
-  }
+  def drop(spark: SparkSession, ref: Ref): Unit =
+    IndexStore.drop(spark, store(ref), ref.dirName)
 
-  // single-writer contract, enforced like LshIndex/IvfIndex: ingest and
-  // compact both mutate the cell directories; writers take an exclusive
-  // on-storage lease, a second writer fails fast with the holder's tag,
-  // and a crashed writer's lingering lease is broken explicitly.
-  // Storage assumption as LshIndex.withLease documents: atomic
-  // create-if-absent holds on HDFS/local but NOT on object stores (no
-  // atomic exclusive create on s3a) — there, use a store-side primitive.
-  private def leasePath(spark: SparkSession, ref: Ref): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), s"${ref.dirName}_lease")
-
-  // rename reports failure as `false`; a silently-failed swap step voids
-  // the crash-durability contract (see LshIndex.mustRename)
-  private def mustRename(f: org.apache.hadoop.fs.FileSystem,
-                         src: org.apache.hadoop.fs.Path,
-                         dst: org.apache.hadoop.fs.Path): Unit =
-    require(f.rename(src, dst), s"rename $src -> $dst failed")
-
-  private def withLease[T](spark: SparkSession, ref: Ref, who: String)(body: => T): T = {
-    val p = leasePath(spark, ref)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = try f.create(p, false) catch {
-      case _: java.io.IOException =>
-        val holder = try {
-          val in = f.open(p)
-          try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-            java.nio.charset.StandardCharsets.UTF_8)
-          finally in.close()
-        } catch { case _: java.io.IOException => "<unreadable>" }
-        throw new IllegalStateException(
-          s"index '${ref.tag}' is write-leased by '$holder' — concurrent " +
-            s"ingest/compact is a data-loss race; if the holder crashed, " +
-            s"breakLease after confirming it is dead")
-    }
-    try {
-      out.write(who.getBytes(java.nio.charset.StandardCharsets.UTF_8)); out.close()
-      body
-    } finally { f.delete(p, false); () }
-  }
-
-  /** Remove a crashed writer's lingering lease. ONLY safe once the
-    * operator has confirmed no ingest/compact is live. */
-  def breakLease(spark: SparkSession, ref: Ref): Unit = {
-    val p = leasePath(spark, ref)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, false); ()
-  }
+  /** Remove a crashed writer's lingering lease ([[IndexStore]]). */
+  def breakLease(spark: SparkSession, ref: Ref): Unit =
+    IndexStore.breakLease(spark, store(ref))
 
   def coarseCentroids(spark: SparkSession, ref: Ref): DataFrame =
     spark.read.parquet(sub(spark, ref, "coarse"))
@@ -116,7 +71,13 @@ object PqIndex {
     * [[ingest]] / [[startStreamingIngest]] against the frozen models. */
   def buildModels(fitSet: DataFrame, idCol: String, vecCol: String, dim: Int,
                   m: Int, k: Int, iters: Int, nCells: Int, cIters: Int,
-                  ref: Ref, scale: Long = 1000000L): Unit = {
+                  ref: Ref, scale: Long = 1000000L): Unit =
+    IndexStore.withLease(fitSet.sparkSession, store(ref), "buildModels")(
+      fit(fitSet, idCol, vecCol, dim, m, k, iters, nCells, cIters, ref, scale))
+
+  private def fit(fitSet: DataFrame, idCol: String, vecCol: String, dim: Int,
+                  m: Int, k: Int, iters: Int, nCells: Int, cIters: Int,
+                  ref: Ref, scale: Long): Unit = {
     val spark = fitSet.sparkSession
     val coarse = ML.kMeansScaled(fitSet, idCol, vecCol, nCells, cIters, scale)
     coarse.centroids.write.mode("overwrite").parquet(sub(spark, ref, "coarse"))
@@ -125,12 +86,16 @@ object PqIndex {
   }
 
   /** Fit-and-load: [[buildModels]] over the corpus, then the corpus
-    * itself [[ingest]]ed against the frozen artifacts. */
+    * itself [[ingest]]ed against the frozen artifacts — one writer,
+    * under the lease. */
   def build(corpus: DataFrame, idCol: String, vecCol: String, dim: Int, m: Int,
             k: Int, iters: Int, nCells: Int, cIters: Int, ref: Ref,
             scale: Long = 1000000L): Unit = {
-    buildModels(corpus, idCol, vecCol, dim, m, k, iters, nCells, cIters, ref, scale)
-    ingest(corpus, idCol, vecCol, dim, m, ref, scale)
+    require(m >= 1 && dim % m == 0, s"dim $dim must split into m=$m subspaces")
+    IndexStore.withLease(corpus.sparkSession, store(ref), "build") {
+      fit(corpus, idCol, vecCol, dim, m, k, iters, nCells, cIters, ref, scale)
+      append(corpus, idCol, vecCol, dim, m, ref, scale)
+    }
   }
 
   /** Assign a batch to the frozen coarse centroids and encode it against
@@ -147,8 +112,13 @@ object PqIndex {
   def ingest(batch: DataFrame, idCol: String, vecCol: String, dim: Int, m: Int,
              ref: Ref, scale: Long = 1000000L): Unit = {
     require(m >= 1 && dim % m == 0, s"dim $dim must split into m=$m subspaces")
+    IndexStore.withLease(batch.sparkSession, store(ref), "ingest")(
+      append(batch, idCol, vecCol, dim, m, ref, scale))
+  }
+
+  private def append(batch: DataFrame, idCol: String, vecCol: String, dim: Int,
+                     m: Int, ref: Ref, scale: Long): Unit = {
     val spark = batch.sparkSession
-    withLease(spark, ref, "ingest") {
     val subLen = dim / m
     val q = batch.select(col(idCol).as("id"), scaled(col(vecCol), scale).as("qv"))
     val assigned = q.crossJoin(broadcast(coarseCentroids(spark, ref)))
@@ -167,64 +137,40 @@ object PqIndex {
       .select(col("id"), col("m"), col("c.cell_id").as("cell_id"), col("ivf_cell"))
       .write.mode("append").partitionBy("ivf_cell")
       .parquet(sub(spark, ref, "codes"))
-    }
   }
 
   /** Compact the code-cell directories — the [[IvfIndex.compact]]
     * maintenance for the coded corpus: one file per cell after, content
     * preserved minus crash-window duplicate rows (the (ivf_cell, id, m)
-    * de-dup applied once at rest), single-writer. Crash-durable via a
-    * rename-aside swap: the live directory is NEVER deleted before the
-    * compacted copy is in place — live renames to `codes_old`, the copy
-    * renames in, `codes_old` deletes last. A crash between the two
-    * renames leaves no live directory but BOTH complete copies on
-    * storage; the recovery preamble here (or a manual
-    * `codes_old` → `codes` rename) restores service. */
-  def compact(spark: SparkSession, ref: Ref): Unit = withLease(spark, ref, "compact") {
-    val live = new org.apache.hadoop.fs.Path(root(spark, ref), "codes")
-    val tmp = new org.apache.hadoop.fs.Path(root(spark, ref), "codes_compacting")
-    val old = new org.apache.hadoop.fs.Path(root(spark, ref), "codes_old")
-    val f = fs(spark, ref)
-    // recovery: a compact that died between its two renames left the
-    // complete live copy aside — put it back before proceeding
-    if (!f.exists(live) && f.exists(old)) mustRename(f, old, live)
-    f.delete(old, true)
-    f.delete(tmp, true)
-    val snapshot = spark.read.parquet(live.toString).localCheckpoint(true)
-    val nCells = coarseCentroids(spark, ref).count().toInt
-    snapshot.dropDuplicates("ivf_cell", "id", "m")
-      .repartition(nCells, col("ivf_cell"))
-      .write.partitionBy("ivf_cell").parquet(tmp.toString)
-    mustRename(f, live, old)
-    mustRename(f, tmp, live)
-    f.delete(old, true); ()
-  }
+    * de-dup applied once at rest), through [[IndexStore]]'s
+    * rename-aside swap under the write lease. */
+  def compact(spark: SparkSession, ref: Ref): Unit =
+    IndexStore.withLease(spark, store(ref), "compact") {
+      val snapshot = spark.read.parquet(sub(spark, ref, "codes")).localCheckpoint(true)
+      val nCells = coarseCentroids(spark, ref).count().toInt
+      IndexStore.swap(spark, store(ref).parts.head) { tmp =>
+        snapshot.dropDuplicates("ivf_cell", "id", "m")
+          .repartition(nCells, col("ivf_cell"))
+          .write.partitionBy("ivf_cell").parquet(tmp.toString)
+      }
+    }
 
   /** Maintain the index from an embedding STREAM: each micro-batch runs
     * [[ingest]] against the frozen coarse centroids + codebooks inside
-    * foreachBatch — same ledgered replay discipline as
-    * [[IvfIndex.startStreamingIngest]] (a `_ledger` parquet records
-    * completed batch ids; an already-ledgered replayed batch is skipped
-    * whole; the crash-between-append-and-ledger window duplicates one
-    * batch's code rows — storage only, [[search]] de-dups
-    * (ivf_cell, id, m) on the pruned scan). */
+    * [[IndexStore]]'s ledgered loop (ledger under the index directory);
+    * the crash-between-append-and-ledger window duplicates one batch's
+    * code rows — storage only, [[search]] de-dups (ivf_cell, id, m) on
+    * the pruned scan. */
   def startStreamingIngest(vectors: DataFrame, idCol: String, vecCol: String,
                            dim: Int, m: Int, ref: Ref, checkpoint: String,
                            scale: Long = 1000000L)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        val ledger = s"${root(spark, ref)}/_ledger"
-        if (!graft.streaming.IngestLedger.isDone(spark, ledger, bid)) {
-          ingest(batch.toDF(), idCol, vecCol, dim, m, ref, scale)
-          graft.streaming.IngestLedger.markDone(spark, ledger, bid)
-        }
-        ()
+    IndexStore.streamIngest(vectors, checkpoint) { (batch, bid) =>
+      val spark = batch.sparkSession
+      graft.streaming.IngestLedger.once(spark, sub(spark, ref, "_ledger"), bid) {
+        ingest(batch, idCol, vecCol, dim, m, ref, scale)
       }
-      .start()
+    }
 
   /** IVFADC search from the on-disk index: identical result semantics to
     * [[PQ.ivfAdcTopK]] over the same fits (spec-pinned byte-equal) —
@@ -241,6 +187,7 @@ object PqIndex {
     require(nProbe >= 1, s"nProbe must be >= 1, got $nProbe")
     import org.apache.spark.sql.expressions.Window
     val spark = probes.sparkSession
+    IndexStore.attach(spark, store(ref)) // finishes a crashed compact's swap
     val subLen = dim / m
     val qp = probes.select(col(idCol).as("q_id"), scaled(col(vecCol), scale).as("qv"))
       .localCheckpoint(true) // consumed by routing AND the LUT

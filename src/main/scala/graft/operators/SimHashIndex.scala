@@ -39,15 +39,9 @@ import graft.functions.Hashes
   * the index tagged with `delivery`. Results materialize BEFORE the
   * append so a batch never pairs with itself through the index.
   *
-  * REPLAY CONTRACT ([[GramIndex]]'s, verbatim): every append is tagged
-  * with the delivery id and the corpus probe EXCLUDES the current
-  * delivery's own rows, so a retried `ingest` with the SAME id is
-  * byte-identical even when the first attempt's append landed (fully or
-  * torn). The only replay residue is duplicate rows for that delivery —
-  * invisible to results (the pair set is `distinct()`) and cancelled
-  * EXACTLY by [[compact]] (row-value distinct: replayed rows are
-  * byte-equal) or retracted by [[recoverDelivery]]. Delivery ids must be
-  * stable across retries and unique across deliveries.
+  * REPLAY CONTRACT: [[IndexStore]]'s delivery self-exclusion; a
+  * replay's duplicate rows are invisible to the `distinct()` pair set
+  * and cancelled EXACTLY by [[compact]] (row-value distinct).
   *
   * Cost per delivery: one signature pass over the batch, one batch-sized
   * shuffle on the 12-byte (blk, blkval) key, one bucketed probe join
@@ -59,13 +53,10 @@ import graft.functions.Hashes
   * (document, block); [[compact]] merges replay residue and rewrites one
   * file per bucket.
   *
-  * Single-writer, enforced on storage with the family's atomic
-  * create-if-absent lease (HDFS/local semantics — see [[LshIndex]] for
-  * the object-store caveat). The table is EXTERNAL: [[attach]]
-  * re-registers the bucketing DDL over the files in a fresh
-  * session/process, and ingest auto-attaches (recovering a crashed
-  * [[compact]]'s rename-aside state) so an on-disk index is never
-  * silently treated as empty. */
+  * The table is EXTERNAL: [[attach]] re-registers the bucketing DDL over
+  * the files in a fresh session/process. The single-writer lease, the
+  * rename-aside swap with its recovery preamble, and the ledgered stream
+  * replay are [[IndexStore]]'s. */
 object SimHashIndex {
 
   /** Names + physical layout of one persistent index. `tag` must be
@@ -83,89 +74,19 @@ object SimHashIndex {
 
   private val BucketCols = Seq("blk", "blkval")
 
-  private def location(spark: SparkSession, table: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"), table)
-  private def hfs(spark: SparkSession, p: org.apache.hadoop.fs.Path)
-      : org.apache.hadoop.fs.FileSystem =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-  private def leaseLoc(spark: SparkSession, ref: Ref): org.apache.hadoop.fs.Path =
-    location(spark, s"graft_shidx_lease_${ref.tag}")
+  private def store(ref: Ref) = IndexStore.Layout("SimHashIndex", ref.tag,
+    s"graft_shidx_lease_${ref.tag}",
+    Seq(IndexStore.Part(ref.blocksTable, BucketCols)), ref.buckets)
 
-  private def withLease[T](spark: SparkSession, ref: Ref, who: String)(body: => T): T = {
-    val p = leaseLoc(spark, ref)
-    val f = hfs(spark, p)
-    val out = try f.create(p, false) catch {
-      case _: java.io.IOException =>
-        val holder = try {
-          val in = f.open(p)
-          try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-            java.nio.charset.StandardCharsets.UTF_8)
-          finally in.close()
-        } catch { case _: java.io.IOException => "<unreadable>" }
-        throw new IllegalStateException(
-          s"index '${ref.tag}' is write-leased by '$holder' — concurrent " +
-            s"ingest/compact is a data-loss race; if the holder crashed, " +
-            s"SimHashIndex.breakLease after confirming it is dead")
-    }
-    try {
-      out.write(who.getBytes(java.nio.charset.StandardCharsets.UTF_8)); out.close()
-      body
-    } finally { f.delete(p, false); () }
-  }
-
-  /** Remove a crashed writer's lingering lease. ONLY safe once the
-    * operator has confirmed no ingest/compact is live. */
-  def breakLease(spark: SparkSession, ref: Ref): Unit = {
-    val p = leaseLoc(spark, ref)
-    hfs(spark, p).delete(p, false); ()
-  }
+  /** Remove a crashed writer's lingering lease ([[IndexStore]]). */
+  def breakLease(spark: SparkSession, ref: Ref): Unit =
+    IndexStore.breakLease(spark, store(ref))
 
   /** Destroy the index: catalog entry AND files (lease included). */
-  def drop(spark: SparkSession, ref: Ref): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS ${ref.blocksTable}")
-    val loc = location(spark, ref.blocksTable)
-    hfs(spark, loc).delete(loc, true)
-    breakLease(spark, ref)
-  }
+  def drop(spark: SparkSession, ref: Ref): Unit = IndexStore.drop(spark, store(ref))
 
-  private def register(spark: SparkSession, ref: Ref,
-                       knownSchema: Option[String] = None): Unit = {
-    val loc = location(spark, ref.blocksTable)
-    require(hfs(spark, loc).exists(loc), s"no index files at $loc — nothing to attach")
-    val schema = knownSchema.getOrElse(spark.read.parquet(loc.toString).schema.toDDL)
-    val cl = BucketCols.mkString(", ")
-    spark.sql(s"""CREATE TABLE ${ref.blocksTable} ($schema) USING parquet
-      CLUSTERED BY ($cl) SORTED BY ($cl) INTO ${ref.buckets} BUCKETS
-      LOCATION '${loc.toString}'""")
-  }
-
-  /** Re-register an existing on-disk index in a session whose catalog
-    * does not know it — the files alone carry the data. */
-  def attach(spark: SparkSession, ref: Ref): Unit =
-    if (!spark.catalog.tableExists(ref.blocksTable)) register(spark, ref)
-
-  /** Writer-side preamble: finish a crashed [[compact]]'s rename-aside
-    * swap if one is pending, then register an on-disk index the session
-    * catalog does not know. Returns whether index content exists. */
-  private def attachForWrite(spark: SparkSession, ref: Ref): Boolean = {
-    val loc = location(spark, ref.blocksTable)
-    val oldLoc = location(spark, s"${ref.blocksTable}_old")
-    val f = hfs(spark, loc)
-    if (!f.exists(loc) && f.exists(oldLoc)) LshIndex.mustRename(f, oldLoc, loc)
-    if (spark.catalog.tableExists(ref.blocksTable)) true
-    else if (f.exists(loc)) { register(spark, ref); true }
-    else false
-  }
-
-  private def appendBucketed(df: DataFrame, ref: Ref): Unit = {
-    val spark = df.sparkSession
-    val w = df.write.mode("append").format("parquet")
-      .bucketBy(ref.buckets, BucketCols.head, BucketCols.tail: _*)
-      .sortBy(BucketCols.head, BucketCols.tail: _*)
-    if (spark.catalog.tableExists(ref.blocksTable)) w.saveAsTable(ref.blocksTable)
-    else w.option("path", location(spark, ref.blocksTable).toString)
-      .saveAsTable(ref.blocksTable)
-  }
+  /** Re-register the on-disk index in a session whose catalog lacks it. */
+  def attach(spark: SparkSession, ref: Ref): Unit = IndexStore.attach(spark, store(ref))
 
   /** The batch's signatures over fingerprint-normalized tokens:
     * (_doc, simhash). Raw `split` feeds the kernel — SimHashExpr skips
@@ -206,12 +127,9 @@ object SimHashIndex {
       .filter(col("hamming") <= maxDist)
       .select(col("old_id"), col("new_id"), col("hamming"))
 
-  /** [[ingest]] with a generated unique-per-call delivery id — for
-    * callers who do not need crashed-retry idempotence (a retry MUST
-    * re-use the first attempt's id; with a fresh id the crashed
-    * attempt's rows look like an earlier delivery and the retry pairs
-    * the batch against itself — [[recoverDelivery]] first in that
-    * case). */
+  /** [[ingest]] under a fresh delivery id: no crashed-retry idempotence
+    * (a fresh-id retry pairs the batch with itself — [[recoverDelivery]]
+    * first). */
   def ingest(batch: DataFrame, idCol: String, textCol: String,
              maxDist: Int, ref: Ref): DataFrame =
     ingest(batch, idCol, textCol, maxDist, ref,
@@ -248,39 +166,20 @@ object SimHashIndex {
   private def ingestSigFrame(spark: SparkSession, sigsIn: DataFrame,
                              maxDist: Int, ref: Ref,
                              delivery: String): DataFrame = {
-    require(maxDist >= 0 && maxDist < ref.nBlocks,
-      s"maxDist=$maxDist needs nBlocks>$maxDist for exact pigeonhole recall " +
-        s"(got nBlocks=${ref.nBlocks}) — raise nBlocks or lower maxDist")
-    require(delivery.nonEmpty && delivery != CompactedDelivery,
-      s"delivery id must be non-empty and not '$CompactedDelivery'")
-    withLease(spark, ref, "ingest") {
-      val hasCorpus = attachForWrite(spark, ref)
+    requirePigeonhole(maxDist, ref)
+    IndexStore.requireDelivery(delivery, CompactedDelivery)
+    val l = store(ref)
+    IndexStore.withLease(spark, l, "ingest") {
       val sigs = sigsIn.cache()
       val blocks = blocked(sigs, ref.nBlocks)
-      // within-batch: block self-join, lower id is the "old" side
-      val within = blocks.as("a").join(blocks.as("b"),
-          col("a.blk") === col("b.blk") && col("a.blkval") === col("b.blkval") &&
-            col("a._doc") < col("b._doc"))
-        .select(col("a._doc").as("old_id"), col("b._doc").as("new_id"),
-          col("a.simhash").as("h1"), col("b.simhash").as("h2"))
-      // batch-vs-corpus: the index side is a bucketed scan on its join
-      // key (blk, blkval) — no exchange; exclude THIS delivery's own rows
-      // (a crashed earlier attempt of this same batch, never corpus)
-      val all = if (!hasCorpus) within else {
-        val cross = spark.table(ref.blocksTable)
-          .filter(col("delivery") =!= lit(delivery))
-          .select(col("blk"), col("blkval"), col("doc").as("old_id"),
-            col("simhash").as("h1"))
-          .join(blocks.select(col("blk"), col("blkval"),
-            col("_doc").as("new_id"), col("simhash").as("h2")),
-            BucketCols)
-          .select(col("old_id"), col("new_id"), col("h1"), col("h2"))
-        within.unionByName(cross)
-      }
-      val out = confirmed(all, maxDist).localCheckpoint()
-      appendBucketed(blocks
+      // exclude THIS delivery's own rows (a crashed earlier attempt of
+      // this same batch, never corpus)
+      val corpus = if (!IndexStore.hasContent(spark, l)) None
+        else Some(spark.table(ref.blocksTable).filter(col("delivery") =!= lit(delivery)))
+      val out = confirmed(candidates(blocks, corpus), maxDist).localCheckpoint()
+      IndexStore.appendBucketed(blocks
         .select(col("blk"), col("blkval"), col("_doc").as("doc"), col("simhash"))
-        .withColumn("delivery", lit(delivery)), ref)
+        .withColumn("delivery", lit(delivery)), l, l.parts.head)
       sigs.unpersist()
       out
     }
@@ -306,23 +205,32 @@ object SimHashIndex {
 
   private def matchesSigFrame(spark: SparkSession, sigs: DataFrame,
                               maxDist: Int, ref: Ref): DataFrame = {
-    require(maxDist >= 0 && maxDist < ref.nBlocks,
-      s"maxDist=$maxDist needs nBlocks>$maxDist for exact pigeonhole recall")
+    requirePigeonhole(maxDist, ref)
     attach(spark, ref)
-    val blocks = blocked(sigs, ref.nBlocks)
+    confirmed(candidates(blocked(sigs, ref.nBlocks),
+      Some(spark.table(ref.blocksTable))), maxDist)
+  }
+
+  private def requirePigeonhole(maxDist: Int, ref: Ref): Unit =
+    require(maxDist >= 0 && maxDist < ref.nBlocks,
+      s"maxDist=$maxDist needs nBlocks>$maxDist for exact pigeonhole recall " +
+        s"(got nBlocks=${ref.nBlocks}) — raise nBlocks or lower maxDist")
+
+  /** Candidate pairs (old_id, new_id, h1, h2): the batch's block
+    * self-join (lower id is the "old" side) plus, given `corpus` block
+    * rows, the probe on (blk, blkval) — the index side is a bucketed
+    * scan on its join key, no exchange. */
+  private def candidates(blocks: DataFrame, corpus: Option[DataFrame]): DataFrame = {
     val within = blocks.as("a").join(blocks.as("b"),
         col("a.blk") === col("b.blk") && col("a.blkval") === col("b.blkval") &&
           col("a._doc") < col("b._doc"))
       .select(col("a._doc").as("old_id"), col("b._doc").as("new_id"),
         col("a.simhash").as("h1"), col("b.simhash").as("h2"))
-    val cross = spark.table(ref.blocksTable)
-      .select(col("blk"), col("blkval"), col("doc").as("old_id"),
-        col("simhash").as("h1"))
-      .join(blocks.select(col("blk"), col("blkval"),
-        col("_doc").as("new_id"), col("simhash").as("h2")),
-        BucketCols)
-      .select(col("old_id"), col("new_id"), col("h1"), col("h2"))
-    confirmed(within.unionByName(cross), maxDist)
+    corpus.fold(within)(c => within.unionByName(
+      c.select(col("blk"), col("blkval"), col("doc").as("old_id"), col("simhash").as("h1"))
+        .join(blocks.select(col("blk"), col("blkval"),
+          col("_doc").as("new_id"), col("simhash").as("h2")), BucketCols)
+        .select(col("old_id"), col("new_id"), col("h1"), col("h2"))))
   }
 
   /** Integrity check — the single-table analogue of [[LshIndex.fsck]]'s
@@ -362,40 +270,6 @@ object SimHashIndex {
     }
   }
 
-  /** Rewrite the live table through the family's crash-durable
-    * rename-aside swap ([[GramIndex]]'s discipline: the transformed copy
-    * is complete on storage before the live table is touched; a re-run
-    * recovers in [[attachForWrite]]'s preamble). */
-  private def rewriteTable(spark: SparkSession, ref: Ref)
-                          (transform: DataFrame => DataFrame): Unit = {
-    val tbl = ref.blocksTable
-    val tmp = s"${tbl}_compacting"
-    val tmpLoc = location(spark, tmp)
-    val loc = location(spark, tbl)
-    val oldLoc = location(spark, s"${tbl}_old")
-    val f = hfs(spark, tmpLoc)
-    if (!f.exists(loc) && f.exists(oldLoc)) LshIndex.mustRename(f, oldLoc, loc)
-    if (!spark.catalog.tableExists(tbl)) register(spark, ref)
-    spark.sql(s"DROP TABLE IF EXISTS $tmp")
-    f.delete(tmpLoc, true)
-    // localCheckpoint breaks the scan's logical bucketing so the
-    // repartition genuinely shuffles (see LshIndex.compactOne)
-    val newRows = transform(spark.table(tbl).localCheckpoint(true))
-      .repartition(ref.buckets, BucketCols.map(col): _*)
-    val schemaDdl = newRows.schema.toDDL
-    val w = newRows.write.mode("append").format("parquet")
-      .bucketBy(ref.buckets, BucketCols.head, BucketCols.tail: _*)
-      .sortBy(BucketCols.head, BucketCols.tail: _*)
-    w.option("path", tmpLoc.toString).saveAsTable(tmp)
-    spark.sql(s"DROP TABLE $tbl")
-    spark.sql(s"DROP TABLE $tmp") // catalog entry only; files stay
-    f.delete(oldLoc, true)
-    LshIndex.mustRename(f, loc, oldLoc)
-    LshIndex.mustRename(f, tmpLoc, loc)
-    register(spark, ref, Some(schemaDdl))
-    f.delete(oldLoc, true); ()
-  }
-
   /** Compact: merge replay residue to one row per distinct block row and
     * rewrite one file per bucket. A replayed delivery's duplicate rows
     * are byte-identical (blk, blkval, doc, simhash, delivery), so a
@@ -405,86 +279,55 @@ object SimHashIndex {
     * its retry could no longer self-exclude); retry or
     * [[recoverDelivery]] first. */
   def compact(spark: SparkSession, ref: Ref): Unit =
-    withLease(spark, ref, "compact") {
-      require(attachForWrite(spark, ref),
-        s"no index files for '${ref.tag}' — nothing to compact")
-      rewriteTable(spark, ref) { t =>
+    IndexStore.withLease(spark, store(ref), "compact") {
+      IndexStore.rewriteTables(spark, store(ref)) { t =>
         t.select(col("blk"), col("blkval"), col("doc"), col("simhash"))
           .distinct()
           .withColumn("delivery", lit(CompactedDelivery))
       }
     }
 
-  /** Retract one delivery's rows — the mechanical recovery for a crashed
-    * ingest whose retry cannot re-use the original delivery id. No-op
-    * for ids already collapsed by [[compact]]. */
+  /** [[IndexStore.retractDelivery]]; a no-op for ids [[compact]] collapsed. */
   def recoverDelivery(spark: SparkSession, ref: Ref, delivery: String): Unit =
-    withLease(spark, ref, "recoverDelivery") {
-      require(delivery != CompactedDelivery,
-        s"cannot retract '$CompactedDelivery' — compaction collapsed lineage")
-      if (attachForWrite(spark, ref))
-        rewriteTable(spark, ref)(_.filter(col("delivery") =!= lit(delivery)))
-    }
+    IndexStore.retractDelivery(spark, store(ref), delivery, CompactedDelivery,
+      "compaction collapsed lineage")
 
   /** The stable delivery id a stream's micro-batch `bid` ingests under. */
   def streamDelivery(bid: Long): String = s"stream:$bid"
 
-  /** One micro-batch of [[startStreamingIngest]], exposed for planted
-    * replay tests: ledger check → [[ingest]] under the batch-derived
-    * delivery id → per-batch pair-output OVERWRITE → ledger mark
-    * ([[graft.streaming.IngestLedger]], watermark-compacted). Crash
-    * anywhere and the re-execution is byte-identical. */
+  /** One ledgered micro-batch of [[startStreamingIngest]], exposed for
+    * planted replay tests: [[ingest]] under the batch-derived delivery
+    * id, pairs OVERWRITTEN per batch — a re-execution is byte-identical. */
   def ingestBatchOnce(batch: DataFrame, idCol: String, textCol: String,
-                      maxDist: Int, ref: Ref, outDir: String, bid: Long): Unit = {
-    val spark = batch.sparkSession
-    val ledger = s"$outDir/_ledger"
-    if (!graft.streaming.IngestLedger.isDone(spark, ledger, bid)) {
-      ingest(batch, idCol, textCol, maxDist, ref,
-          delivery = streamDelivery(bid))
-        .filter(col("old_id") =!= col("new_id")) // id-contract-violation guard
-        .write.mode("overwrite")
-        .parquet(s"$outDir/pairs/batch_id=$bid")
-      graft.streaming.IngestLedger.markDone(spark, ledger, bid)
+                      maxDist: Int, ref: Ref, outDir: String, bid: Long): Unit =
+    graft.streaming.IngestLedger.once(batch.sparkSession, s"$outDir/_ledger", bid) {
+      writePairs(ingest(batch, idCol, textCol, maxDist, ref,
+        delivery = streamDelivery(bid)), outDir, bid)
     }
-  }
 
-  /** [[ingestBatchOnce]] for a precomputed-signature batch — the
-    * streaming unit of [[ingestSignatures]], same ledger/overwrite/
-    * replay discipline. */
+  private def writePairs(pairs: DataFrame, outDir: String, bid: Long): Unit =
+    pairs.filter(col("old_id") =!= col("new_id")) // id-contract-violation guard
+      .write.mode("overwrite")
+      .parquet(s"$outDir/pairs/batch_id=$bid")
+
+  /** [[ingestBatchOnce]] for a precomputed-signature batch. */
   def ingestSignaturesBatchOnce(batch: DataFrame, idCol: String,
                                 sigCol: String, maxDist: Int, ref: Ref,
-                                outDir: String, bid: Long): Unit = {
-    val spark = batch.sparkSession
-    val ledger = s"$outDir/_ledger"
-    if (!graft.streaming.IngestLedger.isDone(spark, ledger, bid)) {
-      ingestSignatures(batch, idCol, sigCol, maxDist, ref,
-          delivery = streamDelivery(bid))
-        .filter(col("old_id") =!= col("new_id")) // id-contract-violation guard
-        .write.mode("overwrite")
-        .parquet(s"$outDir/pairs/batch_id=$bid")
-      graft.streaming.IngestLedger.markDone(spark, ledger, bid)
+                                outDir: String, bid: Long): Unit =
+    graft.streaming.IngestLedger.once(batch.sparkSession, s"$outDir/_ledger", bid) {
+      writePairs(ingestSignatures(batch, idCol, sigCol, maxDist, ref,
+        delivery = streamDelivery(bid)), outDir, bid)
     }
-  }
 
-  /** Maintain the index from a document STREAM — the fit-once,
-    * ingest-forever deployment shape the rest of the index family
-    * carries: each micro-batch runs [[ingest]] inside foreachBatch, so
-    * within-batch and batch-vs-corpus pairs come from the ONE batch
-    * definition, and the corpus index survives restarts on disk
-    * (re-[[attach]] in a fresh process) instead of living in the state
-    * store. Replay discipline is [[LshIndex.startStreamingIngest]]'s
-    * verbatim: ledgered batch ids, per-batch partition overwrite,
-    * self-excluding delivery probes. */
+  /** Maintain the index from a document STREAM: [[ingestBatchOnce]] per
+    * micro-batch in [[IndexStore]]'s ledgered loop, so the pairs come from
+    * the ONE batch definition and the corpus survives restarts on disk. */
   def startStreamingIngest(docs: DataFrame, idCol: String, textCol: String,
                            maxDist: Int, ref: Ref, outDir: String,
                            checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        ingestBatchOnce(batch.toDF(), idCol, textCol, maxDist, ref, outDir, bid)
-      }
-      .start()
+    IndexStore.streamIngest(docs, checkpoint)(
+      ingestBatchOnce(_, idCol, textCol, maxDist, ref, outDir, _))
 
   /** [[startStreamingIngest]] over a (id, 64-bit signature) STREAM —
     * the deployment shape of ingest-time PERCEPTUAL dedup: an upstream
@@ -496,11 +339,6 @@ object SimHashIndex {
                                     sigCol: String, maxDist: Int, ref: Ref,
                                     outDir: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    sigs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        ingestSignaturesBatchOnce(batch.toDF(), idCol, sigCol, maxDist, ref,
-          outDir, bid)
-      }
-      .start()
+    IndexStore.streamIngest(sigs, checkpoint)(
+      ingestSignaturesBatchOnce(_, idCol, sigCol, maxDist, ref, outDir, _))
 }

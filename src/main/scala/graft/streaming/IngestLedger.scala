@@ -4,8 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** Watermarked COMPLETED-BATCH ledger for the persistent-index streaming
-  * ingest wrappers ([[graft.operators.LshIndex]],
-  * [[graft.operators.GramIndex]], [[graft.operators.IvfIndex]] —
+  * ingests ([[graft.operators.IndexStore.streamIngest]]) and the
+  * curriculum/mixture/top-up streams —
   * reference anchor: the exactly-once sink-commit surface of SURVEY
   * §2.10, the ledger half of the delivery-id replay contract).
   *
@@ -106,6 +106,15 @@ private[graft] object IngestLedger {
       .foreach(id => dfs.delete(new Path(deltaDir(dir), s"batch_id=$id"), true))
     w
   }
+
+  /** The replay guard every ledgered micro-batch unit shares: run `body`
+    * unless batch `bid` is already ledgered, then ledger it. A crash
+    * inside `body` leaves the batch unledgered, so its replay re-runs. */
+  def once(spark: SparkSession, dir: String, bid: Long)(body: => Unit): Unit =
+    if (!isDone(spark, dir, bid)) {
+      body
+      markDone(spark, dir, bid)
+    }
 
   /** Ledger batch `bid` as completed (call AFTER the batch's output
     * commit), folding live deltas into a new watermark generation once

@@ -78,7 +78,7 @@ object StreamingCurriculum {
         val spark = batch.sparkSession
         import spark.implicits._
         val ledger = s"$outDir/_ledger"
-        if (!IngestLedger.isDone(spark, ledger, bid)) {
+        IngestLedger.once(spark, ledger, bid) {
           val deltaDir = s"$stateDir/delta"
           // earlier deliveries' difficulty histogram, EXCLUDING this
           // batch's own partition (replay must not rank after its ghost);
@@ -135,10 +135,9 @@ object StreamingCurriculum {
           base.groupBy(col("n_toks")).agg(count(lit(1)).as("cnt"))
             .write.mode("overwrite")
             .parquet(s"$deltaDir/batch_id=$bid")
-          IngestLedger.markDone(spark, ledger, bid)
-          // post-ledger: every live delta is a committed delivery — fold
-          DeltaState.maybeRollup(spark, stateDir, "n_toks", "cnt", rollEvery)
         }
+        // post-ledger: every live delta is a committed delivery — fold
+        DeltaState.maybeRollup(spark, stateDir, "n_toks", "cnt", rollEvery)
         ()
       }
       .start()
@@ -158,7 +157,7 @@ object StreamingCurriculum {
         val spark = batch.sparkSession
         import spark.implicits._
         val ledger = s"$outDir/_ledger"
-        if (!IngestLedger.isDone(spark, ledger, bid)) {
+        IngestLedger.once(spark, ledger, bid) {
           val deltaDir = s"$stateDir/delta"
           // causal rank base = every delivery's per-group counts,
           // EXCLUDING this batch's own partition (a replayed batch must
@@ -185,9 +184,8 @@ object StreamingCurriculum {
           ordered.groupBy(col(groupCol)).agg(count(lit(1)).as("n"))
             .write.mode("overwrite")
             .parquet(s"$deltaDir/batch_id=$bid")
-          IngestLedger.markDone(spark, ledger, bid)
-          DeltaState.maybeRollup(spark, stateDir, groupCol, "n", rollEvery)
         }
+        DeltaState.maybeRollup(spark, stateDir, groupCol, "n", rollEvery)
         ()
       }
       .start()
@@ -244,7 +242,7 @@ object StreamingCurriculum {
         val spark = batch.sparkSession
         import spark.implicits._
         val ledger = s"$outDir/_ledger"
-        if (!IngestLedger.isDone(spark, ledger, bid)) {
+        IngestLedger.once(spark, ledger, bid) {
           val deltaDir = s"$stateDir/delta"
           // 1. mixture realization: this delivery's UniMax allocation,
           // exploded to copy ids (qey's copy-id device — repeats get
@@ -291,9 +289,8 @@ object StreamingCurriculum {
           copies.groupBy(col(groupCol)).agg(count(lit(1)).as("n"))
             .write.mode("overwrite")
             .parquet(s"$deltaDir/batch_id=$bid")
-          IngestLedger.markDone(spark, ledger, bid)
-          DeltaState.maybeRollup(spark, stateDir, groupCol, "n", rollEvery)
         }
+        DeltaState.maybeRollup(spark, stateDir, groupCol, "n", rollEvery)
         ()
       }
       .start()

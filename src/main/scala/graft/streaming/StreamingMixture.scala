@@ -50,7 +50,7 @@ object StreamingMixture {
         val spark = batch.sparkSession
         import spark.implicits._
         val ledger = s"$outDir/_ledger"
-        if (!IngestLedger.isDone(spark, ledger, bid)) {
+        IngestLedger.once(spark, ledger, bid) {
           // this delivery's additive statistics, keyed "step<US>domain"
           val own = batch.toDF().groupBy(
               concat(col(stepCol).cast("long").cast("string"), lit(Sep),
@@ -88,10 +88,9 @@ object StreamingMixture {
             .write.mode("overwrite").parquet(s"$stateDir/s/delta/batch_id=$bid")
           own.toSeq.map(r => (r._1, r._3)).toDF("k", "n")
             .write.mode("overwrite").parquet(s"$stateDir/n/delta/batch_id=$bid")
-          IngestLedger.markDone(spark, ledger, bid)
-          DeltaState.maybeRollup(spark, s"$stateDir/s", "k", "s", rollEvery)
-          DeltaState.maybeRollup(spark, s"$stateDir/n", "k", "n", rollEvery)
         }
+        DeltaState.maybeRollup(spark, s"$stateDir/s", "k", "s", rollEvery)
+        DeltaState.maybeRollup(spark, s"$stateDir/n", "k", "n", rollEvery)
         ()
       }
       .start()

@@ -47,7 +47,7 @@ object StreamingTopup {
         val spark = batch.sparkSession
         import spark.implicits._
         val ledger = s"$outDir/_ledger"
-        if (!IngestLedger.isDone(spark, ledger, bid)) {
+        IngestLedger.once(spark, ledger, bid) {
           val deltaDir = s"$stateDir/delta"
           // current composition = every delivery's admitted counts,
           // EXCLUDING this batch's own partition (a replayed batch must
@@ -65,9 +65,8 @@ object StreamingTopup {
           admitted.groupBy(col(groupCol)).agg(count(lit(1)).as("n"))
             .write.mode("overwrite")
             .parquet(s"$deltaDir/batch_id=$bid")
-          IngestLedger.markDone(spark, ledger, bid)
-          DeltaState.maybeRollup(spark, stateDir, groupCol, "n", rollEvery)
         }
+        DeltaState.maybeRollup(spark, stateDir, groupCol, "n", rollEvery)
         ()
       }
       .start()

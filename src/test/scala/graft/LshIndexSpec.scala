@@ -43,7 +43,7 @@ class LshIndexSpec extends SparkSpec {
       spark.sparkContext.hadoopConfiguration)
     val dir = java.nio.file.Files.createTempDirectory("mustrename").toString
     val e = intercept[IllegalArgumentException] {
-      LshIndex.mustRename(f, new org.apache.hadoop.fs.Path(dir, "a"),
+      graft.operators.IndexStore.mustRename(f, new org.apache.hadoop.fs.Path(dir, "a"),
         new org.apache.hadoop.fs.Path(dir, "b"))
     }
     assert(e.getMessage.contains("rename") && e.getMessage.contains("failed"))

@@ -29,28 +29,33 @@ object SparkSpec {
   /** The Spark jobs `f` launches on this thread, counted by job group with
     * a SparkListener. Listener events arrive in order, so once a later
     * sentinel job is seen every job `f` started has been counted. */
-  def jobsOf(spark: SparkSession)(f: => Any): Int = {
+  def jobsOf(spark: SparkSession)(f: => Any): Int = jobDescriptionsOf(spark)(f).size
+
+  /** The job description of every Spark job `f` launches on this thread
+    * (or on threads it starts), "null" for an unlabelled job. */
+  def jobDescriptionsOf(spark: SparkSession)(f: => Any): Seq[String] = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+        jobs.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")) ->
+          String.valueOf(e.properties.getProperty("spark.job.description")))
     }
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
+    def seen = jobs.toArray.exists(_ == ("jobs-of-sentinel" -> "sentinel"))
     try {
       sc.setJobGroup("jobs-of", "counted")
       try f finally sc.clearJobGroup()
       sc.setJobGroup("jobs-of-sentinel", "sentinel")
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
       var waited = 0
-      while (!groups.contains("jobs-of-sentinel") && waited < 200) {
+      while (!seen && waited < 200) {
         Thread.sleep(50)
         waited += 1
       }
-      if (!groups.contains("jobs-of-sentinel"))
-        throw new IllegalStateException("sentinel job never reached the listener")
-      groups.toArray.count(_ == "jobs-of")
+      if (!seen) throw new IllegalStateException("sentinel job never reached the listener")
+      jobs.toArray.toSeq.collect { case ("jobs-of", d: String) => d }
     } finally sc.removeSparkListener(listener)
   }
 }
