@@ -2,7 +2,9 @@ package graft
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.hadoop.fs.Path
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
@@ -57,17 +59,9 @@ object Tables {
     * A missing path or a failed inference is not memoized (Spark's own
     * error surfaces). */
   def schema(spark: SparkSession, path: String): StructType = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = Seq.newBuilder[(String, Long, Long)]
-    Option(fs.globStatus(p)).getOrElse(Array.empty).foreach { root =>
-      val it = fs.listFiles(root.getPath, true)
-      while (it.hasNext) {
-        val f = it.next()
-        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
-      }
-    }
-    val key = (path, files.result().sorted, inferenceConfs.map(spark.conf.get))
+    val files = leafFiles(spark, path).map(f =>
+      (f.getPath.toString, f.getLen, f.getModificationTime))
+    val key = (path, files.sorted, inferenceConfs.map(spark.conf.get))
     val known = schemas.get(key)
     if (known != null) known
     else {
@@ -77,21 +71,65 @@ object Tables {
     }
   }
 
+  /** Every file under `path` (a file, directory or glob). */
+  private def leafFiles(spark: SparkSession, path: String): Seq[FileStatus] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Option(fs.globStatus(p)).getOrElse(Array.empty).toSeq.flatMap { root =>
+      val it = fs.listFiles(root.getPath, true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next()).toSeq
+    }
+  }
+
+  /** Whether a parquet file under `path` has a TIMESTAMP(NANOS) column,
+    * read from the footers (no Spark job); files Spark skips as hidden
+    * (`_` or `.` prefix) are skipped here too. */
+  private def holdsNanos(spark: SparkSession, path: String): Boolean = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
+    val conf = spark.sparkContext.hadoopConfiguration
+    val visible = leafFiles(spark, path).filterNot { f =>
+      val n = f.getPath.getName
+      n.startsWith("_") || n.startsWith(".")
+    }
+    visible.exists { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+      try reader.getFooter.getFileMetaData.getSchema.getColumns.asScala.exists(
+        _.getPrimitiveType.getLogicalTypeAnnotation match {
+          case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
+          case _ => false
+        })
+      finally reader.close()
+    }
+  }
+
+  /** The schema of `dir`'s events fixture, for a batch or a stream read of
+    * it. If the file has a TIMESTAMP(NANOS) column, this first sets
+    * `spark.sql.legacy.parquet.nanosAsLong=true` on the session (Spark has
+    * no nanos type and fails the read without it), and the flag stays set:
+    * Spark reads it again when the query executes. A file without one
+    * leaves the session's confs as the caller left them. */
+  def eventsSchema(spark: SparkSession, dir: String): StructType = {
+    val p = path(dir, "events")
+    if (holdsNanos(spark, p)) spark.conf.set(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key, "true")
+    schema(spark, p)
+  }
+
   /** `events.ts` has shipped in three physical layouts across fixture
     * generations; all must land as session-zoned TimestampType with the same
     * epoch-micros so watermarks (`withWatermark` requires TimestampType) and
     * the DuckDB oracle agree exactly:
     *  - TIMESTAMP(NANOS): Spark has no nanos type — read raw int64 via the
-    *    legacy flag, floor-divide to micros (DuckDB applies the same ns→µs
-    *    truncation on read);
+    *    legacy flag, which [[eventsSchema]] sets for the session, and
+    *    floor-divide to micros (DuckDB applies the same ns→µs truncation on
+    *    read);
     *  - timestamp[us] isAdjustedToUTC=false: Spark reads TIMESTAMP_NTZ —
     *    cast to TimestampType (UTC session tz makes the cast
     *    instant-preserving);
     *  - timestamp[us] UTC: already TimestampType, pass through. */
-  def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeTs(read(spark, path(dir, "events")))
-  }
+  def events(spark: SparkSession, dir: String): DataFrame =
+    normalizeTs(spark.read.schema(eventsSchema(spark, dir)).parquet(path(dir, "events")))
 
   private[graft] def normalizeTs(raw: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros}

@@ -992,13 +992,17 @@ object Dedup {
     *     window kernel emits (doc, pos, fnv1a64(L-gram)) — an 8-byte
     *     hash per position off one walk of the doc's bytes, never the
     *     L-char string (no Lx shuffle amplification);
-    *  2. hashes with global count >= 2 are CANDIDATE duplicates (one
-    *     corpus-sized count shuffle on an 8-byte key);
+    *  2. the position rows cross ONE exchange, keyed on h, and a window
+    *     count over h keeps the hashes with global count >= 2 as
+    *     CANDIDATE duplicates — the kernel runs once, and no aggregate is
+    *     joined back to a second pass over the corpus;
     *  3. candidates re-materialize their gram text (join back to the doc
     *     text, bounded by the duplicated fraction of the corpus) and
-    *     confirm by exact text count >= 2 — a true duplicate's occurrences
-    *     all share its hash, so counting text over candidate rows equals
-    *     the global text count; hash collisions surface here and drop;
+    *     confirm by exact text count >= 2 per (h, text) — a true
+    *     duplicate's occurrences all share its hash, so that count equals
+    *     the global text count, and the rows are already partitioned by h,
+    *     so with the doc text broadcast it costs a sort and no shuffle;
+    *     hash collisions surface here and drop;
     *  4. confirmed window starts collect per doc (one doc-keyed
     *     aggregate) and the native [[graft.functions.ExciseSpansExpr]]
     *     merges the [pos, pos+L) windows and rebuilds the doc in one pass
@@ -1011,11 +1015,15 @@ object Dedup {
     * content is low-value wherever it sits; compose with
     * [[dedupChunksKeepFirst]] when a keep-first policy is wanted).
     *
-    * Scale: steps 1–2 are linear with 8-byte shuffle keys; step 3 moves
-    * only duplicated-gram rows; step 4 keys on the doc. No pairwise join,
-    * no posting-list blowup (a gram in k docs costs k rows, not k²), no
-    * driver state. At 100 TB the candidate text-confirm join is the only
-    * string-keyed shuffle and it carries the duplicated subset only. */
+    * Scale: steps 1–2 shuffle each position row (doc, pos, h) once, on an
+    * 8-byte key, with no map-side combine: a gram in k places costs k
+    * rows in its h partition, and a hot gram's rows are buffered (and
+    * spill) in the window operator. Step 3 brings the doc text to the
+    * candidates only: broadcast, the confirm runs on the h partitioning
+    * as it is; docs too large to broadcast join on the doc, and the
+    * confirm then shuffles the candidate rows once more, on (h, g).
+    * Step 4 keys on the doc. No pairwise join, no posting-list blowup
+    * (k rows, not k²), no driver state. */
   def exactSubstrRemove(df: DataFrame, idCol: String, textCol: String,
                         minLen: Int): DataFrame = {
     require(minLen >= 2, s"minLen must be >= 2, got $minLen")
@@ -1038,23 +1046,31 @@ object Dedup {
       .toDF("_d", "pos", "h")
       .withColumn("pos", col("pos").cast("long"))
 
+  /** (_d, pos, h, _hc): [[rollingGramHashes]] with `_hc`, the corpus-wide
+    * count of each hash, as a window count over `h` — the kernel runs
+    * once and its rows cross one h-keyed exchange, where a `groupBy(h)`
+    * joined back to the grams would run the kernel a second time and
+    * ship the rows again. */
+  private def hashCounted(docs: DataFrame, L: Int): DataFrame =
+    rollingGramHashes(docs, L).withColumn("_hc",
+      count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy(col("h"))))
+
   /** (_d, pos) starts of the L-windows whose text occurs >= 2 times in
     * the corpus: hash-count candidates, then the collision-exact text
-    * confirm on the (small) candidate subset, over the very bytes the
-    * hash covered ([[graft.functions.GramWindowExpr]]). */
-  private def dupWindowStarts(docs: DataFrame, L: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val grams = rollingGramHashes(docs, L)
-    val dupHash = grams.groupBy(col("h"))
-      .agg(count(lit(1)).as("_c")).filter(col("_c") >= 2).select("h")
-    grams.join(dupHash, "h")
+    * confirm over the very bytes the hash covered
+    * ([[graft.functions.GramWindowExpr]]), counted per (h, g). Every
+    * occurrence of one text shares its hash, so that count is the global
+    * text count, and with the doc text broadcast the h-partitioned
+    * candidates need no second exchange for it. */
+  private def dupWindowStarts(docs: DataFrame, L: Int): DataFrame =
+    hashCounted(docs, L).filter(col("_hc") >= 2)
       .join(docs.select(col("_d"), col("_t")), "_d")
-      .select(col("_d"), col("pos"),
+      .select(col("_d"), col("pos"), col("h"),
         graft.functions.GramWindowExpr(col("_t"), col("pos"), L).as("g"))
-      .withColumn("_n", count(lit(1)).over(Window.partitionBy(col("g"))))
+      .withColumn("_n", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy(col("h"), col("g"))))
       .filter(col("_n") >= 2)
       .select(col("_d"), col("pos"))
-  }
 
   /** `docs` left-joined to its window starts from `pos` (_d, pos),
     * collected per doc as `_ps` (null for a doc with none): the one
@@ -1092,11 +1108,11 @@ object Dedup {
     * spans of [[exactSubstrRemove]]'s output and removing them agree by
     * construction: same windows, same merge.
     *
-    * Same machinery and scale shape as qf8: one rolling-hash pass,
-    * hash-count candidates, collision-exact text confirm on the
-    * duplicated subset only, and the same per-doc span merge
-    * ([[graft.functions.MergedSpansExpr]]). Linear end to end; only
-    * duplicated-gram rows move in the string-keyed join. */
+    * Same machinery and scale shape as qf8: one rolling-hash pass, one
+    * h-keyed window count for candidates, the collision-exact (h, text)
+    * confirm on the duplicated subset only, and the same per-doc span
+    * merge ([[graft.functions.MergedSpansExpr]]). Linear end to end; only
+    * candidate rows ever carry their text. */
   def exactSubstrMask(df: DataFrame, idCol: String, textCol: String,
                       minLen: Int): DataFrame = {
     require(minLen >= 2, s"minLen must be >= 2, got $minLen")
@@ -1124,8 +1140,9 @@ object Dedup {
     * a rare long string can be tiled by common windows — so the metric
     * is defined AT the window length: a position is exposed iff some
     * unique L-window covers it. Same machinery as qf8: one rolling-hash
-    * pass, a count aggregate (map-side partials), the per-doc span merge
-    * ([[graft.functions.MergedSpansExpr]]). No text confirm is needed — every occurrence of one text
+    * pass whose rows cross one h-keyed exchange into a window count, and
+    * the per-doc span merge ([[graft.functions.MergedSpansExpr]]). No
+    * text confirm is needed — every occurrence of one text
     * shares its hash, so hash-count == 1 IMPLIES text-count == 1 and a
     * unique verdict is exact; a cross-gram collision can only HIDE a
     * unique window (counts inflate), never invent one — the usual
@@ -1136,10 +1153,8 @@ object Dedup {
     require(windowLen >= 2, s"windowLen must be >= 2, got $windowLen")
     val L = windowLen
     val docs = exactSubstrDocs(df, idCol, textCol)
-    val grams = rollingGramHashes(docs, L)
-    val loneHash = grams.groupBy(col("h"))
-      .agg(count(lit(1)).as("_c")).filter(col("_c") === 1).select("h")
-    val uniquePos = grams.join(loneHash, "h").select(col("_d"), col("pos"))
+    val uniquePos = hashCounted(docs, L).filter(col("_hc") === 1)
+      .select(col("_d"), col("pos"))
     withWindowStarts(docs, uniquePos)
       .select(col("_d"), col("_len"),
         graft.functions.MergedSpansExpr(col("_ps"), L).as("_m"))

@@ -26,9 +26,7 @@ object StatefulStreamQueries {
     import s.implicits._
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = Tables.schema(s, Tables.path(dir, "events"))
-    val raw = s.readStream.schema(schema).parquet(s"$dir/events*.parquet")
+    val raw = s.readStream.schema(Tables.eventsSchema(s, dir)).parquet(s"$dir/events*.parquet")
     val withTs = Tables.normalizeTs(raw)
     withTs.withWatermark("ts", "0 seconds")
       .select(col("user_id").as("key"), col("event_id").as("eventId"),

@@ -15,8 +15,7 @@ object StreamQueries {
   private val HourUs = 3600000000L
 
   private def eventsStream(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = Tables.schema(s, Tables.path(dir, "events"))
+    val schema = Tables.eventsSchema(s, dir)
     // file-stream source needs a directory or glob, not a bare file path;
     // Tables.normalizeTs handles every fixture layout (nanos-as-long /
     // TIMESTAMP_NTZ / TimestampType) so `withWatermark` always sees

@@ -71,9 +71,8 @@ object QueryableState {
 
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     import s.implicits._
-    val schema = Tables.schema(s, Tables.path(dir, "events"))
+    val schema = Tables.eventsSchema(s, dir)
     val src = s.readStream.schema(schema).parquet(s"$dir/events*.parquet")
       .select(col("user_id").as("key"),
         round(col("value") * 1000).cast("long").as("valueMillis"))
@@ -275,9 +274,8 @@ object QueryableState {
 
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     import s.implicits._
-    val schema = Tables.schema(s, Tables.path(dir, "events"))
+    val schema = Tables.eventsSchema(s, dir)
     val src = Tables.normalizeTs(
         s.readStream.schema(schema).parquet(s"$dir/events*.parquet"))
       .withWatermark("ts", "0 seconds")

@@ -631,21 +631,85 @@ class DedupSpec extends SparkSpec {
     assert(got(4L) === ((4L, true)))
   }
 
-  // Independent ExactSubstr replica: boolean removal mask per character
-  // (the operator merges intervals instead), plain-Scala string ops.
-  private def exactSubstrBrute(docs: Seq[(Long, String)],
-                               l: Int): Map[Long, (String, Long, Long)] = {
+  // Independent ExactSubstr replica: boolean mask per character (the
+  // operators merge intervals instead), plain-Scala string ops. A char is
+  // marked iff some l-window covering it has a corpus-wide text count
+  // satisfying `keep`.
+  private def windowMask(docs: Seq[(Long, String)], l: Int)(
+      keep: Int => Boolean): Seq[(Long, String, Array[Boolean])] = {
     val occ = scala.collection.mutable.Map.empty[String, Int]
     for ((_, t) <- docs; i <- 0 to t.length - l)
       occ.updateWith(t.substring(i, i + l))(c => Some(c.getOrElse(0) + 1))
     docs.map { case (d, t) =>
-      val rm = Array.fill(t.length)(false)
-      for (i <- 0 to t.length - l; if occ(t.substring(i, i + l)) >= 2;
-           j <- i until i + l) rm(j) = true
+      val mk = Array.fill(t.length)(false)
+      for (i <- 0 to t.length - l; if keep(occ(t.substring(i, i + l)));
+           j <- i until i + l) mk(j) = true
+      (d, t, mk)
+    }
+  }
+
+  /** The maximal [s, e) runs of marked chars, ascending. */
+  private def maskRuns(mk: Array[Boolean]): Seq[(Int, Int)] =
+    mk.indices.filter(j => mk(j) && (j == 0 || !mk(j - 1))).map { s =>
+      (s, mk.indexWhere(!_, s) match { case -1 => mk.length; case e => e })
+    }
+
+  private def exactSubstrBrute(docs: Seq[(Long, String)],
+                               l: Int): Map[Long, (String, Long, Long)] =
+    windowMask(docs, l)(_ >= 2).map { case (d, t, rm) =>
       val clean = t.indices.collect { case j if !rm(j) => t(j) }.mkString
-      val spans = rm.indices.count(j => rm(j) && (j == 0 || !rm(j - 1)))
-      d -> ((clean, spans.toLong, rm.count(identity).toLong))
+      d -> ((clean, maskRuns(rm).size.toLong, rm.count(identity).toLong))
     }.toMap
+
+  /** qgc's (mask_spans, n_mask_spans, n_masked_chars, len) per doc. */
+  private def exactSubstrMaskBrute(docs: Seq[(Long, String)],
+                                   l: Int): Map[Long, (String, Long, Long, Long)] =
+    windowMask(docs, l)(_ >= 2).map { case (d, t, mk) =>
+      val runs = maskRuns(mk)
+      d -> ((runs.map { case (s, e) => s"$s:$e" }.mkString(";"), runs.size.toLong,
+        mk.count(identity).toLong, t.length.toLong))
+    }.toMap
+
+  /** qfk's (n_unique_spans, n_unique_chars, frac_unique_millis) per doc. */
+  private def memorizationBrute(docs: Seq[(Long, String)],
+                                l: Int): Map[Long, (Long, Long, Long)] =
+    windowMask(docs, l)(_ == 1).map { case (d, t, mk) =>
+      val chars = mk.count(identity).toLong
+      d -> ((maskRuns(mk).size.toLong, chars,
+        if (t.nonEmpty) chars * 1000L / t.length else 0L))
+    }.toMap
+
+  private def removeOf(docs: Seq[(Long, String)], l: Int) =
+    Dedup.exactSubstrRemove(docs.toDF("doc_id", "text"), "doc_id", "text", minLen = l)
+      .as[(Long, String, Long, Long)].collect()
+      .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
+
+  private def maskOf(docs: Seq[(Long, String)], l: Int) =
+    Dedup.exactSubstrMask(docs.toDF("doc_id", "text"), "doc_id", "text", minLen = l)
+      .as[(Long, String, Long, Long, Long)].collect()
+      .map(r => r._1 -> ((r._2, r._3, r._4, r._5))).toMap
+
+  private def memorizationOf(docs: Seq[(Long, String)], l: Int) =
+    Dedup.memorizationReport(docs.toDF("doc_id", "text"), "doc_id", "text", windowLen = l)
+      .as[(Long, Long, Long, Long)].collect()
+      .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
+
+  /** Random docs over a 4-letter alphabet with planted duplicates: a slice
+    * of another doc appended to every third doc, and a slice of the doc
+    * itself appended to every fifth-plus-one. */
+  private def plantedCorpus(rnd: scala.util.Random, n: Int, l: Int): Seq[(Long, String)] = {
+    def rs(k: Int) = (0 until k).map(_ => ('a' + rnd.nextInt(4)).toChar).mkString
+    val base = (0 until n).map(i => i.toLong -> rs(20 + rnd.nextInt(60)))
+    base.map { case (id, t) =>
+      if (id % 3 == 0 && t.length > l + 4) {
+        val src = base((id.toInt + 7) % n)._2
+        val s = rnd.nextInt(math.max(1, src.length - l - 2))
+        id -> (t + src.substring(s, s + l + 2))
+      } else if (id % 5 == 1 && t.length > l + 3) {
+        val s = rnd.nextInt(t.length - l - 2)
+        id -> (t + t.substring(s, s + l + 1))
+      } else id -> t
+    }
   }
 
   test("exactSubstrMask agrees with exactSubstrRemove: same chars, same " +
@@ -724,31 +788,14 @@ class DedupSpec extends SparkSpec {
 
   test("memorizationReport: unique-window spans match a boolean-mask " +
     "replica; duplicated content is excluded; fraction is floor-exact") {
-    def brute(docs: Seq[(Long, String)], l: Int): Map[Long, (Long, Long, Long)] = {
-      val occ = scala.collection.mutable.Map.empty[String, Int]
-      for ((_, t) <- docs; i <- 0 to t.length - l)
-        occ.updateWith(t.substring(i, i + l))(c => Some(c.getOrElse(0) + 1))
-      docs.map { case (d, t) =>
-        val mk = Array.fill(t.length)(false)
-        for (i <- 0 to t.length - l; if occ(t.substring(i, i + l)) == 1;
-             j <- i until i + l) mk(j) = true
-        val chars = mk.count(identity).toLong
-        val spans = mk.indices.count(j => mk(j) && (j == 0 || !mk(j - 1))).toLong
-        d -> ((spans, chars,
-          if (t.nonEmpty) chars * 1000L / t.length else 0L))
-      }.toMap
-    }
     val rnd = new scala.util.Random(5417)
     val base = (0 until 20).map(i =>
       i.toLong -> (0 until 15 + rnd.nextInt(50))
         .map(_ => ('a' + rnd.nextInt(4)).toChar).mkString)
     // plant a verbatim pair: its windows are NOT unique -> excluded
     val docs = base ++ Seq(100L -> base.head._2, 101L -> "xy")
-    val got = Dedup.memorizationReport(docs.toDF("doc_id", "text"),
-        "doc_id", "text", windowLen = 8)
-      .as[(Long, Long, Long, Long)].collect()
-      .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
-    assert(got === brute(docs, 8))
+    val got = memorizationOf(docs, 8)
+    assert(got === memorizationBrute(docs, 8))
     // the duplicated doc pair carries zero single-source exposure
     assert(got(0L) === ((0L, 0L, 0L)) && got(100L) === ((0L, 0L, 0L)))
     // sub-window docs report zero (no windows at all)
@@ -760,25 +807,58 @@ class DedupSpec extends SparkSpec {
     val rnd = new scala.util.Random(1912)
     for (round <- 0 until 4) {
       val l = 6 + round * 2 // 6, 8, 10, 12
-      def rs(n: Int) = (0 until n).map(_ => ('a' + rnd.nextInt(4)).toChar).mkString
-      val base = (0 until 24).map(i => i.toLong -> rs(20 + rnd.nextInt(60)))
-      // plant: copy a random slice of one doc into another, and duplicate
-      // a slice WITHIN a doc
-      val planted = base.map { case (id, t) =>
-        if (id % 3 == 0 && t.length > l + 4) {
-          val src = base((id.toInt + 7) % 24)._2
-          val s = rnd.nextInt(math.max(1, src.length - l - 2))
-          id -> (t + src.substring(s, s + l + 2))
-        } else if (id % 5 == 1 && t.length > l + 3) {
-          val s = rnd.nextInt(t.length - l - 2)
-          id -> (t + t.substring(s, s + l + 1))
-        } else id -> t
+      val planted = plantedCorpus(rnd, 24, l)
+      assert(removeOf(planted, l) === exactSubstrBrute(planted, l), s"round $round (L=$l)")
+    }
+  }
+
+  test("exactSubstrRemove runs fewer jobs on the sf0.01 documents: one " +
+    "h-keyed pass, no broadcast of the exploded grams") {
+    val docs = Tables(spark, "/root/testdata/sf0.01", "documents") // schema memoized here
+    val jobs = SparkSpec.jobsOf(spark)(
+      Dedup.exactSubstrRemove(docs, "doc_id", "text", minLen = 40).collect())
+    assert(jobs === 6)
+  }
+
+  test("exactSubstrRemove with a hot gram: a 40-char window repeated in more " +
+    "than 4,096 docs, past WindowExec's in-memory buffer, equals the " +
+    "boolean-mask replica") {
+    val boiler = "SUBSCRIBE TO OUR NEWSLETTER FOR MORE NEWS" // 41 chars
+    val threshold = spark.conf.get("spark.sql.windowExec.buffer.in.memory.threshold").toInt
+    val rnd = new scala.util.Random(4097)
+    def rs(k: Int) = (0 until k).map(_ => ('a' + rnd.nextInt(26)).toChar).mkString
+    val docs = (0 until threshold + 700).map { i =>
+      i.toLong -> (if (i % 10 == 0) rs(30)
+        else rs(10 + rnd.nextInt(30)) + boiler + rs(rnd.nextInt(20)))
+    }
+    assert(docs.count(_._2.contains(boiler)) > threshold)
+    assert(removeOf(docs, 40) === exactSubstrBrute(docs, 40))
+  }
+
+  test("the ExactSubstr family under a shuffled join (broadcast joins off) " +
+    "equals the boolean-mask replicas: qf8, qgc and qfk") {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val rnd = new scala.util.Random(2718)
+    val boiler = "ALL RIGHTS RESERVED COPYRIGHT NOTICE FOOTER TEXT!"
+    val docs = plantedCorpus(rnd, 40, 8) ++ Seq(
+      100L -> s"unique alpha prose here. $boiler and a tail one.",
+      101L -> s"different beta body text. $boiler with other end.",
+      102L -> "short", 103L -> "")
+    val prior = spark.conf.getAll.get(key)
+    spark.conf.set(key, "-1")
+    try {
+      for (l <- Seq(8, 40)) {
+        assert(removeOf(docs, l) === exactSubstrBrute(docs, l), s"qf8 L=$l")
+        assert(maskOf(docs, l) === exactSubstrMaskBrute(docs, l), s"qgc L=$l")
+        assert(memorizationOf(docs, l) === memorizationBrute(docs, l), s"qfk L=$l")
       }
-      val got = Dedup.exactSubstrRemove(
-        planted.toDF("doc_id", "text"), "doc_id", "text", minLen = l)
-        .as[(Long, String, Long, Long)].collect()
-        .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
-      assert(got === exactSubstrBrute(planted, l), s"round $round (L=$l)")
+      val plan = Dedup.exactSubstrRemove(docs.toDF("doc_id", "text"), "doc_id", "text", 8)
+      plan.collect()
+      assert(!plan.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"),
+        "the spec must exercise the shuffled-join shape")
+    } finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
     }
   }
 

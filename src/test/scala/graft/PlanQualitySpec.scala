@@ -1,6 +1,12 @@
 package graft
 
+import graft.functions.GramHashesExpr
 import graft.queries.Registry
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 
 /** Pins the plan properties that matter at 100 TB: predicate pushdown and
   * column pruning must reach the parquet scan, dimension joins must
@@ -8,14 +14,16 @@ import graft.queries.Registry
   * map-side partial aggregation inside whole-stage codegen. A regression in
   * any of these is invisible to result-correctness checks but catastrophic
   * at scale. */
-class PlanQualitySpec extends SparkSpec {
+class PlanQualitySpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val sf = "/root/testdata/sf0.001"
 
-  private def executedPlan(name: String): String = {
+  private def executedPlan(name: String): String = finalPlan(name).toString
+
+  private def finalPlan(name: String): SparkPlan = {
     val df = Registry.queries(name)(spark, sf)
     df.collect() // force AQE to finalize adaptive plans
-    df.queryExecution.executedPlan.toString
+    df.queryExecution.executedPlan
   }
 
   test("q06 scan carries pushed filters and a pruned read schema") {
@@ -303,13 +311,11 @@ class PlanQualitySpec extends SparkSpec {
       s"the window must key on bucket, not collapse to one partition:\n$plan")
   }
 
-  test("qf8 exact-substring dedup: gram counting shuffles 8-byte hashes " +
-    "with map-side partials, stays UDF-free, and prunes the scan") {
-    val plan = executedPlan("qf8_exact_substr_dedup")
-    // the corpus-sized aggregate (count per gram hash) must combine
-    // map-side — without it the shuffle carries one row per character
-    assert(plan.contains("partial_count"),
-      s"gram count lost its map-side partial:\n$plan")
+  test("qf8 exact-substring dedup: one h-keyed pass hashes the corpus once, " +
+    "confirms without a text-keyed shuffle, stays UDF-free, and prunes the scan") {
+    val tree = finalPlan("qf8_exact_substr_dedup")
+    val plan = tree.toString
+    assertOneHashPass(tree)
     assert(!plan.contains("ScalaUDF"),
       s"rolling hash + rebuild must stay native expressions:\n$plan")
     val read = "ReadSchema: [^\n]*".r.findAllIn(plan).mkString(" ")
@@ -331,6 +337,36 @@ class PlanQualitySpec extends SparkSpec {
       s"window hashes must come from the native GramHashesExpr kernel:\n$plan")
     assert(!plan.contains("lambdafunction"),
       s"no interpreted per-position lambda may remain:\n$plan")
+  }
+
+  /** The ExactSubstr family's one h-keyed pass: the gram-hash kernel runs
+    * once, no exchange keys on the gram text `g`, and no broadcast carries
+    * the exploded position rows — each position row crosses one exchange,
+    * keyed on its hash. */
+  private def assertOneHashPass(plan: SparkPlan): Unit = {
+    def isGramExplode(p: SparkPlan) = p match {
+      case g: GenerateExec => g.generator.exists(_.isInstanceOf[GramHashesExpr])
+      case _ => false
+    }
+    val kernels = collect(plan) { case g if isGramExplode(g) => g }
+    assert(kernels.size === 1, s"the gram-hash kernel must run once:\n$plan")
+    val textKeyed = collect(plan) {
+      case e: ShuffleExchangeExec if (e.outputPartitioning match {
+        case HashPartitioning(Seq(a: AttributeReference, _*), _) => a.name == "g"
+        case _ => false
+      }) => e
+    }
+    assert(textKeyed.isEmpty, s"the confirm must not shuffle on the gram text:\n$plan")
+    // the exploded rows themselves: the broadcast's own stage reaches the
+    // kernel without crossing a shuffle
+    def carriesGramRows(p: SparkPlan): Boolean = p match {
+      case _: ShuffleExchangeExec => false
+      case _ => isGramExplode(p) || allChildren(p).exists(carriesGramRows)
+    }
+    val broadcastGrams = collect(plan) {
+      case b: BroadcastExchangeExec if carriesGramRows(b.child) => b
+    }
+    assert(broadcastGrams.isEmpty, s"the position rows must not be broadcast:\n$plan")
   }
 
   test("qcj k-means: points assign through the native nearest-centroid " +
@@ -355,11 +391,11 @@ class PlanQualitySpec extends SparkSpec {
       s"nothing here should need a corpus-sized shuffle join at this SF:\n$plan")
   }
 
-  test("qfk memorization report: same shape discipline as qf8 — map-side " +
-    "partials on the window count, UDF-free, pruned scan, no pairwise") {
-    val plan = executedPlan("qfk_memorization_report")
-    assert(plan.contains("partial_count"),
-      s"window count lost its map-side partial:\n$plan")
+  test("qfk memorization report: same shape discipline as qf8 — one " +
+    "h-keyed window count, UDF-free, pruned scan, no pairwise") {
+    val tree = finalPlan("qfk_memorization_report")
+    val plan = tree.toString
+    assertOneHashPass(tree)
     assert(!plan.contains("ScalaUDF"), s"must stay native:\n$plan")
     val read = "ReadSchema: [^\n]*".r.findAllIn(plan).mkString(" ")
     assert(!read.contains("lang") && !read.contains("source"),
@@ -434,7 +470,9 @@ class PlanQualitySpec extends SparkSpec {
 
   test("qgc exact-substring mask: qf8's shape — 8-byte gram shuffle, " +
     "equi-join confirm, doc-keyed merge windows, no UDF") {
-    val plan = executedPlan("qgc_exact_substr_mask")
+    val tree = finalPlan("qgc_exact_substr_mask")
+    val plan = tree.toString
+    assertOneHashPass(tree)
     assert(!plan.contains("CartesianProduct") && !plan.contains("NestedLoop"),
       s"confirm join must be an equi-join:\n$plan")
     assert(!plan.contains("ScalaUDF"),

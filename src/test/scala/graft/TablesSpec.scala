@@ -35,6 +35,21 @@ class TablesSpec extends SparkSpec {
       Tables.normalizeTs(spark.read.parquet(Tables.path(dir, "events"))).schema)
   }
 
+  test("Tables.events on a micros fixture leaves nanosAsLong as the caller " +
+    "left it, and its footer check launches no job") {
+    val dir = "/root/testdata/sf0.01"
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    def setting = spark.conf.getAll.get(key) // None when the session never set it
+    val original = setting
+    try for (prior <- Seq(None, Some("false"), Some("true"))) {
+      prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      assert(Tables.events(spark, dir).count() > 0) // infers once under these confs
+      assert(setting === prior)
+      assert(SparkSpec.jobsOf(spark)(Tables.events(spark, dir)) === 0)
+      assert(setting === prior)
+    } finally original.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("a second read of the same file launches no job; the first infers once") {
     val dir = tmpDir("jobs")
     Seq((1, "a"), (2, "b")).toDF("r_regionkey", "r_name").coalesce(1)
