@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times the headline query set (BASELINE.md) on
   * SPARK_GRAFT_SF_DIR and prints one JSON line.
   *
@@ -60,14 +58,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus("32")
+    val spark = GraftSession(cpus)
     // Warm up scan/agg/codegen paths so the first timed query isn't
     // charged for JVM + Spark session initialization. The LOAD CANARY
     // (round-16 postmortem: the driver benched one minute after a

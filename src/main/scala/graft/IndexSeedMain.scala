@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.{IvfIndex, LshIndex, PqIndex}
-import org.apache.spark.sql.SparkSession
 
 /** Seeds a persistent index from a FRESH JVM — the other half of the
   * cross-PROCESS claim the persistent indexes make (LshIndex.attach /
@@ -39,14 +38,8 @@ object IndexSeedMain {
 
   def main(args: Array[String]): Unit = {
     val Array(warehouse, mode, tag) = args
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-index-seed")
-      .config("spark.sql.warehouse.dir", warehouse)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("2", confs = Seq("spark.app.name" -> "graft-index-seed",
+      "spark.sql.warehouse.dir" -> warehouse, "spark.sql.shuffle.partitions" -> "4"))
     import spark.implicits._
     mode match {
       case "lsh" =>

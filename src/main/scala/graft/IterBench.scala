@@ -1,7 +1,6 @@
 package graft
 
 import graft.queries.Registry
-import org.apache.spark.sql.SparkSession
 
 /** Profiling main for the driver-loop iteration fixed costs. A/Bs the
   * small-loop execution profile (Iterations.withLoopProfile) via its
@@ -32,16 +31,9 @@ import org.apache.spark.sql.SparkSession
 object IterBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val section = sys.env.getOrElse("SPARK_GRAFT_ITERBENCH", "loops")
     val mult = sys.env.getOrElse("SPARK_GRAFT_MULT", "1").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(GraftSession.cpus("32"))
     // warm-up: JVM + codegen + scan
     spark.read.parquet(s"$sfDir/lineitem.parquet")
       .groupBy("l_returnflag").count().collect()

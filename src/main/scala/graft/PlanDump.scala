@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` of registry queries to files — the
   * optimization-round evidence trail (plans/r20/<query>_{before,after}.txt).
   * Usage:
@@ -31,13 +29,7 @@ object PlanDump {
     val outDir = args(1)
     val suffix = args(2)
     val only = args.lift(3).map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(GraftSession.cpus("32"), "ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
 
     // Captures every Dataset action's executed plan (the listener bus is

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Generic per-query stage profiler (round 20) — times registry queries
@@ -18,18 +17,11 @@ object QProfile {
     val names = args.headOption.map(_.split(",").toSeq).getOrElse(Seq.empty)
     require(names.nonEmpty, "usage: QProfile q1,q2[,...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val rounds = sys.env.getOrElse("SPARK_GRAFT_QPROF_ROUNDS", "3").toInt
-    val b0 = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = sys.env.get("SPARK_GRAFT_EXTRA_CONF").map(_.split(";"))
-      .getOrElse(Array.empty).filter(_.contains("="))
-      .foldLeft(b0) { (b, kv) =>
-        val Array(k, v) = kv.split("=", 2); b.config(k, v)
-      }.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // ad-hoc conf overrides for A/B probes: SPARK_GRAFT_EXTRA_CONF=k=v;k=v
+    val extra = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq.flatMap(_.split(";"))
+      .filter(_.contains("=")).map { kv => val Array(k, v) = kv.split("=", 2); k -> v }
+    val spark = GraftSession(GraftSession.cpus("32"), "ERROR", extra)
 
     val verbose = new java.util.concurrent.atomic.AtomicBoolean(false)
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)

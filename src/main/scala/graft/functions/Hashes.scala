@@ -162,10 +162,6 @@ object Hashes {
     * starts with; profile note in SCALE.md ("shingle-hash kernel"). */
   def shingleHashCol(text: Column, n: Int): Column = ShingleHashesExpr(text, n)
 
-  /** The pre-rewrite UDF form of [[shingleHashCol]] — kept (unused in
-    * operators) as the comparison arm of the SCALE.md profile. */
-  def shingleHashesUdf(n: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((t: String) => shingleHashes(t, n))
   /** Signature over an already-hashed shingle set (one text pass total) —
     * native expression, primitive arrays end to end (see MinHashSigExpr). */
   def minhashFromHashes(hashes: Column, k: Int): Column =

@@ -247,11 +247,37 @@ object Dedup {
   }
 
   /** Fraction of equal signature positions — unbiased estimate of Jaccard. */
-  private[operators] val sigAgreement = udf { (a: Array[Long], b: Array[Long]) =>
+  private val sigAgreement = udf { (a: Array[Long], b: Array[Long]) =>
     var eq = 0; var i = 0
     val n = math.min(a.length, b.length)
     while (i < n) { if (a(i) == b(i)) eq += 1; i += 1 }
     eq.toDouble / math.max(n, 1)
+  }
+
+  /** The signature-agreement pre-filter — the one definition every MinHash
+    * path runs before [[verifyJaccard]]: candidate (leftId, rightId) pairs
+    * whose estimate is >= threshold - 0.25 (the 5σ bound in
+    * [[minhashDupPairs]]). `sigLeft`/`sigRight` are (doc, sig) lookups,
+    * each broadcast or a plain (bucketed/shuffled) join as its side's
+    * size allows. `sameScope` also requires both docs' `scope` columns to
+    * agree (a scoped index's candidates may collide across scopes on a
+    * 64-bit hash accident); the scope is dropped, so scoped callers
+    * re-attach it after the verify. Output: (leftId, rightId). */
+  private[operators] def sigPrefilter(cands: DataFrame, sigLeft: DataFrame, sigRight: DataFrame,
+                                      leftId: String, rightId: String, threshold: Double,
+                                      broadcastLeft: Boolean, broadcastRight: Boolean,
+                                      sameScope: Boolean = false): DataFrame = {
+    def side(t: DataFrame, id: String, sig: String, scope: String, b: Boolean) = {
+      val s = t.select(Seq(col("doc").as(id), col("sig").as(sig)) ++
+        (if (sameScope) Seq(col("scope").as(scope)) else Nil): _*)
+      if (b) broadcast(s) else s
+    }
+    val joined = cands
+      .join(side(sigLeft, leftId, "sig1", "_scope1", broadcastLeft), leftId)
+      .join(side(sigRight, rightId, "sig2", "_scope2", broadcastRight), rightId)
+    val scopeOk = if (sameScope) joined.filter(col("_scope1") === col("_scope2")) else joined
+    scopeOk.filter(sigAgreement(col("sig1"), col("sig2")) >= threshold - 0.25)
+      .select(leftId, rightId)
   }
 
   /** MinHash/LSH near-dup pairs, exact-verified: banding proposes
@@ -285,21 +311,11 @@ object Dedup {
     sh.count()
     val sigs = sh.select(col("doc"), Hashes.minhashFromHashes(col("shs"), k).as("sig")).cache()
     sigs.count()
-    val cands = lshCandidates(sigs, bands, k / bands)
-      .join(broadcast(sigs.select(col("doc").as("id1"), col("sig").as("sig1"))), "id1")
-      .join(broadcast(sigs.select(col("doc").as("id2"), col("sig").as("sig2"))), "id2")
-      .filter(sigAgreement(col("sig1"), col("sig2")) >= threshold - 0.25)
-      .select("id1", "id2")
+    val cands = sigPrefilter(lshCandidates(sigs, bands, k / bands), sigs, sigs,
+      "id1", "id2", threshold, broadcastLeft = true, broadcastRight = true)
     // verify on hashed shingles: long-array intersection is ~an order of
     // magnitude cheaper than string arrays, equal up to 64-bit collisions
-    cands
-      .join(broadcast(sh.select(col("doc").as("id1"), col("shs").as("sh1"))), "id1")
-      .join(broadcast(sh.select(col("doc").as("id2"), col("shs").as("sh2"))), "id2")
-      .withColumn("inter", size(array_intersect(col("sh1"), col("sh2"))).cast("double"))
-      .withColumn("jaccard", col("inter") /
-        (size(col("sh1")) + size(col("sh2")) - col("inter")).cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select("id1", "id2", "jaccard")
+    verifyJaccard(cands, sh, sh, "id1", "id2", threshold, broadcastLookups = true)
   }
 
   /** SCOPED MinHash/LSH near-dup pairs — the FineWeb dedup discipline
@@ -338,20 +354,15 @@ object Dedup {
     val cands = banded.as("a").join(banded.as("b"),
         col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
           col("a.scope") === col("b.scope") && col("a.doc") < col("b.doc"))
-      .select(col("a.doc").as("id1"), col("b.doc").as("id2"),
-        col("a.scope").as("scope"))
+      .select(col("a.doc").as("id1"), col("b.doc").as("id2"))
       .distinct()
-      .join(broadcast(sigs.select(col("doc").as("id1"), col("sig").as("sig1"))), "id1")
-      .join(broadcast(sigs.select(col("doc").as("id2"), col("sig").as("sig2"))), "id2")
-      .filter(sigAgreement(col("sig1"), col("sig2")) >= threshold - 0.25)
-      .select("id1", "id2", "scope")
-    cands
-      .join(broadcast(sh.select(col("doc").as("id1"), col("shs").as("sh1"))), "id1")
-      .join(broadcast(sh.select(col("doc").as("id2"), col("shs").as("sh2"))), "id2")
-      .withColumn("inter", size(array_intersect(col("sh1"), col("sh2"))).cast("double"))
-      .withColumn("jaccard", col("inter") /
-        (size(col("sh1")) + size(col("sh2")) - col("inter")).cast("double"))
-      .filter(col("jaccard") >= threshold)
+    val v = verifyJaccard(
+      sigPrefilter(cands, sigs, sigs, "id1", "id2", threshold,
+        broadcastLeft = true, broadcastRight = true),
+      sh, sh, "id1", "id2", threshold, broadcastLookups = true)
+    // the band join keeps both ends in one scope: re-attach it from the
+    // cached signatures, never by re-evaluating the candidate frame
+    v.join(broadcast(sigs.select(col("doc").as("id1"), col("scope"))), "id1")
       .select("id1", "id2", "scope", "jaccard")
   }
 
@@ -380,19 +391,9 @@ object Dedup {
     val sh = df.select(col(idCol).as("doc"),
       Hashes.shingleHashCol(col(textCol), n).as("shs")).cache()
     val sigs = sh.select(col("doc"), Hashes.minhashFromHashes(col("shs"), k).as("sig"))
-    val cands = cands0.select("id1", "id2").distinct()
-      .join(broadcast(sigs.select(col("doc").as("id1"), col("sig").as("sig1"))), "id1")
-      .join(broadcast(sigs.select(col("doc").as("id2"), col("sig").as("sig2"))), "id2")
-      .filter(sigAgreement(col("sig1"), col("sig2")) >= threshold - 0.25)
-      .select("id1", "id2")
-    cands
-      .join(broadcast(sh.select(col("doc").as("id1"), col("shs").as("sh1"))), "id1")
-      .join(broadcast(sh.select(col("doc").as("id2"), col("shs").as("sh2"))), "id2")
-      .withColumn("inter", size(array_intersect(col("sh1"), col("sh2"))).cast("double"))
-      .withColumn("jaccard", col("inter") /
-        (size(col("sh1")) + size(col("sh2")) - col("inter")).cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select("id1", "id2", "jaccard")
+    val cands = sigPrefilter(cands0.select("id1", "id2").distinct(), sigs, sigs,
+      "id1", "id2", threshold, broadcastLeft = true, broadcastRight = true)
+    verifyJaccard(cands, sh, sh, "id1", "id2", threshold, broadcastLookups = true)
   }
 
   /** [[minhashDupPairs]] for the >10M-doc regime: the per-doc signature and
@@ -418,11 +419,8 @@ object Dedup {
       sh.select(col("doc"), Hashes.minhashFromHashes(col("shs"), k).as("sig")),
       sigTbl, buckets, Seq("doc"))
     val sigs = spark.table(sigTbl)
-    val cands = lshCandidates(sigs, bands, k / bands)
-      .join(sigs.select(col("doc").as("id1"), col("sig").as("sig1")), "id1")
-      .join(sigs.select(col("doc").as("id2"), col("sig").as("sig2")), "id2")
-      .filter(sigAgreement(col("sig1"), col("sig2")) >= threshold - 0.25)
-      .select("id1", "id2")
+    val cands = sigPrefilter(lshCandidates(sigs, bands, k / bands), sigs, sigs,
+      "id1", "id2", threshold, broadcastLeft = false, broadcastRight = false)
     verifyJaccard(cands, sh, sh, "id1", "id2", threshold, broadcastLookups = false)
   }
 
@@ -448,19 +446,12 @@ object Dedup {
         col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket"))
       .select(col("a.doc").as("new_id"), col("b.doc").as("old_id"))
       .distinct()
-      .join(broadcast(nw.sigs.select(col("doc").as("new_id"), col("sig").as("sig1"))), "new_id")
-      .join(corpus.sigs.select(col("doc").as("old_id"), col("sig").as("sig2")), "old_id")
-      .filter(sigAgreement(col("sig1"), col("sig2")) >= threshold - 0.25)
-      .select("new_id", "old_id")
     // batch-side lookups broadcast (a batch is small); corpus-side shuffle
-    cands
-      .join(broadcast(nw.sh.select(col("doc").as("new_id"), col("shs").as("sh1"))), "new_id")
-      .join(corpus.sh.select(col("doc").as("old_id"), col("shs").as("sh2")), "old_id")
-      .withColumn("inter", size(array_intersect(col("sh1"), col("sh2"))).cast("double"))
-      .withColumn("jaccard", col("inter") /
-        (size(col("sh1")) + size(col("sh2")) - col("inter")).cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select("new_id", "old_id", "jaccard")
+    verifyJaccard(
+      sigPrefilter(cands, nw.sigs, corpus.sigs, "new_id", "old_id", threshold,
+        broadcastLeft = true, broadcastRight = false),
+      nw.sh, corpus.sh, "new_id", "old_id", threshold,
+      broadcastLeft = true, broadcastRight = false)
   }
 
   /** Convenience overload that preps the corpus tables in-line — for

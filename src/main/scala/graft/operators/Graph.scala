@@ -111,8 +111,9 @@ final case class Graph(vertices: DataFrame, edges: DataFrame) {
     * (degrees + a neighborhood reduce, several algorithms): transformation
     * chains are lazy plans, so without it each consumer re-executes the
     * whole derivation — at scale that is a redundant scan+join of the
-    * fact table per consumer (PlanAudit: qbw went 12 unreused exchanges →
-    * reused). */
+    * fact table per consumer (qbw went 12 unreused exchanges → reused,
+    * counted by PlanAudit, a main deleted after 1ab3747; PlanDump writes
+    * the plans now). */
   def cached: Graph = Graph(vertices.cache(), edges.cache())
 
   /** Flip edge direction (Graph.java reverse). Narrow, no shuffle. */

@@ -34,8 +34,9 @@ object GraphOps {
     * getDegrees). ONE pass: each edge explodes to its two endpoint
     * contributions, then a single aggregate shuffle keyed on the node —
     * the previous three-way (vertices ⋈ out ⋈ in) shape executed the
-    * edge-derivation subtree three times (PlanAudit: qa0 had 14 unreused
-    * exchanges), a redundant fact-table join per branch at scale. */
+    * edge-derivation subtree three times (qa0 had 14 unreused exchanges,
+    * counted by PlanAudit, a main deleted after 1ab3747; PlanDump writes
+    * the plans now), a redundant fact-table join per branch at scale. */
   def degrees(edges: DataFrame): DataFrame =
     edges.select(explode(array(
         struct(col("src").as("node"), lit(0L).as("i"), lit(1L).as("o")),

@@ -70,14 +70,15 @@ object Iterations {
     }
   }
 
-  /** Profile cutoff, overridable for experiments and deployments — system
-    * property `graft.loop.bigRows` first (settable at runtime, used by
-    * IterBench to A/B the profile), then env SPARK_GRAFT_LOOP_BIG_ROWS;
-    * 0 disables the small profile. */
+  /** Profile cutoff, overridable for experiments and deployments by the
+    * system property `graft.loop.bigRows` (settable at runtime, used by
+    * IterBench to A/B the profile); 0 disables the small profile. A value
+    * that is not a non-negative integer fails, naming the knob. */
   def defaultBigRows: Long =
-    sys.props.get("graft.loop.bigRows")
-      .orElse(sys.env.get("SPARK_GRAFT_LOOP_BIG_ROWS"))
-      .map(_.toLong).getOrElse(1000000L)
+    sys.props.get("graft.loop.bigRows").fold(1000000L) { v =>
+      v.trim.toLongOption.filter(_ >= 0).getOrElse(throw new IllegalArgumentException(
+        s"graft.loop.bigRows must be a non-negative integer, got '$v'"))
+    }
 
   /** Broadcast hint for the vertex-sized side of per-round loop joins,
     * gated on the EDGE-frame row count the callers already hold (the same

@@ -236,27 +236,15 @@ object LshIndex {
     // both on the CANDIDATE-sized frame: the corpus-side lookup joins
     // stay keyed on doc alone (bucketed — zero corpus exchange), and the
     // scope filter never becomes a corpus join key
-    def prefiltered(cands: DataFrame, oldSigs: DataFrame, bOld: Boolean): DataFrame = {
-      val oldSel: Seq[Column] = Seq(col("doc").as("old_id"), col("sig").as("sig1")) ++
-        (if (scoped) Seq(col("scope").as("_scope1")) else Nil)
-      val newSel: Seq[Column] = Seq(col("doc").as("new_id"), col("sig").as("sig2")) ++
-        (if (scoped) Seq(col("scope").as("scope")) else Nil)
-      val joined = cands.distinct()
-        .join({ val t = oldSigs.select(oldSel: _*)
-                if (bOld) broadcast(t) else t }, "old_id")
-        .join(broadcast(sigs.select(newSel: _*)), "new_id")
-      val scopeOk = if (scoped) joined.filter(col("_scope1") === col("scope"))
-        else joined
-      scopeOk.filter(Dedup.sigAgreement(col("sig1"), col("sig2")) >= threshold - 0.25)
-        .select(col("old_id") +: col("new_id") +:
-          (if (scoped) Seq(col("scope")) else Nil): _*)
-    }
+    def prefiltered(cands: DataFrame, oldSigs: DataFrame, bOld: Boolean): DataFrame =
+      Dedup.sigPrefilter(cands.distinct(), oldSigs, sigs, "old_id", "new_id", threshold,
+        broadcastLeft = bOld, broadcastRight = true, sameScope = scoped)
     // carry scope through the one shared verify formula by re-attaching
     // it afterwards from the CACHED batch sigs (new_id is always a batch
     // doc, and the scope filter above guarantees both ends agree) — never
     // by re-evaluating the candidate frame, whose cross form scans corpus
     def verified(cands: DataFrame, shOld: DataFrame, bOld: Boolean): DataFrame = {
-      val v = Dedup.verifyJaccard(cands.select("old_id", "new_id"), shOld, sh,
+      val v = Dedup.verifyJaccard(cands, shOld, sh,
         "old_id", "new_id", threshold, broadcastLeft = bOld, broadcastRight = true)
       if (!scoped) v
       else v.join(broadcast(sigs.select(col("doc").as("new_id"), col("scope"))),

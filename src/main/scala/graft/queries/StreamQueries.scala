@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.streaming.StreamPartitions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -23,21 +24,17 @@ object StreamQueries {
     Tables.normalizeTs(s.readStream.schema(schema).parquet(s"$dir/events*.parquet"))
   }
 
-  /** Run to completion; memory sink table named after the query.
-    * Streaming state partitioning == shuffle partitions at start time, and
-    * each partition carries a state-store instance whose per-batch commit
-    * cost dominates at gate scale — size it to the data for the stream's
-    * lifetime, then restore (a real deployment sizes this to key cardinality
-    * and executor count; it is baked into the checkpoint either way). */
+  /** Run to completion; memory sink table named after the query. The
+    * stream runs under [[StreamPartitions.around]], its state partitions
+    * sized to the gate's data (a real deployment sizes them to key
+    * cardinality and executor count; they are baked into the checkpoint
+    * either way). */
   private[queries] def run(df: DataFrame, mode: String, name: String)(
       implicit s: SparkSession): DataFrame = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "8"))
-    try {
+    StreamPartitions.around(s) {
       val q = df.writeStream.outputMode(mode).format("memory").queryName(name).start()
       try q.processAllAvailable() finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+    }
     s.table(name)
   }
 
@@ -632,14 +629,11 @@ object StreamQueries {
             sum(round(col("value") * 1000).cast("long")).as("sum_millis"))
         val ckpt = java.nio.file.Files
           .createTempDirectory("graft_eo_ckpt").toString
-        val prev = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "8"))
-        try {
+        StreamPartitions.around(s) {
           val q = graft.sources.AvroJdbc.startUpsertSink(agg, url, "user_agg_t",
             "user_id", Seq("n_events", "sum_millis"), ckpt)
           try q.processAllAvailable() finally q.stop()
-        } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+        }
         graft.sources.AvroJdbc.jdbc(s, url, "\"user_agg_t\"")
           .select(col("user_id"), col("n_events"), col("sum_millis"))
           .orderBy(col("user_id"))

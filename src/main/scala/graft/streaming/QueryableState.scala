@@ -78,10 +78,7 @@ object QueryableState {
         round(col("value") * 1000).cast("long").as("valueMillis"))
       .as[(Long, Long)]
 
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "8"))
-    try {
+    StreamPartitions.around(s) {
       val out = src.groupByKey(_._1)
         .flatMapGroupsWithState[AggState, KeyAgg](
           OutputMode.Update, GroupStateTimeout.NoTimeout) {
@@ -95,7 +92,7 @@ object QueryableState {
       val q = out.writeStream.outputMode("update").format("noop")
         .option("checkpointLocation", ckpt.getPath).start()
       try q.processAllAvailable() finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+    }
 
     doneMarker(ckpt).createNewFile()
     ckpt.getPath
@@ -155,10 +152,7 @@ object QueryableState {
         round(col("value") * 1000).cast("long").as("valueMillis"))
       .as[(Long, Long)]
 
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "8"))
-    try {
+    StreamPartitions.around(s) {
       val out = rows.groupByKey(_._1)
         .flatMapGroupsWithState[AggState, KeyAgg](
           OutputMode.Update, GroupStateTimeout.NoTimeout) {
@@ -172,7 +166,7 @@ object QueryableState {
       val q = out.writeStream.outputMode("update").format("noop")
         .option("checkpointLocation", ckpt.getPath).start()
       try q.processAllAvailable() finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+    }
 
     doneMarker(ckpt).createNewFile()
     ckpt.getPath
@@ -199,10 +193,7 @@ object QueryableState {
         .select(col("user_id").as("key"),
           round(col("value") * 1000).cast("long").as("valueMillis"))
         .as[(Long, Long)]
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "8"))
-      try {
+      StreamPartitions.around(s) {
         val out = rows.groupByKey(_._1)
           .flatMapGroupsWithState[AggState, KeyAgg](
             OutputMode.Update, GroupStateTimeout.NoTimeout) {
@@ -216,7 +207,7 @@ object QueryableState {
         val q = out.writeStream.outputMode("update").format("noop")
           .option("checkpointLocation", ckpt.getPath).start()
         try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      }
     } finally s.conf.set(
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "false")
 
@@ -285,15 +276,12 @@ object QueryableState {
         round(col("value") * 1000).cast("long").as("valueMillis"))
       .as[StatefulOps.KeyedEvent]
 
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "8"))
-    try {
+    StreamPartitions.around(s) {
       val out = StatefulOps.run(src, new StatefulOps.RunningAgg)
       val q = out.writeStream.outputMode("append").format("noop")
         .option("checkpointLocation", ckpt.getPath).start()
       try q.processAllAvailable() finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+    }
 
     doneMarker(ckpt).createNewFile()
     ckpt.getPath

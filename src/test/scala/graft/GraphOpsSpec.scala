@@ -56,6 +56,27 @@ class GraphOpsSpec extends SparkSpec {
     }
   }
 
+  test("graft.loop.bigRows: a negative or non-numeric value fails fast, naming knob and value") {
+    val prev = sys.props.get("graft.loop.bigRows")
+    def withBigRows[A](v: String)(f: => A): A = {
+      System.setProperty("graft.loop.bigRows", v)
+      try f finally prev match {
+        case Some(p) => System.setProperty("graft.loop.bigRows", p)
+        case None => System.clearProperty("graft.loop.bigRows")
+      }
+    }
+    for (bad <- Seq("abc", "-5", "1e6")) {
+      val err = intercept[IllegalArgumentException] {
+        withBigRows(bad)(GraphOps.pageRankScaled(edges, iters = 3))
+      }
+      assert(err.getMessage.contains("graft.loop.bigRows") && err.getMessage.contains(s"'$bad'"),
+        err.getMessage)
+    }
+    // 0 (small profile off) and a plain count are accepted
+    for (ok <- Seq("0", "5000"))
+      assert(withBigRows(ok)(GraphOps.pageRankScaled(edges, iters = 3).count()) > 0)
+  }
+
   test("withLoopProfile restores session conf after a small-frame loop") {
     val key = "spark.sql.shuffle.partitions"
     val before = spark.conf.get(key)

@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 /** Oracle-typing lint (round-9 VERDICT item #2).
   *
   * The bug class: DuckDB widens `sum(<integral>)` to HUGEINT, which the
@@ -22,6 +24,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *     an integer type, a len/length/count/row_number/rank call, or is a
   *     bare column reference (conservative: bare doubles must either
   *     carry an explicit outer CAST too, or be allowlisted below).
+  *
+  * One source lint rides along: `src/main` builds SparkSessions only in
+  * GraftSession.scala, so every main shares one set of session settings.
   */
 class OracleLintSpec extends AnyFunSuite {
 
@@ -127,5 +132,27 @@ class OracleLintSpec extends AnyFunSuite {
       """WITH t AS (SELECT k, sum(v) AS s FROM x GROUP BY k)
         SELECT k, CAST(s AS BIGINT) AS s FROM t"""
     assert(topSelectList(cteOnly).toSeq.flatMap(bareIntSums).isEmpty)
+  }
+
+  private val sessionBuilder = "SparkSession\\s*\\.\\s*builder".r
+
+  test("src/main builds a SparkSession only in GraftSession.scala") {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    require(java.nio.file.Files.isDirectory(root), s"run from the repository root: no $root")
+    val files = java.nio.file.Files.walk(root)
+    val bad = try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+      .filter { f =>
+        val src = new String(java.nio.file.Files.readAllBytes(f),
+          java.nio.charset.StandardCharsets.UTF_8)
+        f.getFileName.toString != "GraftSession.scala" &&
+          sessionBuilder.findFirstIn(src).isDefined
+      }.map(root.relativize(_).toString).sorted
+    finally files.close()
+    assert(bad.isEmpty, s"\nSparkSession.builder outside GraftSession.scala:\n${bad.mkString("\n")}")
+    // not vacuous: the one builder matches, and so does a split call
+    val one = new String(java.nio.file.Files.readAllBytes(
+      root.resolve("graft/GraftSession.scala")), java.nio.charset.StandardCharsets.UTF_8)
+    assert(sessionBuilder.findFirstIn(one).isDefined)
+    assert(sessionBuilder.findFirstIn("SparkSession\n      .builder()").isDefined)
   }
 }
