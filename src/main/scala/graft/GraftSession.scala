@@ -7,8 +7,10 @@ import org.apache.spark.sql.SparkSession
   * log level. `confs` are applied last, so they override any of these. */
 object GraftSession {
 
-  /** Core count: SPARK_GRAFT_CPUS, else the main's own default. */
-  def cpus(default: String): String = sys.env.getOrElse("SPARK_GRAFT_CPUS", default)
+  /** Core count: SPARK_GRAFT_CPUS, else the main's own default; either
+    * must be a positive integer ([[Knobs.positiveInt]]). */
+  def cpus(default: String): String =
+    Knobs.positiveInt("SPARK_GRAFT_CPUS", sys.env.getOrElse("SPARK_GRAFT_CPUS", default)).toString
 
   def apply(cpus: String, logLevel: String = "WARN",
             confs: Seq[(String, String)] = Nil): SparkSession = {

@@ -32,7 +32,7 @@ object IterBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val section = sys.env.getOrElse("SPARK_GRAFT_ITERBENCH", "loops")
-    val mult = sys.env.getOrElse("SPARK_GRAFT_MULT", "1").toInt
+    val mult = Knobs.envPositiveInt("SPARK_GRAFT_MULT", 1)
     val spark = GraftSession(GraftSession.cpus("32"))
     // warm-up: JVM + codegen + scan
     spark.read.parquet(s"$sfDir/lineitem.parquet")
@@ -50,7 +50,7 @@ object IterBench {
     // batch=1 IS the classic top-1 loop (contractually identical), so the
     // batch=1 row doubles as the bpeTrain baseline.
     if (section == "bpe") {
-      val nMerges = sys.env.getOrElse("SPARK_GRAFT_BPE_MERGES", "512").toInt
+      val nMerges = Knobs.envPositiveInt("SPARK_GRAFT_BPE_MERGES", 512)
       import graft.operators.TextPipeline
       val docs = Tables(spark, sfDir, "documents").cache()
       docs.count()
@@ -249,12 +249,9 @@ object IterBench {
       import graft.streaming.{EventTimeOps, StreamingDedup}
       spark.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
       def chunkStream = {
-        val raw = spark.readStream.schema(schema)
-          .parquet(s"$sfDir/documents*.parquet")
-        graft.operators.TextPipeline
-          .chunk(raw, "doc_id", "text", chunkSize = 8, overlap = 0)
+        graft.operators.TextPipeline.chunk(Tables.stream(spark, sfDir, "documents"),
+          "doc_id", "text", chunkSize = 8, overlap = 0)
           .withColumn("ts", timestamp_micros(col("doc_id") * 1000000L))
           .withWatermark("ts", "0 seconds")
       }
@@ -320,7 +317,7 @@ object IterBench {
     // driver-round amortization is finally measurable where it matters.
     if (section == "bpescale") {
       import graft.operators.TextPipeline
-      val nMerges = sys.env.getOrElse("SPARK_GRAFT_BPE_MERGES", "512").toInt
+      val nMerges = Knobs.envPositiveInt("SPARK_GRAFT_BPE_MERGES", 512)
       val docs = pseudoCorpus(64).cache()
       docs.count()
       import org.apache.spark.sql.functions._
@@ -793,7 +790,7 @@ object IterBench {
     // fixed cost; depth enters only logarithmically.
     if (section == "suffixarray") {
       import org.apache.spark.sql.functions.{col, max}
-      val saBase = sys.env.getOrElse("SPARK_GRAFT_SA_BASE", "4").toInt
+      val saBase = Knobs.envPositiveInt("SPARK_GRAFT_SA_BASE", 4)
       val (docs, _) = scaledDocs()
       println(s"[iterbench] corpus: ${docs.count()} docs (mult=$mult)")
       for (round <- 1 to 2; depth <- Seq(16, 64)) {
@@ -859,8 +856,8 @@ object IterBench {
     if (section == "bpedrop") {
       import graft.operators.TextPipeline
       import org.apache.spark.sql.functions._
-      val litMax = sys.env.getOrElse("SPARK_GRAFT_BPEDROP_LITMAX", "512").toInt
-      val nTrain = sys.env.getOrElse("SPARK_GRAFT_BPEDROP_MERGES", "2048").toInt
+      val litMax = Knobs.envPositiveInt("SPARK_GRAFT_BPEDROP_LITMAX", 512)
+      val nTrain = Knobs.envPositiveInt("SPARK_GRAFT_BPEDROP_MERGES", 2048)
       val wpd = 12 * mult
       val docs = pseudoCorpus(wpd).localCheckpoint(true)
       println(s"[iterbench] corpus: ${docs.count()} docs x $wpd pseudo-words")
@@ -911,7 +908,7 @@ object IterBench {
       import org.apache.spark.sql.functions._
       // SPARK_GRAFT_UNIGRAM_LITMAX raises the literal-path cap for
       // one-off parse-cost measurements
-      val litMax = sys.env.getOrElse("SPARK_GRAFT_UNIGRAM_LITMAX", "1000").toInt
+      val litMax = Knobs.envPositiveInt("SPARK_GRAFT_UNIGRAM_LITMAX", 1000)
       val wpd = 12 * mult
       val docs = pseudoCorpus(wpd).localCheckpoint(true)
       val words = docs

@@ -17,7 +17,7 @@ object QProfile {
     val names = args.headOption.map(_.split(",").toSeq).getOrElse(Seq.empty)
     require(names.nonEmpty, "usage: QProfile q1,q2[,...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val rounds = sys.env.getOrElse("SPARK_GRAFT_QPROF_ROUNDS", "3").toInt
+    val rounds = Knobs.envPositiveInt("SPARK_GRAFT_QPROF_ROUNDS", 3)
     // ad-hoc conf overrides for A/B probes: SPARK_GRAFT_EXTRA_CONF=k=v;k=v
     val extra = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq.flatMap(_.split(";"))
       .filter(_.contains("=")).map { kv => val Array(k, v) = kv.split("=", 2); k -> v }

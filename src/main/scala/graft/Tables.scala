@@ -131,6 +131,16 @@ object Tables {
   def events(spark: SparkSession, dir: String): DataFrame =
     normalizeTs(spark.read.schema(eventsSchema(spark, dir)).parquet(path(dir, "events")))
 
+  /** A file stream over `dir`'s `name` fixture (every `<name>*.parquet`,
+    * since a file-stream source needs a directory or glob) with the same
+    * schema, and for events the same `ts` normalization, as a batch read. */
+  def stream(spark: SparkSession, dir: String, name: String): DataFrame =
+    if (name == "events")
+      normalizeTs(spark.readStream.schema(eventsSchema(spark, dir))
+        .parquet(s"$dir/events*.parquet"))
+    else spark.readStream.schema(schema(spark, path(dir, name)))
+      .parquet(s"$dir/$name*.parquet")
+
   private[graft] def normalizeTs(raw: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.{Hashes, TextFunctions}
+import graft.queries.QueryUtil.{OTOKS, oFnv, oSigned}
 import graft.operators.{Dedup, Similarity}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -15,7 +16,6 @@ object ExtensionQueries {
   private def t(s: SparkSession, dir: String, n: String) = Tables(s, dir, n)
 
   /** Oracle fragment: whitespace tokens of `text` as a DuckDB list. */
-  private val OTOKS = "list_filter(string_split_regex(text, '\\s+'), x -> x <> '')"
 
   /** Shared input of the SCOPED dedup gates (qhd batch, qhg persistent
     * index): `documents` densified with one planted same-source clone per
@@ -41,24 +41,6 @@ object ExtensionQueries {
           SELECT doc_id + 10000000, source, text || ' zq17'
           FROM documents WHERE doc_id % 97 = 0
         )"""
-
-  /** Oracle fragment: FNV-1a 64 over the ASCII string column `in`, as an
-    * unsigned HUGEINT in [0, 2^64). 64-bit wraparound is emulated with
-    * HUGEINT mod-2^64 arithmetic; the XOR only ever touches the low byte, so
-    * it runs on BIGINT and is re-added. Mirrors Hashes.fnv1a64 bit-for-bit
-    * (verified: both produce 4258664394790625059 for 'hello world 42'). */
-  private[queries] def oFnv(in: String): String =
-    s"""list_reduce(list_prepend(14695981039346656037::HUGEINT,
-       list_transform(range(1, length($in) + 1), i -> CAST(ascii($in[i]) AS HUGEINT))),
-       (acc, b) -> (((acc - (acc % 256)) +
-         CAST(xor(CAST(acc % 256 AS BIGINT), CAST(b AS BIGINT)) AS HUGEINT))
-         * 1099511628211::HUGEINT) % 18446744073709551616::HUGEINT)"""
-
-  /** Oracle fragment: reinterpret unsigned-64 HUGEINT `h` as signed BIGINT
-    * (two's complement), matching a JVM Long. */
-  private[queries] def oSigned(h: String): String =
-    s"""CAST(CASE WHEN $h >= 9223372036854775808::HUGEINT
-       THEN $h - 18446744073709551616::HUGEINT ELSE $h END AS BIGINT)"""
 
   /** Oracle fragment: lowercase alphanumeric normalization of `text` —
     * mirrors Hashes.fingerprint's pre-hash normalization, and guarantees a
@@ -94,6 +76,65 @@ object ExtensionQueries {
           ON a.blk = b.blk AND a.blkval = b.blkval AND a.doc_id < b.doc_id)
         SELECT old_id, new_id, CAST(bit_count(xor(h1, h2)) AS BIGINT) AS hamming
         FROM cand WHERE bit_count(xor(h1, h2)) <= 3"""
+
+  /** The exact shingle-Jaccard pair law at 0.5: q85, q8b, qeg and qdv. */
+  private[queries] lazy val OMinhashPairs: String =
+    s"""WITH toks AS (
+          SELECT doc_id, $OTOKS AS w FROM documents
+        ), sh AS (
+          SELECT DISTINCT doc_id, (w[i] || ' ' || w[i+1]) AS sh
+          FROM toks CROSS JOIN UNNEST(generate_series(1, len(w) - 1)) AS t(i)
+        ), sizes AS (
+          SELECT doc_id, count(*) AS nsh FROM sh GROUP BY doc_id
+        ), common AS (
+          SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS c
+          FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
+          GROUP BY 1, 2
+        )
+        SELECT id1, id2,
+          round(CAST(c AS DOUBLE) / (s1.nsh + s2.nsh - c), 9) AS jaccard
+        FROM common
+        JOIN sizes s1 ON id1 = s1.doc_id
+        JOIN sizes s2 ON id2 = s2.doc_id
+        WHERE CAST(c AS DOUBLE) / (s1.nsh + s2.nsh - c) >= 0.5"""
+
+  /** qdt's oracle, shared by the compacted-index variant qe4. */
+  private lazy val OLshIndexSlices: String =
+    s"""WITH toks AS (
+          SELECT doc_id, $OTOKS AS w FROM documents
+        ), sh AS (
+          SELECT DISTINCT doc_id, (w[i] || ' ' || w[i+1]) AS sh
+          FROM toks CROSS JOIN UNNEST(generate_series(1, len(w) - 1)) AS t(i)
+        ), sizes AS (
+          SELECT doc_id, count(*) AS nsh FROM sh GROUP BY doc_id
+        ), common AS (
+          SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS c
+          FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
+          GROUP BY 1, 2
+        ), p AS (
+          SELECT id1, id2,
+            round(CAST(c AS DOUBLE) / (s1.nsh + s2.nsh - c), 9) AS jaccard
+          FROM common
+          JOIN sizes s1 ON id1 = s1.doc_id
+          JOIN sizes s2 ON id2 = s2.doc_id
+          WHERE CAST(c AS DOUBLE) / (s1.nsh + s2.nsh - c) >= 0.5
+        )
+        SELECT CASE WHEN id1 % 3 <= id2 % 3 THEN id1 ELSE id2 END AS old_id,
+          CASE WHEN id1 % 3 <= id2 % 3 THEN id2 ELSE id1 END AS new_id,
+          jaccard
+        FROM p"""
+
+  /** q88's oracle, shared by the native-expression variant qab. */
+  private lazy val OKnnBrute: String =
+    """SELECT query_id, rank, nbr_id, cos_sim FROM (
+          SELECT q.vec_id AS query_id, c.vec_id AS nbr_id,
+            round(list_cosine_similarity(CAST(c.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])), 6) AS cos_sim,
+            row_number() OVER (PARTITION BY q.vec_id
+              ORDER BY list_cosine_similarity(CAST(c.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])) DESC,
+                       c.vec_id) AS rank
+          FROM embeddings c CROSS JOIN embeddings q
+          WHERE q.vec_id < 5 AND c.vec_id <> q.vec_id)
+        WHERE rank <= 10"""
 
   def entries: Seq[Entry] = Seq(
 
@@ -220,24 +261,7 @@ object ExtensionQueries {
           n = 2, k = 128, bands = 64, threshold = 0.5)
         pairs.select(col("id1"), col("id2"), round(col("jaccard"), 9).as("jaccard"))
       },
-      Some(s"""WITH toks AS (
-          SELECT doc_id, $OTOKS AS w FROM documents
-        ), sh AS (
-          SELECT DISTINCT doc_id, (w[i] || ' ' || w[i+1]) AS sh
-          FROM toks CROSS JOIN UNNEST(generate_series(1, len(w) - 1)) AS t(i)
-        ), sizes AS (
-          SELECT doc_id, count(*) AS nsh FROM sh GROUP BY doc_id
-        ), common AS (
-          SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS c
-          FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-          GROUP BY 1, 2
-        )
-        SELECT id1, id2,
-          round(CAST(c AS DOUBLE) / (s1.nsh + s2.nsh - c), 9) AS jaccard
-        FROM common
-        JOIN sizes s1 ON id1 = s1.doc_id
-        JOIN sizes s2 ON id2 = s2.doc_id
-        WHERE CAST(c AS DOUBLE) / (s1.nsh + s2.nsh - c) >= 0.5""")),
+      Some(OMinhashPairs)),
 
     // SCOPED near-dup — the FineWeb per-dump discipline (Penedo et al.
     // 2024: dedup WITHIN each crawl snapshot, never across; global dedup
@@ -364,31 +388,13 @@ object ExtensionQueries {
         // Full-path hash, not digit extraction: two fixture dirs with the
         // same digits must not collide on the same catalog table names
         // (writeBucketed DROPs the colliding table mid-flight).
-        val tag = java.lang.Long.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL)
+        val tag = Scratch.dirTag(dir)
         val pairs = Dedup.minhashDupPairsBucketed(t(s, dir, "documents"),
           "doc_id", "text", n = 2, k = 128, bands = 64, threshold = 0.5,
           tableTag = tag, buckets = 8)
         pairs.select(col("id1"), col("id2"), round(col("jaccard"), 9).as("jaccard"))
       },
-      Some(s"""WITH toks AS (
-          SELECT doc_id, $OTOKS AS w FROM documents
-        ), sh AS (
-          SELECT DISTINCT doc_id, (w[i] || ' ' || w[i+1]) AS sh
-          FROM toks CROSS JOIN UNNEST(generate_series(1, len(w) - 1)) AS t(i)
-        ), sizes AS (
-          SELECT doc_id, count(*) AS nsh FROM sh GROUP BY doc_id
-        ), common AS (
-          SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS c
-          FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-          GROUP BY 1, 2
-        )
-        SELECT id1, id2,
-          round(CAST(c AS DOUBLE) / (s1.nsh + s2.nsh - c), 9) AS jaccard
-        FROM common
-        JOIN sizes s1 ON id1 = s1.doc_id
-        JOIN sizes s2 ON id2 = s2.doc_id
-        WHERE CAST(c AS DOUBLE) / (s1.nsh + s2.nsh - c) >= 0.5""")),
+      Some(OMinhashPairs)),
 
     // The cross-RUN face of the q85 family: a PERSISTENT bucketed LSH index
     // (operators/LshIndex.scala) ingests the corpus in three disjoint
@@ -400,8 +406,7 @@ object ExtensionQueries {
     // argument), oriented (old, new) by ingest order = (mod 3, doc_id).
     Entry("qdt_lsh_persistent_index",
       (s, dir) => {
-        val tag = java.lang.Long.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL) + "p"
+        val tag = Scratch.dirTag(dir) + "p"
         val ref = graft.operators.LshIndex.Ref(tag, buckets = 8)
         graft.operators.LshIndex.drop(s, ref) // idempotent re-runs
         val docs = t(s, dir, "documents")
@@ -412,29 +417,7 @@ object ExtensionQueries {
         }.reduce(_ unionByName _)
           .select(col("old_id"), col("new_id"), round(col("jaccard"), 9).as("jaccard"))
       },
-      Some(s"""WITH toks AS (
-          SELECT doc_id, $OTOKS AS w FROM documents
-        ), sh AS (
-          SELECT DISTINCT doc_id, (w[i] || ' ' || w[i+1]) AS sh
-          FROM toks CROSS JOIN UNNEST(generate_series(1, len(w) - 1)) AS t(i)
-        ), sizes AS (
-          SELECT doc_id, count(*) AS nsh FROM sh GROUP BY doc_id
-        ), common AS (
-          SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS c
-          FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-          GROUP BY 1, 2
-        ), p AS (
-          SELECT id1, id2,
-            round(CAST(c AS DOUBLE) / (s1.nsh + s2.nsh - c), 9) AS jaccard
-          FROM common
-          JOIN sizes s1 ON id1 = s1.doc_id
-          JOIN sizes s2 ON id2 = s2.doc_id
-          WHERE CAST(c AS DOUBLE) / (s1.nsh + s2.nsh - c) >= 0.5
-        )
-        SELECT CASE WHEN id1 % 3 <= id2 % 3 THEN id1 ELSE id2 END AS old_id,
-          CASE WHEN id1 % 3 <= id2 % 3 THEN id2 ELSE id1 END AS new_id,
-          jaccard
-        FROM p"""),
+      Some(OLshIndexSlices),
     ),
 
     // Index lifecycle under the gate: same three-slice ingest as qdt with
@@ -445,8 +428,7 @@ object ExtensionQueries {
     // oracle is qdt's verbatim.
     Entry("qe4_lsh_compacted_index",
       (s, dir) => {
-        val tag = java.lang.Long.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL) + "c"
+        val tag = Scratch.dirTag(dir) + "c"
         val ref = graft.operators.LshIndex.Ref(tag, buckets = 8)
         graft.operators.LshIndex.drop(s, ref) // idempotent re-runs
         val docs = t(s, dir, "documents")
@@ -458,29 +440,7 @@ object ExtensionQueries {
         out01.unionByName(ingest(2))
           .select(col("old_id"), col("new_id"), round(col("jaccard"), 9).as("jaccard"))
       },
-      Some(s"""WITH toks AS (
-          SELECT doc_id, $OTOKS AS w FROM documents
-        ), sh AS (
-          SELECT DISTINCT doc_id, (w[i] || ' ' || w[i+1]) AS sh
-          FROM toks CROSS JOIN UNNEST(generate_series(1, len(w) - 1)) AS t(i)
-        ), sizes AS (
-          SELECT doc_id, count(*) AS nsh FROM sh GROUP BY doc_id
-        ), common AS (
-          SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS c
-          FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-          GROUP BY 1, 2
-        ), p AS (
-          SELECT id1, id2,
-            round(CAST(c AS DOUBLE) / (s1.nsh + s2.nsh - c), 9) AS jaccard
-          FROM common
-          JOIN sizes s1 ON id1 = s1.doc_id
-          JOIN sizes s2 ON id2 = s2.doc_id
-          WHERE CAST(c AS DOUBLE) / (s1.nsh + s2.nsh - c) >= 0.5
-        )
-        SELECT CASE WHEN id1 % 3 <= id2 % 3 THEN id1 ELSE id2 END AS old_id,
-          CASE WHEN id1 % 3 <= id2 % 3 THEN id2 ELSE id1 END AS new_id,
-          jaccard
-        FROM p"""),
+      Some(OLshIndexSlices),
     ),
 
     // SCOPED dedup at the PERSISTENT-index level — qhd's FineWeb
@@ -494,8 +454,7 @@ object ExtensionQueries {
     // is found, never WHAT.
     Entry("qhg_scoped_lsh_index",
       (s, dir) => {
-        val tag = java.lang.Long.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL) + "sc"
+        val tag = Scratch.dirTag(dir) + "sc"
         val ref = graft.operators.LshIndex.Ref(tag, buckets = 8)
         graft.operators.LshIndex.drop(s, ref) // idempotent re-runs
         val docs = densifiedDocs(s, dir)
@@ -547,8 +506,7 @@ object ExtensionQueries {
     Entry("qhh_snapshot_novelty",
       (s, dir) => {
         import s.implicits._
-        val tag = java.lang.Long.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL) + "nv"
+        val tag = Scratch.dirTag(dir) + "nv"
         val ref = graft.operators.LshIndex.Ref(tag, buckets = 8)
         graft.operators.LshIndex.drop(s, ref) // idempotent re-runs
         val docs = t(s, dir, "documents")
@@ -1296,8 +1254,7 @@ object ExtensionQueries {
     // search must be byte-identical to qe9's single-build index.
     Entry("qef_pq_compacted_index",
       (s, dir) => {
-        val tag = java.lang.Long.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL) + "f"
+        val tag = Scratch.dirTag(dir) + "f"
         val ref = graft.operators.PqIndex.Ref(tag)
         graft.operators.PqIndex.drop(s, ref) // idempotent re-runs
         val emb = t(s, dir, "embeddings")
@@ -1511,8 +1468,7 @@ object ExtensionQueries {
     // exact recall at maxDist=3 < nBlocks=4 on BOTH engines.
     Entry("qg2_simhash_index",
       (s, dir) => {
-        val tag = java.lang.Long.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL) + "sh"
+        val tag = Scratch.dirTag(dir) + "sh"
         val ref = graft.operators.SimHashIndex.Ref(tag, buckets = 8)
         graft.operators.SimHashIndex.drop(s, ref) // idempotent re-runs
         val docs = t(s, dir, "documents")
@@ -1535,15 +1491,7 @@ object ExtensionQueries {
           .select(col("query_id"), col("rank"), col("nbr_id"),
             round(col("cos"), 6).as("cos_sim"))
       },
-      Some("""SELECT query_id, rank, nbr_id, cos_sim FROM (
-          SELECT q.vec_id AS query_id, c.vec_id AS nbr_id,
-            round(list_cosine_similarity(CAST(c.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])), 6) AS cos_sim,
-            row_number() OVER (PARTITION BY q.vec_id
-              ORDER BY list_cosine_similarity(CAST(c.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])) DESC,
-                       c.vec_id) AS rank
-          FROM embeddings c CROSS JOIN embeddings q
-          WHERE q.vec_id < 5 AND c.vec_id <> q.vec_id)
-        WHERE rank <= 10""")),
+      Some(OKnnBrute)),
 
     // Hard-negative mining (contrastive-training negative selection):
     // top-10 by cosine per query among corpus vectors BELOW the 0.45
@@ -1673,8 +1621,7 @@ object ExtensionQueries {
     // and rebuild CTEs.
     Entry("qfa_exact_substr_index",
       (s, dir) => {
-        val tag = java.lang.Long.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL) + "g"
+        val tag = Scratch.dirTag(dir) + "g"
         val ref = graft.operators.GramIndex.Ref(tag, buckets = 8)
         graft.operators.GramIndex.drop(s, ref) // idempotent re-runs
         val docs = t(s, dir, "documents")
@@ -1695,8 +1642,7 @@ object ExtensionQueries {
     // qfa's verbatim.
     Entry("qfb_gram_compacted_index",
       (s, dir) => {
-        val tag = java.lang.Long.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL) + "gc"
+        val tag = Scratch.dirTag(dir) + "gc"
         val ref = graft.operators.GramIndex.Ref(tag, buckets = 8)
         graft.operators.GramIndex.drop(s, ref) // idempotent re-runs
         val docs = t(s, dir, "documents")
@@ -2106,8 +2052,7 @@ object ExtensionQueries {
     Entry("qe3_ivf_persistent_index",
       (s, dir) => {
         import org.apache.spark.sql.expressions.Window
-        val tag = java.lang.Long.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL) + "v"
+        val tag = Scratch.dirTag(dir) + "v"
         val ref = graft.operators.IvfIndex.Ref(tag)
         graft.operators.IvfIndex.drop(s, ref) // idempotent re-runs
         val emb = t(s, dir, "embeddings")
@@ -2391,15 +2336,7 @@ object ExtensionQueries {
           .select(col("query_id"), col("rank"), col("nbr_id"),
             round(col("cos"), 6).as("cos_sim"))
       },
-      Some("""SELECT query_id, rank, nbr_id, cos_sim FROM (
-          SELECT q.vec_id AS query_id, c.vec_id AS nbr_id,
-            round(list_cosine_similarity(CAST(c.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])), 6) AS cos_sim,
-            row_number() OVER (PARTITION BY q.vec_id
-              ORDER BY list_cosine_similarity(CAST(c.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])) DESC,
-                       c.vec_id) AS rank
-          FROM embeddings c CROSS JOIN embeddings q
-          WHERE q.vec_id < 5 AND c.vec_id <> q.vec_id)
-        WHERE rank <= 10""")),
+      Some(OKnnBrute)),
 
     // WARNING — all-pairs O(n²) theta join (BroadcastNestedLoopJoin): this
     // is the exact VERIFICATION regime, kept because its oracle is the
@@ -2660,8 +2597,7 @@ object ExtensionQueries {
     * regenerated fixture rebuild rather than serve stale cells. */
   private[queries] def pqIndexFor(s: SparkSession, dir: String): graft.operators.PqIndex.Ref = {
     val mt = new java.io.File(graft.Tables.path(dir, "embeddings")).lastModified()
-    val tag = java.lang.Long.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(s"$dir:$mt").toLong & 0xffffffffL) + "q"
+    val tag = Scratch.dirTag(s"$dir:$mt") + "q"
     val ref = graft.operators.PqIndex.Ref(tag)
     val codes = new java.io.File(s.conf.get("spark.sql.warehouse.dir")
       .stripPrefix("file:"), s"${ref.dirName}/codes")

@@ -103,6 +103,17 @@ object GraphQueries {
                FROM edges e1 JOIN edges e2 ON e1.dst = e2.dst AND e1.src < e2.src
                GROUP BY 1, 2 HAVING count(*) >= 2)"""
 
+  /** qa1's oracle, shared by the streaming fixpoint qeb. */
+  private lazy val OConnectedComponents: String =
+    s"""WITH RECURSIVE edges AS ($OEdges),
+        uedges AS (SELECT src AS a, dst AS b FROM edges UNION SELECT dst, src FROM edges),
+        nodes AS (SELECT DISTINCT a AS node FROM uedges),
+        reach(node, lbl) AS (
+          SELECT node, node FROM nodes
+          UNION
+          SELECT e.b, r.lbl FROM reach r JOIN uedges e ON e.a = r.node)
+        SELECT node, min(lbl) AS component FROM reach GROUP BY node"""
+
   def entries: Seq[Entry] = Seq(
 
     Entry("qa0_graph_degrees",
@@ -118,14 +129,7 @@ object GraphQueries {
 
     Entry("qa1_graph_cc",
       (s, dir) => GraphOps.connectedComponents(sparseEdges(s, dir)),
-      Some(s"""WITH RECURSIVE edges AS ($OEdges),
-        uedges AS (SELECT src AS a, dst AS b FROM edges UNION SELECT dst, src FROM edges),
-        nodes AS (SELECT DISTINCT a AS node FROM uedges),
-        reach(node, lbl) AS (
-          SELECT node, node FROM nodes
-          UNION
-          SELECT e.b, r.lbl FROM reach r JOIN uedges e ON e.a = r.node)
-        SELECT node, min(lbl) AS component FROM reach GROUP BY node""")),
+      Some(OConnectedComponents)),
 
     Entry("qa2_graph_pagerank",
       (s, dir) => GraphOps.pageRankScaled(sparseEdges(s, dir), iters = 10),
@@ -247,14 +251,7 @@ object GraphQueries {
         graft.streaming.IterateStream.connectedComponentsStream(
           GraphOps.undirected(sparseEdges(s, dir)), work)
       },
-      Some(s"""WITH RECURSIVE edges AS ($OEdges),
-        uedges AS (SELECT src AS a, dst AS b FROM edges UNION SELECT dst, src FROM edges),
-        nodes AS (SELECT DISTINCT a AS node FROM uedges),
-        reach(node, lbl) AS (
-          SELECT node, node FROM nodes
-          UNION
-          SELECT e.b, r.lbl FROM reach r JOIN uedges e ON e.a = r.node)
-        SELECT node, min(lbl) AS component FROM reach GROUP BY node"""),
+      Some(OConnectedComponents),
       prepare = Some((s, dir) => sparseEdges(s, dir))),
 
     // STREAMING-ITERATION PAGERANK — the BULK-SYNCHRONOUS loop style

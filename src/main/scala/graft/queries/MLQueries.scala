@@ -238,7 +238,7 @@ object MLQueries {
         t(s, dir, "embeddings"), "vec_id", "embedding",
         k = 8, iters = 1, perCell = 10),
       Some {
-        val uh = s"""(CAST(${ExtensionQueries.oFnv("(CAST(id AS VARCHAR) || ':diverse')")}
+        val uh = s"""(CAST(${QueryUtil.oFnv("(CAST(id AS VARCHAR) || ':diverse')")}
            // 2048::HUGEINT AS DOUBLE) / 9007199254740992.0)"""
         s"""WITH ${kMeansCtes(k = 8, iters = 1)},
         u AS (SELECT id, cell_id, $uh AS uhash FROM a2),

@@ -22,6 +22,39 @@ object MiscQueries {
       (s, dir) => { graft.Tables.registerAll(s, dir); s.sql(sql) },
       Some(sql))
 
+  /** qe5's oracle, shared by the resize kernel's gate qe7. */
+  private lazy val OImageResize: String =
+    """WITH d AS (
+          SELECT doc_id, 4 + doc_id % 5 AS w, 3 + doc_id % 4 AS h FROM documents
+        ), px AS (
+          SELECT doc_id,
+            ((ty.y * 4 + tx.x) * 3 + tc.c) AS dpos,
+            (doc_id + 3 * ((tx.x * w) // 4) + 5 * ((ty.y * h) // 3)
+              + 11 * (2 - tc.c)) % 256 AS v
+          FROM d
+          CROSS JOIN UNNEST(generate_series(0, 3)) AS tx(x)
+          CROSS JOIN UNNEST(generate_series(0, 2)) AS ty(y)
+          CROSS JOIN UNNEST(generate_series(0, 2)) AS tc(c)
+        )
+        SELECT doc_id, CAST(sum(v) AS BIGINT) AS r_sum,
+          CAST(sum(v * (dpos + 1)) AS BIGINT) AS r_chk
+        FROM px GROUP BY doc_id"""
+
+  /** qh5's oracle, shared by the video sibling qh7. */
+  private lazy val OMediaNearDupSelect: String =
+    s"""${plantedPairCtes(nbits = 63)},
+        pr AS (
+          SELECT c.old_id AS id1, c.new_id AS id2
+          FROM cand c JOIN hsh h1 ON h1.doc_id = c.old_id
+            JOIN hsh h2 ON h2.doc_id = c.new_id
+          WHERE bit_count(xor(h1.h, h2.h)) <= 3
+        )
+        SELECT d.doc_id,
+          CAST(coalesce(min(p.id1), d.doc_id) AS BIGINT) AS rep_id,
+          (coalesce(min(p.id1), d.doc_id) = d.doc_id) AS is_kept
+        FROM documents d LEFT JOIN pr p ON p.id2 = d.doc_id
+        GROUP BY d.doc_id"""
+
   def entries: Seq[Entry] = Seq(
 
     // Skew-salted join in the gate: orders (skewed toward repeat customers)
@@ -343,21 +376,7 @@ object MiscQueries {
             .cast("long").as("doc_id"),
           r.getField("sum").as("r_sum"), r.getField("chk").as("r_chk"))
       },
-      Some("""WITH d AS (
-          SELECT doc_id, 4 + doc_id % 5 AS w, 3 + doc_id % 4 AS h FROM documents
-        ), px AS (
-          SELECT doc_id,
-            ((ty.y * 4 + tx.x) * 3 + tc.c) AS dpos,
-            (doc_id + 3 * ((tx.x * w) // 4) + 5 * ((ty.y * h) // 3)
-              + 11 * (2 - tc.c)) % 256 AS v
-          FROM d
-          CROSS JOIN UNNEST(generate_series(0, 3)) AS tx(x)
-          CROSS JOIN UNNEST(generate_series(0, 2)) AS ty(y)
-          CROSS JOIN UNNEST(generate_series(0, 2)) AS tc(c)
-        )
-        SELECT doc_id, CAST(sum(v) AS BIGINT) AS r_sum,
-          CAST(sum(v * (dpos + 1)) AS BIGINT) AS r_chk
-        FROM px GROUP BY doc_id""")),
+      Some(OImageResize)),
 
     // The PRODUCTION resize kernel through the same gate: resizeNearest
     // (partition-local byte-array kernel, the one a 100-TB pipeline runs)
@@ -376,21 +395,7 @@ object MiscQueries {
             .cast("long").as("doc_id"),
           r.getField("sum").as("r_sum"), r.getField("chk").as("r_chk"))
       },
-      Some("""WITH d AS (
-          SELECT doc_id, 4 + doc_id % 5 AS w, 3 + doc_id % 4 AS h FROM documents
-        ), px AS (
-          SELECT doc_id,
-            ((ty.y * 4 + tx.x) * 3 + tc.c) AS dpos,
-            (doc_id + 3 * ((tx.x * w) // 4) + 5 * ((ty.y * h) // 3)
-              + 11 * (2 - tc.c)) % 256 AS v
-          FROM d
-          CROSS JOIN UNNEST(generate_series(0, 3)) AS tx(x)
-          CROSS JOIN UNNEST(generate_series(0, 2)) AS ty(y)
-          CROSS JOIN UNNEST(generate_series(0, 2)) AS tc(c)
-        )
-        SELECT doc_id, CAST(sum(v) AS BIGINT) AS r_sum,
-          CAST(sum(v * (dpos + 1)) AS BIGINT) AS r_chk
-        FROM px GROUP BY doc_id""")),
+      Some(OImageResize)),
 
     // Image FEATURE-EXTRACT through the gate: per-CHANNEL byte sums and
     // maxima over the decoded BGR planes (the statistics a
@@ -538,8 +543,7 @@ object MiscQueries {
     Entry("qh0_image_neardup_index",
       (s, dir) => {
         val imgDir = plantedPngDir(s, dir)
-        val tag = java.lang.Long.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL) + "ind"
+        val tag = Scratch.dirTag(dir) + "ind"
         val ref = graft.operators.SimHashIndex.Ref(tag, buckets = 8)
         graft.operators.SimHashIndex.drop(s, ref) // idempotent re-runs
         // the PRODUCTION kernel (dHash64Kernel ≡ the builtin device,
@@ -568,8 +572,7 @@ object MiscQueries {
     Entry("qh1_audio_neardup_index",
       (s, dir) => {
         val wavDir = plantedWavDir(s, dir)
-        val tag = java.lang.Long.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL) + "and"
+        val tag = Scratch.dirTag(dir) + "and"
         val ref = graft.operators.SimHashIndex.Ref(tag, buckets = 8)
         graft.operators.SimHashIndex.drop(s, ref) // idempotent re-runs
         val fp = graft.sources.Audio.fingerprint64(
@@ -596,8 +599,7 @@ object MiscQueries {
     Entry("qh8_video_neardup_index",
       (s, dir) => {
         val mp4Dir = plantedMp4Dir(s, dir)
-        val tag = java.lang.Long.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL) + "vnd"
+        val tag = Scratch.dirTag(dir) + "vnd"
         val ref = graft.operators.SimHashIndex.Ref(tag, buckets = 8)
         graft.operators.SimHashIndex.drop(s, ref) // idempotent re-runs
         val fp = graft.sources.Video.sizeFingerprint64(
@@ -627,8 +629,7 @@ object MiscQueries {
     Entry("qhf_media_decontam",
       (s, dir) => {
         val imgDir = plantedPngDir(s, dir)
-        val tag = java.lang.Long.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL) + "dcn"
+        val tag = Scratch.dirTag(dir) + "dcn"
         val ref = graft.operators.SimHashIndex.Ref(tag, buckets = 8)
         graft.operators.SimHashIndex.drop(s, ref) // idempotent re-runs
         val hashed = graft.sources.Images.dHash64Kernel(
@@ -777,18 +778,7 @@ object MiscQueries {
           fp, "doc_id", "fingerprint", maxDist = 3)
         graft.operators.Dedup.keepRepresentatives(fp, "doc_id", pairs)
       },
-      Some(s"""${plantedPairCtes(nbits = 63)},
-        pr AS (
-          SELECT c.old_id AS id1, c.new_id AS id2
-          FROM cand c JOIN hsh h1 ON h1.doc_id = c.old_id
-            JOIN hsh h2 ON h2.doc_id = c.new_id
-          WHERE bit_count(xor(h1.h, h2.h)) <= 3
-        )
-        SELECT d.doc_id,
-          CAST(coalesce(min(p.id1), d.doc_id) AS BIGINT) AS rep_id,
-          (coalesce(min(p.id1), d.doc_id) = d.doc_id) AS is_kept
-        FROM documents d LEFT JOIN pr p ON p.id2 = d.doc_id
-        GROUP BY d.doc_id""")),
+      Some(OMediaNearDupSelect)),
 
     // Audio sibling of qh3: decode → 64-window energy-gradient
     // fingerprint → banded Hamming pairs → min-id keep-first. Same
@@ -805,18 +795,7 @@ object MiscQueries {
           fp, "doc_id", "fingerprint", maxDist = 3)
         graft.operators.Dedup.keepRepresentatives(fp, "doc_id", pairs)
       },
-      Some(s"""${plantedPairCtes(nbits = 63)},
-        pr AS (
-          SELECT c.old_id AS id1, c.new_id AS id2
-          FROM cand c JOIN hsh h1 ON h1.doc_id = c.old_id
-            JOIN hsh h2 ON h2.doc_id = c.new_id
-          WHERE bit_count(xor(h1.h, h2.h)) <= 3
-        )
-        SELECT d.doc_id,
-          CAST(coalesce(min(p.id1), d.doc_id) AS BIGINT) AS rep_id,
-          (coalesce(min(p.id1), d.doc_id) = d.doc_id) AS is_kept
-        FROM documents d LEFT JOIN pr p ON p.id2 = d.doc_id
-        GROUP BY d.doc_id""")),
+      Some(OMediaNearDupSelect)),
 
     // REAL audio decode through the gate — the WAV sibling of qdf: a
     // deterministic mono 16-bit PCM WAV per document, scanned with Spark's
@@ -986,34 +965,22 @@ object MiscQueries {
   )
 
   /** documents → deterministic MP4 directory (same discipline as
-    * [[pngDirFromDocuments]]). */
-  private def mp4DirFromDocuments(s: SparkSession, dir: String): String = {
-    val srcMtime = new java.io.File(Tables.path(dir, "documents")).lastModified()
-    val key = java.lang.Long.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL) + s"_$srcMtime"
-    // fixture layout version in the key: a writeMp4 change (e.g. the v2
-    // stbl sample tables) must invalidate fixtures cached by older builds
-    val mp4Dir = new java.io.File(
-      s"/tmp/graft_mp4v${graft.sources.Video.FixtureVersion}_docs_$key")
-    graft.sources.AtomicPublish.once(mp4Dir) { staging =>
+    * [[pngDirFromDocuments]]). The fixture layout version rides the name:
+    * a writeMp4 change (e.g. the v2 stbl sample tables) must invalidate
+    * fixtures cached by older builds. */
+  private def mp4DirFromDocuments(s: SparkSession, dir: String): String =
+    Scratch.derived(dir, "documents",
+        s"mp4v${graft.sources.Video.FixtureVersion}_docs") { staging =>
       graft.sources.Video.mp4sFromDocIds(
         t(s, dir, "documents"), "doc_id", staging.getPath)
     }
-  }
 
-  /** documents → deterministic WAV directory (same discipline as
-    * [[pngDirFromDocuments]]). */
   /** Materialize-once planted fixture dirs (same staging/atomic-move
     * discipline as [[pngDirFromDocuments]]). */
   private def plantedDir(s: SparkSession, dir: String, kind: String)
-                        (gen: (org.apache.spark.sql.DataFrame, String) => Unit): String = {
-    val srcMtime = new java.io.File(Tables.path(dir, "documents")).lastModified()
-    val key = java.lang.Long.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL) + s"_$srcMtime"
-    val out = new java.io.File(s"/tmp/graft_${kind}_planted_$key")
-    graft.sources.AtomicPublish.once(out)(staging =>
+                        (gen: (org.apache.spark.sql.DataFrame, String) => Unit): String =
+    Scratch.derived(dir, "documents", s"${kind}_planted")(staging =>
       gen(t(s, dir, "documents"), staging.getPath))
-  }
 
   /** Candidate (image, caption) pairs for the cross-modal gates
     * (qha/qhb), composed from the embeddings fixture under a planted
@@ -1053,15 +1020,10 @@ object MiscQueries {
     * stale materialized fixture against a new oracle (the trap
     * Video.FixtureVersion closes for the MP4 fixture). */
   private[queries] val XModalFixtureVersion = 1
-  private[queries] def crossModalPairsDir(s: SparkSession, dir: String): String = {
-    val srcMtime = new java.io.File(Tables.path(dir, "embeddings")).lastModified()
-    val key = java.lang.Long.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL) + s"_$srcMtime"
-    val out = new java.io.File(
-      s"/tmp/graft_xmodal_pairs_v${XModalFixtureVersion}_$key")
-    graft.sources.AtomicPublish.once(out, preCreate = false)(staging =>
+  private[queries] def crossModalPairsDir(s: SparkSession, dir: String): String =
+    Scratch.derived(dir, "embeddings", s"xmodal_pairs_v$XModalFixtureVersion",
+        preCreate = false)(staging =>
       crossModalCandidates(s, dir).write.parquet(staging.getPath))
-  }
 
   /** DuckDB replay of [[crossModalCandidates]] + the rounded cosine —
     * shared CTE prefix of the qha/qhb oracles. Literal casts mirror the
@@ -1177,28 +1139,20 @@ object MiscQueries {
         JOIN hsh h2 ON h2.doc_id = c.new_id
       WHERE bit_count(xor(h1.h, h2.h)) <= 3"""
 
-  private def wavDirFromDocuments(s: SparkSession, dir: String): String = {
-    val srcMtime = new java.io.File(Tables.path(dir, "documents")).lastModified()
-    val key = java.lang.Long.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL) + s"_$srcMtime"
-    val wavDir = new java.io.File(s"/tmp/graft_wav_docs_$key")
-    graft.sources.AtomicPublish.once(wavDir) { staging =>
+  /** documents → deterministic WAV directory (same discipline as
+    * [[pngDirFromDocuments]]). */
+  private def wavDirFromDocuments(s: SparkSession, dir: String): String =
+    Scratch.derived(dir, "documents", "wav_docs") { staging =>
       graft.sources.Audio.wavsFromDocIds(
         t(s, dir, "documents"), "doc_id", staging.getPath)
     }
-  }
 
   /** documents → deterministic PNG directory (cached per source mtime,
     * the kafkaTopicFromEvents discipline): one doc_<id>.png per document,
     * generated partition-local via ImageIO, atomic-move publish. */
-  private def pngDirFromDocuments(s: SparkSession, dir: String): String = {
-    val srcMtime = new java.io.File(Tables.path(dir, "documents")).lastModified()
-    val key = java.lang.Long.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL) + s"_$srcMtime"
-    val pngDir = new java.io.File(s"/tmp/graft_png_docs_$key")
-    graft.sources.AtomicPublish.once(pngDir) { staging =>
+  private def pngDirFromDocuments(s: SparkSession, dir: String): String =
+    Scratch.derived(dir, "documents", "png_docs") { staging =>
       graft.sources.Images.pngsFromDocIds(
         t(s, dir, "documents"), "doc_id", staging.getPath)
     }
-  }
 }

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.TextFunctions
+import graft.queries.QueryUtil.{OTOKS, oFnv, oSigned}
 import graft.operators.{AsOfJoin, BloomPrune, DataSelection, Dedup, ML, Partitioning, RangeJoin, Sampling, TextPipeline}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -231,7 +232,7 @@ object PipelineQueries {
   }
 
   /** DuckDB replay of the qe2 classifier pipeline: hashed-bucket features
-    * via [[ExtensionQueries.oFnv]] (unsigned mod 8 == the Spark side's
+    * via [[QueryUtil.oFnv]] (unsigned mod 8 == the Spark side's
     * signed pmod — 8 divides 2^64), then the qbv Pegasos machinery
     * widened to 9 features and 3 rounds, then per-doc margins. */
   private lazy val OQualityClassifier: String = {
@@ -264,7 +265,7 @@ object PipelineQueries {
           string_split_regex(lower(text), '\\s+'), x -> x <> '')) AS tok
         FROM documents
       ), bk AS (
-        SELECT doc_id, CAST(${ExtensionQueries.oFnv("tok")} % 8 AS BIGINT) AS bkt
+        SELECT doc_id, CAST(${QueryUtil.oFnv("tok")} % 8 AS BIGINT) AS bkt
         FROM toks
       ), fb AS (
         SELECT doc_id, $bucketCounts FROM bk GROUP BY doc_id
@@ -1387,8 +1388,6 @@ object PipelineQueries {
           CAST(row_number() OVER (ORDER BY vt, lang, rk) - 1 AS BIGINT) AS pos
         FROM v"""
 
-  private[queries] val OTOKS = "list_filter(string_split_regex(text, '\\s+'), x -> x <> '')"
-
   /** qeg's Spark-side SQL, exposed so DedupSpec can differential-fuzz it
     * against the Column-API pipeline over a `documents` temp view. Reads
     * table `documents(doc_id, text)`; parameters match
@@ -1450,22 +1449,6 @@ object PipelineQueries {
       HAVING max(p1) - min(p1) + 8 >= 12
     )"""
 
-  /** Oracle fragment: FNV-1a 64 over an ASCII string expression `in`, as an
-    * unsigned HUGEINT — mirrors graft.functions.Fnv1a64Expr bit-for-bit
-    * (same construction as ExtensionQueries' fingerprint oracle). */
-  private def oFnv(in: String): String =
-    s"""list_reduce(list_prepend(14695981039346656037::HUGEINT,
-       list_transform(range(1, length($in) + 1), i -> CAST(ascii($in[i]) AS HUGEINT))),
-       (acc, b) -> (((acc - (acc % 256)) +
-         CAST(xor(CAST(acc % 256 AS BIGINT), CAST(b AS BIGINT)) AS HUGEINT))
-         * 1099511628211::HUGEINT) % 18446744073709551616::HUGEINT)"""
-
-  /** Oracle fragment: unsigned-64 HUGEINT `h` as signed BIGINT (two's
-    * complement), matching a JVM Long. */
-  private def oSigned(h: String): String =
-    s"""CAST(CASE WHEN $h >= 9223372036854775808::HUGEINT
-       THEN $h - 18446744073709551616::HUGEINT ELSE $h END AS BIGINT)"""
-
   /** Oracle fragment: Sampling.unitHash replayed — (fnv >>> 11) / 2^53. */
   private[queries] def oUnitHash(idExpr: String, salt: String): String =
     s"""(CAST(${oFnv(s"(CAST($idExpr AS VARCHAR) || ':$salt')")} // 2048::HUGEINT AS DOUBLE)
@@ -1473,6 +1456,139 @@ object PipelineQueries {
 
   private val DayUs = 86400000000L
   private val FiveMinUs = 300000000L
+
+  /** qf8's oracle, shared by its stream face qfc (perfbench fingerprints
+    * this text: keep it byte-identical). */
+  private[queries] lazy val OExactSubstrDedup: String =
+    """WITH g AS (
+          SELECT doc_id, i - 1 AS pos, substring(text, i, 40) AS gram
+          FROM documents
+          CROSS JOIN UNNEST(generate_series(1, len(text) - 39)) AS u(i)
+          WHERE len(text) >= 40
+        ), dup AS (
+          SELECT gram FROM g GROUP BY gram HAVING count(*) >= 2
+        ), iv AS (
+          SELECT doc_id, pos AS s, pos + 40 AS e FROM g
+          WHERE gram IN (SELECT gram FROM dup)
+        ), brk AS (
+          SELECT doc_id, s, e,
+            CASE WHEN s > coalesce(max(e) OVER (PARTITION BY doc_id
+              ORDER BY s, e ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+              -1) THEN 1 ELSE 0 END AS b
+          FROM iv
+        ), grps AS (
+          SELECT doc_id, s, e,
+            sum(b) OVER (PARTITION BY doc_id ORDER BY s, e) AS grp
+          FROM brk
+        ), mi AS (
+          SELECT doc_id, grp, min(s) AS s, max(e) AS e FROM grps GROUP BY 1, 2
+        ), seg AS (
+          SELECT doc_id,
+            coalesce(lag(e) OVER (PARTITION BY doc_id ORDER BY s), 0) AS gs,
+            s AS ge
+          FROM mi
+          UNION ALL
+          SELECT doc_id, max(e) AS gs, NULL AS ge FROM mi GROUP BY doc_id
+        ), rec AS (
+          SELECT d.doc_id,
+            string_agg(substring(d.text, seg.gs + 1,
+              coalesce(seg.ge, len(d.text)) - seg.gs), '' ORDER BY seg.gs)
+              AS ct
+          FROM documents d JOIN seg ON d.doc_id = seg.doc_id
+          GROUP BY d.doc_id
+        ), agg AS (
+          SELECT doc_id, CAST(count(*) AS BIGINT) AS n_spans,
+            CAST(sum(e - s) AS BIGINT) AS n_removed
+          FROM mi GROUP BY 1
+        )
+        SELECT d.doc_id, coalesce(rec.ct, d.text) AS clean_text,
+          coalesce(agg.n_spans, CAST(0 AS BIGINT)) AS n_spans,
+          coalesce(agg.n_removed, CAST(0 AS BIGINT)) AS n_removed
+        FROM documents d
+        LEFT JOIN rec USING (doc_id)
+        LEFT JOIN agg USING (doc_id)"""
+
+  /** qf6's oracle, shared by its stream face qfr. */
+  private[queries] lazy val OCompetenceCurriculum: String =
+    s"""WITH nn AS (
+          SELECT doc_id, CAST(len($OTOKS) AS BIGINT) AS n_toks FROM documents
+        ), r AS (
+          SELECT doc_id, n_toks,
+            CAST(row_number() OVER (ORDER BY n_toks, doc_id) AS BIGINT) AS rank,
+            CAST(count(*) OVER () AS BIGINT) AS n
+          FROM nn
+        )
+        SELECT doc_id, n_toks, rank,
+          (rank * rank * 1000 + n * n - 1) // (n * n) AS first_step
+        FROM r"""
+
+  /** qep's oracle, shared by its stream face qer. */
+  private[queries] lazy val OChunkDedup: String =
+    s"""WITH toks AS (
+          SELECT doc_id, $OTOKS AS w FROM documents
+        ), n AS (
+          SELECT doc_id, w, len(w) AS n FROM toks
+        ), c AS (
+          SELECT doc_id, w, unnest(range(CAST(CASE WHEN n > 0
+            THEN ceil(n / 8.0) ELSE 0 END AS BIGINT))) AS ci
+          FROM n
+        ), ch AS (
+          SELECT doc_id, ci, array_to_string(w[ci*8 + 1 : ci*8 + 8], ' ') AS ct
+          FROM c
+        ), r AS (
+          SELECT doc_id, ci, ct,
+            row_number() OVER (PARTITION BY ct ORDER BY doc_id, ci) AS rn
+          FROM ch
+        ), nch AS (
+          SELECT doc_id, CAST(count(*) AS BIGINT) AS n_chunks FROM ch GROUP BY 1
+        )
+        SELECT r.doc_id, nch.n_chunks, CAST(count(*) AS BIGINT) AS n_kept,
+          string_agg(ct, ' ' ORDER BY ci) AS text_dedup
+        FROM r JOIN nch USING (doc_id) WHERE rn = 1
+        GROUP BY 1, 2"""
+
+  /** qf4's oracle, shared by its stream face qfi. */
+  private[queries] lazy val OMixtureTopup: String =
+    s"""WITH RECURSIVE base AS (
+          SELECT lang,
+            count(*) FILTER (WHERE doc_id % 3 != 0) AS cur,
+            count(*) FILTER (WHERE doc_id % 3 = 0) AS n_avail
+          FROM documents GROUP BY 1
+        ), caps AS (
+          SELECT lang,
+            CAST(least(greatest(600 - cur, 0), n_avail) AS BIGINT) AS cap,
+            CAST(row_number() OVER (ORDER BY
+              least(greatest(600 - cur, 0), n_avail), lang) AS BIGINT) AS rn,
+            CAST(count(*) OVER () AS BIGINT) AS gcnt
+          FROM base
+        ), wf AS (
+          SELECT CAST(0 AS BIGINT) AS i, CAST(400 AS BIGINT) AS rem,
+            CAST(NULL AS VARCHAR) AS lang, CAST(NULL AS BIGINT) AS admit
+          UNION ALL
+          SELECT c.rn, wf.rem - least(c.cap, wf.rem // (c.gcnt - wf.i)),
+            c.lang, least(c.cap, wf.rem // (c.gcnt - wf.i))
+          FROM wf JOIN caps c ON c.rn = wf.i + 1
+        ), a AS (
+          SELECT lang, admit FROM wf WHERE lang IS NOT NULL
+        ), r AS (
+          SELECT doc_id, lang, CAST(row_number() OVER (PARTITION BY lang
+            ORDER BY ${oUnitHash("doc_id", "topup")}, doc_id) AS BIGINT) AS rk
+          FROM documents WHERE doc_id % 3 = 0
+        )
+        SELECT doc_id, lang, rk FROM r JOIN a USING (lang)
+        WHERE rk <= admit"""
+
+  /** qd0's oracle, shared by its stream face qet. */
+  private[queries] lazy val OPrioritySample: String =
+    s"""WITH u AS (
+          SELECT doc_id, n_chars,
+            ${oUnitHash("doc_id", "priority")} AS u FROM documents
+        )
+        SELECT doc_id, n_chars,
+          CAST(n_chars AS DOUBLE) /
+            (CASE WHEN u = 0.0 THEN 1.0 / 9007199254740992.0 ELSE u END)
+            AS priority
+        FROM u ORDER BY priority DESC, doc_id LIMIT 100"""
 
   def entries: Seq[Entry] = Seq(
 
@@ -2322,15 +2438,7 @@ object PipelineQueries {
       (s, dir) => Sampling.prioritySample(t(s, dir, "documents"),
           "doc_id", "n_chars", k = 100)
         .select("doc_id", "n_chars", "priority"),
-      Some(s"""WITH u AS (
-          SELECT doc_id, n_chars,
-            ${oUnitHash("doc_id", "priority")} AS u FROM documents
-        )
-        SELECT doc_id, n_chars,
-          CAST(n_chars AS DOUBLE) /
-            (CASE WHEN u = 0.0 THEN 1.0 / 9007199254740992.0 ELSE u END)
-            AS priority
-        FROM u ORDER BY priority DESC, doc_id LIMIT 100""")),
+      Some(OPrioritySample)),
 
     // Corpus-frequency boilerplate removal (CCNet frequent-paragraph rule
     // at 8-token spans): spans in > 10 distinct docs vanish EVERYWHERE.
@@ -2621,24 +2729,7 @@ object PipelineQueries {
         graft.Tables.registerAll(s, dir)
         s.sql(SqlDedupPipeline)
       },
-      Some(s"""WITH toks AS (
-          SELECT doc_id, $OTOKS AS w FROM documents
-        ), sh AS (
-          SELECT DISTINCT doc_id, (w[i] || ' ' || w[i+1]) AS sh
-          FROM toks CROSS JOIN UNNEST(generate_series(1, len(w) - 1)) AS t(i)
-        ), sizes AS (
-          SELECT doc_id, count(*) AS nsh FROM sh GROUP BY doc_id
-        ), common AS (
-          SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS c
-          FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-          GROUP BY 1, 2
-        )
-        SELECT id1, id2,
-          round(CAST(c AS DOUBLE) / (s1.nsh + s2.nsh - c), 9) AS jaccard
-        FROM common
-        JOIN sizes s1 ON id1 = s1.doc_id
-        JOIN sizes s2 ON id2 = s2.doc_id
-        WHERE CAST(c AS DOUBLE) / (s1.nsh + s2.nsh - c) >= 0.5""")),
+      Some(ExtensionQueries.OMinhashPairs)),
 
     // Hybrid retrieval via reciprocal-rank fusion (Cormack & Clarke
     // SIGIR'09): fuse a lexical BM25 top-100 (qcx's ranker, ranked on the
@@ -2993,28 +3084,7 @@ object PipelineQueries {
     Entry("qep_chunk_dedup",
       (s, dir) => Dedup.dedupChunksKeepFirst(t(s, dir, "documents"),
         "doc_id", "text", chunkTokens = 8),
-      Some(s"""WITH toks AS (
-          SELECT doc_id, $OTOKS AS w FROM documents
-        ), n AS (
-          SELECT doc_id, w, len(w) AS n FROM toks
-        ), c AS (
-          SELECT doc_id, w, unnest(range(CAST(CASE WHEN n > 0
-            THEN ceil(n / 8.0) ELSE 0 END AS BIGINT))) AS ci
-          FROM n
-        ), ch AS (
-          SELECT doc_id, ci, array_to_string(w[ci*8 + 1 : ci*8 + 8], ' ') AS ct
-          FROM c
-        ), r AS (
-          SELECT doc_id, ci, ct,
-            row_number() OVER (PARTITION BY ct ORDER BY doc_id, ci) AS rn
-          FROM ch
-        ), nch AS (
-          SELECT doc_id, CAST(count(*) AS BIGINT) AS n_chunks FROM ch GROUP BY 1
-        )
-        SELECT r.doc_id, nch.n_chunks, CAST(count(*) AS BIGINT) AS n_kept,
-          string_agg(ct, ' ' ORDER BY ci) AS text_dedup
-        FROM r JOIN nch USING (doc_id) WHERE rn = 1
-        GROUP BY 1, 2""")),
+      Some(OChunkDedup)),
 
     // CONTENT-DEFINED chunking (Rabin-style CDC, LBFS SOSP 2001): a
     // boundary after char i wherever fnv(window ending at i) >>> 11
@@ -3049,8 +3119,7 @@ object PipelineQueries {
     // qfy's oracle replays the whole lifecycle verbatim.
     Entry("qg0_cdc_claim_index",
       (s, dir) => {
-        val tag = java.lang.Long.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL) + "cc"
+        val tag = Scratch.dirTag(dir) + "cc"
         val ref = graft.operators.ChunkIndex.Ref(tag, buckets = 8)
         graft.operators.ChunkIndex.drop(s, ref) // idempotent re-runs
         val docs = t(s, dir, "documents")
@@ -3280,34 +3349,7 @@ object PipelineQueries {
         Sampling.topupAdmit(delivery, "doc_id", "lang", current,
           targetPerGroup = 600L, totalBudget = 400L)
       },
-      Some(s"""WITH RECURSIVE base AS (
-          SELECT lang,
-            count(*) FILTER (WHERE doc_id % 3 != 0) AS cur,
-            count(*) FILTER (WHERE doc_id % 3 = 0) AS n_avail
-          FROM documents GROUP BY 1
-        ), caps AS (
-          SELECT lang,
-            CAST(least(greatest(600 - cur, 0), n_avail) AS BIGINT) AS cap,
-            CAST(row_number() OVER (ORDER BY
-              least(greatest(600 - cur, 0), n_avail), lang) AS BIGINT) AS rn,
-            CAST(count(*) OVER () AS BIGINT) AS gcnt
-          FROM base
-        ), wf AS (
-          SELECT CAST(0 AS BIGINT) AS i, CAST(400 AS BIGINT) AS rem,
-            CAST(NULL AS VARCHAR) AS lang, CAST(NULL AS BIGINT) AS admit
-          UNION ALL
-          SELECT c.rn, wf.rem - least(c.cap, wf.rem // (c.gcnt - wf.i)),
-            c.lang, least(c.cap, wf.rem // (c.gcnt - wf.i))
-          FROM wf JOIN caps c ON c.rn = wf.i + 1
-        ), a AS (
-          SELECT lang, admit FROM wf WHERE lang IS NOT NULL
-        ), r AS (
-          SELECT doc_id, lang, CAST(row_number() OVER (PARTITION BY lang
-            ORDER BY ${oUnitHash("doc_id", "topup")}, doc_id) AS BIGINT) AS rk
-          FROM documents WHERE doc_id % 3 = 0
-        )
-        SELECT doc_id, lang, rk FROM r JOIN a USING (lang)
-        WHERE rk <= admit""")),
+      Some(OMixtureTopup)),
 
     // Competence-based curriculum (Platanios et al. 2019): docs ranked by
     // token-count difficulty; under the sqrt competence schedule a doc at
@@ -3318,17 +3360,7 @@ object PipelineQueries {
     Entry("qf6_competence_curriculum",
       (s, dir) => Sampling.competenceCurriculum(t(s, dir, "documents"),
         "doc_id", "text", totalSteps = 1000L),
-      Some(s"""WITH nn AS (
-          SELECT doc_id, CAST(len($OTOKS) AS BIGINT) AS n_toks FROM documents
-        ), r AS (
-          SELECT doc_id, n_toks,
-            CAST(row_number() OVER (ORDER BY n_toks, doc_id) AS BIGINT) AS rank,
-            CAST(count(*) OVER () AS BIGINT) AS n
-          FROM nn
-        )
-        SELECT doc_id, n_toks, rank,
-          (rank * rank * 1000 + n * n - 1) // (n * n) AS first_step
-        FROM r""")),
+      Some(OCompetenceCurriculum)),
 
     // Sequence packing WITH doc-boundary metadata: qel's layout plus the
     // sorted pos:doc list of where each document begins inside the
@@ -3376,53 +3408,7 @@ object PipelineQueries {
     Entry("qf8_exact_substr_dedup",
       (s, dir) => Dedup.exactSubstrRemove(
         t(s, dir, "documents"), "doc_id", "text", minLen = 40),
-      Some("""WITH g AS (
-          SELECT doc_id, i - 1 AS pos, substring(text, i, 40) AS gram
-          FROM documents
-          CROSS JOIN UNNEST(generate_series(1, len(text) - 39)) AS u(i)
-          WHERE len(text) >= 40
-        ), dup AS (
-          SELECT gram FROM g GROUP BY gram HAVING count(*) >= 2
-        ), iv AS (
-          SELECT doc_id, pos AS s, pos + 40 AS e FROM g
-          WHERE gram IN (SELECT gram FROM dup)
-        ), brk AS (
-          SELECT doc_id, s, e,
-            CASE WHEN s > coalesce(max(e) OVER (PARTITION BY doc_id
-              ORDER BY s, e ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-              -1) THEN 1 ELSE 0 END AS b
-          FROM iv
-        ), grps AS (
-          SELECT doc_id, s, e,
-            sum(b) OVER (PARTITION BY doc_id ORDER BY s, e) AS grp
-          FROM brk
-        ), mi AS (
-          SELECT doc_id, grp, min(s) AS s, max(e) AS e FROM grps GROUP BY 1, 2
-        ), seg AS (
-          SELECT doc_id,
-            coalesce(lag(e) OVER (PARTITION BY doc_id ORDER BY s), 0) AS gs,
-            s AS ge
-          FROM mi
-          UNION ALL
-          SELECT doc_id, max(e) AS gs, NULL AS ge FROM mi GROUP BY doc_id
-        ), rec AS (
-          SELECT d.doc_id,
-            string_agg(substring(d.text, seg.gs + 1,
-              coalesce(seg.ge, len(d.text)) - seg.gs), '' ORDER BY seg.gs)
-              AS ct
-          FROM documents d JOIN seg ON d.doc_id = seg.doc_id
-          GROUP BY d.doc_id
-        ), agg AS (
-          SELECT doc_id, CAST(count(*) AS BIGINT) AS n_spans,
-            CAST(sum(e - s) AS BIGINT) AS n_removed
-          FROM mi GROUP BY 1
-        )
-        SELECT d.doc_id, coalesce(rec.ct, d.text) AS clean_text,
-          coalesce(agg.n_spans, CAST(0 AS BIGINT)) AS n_spans,
-          coalesce(agg.n_removed, CAST(0 AS BIGINT)) AS n_removed
-        FROM documents d
-        LEFT JOIN rec USING (doc_id)
-        LEFT JOIN agg USING (doc_id)""")),
+      Some(OExactSubstrDedup)),
 
     // Unigram-LM tokenizer training by hard EM (Kudo 2018's Viterbi
     // variant) — the THIRD published trainer beside BPE (qd4/qdd) and

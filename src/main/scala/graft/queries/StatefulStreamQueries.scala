@@ -26,9 +26,7 @@ object StatefulStreamQueries {
     import s.implicits._
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val raw = s.readStream.schema(Tables.eventsSchema(s, dir)).parquet(s"$dir/events*.parquet")
-    val withTs = Tables.normalizeTs(raw)
-    withTs.withWatermark("ts", "0 seconds")
+    Tables.stream(s, dir, "events").withWatermark("ts", "0 seconds")
       .select(col("user_id").as("key"), col("event_id").as("eventId"),
         (unix_micros(col("ts").cast("timestamp")) - tsUsShift).as("tsUs"),
         col("event_type").as("eventType"),
@@ -48,34 +46,13 @@ object StatefulStreamQueries {
     val base = graft.Tables.events(s, dir)
       .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
         col("user_id"), col("event_type"), col("value"))
-    // Cache key = hash of the full source path + the source parquet's mtime:
-    // distinct dirs never collide and a regenerated fixture (newer mtime)
-    // gets a fresh split instead of serving stale batches.
-    val srcMtime = new java.io.File(Tables.path(dir, "events")).lastModified()
-    val key = java.lang.Long.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL) +
-      s"_$srcMtime"
-    val mbDir = new java.io.File(s"/tmp/graft_mb_$key")
-    // build in a staging dir and rename into place atomically: a crash
-    // mid-split must not leave a partial cache that later runs replay as
-    // if complete (mbDir.exists() is the only completeness signal)
-    graft.sources.AtomicPublish.once(mbDir) { staging =>
+    val mbDir = Scratch.derived(dir, "events", "mb") { staging =>
       val Array(q1, q2, q3) = base.stat.approxQuantile("event_id",
         Array(0.25, 0.5, 0.75), 0.0) // event_id is ts-ordered in the fixture
-      val bounds = Seq(
+      Scratch.orderedBatches(staging, Seq(
         col("event_id") <= q1, col("event_id") > q1 && col("event_id") <= q2,
         col("event_id") > q2 && col("event_id") <= q3, col("event_id") > q3)
-      bounds.zipWithIndex.foreach { case (cond, i) =>
-        val tmp = s"${staging}/stage_$i"
-        base.filter(cond).coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        val dst = new java.io.File(staging, f"batch_$i%02d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        dst.setLastModified(1700000000000L + i * 60000L)
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-      }
+        .map(c => base.filter(c)))
     }
     val schema = base.schema
     s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
@@ -86,6 +63,15 @@ object StatefulStreamQueries {
         round(col("value") * 1000).cast("long").as("valueMillis"))
       .as[KeyedEvent]
   }
+
+  /** binaryFile's fixed source schema (a file stream requires it). */
+  private val BinaryFileSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "path STRING, modificationTime TIMESTAMP, length BIGINT, content BINARY")
+
+  /** A binaryFile stream over the `*.<ext>` files of `dir`. */
+  private def binaryFileStream(s: SparkSession, dir: String, ext: String): DataFrame =
+    s.readStream.format("binaryFile").schema(BinaryFileSchema)
+      .option("pathGlobFilter", s"*.$ext").load(dir)
 
   // shares StreamQueries.run's scoped stream-partition sizing
   private def run(df: DataFrame, name: String)(implicit s: SparkSession): DataFrame =
@@ -142,6 +128,15 @@ object StatefulStreamQueries {
           aid AS trig_id, CAST(1 AS BIGINT) AS n, vm AS sum_millis
         FROM cls WHERE cls = 'side'"""
 
+  /** q95's oracle, shared by its multi-batch replay q8d. */
+  private lazy val ORunningAgg: String =
+    """SELECT user_id AS key, event_id, epoch_us(ts) AS ts_us,
+          row_number() OVER w AS running_n,
+          CAST(sum(CAST(round(value*1000) AS BIGINT)) OVER w AS BIGINT) AS running_sum_millis
+        FROM events
+        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
+          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"""
+
   def entries: Seq[Entry] = Seq(
 
     // Streaming OVER: ROWS UNBOUNDED PRECEDING running aggregate per key,
@@ -158,12 +153,7 @@ object StatefulStreamQueries {
       // float64 ("123.0") while Spark's long prints "123" — the driver's
       // string-level hash then mismatches on equal values. Cast every
       // integer-sum output back to BIGINT (here and in all q9x oracles).
-      Some("""SELECT user_id AS key, event_id, epoch_us(ts) AS ts_us,
-          row_number() OVER w AS running_n,
-          CAST(sum(CAST(round(value*1000) AS BIGINT)) OVER w AS BIGINT) AS running_sum_millis
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)""")),
+      Some(ORunningAgg)),
 
     // Tumbling count windows of 10 rows per key; only completed windows emit.
     Entry("q96_stream_count_window",
@@ -759,12 +749,7 @@ object StatefulStreamQueries {
           .toDF("key", "event_id", "ts_us", "running_n", "running_sum_millis")
         run(out, "q8d_sink")
       },
-      Some("""SELECT user_id AS key, event_id, epoch_us(ts) AS ts_us,
-          row_number() OVER w AS running_n,
-          CAST(sum(CAST(round(value*1000) AS BIGINT)) OVER w AS BIGINT) AS running_sum_millis
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)""")),
+      Some(ORunningAgg)),
 
     // Streaming temporal (as-of) join: each view enriched with the latest
     // purchase at-or-before it — the stream-native point-in-time feature
@@ -1184,9 +1169,7 @@ object StatefulStreamQueries {
     Entry("qdi_queryable_state",
       (s, dir) => graft.streaming.QueryableState.stateFrame(s, dir)
         .orderBy("user_id"),
-      Some("""SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
-        CAST(sum(CAST(round(value*1000) AS BIGINT)) AS BIGINT) AS sum_millis
-        FROM events GROUP BY user_id ORDER BY user_id"""),
+      Some(StreamQueries.OUserEventAgg),
       prepare = Some((s, dir) => { graft.streaming.QueryableState.materialize(s, dir); () })),
 
     // Queryable state, transformWithState flavor: q95's RunningAgg holds a
@@ -1199,9 +1182,7 @@ object StatefulStreamQueries {
     Entry("qdm_tws_state_read",
       (s, dir) => graft.streaming.QueryableState.twsStateFrame(s, dir)
         .orderBy("user_id"),
-      Some("""SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
-        CAST(sum(CAST(round(value*1000) AS BIGINT)) AS BIGINT) AS sum_millis
-        FROM events GROUP BY user_id ORDER BY user_id"""),
+      Some(StreamQueries.OUserEventAgg),
       prepare = Some((s, dir) => { graft.streaming.QueryableState.materializeTws(s, dir); () })),
 
     // Ingest-time near-dup (the STREAMING face of q85): documents replayed
@@ -1221,8 +1202,7 @@ object StatefulStreamQueries {
         import sp.implicits._
         s.conf.set("spark.sql.streaming.stateStore.providerClass",
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        val schema = graft.Tables.schema(s, graft.Tables.path(dir, "documents"))
-        val raw = s.readStream.schema(schema).parquet(s"$dir/documents*.parquet")
+        val raw = Tables.stream(s, dir, "documents")
         val banded = graft.operators.Dedup
           .bandBucketsFor(raw, "doc_id", "text", n = 2, k = 128, bands = 64)
           .withColumn("ts", timestamp_micros(col("doc") * 1000000L))
@@ -1272,45 +1252,18 @@ object StatefulStreamQueries {
     // source carves micro-batches — and equal to q85's exact pair set.
     Entry("qdv_stream_persistent_index",
       (s, dir) => {
-        val tag = java.lang.Long.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL) + "s"
+        val tag = Scratch.dirTag(dir) + "s"
         val ref = graft.operators.LshIndex.Ref(tag, buckets = 8)
         graft.operators.LshIndex.drop(s, ref) // idempotent re-runs
-        val base = new java.io.File(
-          System.getProperty("java.io.tmpdir"), s"graft_qdv_$tag")
-        org.apache.commons.io.FileUtils.deleteQuietly(base)
-        val out = new java.io.File(base, "out").getAbsolutePath
-        val ckpt = new java.io.File(base, "ckpt").getAbsolutePath
-        val schema = graft.Tables.schema(s, graft.Tables.path(dir, "documents"))
-        val raw = s.readStream.schema(schema).parquet(s"$dir/documents*.parquet")
-        val q = graft.operators.LshIndex.startStreamingIngest(raw,
-          "doc_id", "text", n = 2, k = 128, bands = 64, threshold = 0.5,
-          ref, out, ckpt)
-        try { q.processAllAvailable() } finally q.stop()
-        s.read.parquet(s"$out/pairs")
+        val run = Scratch.drain("qdv")(r => graft.operators.LshIndex.startStreamingIngest(
+          Tables.stream(s, dir, "documents"), "doc_id", "text", n = 2, k = 128,
+          bands = 64, threshold = 0.5, ref, r.out, r.ckpt))
+        s.read.parquet(s"${run.out}/pairs")
           .select(least(col("old_id"), col("new_id")).as("id1"),
             greatest(col("old_id"), col("new_id")).as("id2"),
             round(col("jaccard"), 9).as("jaccard"))
       },
-      Some("""WITH toks AS (
-          SELECT doc_id, list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS w
-          FROM documents
-        ), sh AS (
-          SELECT DISTINCT doc_id, (w[i] || ' ' || w[i+1]) AS sh
-          FROM toks CROSS JOIN UNNEST(generate_series(1, len(w) - 1)) AS t(i)
-        ), sizes AS (
-          SELECT doc_id, count(*) AS nsh FROM sh GROUP BY doc_id
-        ), common AS (
-          SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS c
-          FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-          GROUP BY 1, 2
-        )
-        SELECT id1, id2,
-          round(CAST(c AS DOUBLE) / (s1.nsh + s2.nsh - c), 9) AS jaccard
-        FROM common
-        JOIN sizes s1 ON id1 = s1.doc_id
-        JOIN sizes s2 ON id2 = s2.doc_id
-        WHERE CAST(c AS DOUBLE) / (s1.nsh + s2.nsh - c) >= 0.5""")),
+      Some(ExtensionQueries.OMinhashPairs)),
 
     // Streaming ingest against the PERSISTENT gram index (operators/
     // GramIndex.startStreamingIngest — qdv's sibling for exact-substring
@@ -1325,70 +1278,16 @@ object StatefulStreamQueries {
     // by qfa and spec'd in GramIndexSpec's ledgered-stream case.
     Entry("qfc_stream_gram_index",
       (s, dir) => {
-        val tag = java.lang.Long.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL) + "gs"
+        val tag = Scratch.dirTag(dir) + "gs"
         val ref = graft.operators.GramIndex.Ref(tag, buckets = 8)
         graft.operators.GramIndex.drop(s, ref) // idempotent re-runs
-        val base = new java.io.File(
-          System.getProperty("java.io.tmpdir"), s"graft_qfc_$tag")
-        org.apache.commons.io.FileUtils.deleteQuietly(base)
-        val out = new java.io.File(base, "out").getAbsolutePath
-        val ckpt = new java.io.File(base, "ckpt").getAbsolutePath
-        val schema = graft.Tables.schema(s, graft.Tables.path(dir, "documents"))
-        val raw = s.readStream.schema(schema).parquet(s"$dir/documents*.parquet")
-        val q = graft.operators.GramIndex.startStreamingIngest(raw,
-          "doc_id", "text", minLen = 40, ref, out, ckpt)
-        try { q.processAllAvailable() } finally q.stop()
-        s.read.parquet(s"$out/clean")
+        val run = Scratch.drain("qfc")(r => graft.operators.GramIndex.startStreamingIngest(
+          Tables.stream(s, dir, "documents"), "doc_id", "text", minLen = 40, ref,
+          r.out, r.ckpt))
+        s.read.parquet(s"${run.out}/clean")
           .select("doc_id", "clean_text", "n_spans", "n_removed")
       },
-      Some("""WITH g AS (
-          SELECT doc_id, i - 1 AS pos, substring(text, i, 40) AS gram
-          FROM documents
-          CROSS JOIN UNNEST(generate_series(1, len(text) - 39)) AS u(i)
-          WHERE len(text) >= 40
-        ), dup AS (
-          SELECT gram FROM g GROUP BY gram HAVING count(*) >= 2
-        ), iv AS (
-          SELECT doc_id, pos AS s, pos + 40 AS e FROM g
-          WHERE gram IN (SELECT gram FROM dup)
-        ), brk AS (
-          SELECT doc_id, s, e,
-            CASE WHEN s > coalesce(max(e) OVER (PARTITION BY doc_id
-              ORDER BY s, e ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-              -1) THEN 1 ELSE 0 END AS b
-          FROM iv
-        ), grps AS (
-          SELECT doc_id, s, e,
-            sum(b) OVER (PARTITION BY doc_id ORDER BY s, e) AS grp
-          FROM brk
-        ), mi AS (
-          SELECT doc_id, grp, min(s) AS s, max(e) AS e FROM grps GROUP BY 1, 2
-        ), seg AS (
-          SELECT doc_id,
-            coalesce(lag(e) OVER (PARTITION BY doc_id ORDER BY s), 0) AS gs,
-            s AS ge
-          FROM mi
-          UNION ALL
-          SELECT doc_id, max(e) AS gs, NULL AS ge FROM mi GROUP BY doc_id
-        ), rec AS (
-          SELECT d.doc_id,
-            string_agg(substring(d.text, seg.gs + 1,
-              coalesce(seg.ge, len(d.text)) - seg.gs), '' ORDER BY seg.gs)
-              AS ct
-          FROM documents d JOIN seg ON d.doc_id = seg.doc_id
-          GROUP BY d.doc_id
-        ), agg AS (
-          SELECT doc_id, CAST(count(*) AS BIGINT) AS n_spans,
-            CAST(sum(e - s) AS BIGINT) AS n_removed
-          FROM mi GROUP BY 1
-        )
-        SELECT d.doc_id, coalesce(rec.ct, d.text) AS clean_text,
-          coalesce(agg.n_spans, CAST(0 AS BIGINT)) AS n_spans,
-          coalesce(agg.n_removed, CAST(0 AS BIGINT)) AS n_removed
-        FROM documents d
-        LEFT JOIN rec USING (doc_id)
-        LEFT JOIN agg USING (doc_id)""")),
+      Some(PipelineQueries.OExactSubstrDedup)),
 
     // STREAMING benchmark decontamination (operators/ContamIndex.scala —
     // the streaming face of qbf/qf5's n-gram contamination rule):
@@ -1404,16 +1303,12 @@ object StatefulStreamQueries {
     // audit plan shape are spec-pinned in ContamIndexSpec.
     Entry("qhj_stream_decontam_index",
       (s, dir) => {
-        val tag = java.lang.Long.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL) + "ci"
+        val tag = Scratch.dirTag(dir) + "ci"
         val ref = graft.operators.ContamIndex.Ref(tag, buckets = 8)
         graft.operators.ContamIndex.drop(s, ref) // idempotent re-runs
         // benchmark-delta fixture: three per-snapshot parquet dirs
-        // (mtime-keyed to the source table, atomic publish)
-        val srcMtime = new java.io.File(
-          graft.Tables.path(dir, "documents")).lastModified()
-        val fix = new java.io.File(s"/tmp/graft_benchdelta_${tag}_$srcMtime")
-        val fixPath = graft.sources.AtomicPublish.once(fix) { staging =>
+        val fixPath = Scratch.derived(dir, "documents", "benchdelta",
+            tagSuffix = "ci") { staging =>
           val bench = graft.Tables(s, dir, "documents")
             .filter(pmod(col("doc_id"), lit(50L)) === 0)
             .withColumn("snap", expr("(doc_id div 50) % 3").cast("long"))
@@ -1424,17 +1319,11 @@ object StatefulStreamQueries {
             Thread.sleep(20) // distinct mtimes -> deterministic pickup order
           }
         }
-        val base = new java.io.File(
-          System.getProperty("java.io.tmpdir"), s"graft_qhj_$tag")
-        org.apache.commons.io.FileUtils.deleteQuietly(base)
-        val out = new java.io.File(base, "out").getAbsolutePath
-        val ckpt = new java.io.File(base, "ckpt").getAbsolutePath
         val schema = s.read.parquet(s"$fixPath/snap0").schema
         val raw = s.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(s"$fixPath/snap*")
-        val q = graft.operators.ContamIndex.startStreamingIngest(raw,
-          "text", "snap", n = 3, ref, out, ckpt)
-        try { q.processAllAvailable() } finally q.stop()
+        Scratch.drain("qhj")(r => graft.operators.ContamIndex.startStreamingIngest(
+          raw, "text", "snap", n = 3, ref, r.out, r.ckpt))
         graft.operators.ContamIndex.audit(
           graft.Tables(s, dir, "documents")
             .filter(pmod(col("doc_id"), lit(50L)) =!= 0),
@@ -1472,58 +1361,18 @@ object StatefulStreamQueries {
     // spec-pinned in StreamingSampleSpec.
     Entry("qfi_stream_mixture_topup",
       (s, dir) => {
-        import s.implicits._
-        val tag = java.lang.Long.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL)
-        val base = new java.io.File(
-          System.getProperty("java.io.tmpdir"), s"graft_qfi_$tag")
-        org.apache.commons.io.FileUtils.deleteQuietly(base)
-        val stateDir = new java.io.File(base, "state").getAbsolutePath
-        val outDir = new java.io.File(base, "out").getAbsolutePath
-        val ckpt = new java.io.File(base, "ckpt").getAbsolutePath
-        val d = graft.Tables(s, dir, "documents")
-        d.filter(col("doc_id") % 3 =!= 0)
-          .groupBy(col("lang")).agg(count(lit(1)).as("n"))
-          .write.mode("overwrite").parquet(s"$stateDir/delta/batch_id=999999")
-        val schema = graft.Tables.schema(s, graft.Tables.path(dir, "documents"))
-        val raw = s.readStream.schema(schema)
-          .parquet(s"$dir/documents*.parquet")
-          .filter(col("doc_id") % 3 === 0)
-        val q = graft.streaming.StreamingTopup.startTopupIngest(raw,
-          "doc_id", "lang", targetPerGroup = 600L, totalBudget = 400L,
-          stateDir, outDir, ckpt)
-        try { q.processAllAvailable() } finally q.stop()
-        s.read.parquet(s"$outDir/admitted").select("doc_id", "lang", "rk")
+        val run = Scratch.drain("qfi") { r =>
+          graft.Tables(s, dir, "documents").filter(col("doc_id") % 3 =!= 0)
+            .groupBy(col("lang")).agg(count(lit(1)).as("n"))
+            .write.parquet(s"${r.state}/delta/batch_id=999999")
+          graft.streaming.StreamingTopup.startTopupIngest(
+            Tables.stream(s, dir, "documents").filter(col("doc_id") % 3 === 0),
+            "doc_id", "lang", targetPerGroup = 600L, totalBudget = 400L,
+            r.state, r.out, r.ckpt)
+        }
+        s.read.parquet(s"${run.out}/admitted").select("doc_id", "lang", "rk")
       },
-      Some(s"""WITH RECURSIVE base AS (
-          SELECT lang,
-            count(*) FILTER (WHERE doc_id % 3 != 0) AS cur,
-            count(*) FILTER (WHERE doc_id % 3 = 0) AS n_avail
-          FROM documents GROUP BY 1
-        ), caps AS (
-          SELECT lang,
-            CAST(least(greatest(600 - cur, 0), n_avail) AS BIGINT) AS cap,
-            CAST(row_number() OVER (ORDER BY
-              least(greatest(600 - cur, 0), n_avail), lang) AS BIGINT) AS rn,
-            CAST(count(*) OVER () AS BIGINT) AS gcnt
-          FROM base
-        ), wf AS (
-          SELECT CAST(0 AS BIGINT) AS i, CAST(400 AS BIGINT) AS rem,
-            CAST(NULL AS VARCHAR) AS lang, CAST(NULL AS BIGINT) AS admit
-          UNION ALL
-          SELECT c.rn, wf.rem - least(c.cap, wf.rem // (c.gcnt - wf.i)),
-            c.lang, least(c.cap, wf.rem // (c.gcnt - wf.i))
-          FROM wf JOIN caps c ON c.rn = wf.i + 1
-        ), a AS (
-          SELECT lang, admit FROM wf WHERE lang IS NOT NULL
-        ), r AS (
-          SELECT doc_id, lang, CAST(row_number() OVER (PARTITION BY lang
-            ORDER BY ${PipelineQueries.oUnitHash("doc_id", "topup")}, doc_id)
-            AS BIGINT) AS rk
-          FROM documents WHERE doc_id % 3 = 0
-        )
-        SELECT doc_id, lang, rk FROM r JOIN a USING (lang)
-        WHERE rk <= admit""")),
+      Some(PipelineQueries.OMixtureTopup)),
 
     // Streaming STRIDE CURRICULUM — the ordering family's ingest-time
     // face (qes's streaming sibling, the round-12 VERDICT stretch):
@@ -1537,26 +1386,15 @@ object StatefulStreamQueries {
     // and crash replay are pinned by StreamingCurriculumSpec.
     Entry("qfo_stream_stride",
       (s, dir) => {
-        val tag = java.lang.Long.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL)
-        val base = new java.io.File(
-          System.getProperty("java.io.tmpdir"), s"graft_qfo_$tag")
-        org.apache.commons.io.FileUtils.deleteQuietly(base)
-        val stateDir = new java.io.File(base, "state").getAbsolutePath
-        val outDir = new java.io.File(base, "out").getAbsolutePath
-        val ckpt = new java.io.File(base, "ckpt").getAbsolutePath
-        val d = graft.Tables(s, dir, "documents")
-        val weights = d.groupBy(col("lang")).agg(count(lit(1)).as("n"))
+        val weights = graft.Tables(s, dir, "documents")
+          .groupBy(col("lang")).agg(count(lit(1)).as("n"))
           .select(col("lang"),
             floor(sqrt(col("n").cast("double"))).cast("long").as("w"))
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        val schema = graft.Tables.schema(s, graft.Tables.path(dir, "documents"))
-        val raw = s.readStream.schema(schema)
-          .parquet(s"$dir/documents*.parquet")
-        val q = graft.streaming.StreamingCurriculum.startStrideIngest(raw,
-          "doc_id", "lang", weights, stateDir, outDir, ckpt)
-        try { q.processAllAvailable() } finally q.stop()
-        s.read.parquet(s"$outDir/ordered").select("doc_id", "lang", "rk", "vt")
+        val run = Scratch.drain("qfo")(r => graft.streaming.StreamingCurriculum
+          .startStrideIngest(Tables.stream(s, dir, "documents"), "doc_id", "lang",
+            weights, r.state, r.out, r.ckpt))
+        s.read.parquet(s"${run.out}/ordered").select("doc_id", "lang", "rk", "vt")
       },
       Some(s"""WITH c AS (
           SELECT lang, count(*) AS n FROM documents GROUP BY 1
@@ -1584,35 +1422,13 @@ object StatefulStreamQueries {
     // and crash replay are pinned by StreamingCurriculumSpec.
     Entry("qfr_stream_competence",
       (s, dir) => {
-        val tag = java.lang.Long.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL)
-        val base = new java.io.File(
-          System.getProperty("java.io.tmpdir"), s"graft_qfr_$tag")
-        org.apache.commons.io.FileUtils.deleteQuietly(base)
-        val stateDir = new java.io.File(base, "state").getAbsolutePath
-        val outDir = new java.io.File(base, "out").getAbsolutePath
-        val ckpt = new java.io.File(base, "ckpt").getAbsolutePath
-        val schema = graft.Tables.schema(s, graft.Tables.path(dir, "documents"))
-        val raw = s.readStream.schema(schema)
-          .parquet(s"$dir/documents*.parquet")
-        val q = graft.streaming.StreamingCurriculum.startCompetenceIngest(raw,
-          "doc_id", "text", totalSteps = 1000L, stateDir, outDir, ckpt)
-        try { q.processAllAvailable() } finally q.stop()
-        s.read.parquet(s"$outDir/sched")
+        val run = Scratch.drain("qfr")(r => graft.streaming.StreamingCurriculum
+          .startCompetenceIngest(Tables.stream(s, dir, "documents"), "doc_id", "text",
+            totalSteps = 1000L, r.state, r.out, r.ckpt))
+        s.read.parquet(s"${run.out}/sched")
           .select("doc_id", "n_toks", "rank", "first_step")
       },
-      Some(s"""WITH nn AS (
-          SELECT doc_id, CAST(len(${PipelineQueries.OTOKS}) AS BIGINT) AS n_toks
-          FROM documents
-        ), r AS (
-          SELECT doc_id, n_toks,
-            CAST(row_number() OVER (ORDER BY n_toks, doc_id) AS BIGINT) AS rank,
-            CAST(count(*) OVER () AS BIGINT) AS n
-          FROM nn
-        )
-        SELECT doc_id, n_toks, rank,
-          (rank * rank * 1000 + n * n - 1) // (n * n) AS first_step
-        FROM r""")),
+      Some(PipelineQueries.OCompetenceCurriculum)),
 
     // Streaming MIXTURE→CURRICULUM composition — qey's causal face
     // (round 15, the round-13 sketch landed): each delivery realizes its
@@ -1624,22 +1440,10 @@ object StatefulStreamQueries {
     // replay are pinned by StreamingRollupSpec/StreamingCurriculumSpec.
     Entry("qfu_stream_mixture_curriculum",
       (s, dir) => {
-        val tag = java.lang.Long.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL)
-        val base = new java.io.File(
-          System.getProperty("java.io.tmpdir"), s"graft_qfu_$tag")
-        org.apache.commons.io.FileUtils.deleteQuietly(base)
-        val stateDir = new java.io.File(base, "state").getAbsolutePath
-        val outDir = new java.io.File(base, "out").getAbsolutePath
-        val ckpt = new java.io.File(base, "ckpt").getAbsolutePath
-        val schema = graft.Tables.schema(s, graft.Tables.path(dir, "documents"))
-        val raw = s.readStream.schema(schema)
-          .parquet(s"$dir/documents*.parquet")
-        val q = graft.streaming.StreamingCurriculum.startMixtureCurriculumIngest(
-          raw, "doc_id", "lang", totalBudget = 900L, maxEpochs = 2L,
-          stateDir, outDir, ckpt)
-        try { q.processAllAvailable() } finally q.stop()
-        s.read.parquet(s"$outDir/epoch")
+        val run = Scratch.drain("qfu")(r => graft.streaming.StreamingCurriculum
+          .startMixtureCurriculumIngest(Tables.stream(s, dir, "documents"), "doc_id",
+            "lang", totalBudget = 900L, maxEpochs = 2L, r.state, r.out, r.ckpt))
+        s.read.parquet(s"${run.out}/epoch")
           .select("cid", "lang", "rk", "vt", "pos")
       },
       Some(PipelineQueries.OMixtureCurriculum)),
@@ -1708,8 +1512,7 @@ object StatefulStreamQueries {
         import sp.implicits._
         s.conf.set("spark.sql.streaming.stateStore.providerClass",
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        val schema = graft.Tables.schema(s, graft.Tables.path(dir, "documents"))
-        val raw = s.readStream.schema(schema).parquet(s"$dir/documents*.parquet")
+        val raw = Tables.stream(s, dir, "documents")
         val docs = raw
           .withColumn("ts", timestamp_micros(col("doc_id") * 1000000L))
           .withWatermark("ts", "0 seconds")
@@ -1763,8 +1566,7 @@ object StatefulStreamQueries {
         import sp.implicits._
         s.conf.set("spark.sql.streaming.stateStore.providerClass",
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        val schema = graft.Tables.schema(s, graft.Tables.path(dir, "documents"))
-        val raw = s.readStream.schema(schema).parquet(s"$dir/documents*.parquet")
+        val raw = Tables.stream(s, dir, "documents")
         val chunks = graft.operators.TextPipeline
           .chunk(raw, "doc_id", "text", chunkSize = 8, overlap = 0)
           .withColumn("ts", timestamp_micros(col("doc_id") * 1000000L))
@@ -1789,30 +1591,7 @@ object StatefulStreamQueries {
           .join(totals, Seq("doc_id"))
           .select(col("doc_id"), col("n_chunks"), col("n_kept"), col("text_dedup"))
       },
-      Some("""WITH toks AS (
-          SELECT doc_id,
-            list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS w
-          FROM documents
-        ), n AS (
-          SELECT doc_id, w, len(w) AS n FROM toks
-        ), c AS (
-          SELECT doc_id, w, unnest(range(CAST(CASE WHEN n > 0
-            THEN ceil(n / 8.0) ELSE 0 END AS BIGINT))) AS ci
-          FROM n
-        ), ch AS (
-          SELECT doc_id, ci, array_to_string(w[ci*8 + 1 : ci*8 + 8], ' ') AS ct
-          FROM c
-        ), r AS (
-          SELECT doc_id, ci, ct,
-            row_number() OVER (PARTITION BY ct ORDER BY doc_id, ci) AS rn
-          FROM ch
-        ), nch AS (
-          SELECT doc_id, CAST(count(*) AS BIGINT) AS n_chunks FROM ch GROUP BY 1
-        )
-        SELECT r.doc_id, nch.n_chunks, CAST(count(*) AS BIGINT) AS n_kept,
-          string_agg(ct, ' ' ORDER BY ci) AS text_dedup
-        FROM r JOIN nch USING (doc_id) WHERE rn = 1
-        GROUP BY 1, 2""")),
+      Some(PipelineQueries.OChunkDedup)),
 
     // Ingest-time CDC-chunk dedup — qfy's streaming face (and qer's CDC
     // sibling): content-defined chunks stream keyed by fingerprint, the
@@ -1827,8 +1606,7 @@ object StatefulStreamQueries {
         import sp.implicits._
         s.conf.set("spark.sql.streaming.stateStore.providerClass",
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        val schema = graft.Tables.schema(s, graft.Tables.path(dir, "documents"))
-        val raw = s.readStream.schema(schema).parquet(s"$dir/documents*.parquet")
+        val raw = Tables.stream(s, dir, "documents")
         val chunks = graft.operators.TextPipeline
           .cdcChunks(raw, "doc_id", "text",
             window = 16, divisor = 64L, remainder = 0L)
@@ -1869,22 +1647,13 @@ object StatefulStreamQueries {
     // ChunkIndexSpec's ledgered-stream case.
     Entry("qg1_stream_cdc_claim_index",
       (s, dir) => {
-        val tag = java.lang.Long.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL) + "cs"
+        val tag = Scratch.dirTag(dir) + "cs"
         val ref = graft.operators.ChunkIndex.Ref(tag, buckets = 8)
         graft.operators.ChunkIndex.drop(s, ref) // idempotent re-runs
-        val base = new java.io.File(
-          System.getProperty("java.io.tmpdir"), s"graft_qg1_$tag")
-        org.apache.commons.io.FileUtils.deleteQuietly(base)
-        val out = new java.io.File(base, "out").getAbsolutePath
-        val ckpt = new java.io.File(base, "ckpt").getAbsolutePath
-        val schema = graft.Tables.schema(s, graft.Tables.path(dir, "documents"))
-        val raw = s.readStream.schema(schema).parquet(s"$dir/documents*.parquet")
-        val q = graft.operators.ChunkIndex.startStreamingIngest(raw,
-          "doc_id", "text", window = 16, divisor = 64L, remainder = 0L,
-          ref, out, ckpt)
-        try { q.processAllAvailable() } finally q.stop()
-        s.read.parquet(s"$out/dedup")
+        val run = Scratch.drain("qg1")(r => graft.operators.ChunkIndex.startStreamingIngest(
+          Tables.stream(s, dir, "documents"), "doc_id", "text", window = 16,
+          divisor = 64L, remainder = 0L, ref, r.out, r.ckpt))
+        s.read.parquet(s"${run.out}/dedup")
           .select("doc_id", "n_chunks", "n_kept", "text_dedup")
       },
       Some(PipelineQueries.OCdcDedup)),
@@ -1899,21 +1668,13 @@ object StatefulStreamQueries {
     // spec'd in SimHashIndexSpec's ledgered-stream case.
     Entry("qg6_stream_simhash_index",
       (s, dir) => {
-        val tag = java.lang.Long.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL) + "ss"
+        val tag = Scratch.dirTag(dir) + "ss"
         val ref = graft.operators.SimHashIndex.Ref(tag, buckets = 8)
         graft.operators.SimHashIndex.drop(s, ref) // idempotent re-runs
-        val base = new java.io.File(
-          System.getProperty("java.io.tmpdir"), s"graft_qg6_$tag")
-        org.apache.commons.io.FileUtils.deleteQuietly(base)
-        val out = new java.io.File(base, "out").getAbsolutePath
-        val ckpt = new java.io.File(base, "ckpt").getAbsolutePath
-        val schema = graft.Tables.schema(s, graft.Tables.path(dir, "documents"))
-        val raw = s.readStream.schema(schema).parquet(s"$dir/documents*.parquet")
-        val q = graft.operators.SimHashIndex.startStreamingIngest(raw,
-          "doc_id", "text", maxDist = 3, ref, out, ckpt)
-        try { q.processAllAvailable() } finally q.stop()
-        s.read.parquet(s"$out/pairs")
+        val run = Scratch.drain("qg6")(r => graft.operators.SimHashIndex.startStreamingIngest(
+          Tables.stream(s, dir, "documents"), "doc_id", "text", maxDist = 3, ref,
+          r.out, r.ckpt))
+        s.read.parquet(s"${run.out}/pairs")
           .select("old_id", "new_id", "hamming")
       },
       Some(ExtensionQueries.OSimhashIndexPairs)),
@@ -1930,35 +1691,17 @@ object StatefulStreamQueries {
     Entry("qh4_stream_image_neardup",
       (s, dir) => {
         val imgDir = MiscQueries.plantedPngDir(s, dir)
-        val tag = java.lang.Long.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL) + "isn"
+        val tag = Scratch.dirTag(dir) + "isn"
         val ref = graft.operators.SimHashIndex.Ref(tag, buckets = 8)
         graft.operators.SimHashIndex.drop(s, ref) // idempotent re-runs
-        val base = new java.io.File(
-          System.getProperty("java.io.tmpdir"), s"graft_qh4_$tag")
-        org.apache.commons.io.FileUtils.deleteQuietly(base)
-        val out = new java.io.File(base, "out").getAbsolutePath
-        val ckpt = new java.io.File(base, "ckpt").getAbsolutePath
-        // binaryFile's fixed source schema (readStream requires it explicit)
-        val binSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("path",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("modificationTime",
-            org.apache.spark.sql.types.TimestampType),
-          org.apache.spark.sql.types.StructField("length",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("content",
-            org.apache.spark.sql.types.BinaryType)))
-        val sigs = graft.sources.Images.dHash64KernelBinary(
-          s.readStream.format("binaryFile").schema(binSchema)
-            .option("pathGlobFilter", "*.png").load(imgDir))
+        val sigs = graft.sources.Images.dHash64KernelBinary(binaryFileStream(s, imgDir, "png"))
           .select(regexp_extract(col("path"), "doc_(\\d+)\\.png$", 1)
               .cast("long").as("doc_id"),
             col("dhash"))
-        val q = graft.operators.SimHashIndex.startStreamingSignatureIngest(
-          sigs, "doc_id", "dhash", maxDist = 3, ref, out, ckpt)
-        try { q.processAllAvailable() } finally q.stop()
-        s.read.parquet(s"$out/pairs")
+        val run = Scratch.drain("qh4")(r => graft.operators.SimHashIndex
+          .startStreamingSignatureIngest(sigs, "doc_id", "dhash", maxDist = 3, ref,
+            r.out, r.ckpt))
+        s.read.parquet(s"${run.out}/pairs")
           .select("old_id", "new_id", "hamming")
       },
       Some(MiscQueries.plantedSingleDeliveryOracle(nbits = 64))),
@@ -1970,34 +1713,18 @@ object StatefulStreamQueries {
     Entry("qh6_stream_audio_neardup",
       (s, dir) => {
         val wavDir = MiscQueries.plantedWavDir(s, dir)
-        val tag = java.lang.Long.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL) + "asn"
+        val tag = Scratch.dirTag(dir) + "asn"
         val ref = graft.operators.SimHashIndex.Ref(tag, buckets = 8)
         graft.operators.SimHashIndex.drop(s, ref) // idempotent re-runs
-        val base = new java.io.File(
-          System.getProperty("java.io.tmpdir"), s"graft_qh6_$tag")
-        org.apache.commons.io.FileUtils.deleteQuietly(base)
-        val out = new java.io.File(base, "out").getAbsolutePath
-        val ckpt = new java.io.File(base, "ckpt").getAbsolutePath
-        val binSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("path",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("modificationTime",
-            org.apache.spark.sql.types.TimestampType),
-          org.apache.spark.sql.types.StructField("length",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("content",
-            org.apache.spark.sql.types.BinaryType)))
         val sigs = graft.sources.Audio.fingerprint64(
-          s.readStream.format("binaryFile").schema(binSchema)
-            .option("pathGlobFilter", "*.wav").load(wavDir), nWindows = 64)
+            binaryFileStream(s, wavDir, "wav"), nWindows = 64)
           .select(regexp_extract(col("path"), "doc_(\\d+)\\.wav$", 1)
               .cast("long").as("doc_id"),
             col("fingerprint"))
-        val q = graft.operators.SimHashIndex.startStreamingSignatureIngest(
-          sigs, "doc_id", "fingerprint", maxDist = 3, ref, out, ckpt)
-        try { q.processAllAvailable() } finally q.stop()
-        s.read.parquet(s"$out/pairs")
+        val run = Scratch.drain("qh6")(r => graft.operators.SimHashIndex
+          .startStreamingSignatureIngest(sigs, "doc_id", "fingerprint", maxDist = 3,
+            ref, r.out, r.ckpt))
+        s.read.parquet(s"${run.out}/pairs")
           .select("old_id", "new_id", "hamming")
       },
       Some(MiscQueries.plantedSingleDeliveryOracle(nbits = 63))),
@@ -2011,34 +1738,18 @@ object StatefulStreamQueries {
     Entry("qh9_stream_video_neardup",
       (s, dir) => {
         val mp4Dir = MiscQueries.plantedMp4Dir(s, dir)
-        val tag = java.lang.Long.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL) + "vsn"
+        val tag = Scratch.dirTag(dir) + "vsn"
         val ref = graft.operators.SimHashIndex.Ref(tag, buckets = 8)
         graft.operators.SimHashIndex.drop(s, ref) // idempotent re-runs
-        val base = new java.io.File(
-          System.getProperty("java.io.tmpdir"), s"graft_qh9_$tag")
-        org.apache.commons.io.FileUtils.deleteQuietly(base)
-        val out = new java.io.File(base, "out").getAbsolutePath
-        val ckpt = new java.io.File(base, "ckpt").getAbsolutePath
-        val binSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("path",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("modificationTime",
-            org.apache.spark.sql.types.TimestampType),
-          org.apache.spark.sql.types.StructField("length",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("content",
-            org.apache.spark.sql.types.BinaryType)))
         val sigs = graft.sources.Video.sizeFingerprint64(
-          s.readStream.format("binaryFile").schema(binSchema)
-            .option("pathGlobFilter", "*.mp4").load(mp4Dir), nSamples = 64)
+            binaryFileStream(s, mp4Dir, "mp4"), nSamples = 64)
           .select(regexp_extract(col("path"), "doc_(\\d+)\\.mp4$", 1)
               .cast("long").as("doc_id"),
             col("fingerprint"))
-        val q = graft.operators.SimHashIndex.startStreamingSignatureIngest(
-          sigs, "doc_id", "fingerprint", maxDist = 3, ref, out, ckpt)
-        try { q.processAllAvailable() } finally q.stop()
-        s.read.parquet(s"$out/pairs")
+        val run = Scratch.drain("qh9")(r => graft.operators.SimHashIndex
+          .startStreamingSignatureIngest(sigs, "doc_id", "fingerprint", maxDist = 3,
+            ref, r.out, r.ckpt))
+        s.read.parquet(s"${run.out}/pairs")
           .select("old_id", "new_id", "hamming")
       },
       Some(MiscQueries.plantedSingleDeliveryOracle(nbits = 63))),
@@ -2056,13 +1767,6 @@ object StatefulStreamQueries {
     Entry("qhc_stream_crossmodal_align",
       (s, dir) => {
         val pairsDir = MiscQueries.crossModalPairsDir(s, dir)
-        val tag = java.lang.Long.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL) + "xms"
-        val base = new java.io.File(
-          System.getProperty("java.io.tmpdir"), s"graft_qhc_$tag")
-        org.apache.commons.io.FileUtils.deleteQuietly(base)
-        val out = new java.io.File(base, "out").getAbsolutePath
-        val ckpt = new java.io.File(base, "ckpt").getAbsolutePath
         val schema = org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("pair_id",
             org.apache.spark.sql.types.LongType),
@@ -2079,11 +1783,10 @@ object StatefulStreamQueries {
             "img_vec", "cap_vec", threshold = 0.8)
           .filter(col("is_aligned"))
           .select(col("pair_id"), col("img_id"), col("cos_sim"))
-        val q = scored.writeStream.format("parquet")
-          .option("path", out).option("checkpointLocation", ckpt)
-          .outputMode("append").start()
-        try { q.processAllAvailable() } finally q.stop()
-        s.read.parquet(out)
+        val run = Scratch.drain("qhc")(r => scored.writeStream.format("parquet")
+          .option("path", r.out).option("checkpointLocation", r.ckpt)
+          .outputMode("append").start())
+        s.read.parquet(run.out)
       },
       Some(s"""${MiscQueries.crossModalScoredCtes}
         SELECT pair_id, img_id, cos_sim FROM scored WHERE cos_sim >= 0.8""")),
@@ -2099,24 +1802,14 @@ object StatefulStreamQueries {
     // StreamingRollupSpec's doremi cases.
     Entry("qgf_stream_doremi",
       (s, dir) => {
-        val tag = java.lang.Long.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL) + "dm"
-        val base = new java.io.File(
-          System.getProperty("java.io.tmpdir"), s"graft_qgf_$tag")
-        org.apache.commons.io.FileUtils.deleteQuietly(base)
-        val state = new java.io.File(base, "state").getAbsolutePath
-        val out = new java.io.File(base, "out").getAbsolutePath
-        val ckpt = new java.io.File(base, "ckpt").getAbsolutePath
-        val schema = graft.Tables.schema(s, graft.Tables.path(dir, "documents"))
-        val raw = s.readStream.schema(schema).parquet(s"$dir/documents*.parquet")
+        val raw = Tables.stream(s, dir, "documents")
           .select(col("source"),
             pmod(col("n_chars"), lit(997L)).as("excess"),
             pmod(col("doc_id"), lit(4L)).as("step"))
-        val q = graft.streaming.StreamingMixture.startDoremiIngest(raw,
-          "source", "excess", "step", steps = 4, etaMilli = 500,
-          smoothMilli = 100, state, out, ckpt)
-        try { q.processAllAvailable() } finally q.stop()
-        s.read.parquet(s"$out/weights/batch_id=0")
+        val run = Scratch.drain("qgf")(r => graft.streaming.StreamingMixture
+          .startDoremiIngest(raw, "source", "excess", "step", steps = 4,
+            etaMilli = 500, smoothMilli = 100, r.state, r.out, r.ckpt))
+        s.read.parquet(s"${run.out}/weights/batch_id=0")
           .select("source", "avg_weight_nanos", "final_weight_nanos")
       },
       Some(PipelineQueries.ODoremi4)),
@@ -2135,8 +1828,7 @@ object StatefulStreamQueries {
         import sp.implicits._
         s.conf.set("spark.sql.streaming.stateStore.providerClass",
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        val schema = graft.Tables.schema(s, graft.Tables.path(dir, "documents"))
-        val raw = s.readStream.schema(schema).parquet(s"$dir/documents*.parquet")
+        val raw = Tables.stream(s, dir, "documents")
         val u = graft.operators.Sampling.unitHash(col("doc_id"), "priority")
         val prio = col("n_chars").cast("double") /
           when(u === 0.0, lit(1.0) / lit(9007199254740992.0)).otherwise(u)
@@ -2154,15 +1846,7 @@ object StatefulStreamQueries {
           .select(col("docId").as("doc_id"), col("weight").as("n_chars"),
             col("priority"))
       },
-      Some(s"""WITH u AS (
-          SELECT doc_id, n_chars,
-            ${PipelineQueries.oUnitHash("doc_id", "priority")} AS u FROM documents
-        )
-        SELECT doc_id, n_chars,
-          CAST(n_chars AS DOUBLE) /
-            (CASE WHEN u = 0.0 THEN 1.0 / 9007199254740992.0 ELSE u END)
-            AS priority
-        FROM u ORDER BY priority DESC, doc_id LIMIT 100""")),
+      Some(PipelineQueries.OPrioritySample)),
 
     // Ingest-time token-budget gating (the STREAMING face of qex's
     // cutoff, sharded): the 10k budget splits into 8 per-shard budgets of
@@ -2178,8 +1862,7 @@ object StatefulStreamQueries {
         import sp.implicits._
         s.conf.set("spark.sql.streaming.stateStore.providerClass",
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        val schema = graft.Tables.schema(s, graft.Tables.path(dir, "documents"))
-        val raw = s.readStream.schema(schema).parquet(s"$dir/documents*.parquet")
+        val raw = Tables.stream(s, dir, "documents")
         val rows = raw
           .withColumn("ts", timestamp_micros(col("doc_id") * 1000000L))
           .withWatermark("ts", "0 seconds")

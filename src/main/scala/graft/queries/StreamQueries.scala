@@ -15,15 +15,6 @@ object StreamQueries {
 
   private val HourUs = 3600000000L
 
-  private def eventsStream(s: SparkSession, dir: String): DataFrame = {
-    val schema = Tables.eventsSchema(s, dir)
-    // file-stream source needs a directory or glob, not a bare file path;
-    // Tables.normalizeTs handles every fixture layout (nanos-as-long /
-    // TIMESTAMP_NTZ / TimestampType) so `withWatermark` always sees
-    // TimestampType with oracle-exact epoch-micros.
-    Tables.normalizeTs(s.readStream.schema(schema).parquet(s"$dir/events*.parquet"))
-  }
-
   /** Run to completion; memory sink table named after the query. The
     * stream runs under [[StreamPartitions.around]], its state partitions
     * sized to the gate's data (a real deployment sizes them to key
@@ -38,6 +29,12 @@ object StreamQueries {
     s.table(name)
   }
 
+  /** Per-user event count and millis sum: qdp, qdi and qdm. */
+  private[queries] lazy val OUserEventAgg: String =
+    """SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
+          CAST(sum(CAST(round(value*1000) AS BIGINT)) AS BIGINT) AS sum_millis
+        FROM events GROUP BY user_id ORDER BY user_id"""
+
   def entries: Seq[Entry] = Seq(
 
     // unbounded keyed aggregation (reference: DataStreamGroupAggregate /
@@ -45,7 +42,7 @@ object StreamQueries {
     Entry("q90_stream_unbounded_agg",
       (s, dir) => {
         implicit val sp: SparkSession = s
-        val agg = eventsStream(s, dir)
+        val agg = Tables.stream(s, dir, "events")
           .groupBy(col("user_id"))
           .agg(count(lit(1)).as("n"),
             (sum(round(col("value") * 1000).cast("long")) / 1000.0).as("sum_value"))
@@ -63,7 +60,7 @@ object StreamQueries {
         implicit val sp: SparkSession = s
         val dim = graft.Tables(s, dir, "customer")
           .select(col("c_custkey"), col("c_mktsegment"))
-        val agg = eventsStream(s, dir)
+        val agg = Tables.stream(s, dir, "events")
           .join(broadcast(dim), col("user_id") === col("c_custkey"))
           .groupBy(col("c_mktsegment"))
           .agg(count(lit(1)).as("n"),
@@ -79,7 +76,7 @@ object StreamQueries {
     Entry("q91_stream_tumble",
       (s, dir) => {
         implicit val sp: SparkSession = s
-        val agg = eventsStream(s, dir)
+        val agg = Tables.stream(s, dir, "events")
           .groupBy(window(col("ts"), "1 hour"), col("event_type"))
           .agg(count(lit(1)).as("n"))
           .select(unix_micros(col("window.start")).as("win_start_us"),
@@ -94,7 +91,7 @@ object StreamQueries {
     Entry("q92_stream_tumble_append",
       (s, dir) => {
         implicit val sp: SparkSession = s
-        val agg = eventsStream(s, dir)
+        val agg = Tables.stream(s, dir, "events")
           .withWatermark("ts", "10 minutes")
           .groupBy(window(col("ts"), "1 hour"))
           .agg(count(lit(1)).as("n"),
@@ -126,7 +123,7 @@ object StreamQueries {
       (s, dir) => {
         implicit val sp: SparkSession = s
         val agg = graft.operators.Sketches.hllWindowedDistinct(
-          eventsStream(s, dir), "ts", "6 hours", "user_id",
+          Tables.stream(s, dir, "events"), "ts", "6 hours", "user_id",
           p = 4, watermark = "10 minutes")
           .select(unix_micros(col("window.start")).as("win_start_us"),
             col("hll_estimate"), col("zero_registers"))
@@ -145,7 +142,7 @@ object StreamQueries {
         u AS (SELECT (epoch_us(ts) // $winUs) * $winUs AS win_start_us,
             CAST(user_id AS VARCHAR) AS us FROM events),
         h AS (SELECT win_start_us,
-            ${ExtensionQueries.oSigned(ExtensionQueries.oFnv("us"))} AS h FROM u),
+            ${QueryUtil.oSigned(QueryUtil.oFnv("us"))} AS h FROM u),
         r AS (SELECT win_start_us, h & ${m - 1} AS bucket,
             CASE WHEN $rest = 0 THEN $cap
               ELSE CAST(log2(CAST($rest & -$rest AS DOUBLE)) AS INT) + 1
@@ -178,7 +175,7 @@ object StreamQueries {
         implicit val sp: SparkSession = s
         val clock = timestamp_millis(lit(1000000000000L) + col("event_id") * 3)
         val (stamped, win) = graft.streaming.ProcTime.tumble(
-          eventsStream(s, dir), "1 second", clock)
+          Tables.stream(s, dir, "events"), "1 second", clock)
         val agg = stamped
           .groupBy(win, col("event_type"))
           .agg(count(lit(1)).as("n"),
@@ -202,7 +199,7 @@ object StreamQueries {
     Entry("q93_stream_dedup",
       (s, dir) => {
         implicit val sp: SparkSession = s
-        val agg = eventsStream(s, dir)
+        val agg = Tables.stream(s, dir, "events")
           .dropDuplicates("user_id", "event_type")
           .groupBy(col("event_type"))
           .agg(count(lit(1)).as("distinct_users"))
@@ -216,11 +213,11 @@ object StreamQueries {
     Entry("q94_stream_join",
       (s, dir) => {
         implicit val sp: SparkSession = s
-        val ev = eventsStream(s, dir)
+        val ev = Tables.stream(s, dir, "events")
         val clicks = ev.filter(col("event_type") === "click")
           .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
             col("ts").as("c_ts")).withWatermark("c_ts", "1 hour")
-        val purchases = eventsStream(s, dir).filter(col("event_type") === "purchase")
+        val purchases = Tables.stream(s, dir, "events").filter(col("event_type") === "purchase")
           .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
             col("ts").as("p_ts")).withWatermark("p_ts", "1 hour")
         val joined = clicks.join(purchases,
@@ -245,10 +242,10 @@ object StreamQueries {
     Entry("q8n_stream_join_outer",
       (s, dir) => {
         implicit val sp: SparkSession = s
-        val clicks = eventsStream(s, dir).filter(col("event_type") === "click")
+        val clicks = Tables.stream(s, dir, "events").filter(col("event_type") === "click")
           .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
             col("ts").as("c_ts")).withWatermark("c_ts", "1 hour")
-        val purchases = eventsStream(s, dir).filter(col("event_type") === "purchase")
+        val purchases = Tables.stream(s, dir, "events").filter(col("event_type") === "purchase")
           .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
             col("ts").as("p_ts")).withWatermark("p_ts", "1 hour")
         val joined = clicks.join(purchases,
@@ -286,10 +283,10 @@ object StreamQueries {
     Entry("q8o_stream_join_full",
       (s, dir) => {
         implicit val sp: SparkSession = s
-        val clicks = eventsStream(s, dir).filter(col("event_type") === "click")
+        val clicks = Tables.stream(s, dir, "events").filter(col("event_type") === "click")
           .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
             col("ts").as("c_ts")).withWatermark("c_ts", "1 hour")
-        val purchases = eventsStream(s, dir).filter(col("event_type") === "purchase")
+        val purchases = Tables.stream(s, dir, "events").filter(col("event_type") === "purchase")
           .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
             col("ts").as("p_ts")).withWatermark("p_ts", "1 hour")
         val joined = clicks.join(purchases,
@@ -375,7 +372,7 @@ object StreamQueries {
         implicit val sp: SparkSession = s
         val (w, d) = (256, 3)
         val counters = graft.operators.Sketches.cmWindowedCounters(
-          eventsStream(s, dir), "ts", "6 hours", "event_type", w, d,
+          Tables.stream(s, dir, "events"), "ts", "6 hours", "event_type", w, d,
           watermark = "10 minutes")
           .select(unix_micros(col("window.start")).as("win_start_us"),
             col("cm_row"), col("cm_bucket"), col("cm_cnt"))
@@ -409,10 +406,10 @@ object StreamQueries {
             concat(CAST(ri AS VARCHAR), '|', event_type) AS s
           FROM u CROSS JOIN range(3) r(ri)),
         counters AS (SELECT win_start_us, ri,
-            ${ExtensionQueries.oFnv("s")} % 256 AS bucket, count(*) AS cnt
+            ${QueryUtil.oFnv("s")} % 256 AS bucket, count(*) AS cnt
           FROM seeded GROUP BY 1, 2, 3),
         pb AS (SELECT event_type, ri,
-            ${ExtensionQueries.oFnv("s")} % 256 AS bucket
+            ${QueryUtil.oFnv("s")} % 256 AS bucket
           FROM (SELECT event_type, ri,
               concat(CAST(ri AS VARCHAR), '|', event_type) AS s
             FROM (SELECT DISTINCT event_type FROM events)
@@ -448,7 +445,7 @@ object StreamQueries {
           when(pmod(c, lit(5)) < 2, lit("hot_a"))
             .when(pmod(c, lit(5)) < 4, lit("hot_b"))
             .otherwise(concat(lit("u"), pmod(u, lit(64)).cast("string")))
-        val keyed = eventsStream(s, dir)
+        val keyed = Tables.stream(s, dir, "events")
           .withColumn("hkey", hkey(col("event_id"), col("user_id")))
         val cands = graft.operators.Sketches.mgWindowedCandidates(
           keyed, "ts", "6 hours", "hkey", k, watermark = "10 minutes")
@@ -540,12 +537,8 @@ object StreamQueries {
     Entry("qd9_avro_roundtrip",
       (s, dir) => {
         import org.apache.spark.sql.types._
-        val srcMtime = new java.io.File(graft.Tables.path(dir, "documents")).lastModified()
-        val key = java.lang.Long.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL) + s"_$srcMtime"
-        val avroDir = new java.io.File(s"/tmp/graft_avro_docs_$key")
         // preCreate = false: the Hadoop OutputFormat refuses an existing dir
-        graft.sources.AtomicPublish.once(avroDir, preCreate = false) { staging =>
+        val avroDir = Scratch.derived(dir, "documents", "avro_docs", preCreate = false) { staging =>
           graft.sources.AvroJdbc.writeAvro(
             graft.Tables(s, dir, "documents")
               .select(col("doc_id"), col("text"), col("lang"), col("n_chars")),
@@ -575,9 +568,7 @@ object StreamQueries {
   private[queries] def jdbcGateEntry: Entry =
     Entry("qda_jdbc_roundtrip",
       (s, dir) => {
-        val srcMtime = new java.io.File(graft.Tables.path(dir, "supplier")).lastModified()
-        val key = java.lang.Long.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL) + s"_$srcMtime"
+        val key = Scratch.derivedKey(dir, "supplier")
         System.setProperty("derby.system.home", "/tmp/graft_derby_home")
         val url = s"jdbc:derby:/tmp/graft_derby_$key/db;create=true"
         val marker = new java.io.File(s"/tmp/graft_derby_$key/.loaded")
@@ -618,40 +609,29 @@ object StreamQueries {
     Entry("qdp_jdbc_exactly_once",
       (s, dir) => {
         implicit val sp: SparkSession = s
-        val srcMtime = new java.io.File(graft.Tables.path(dir, "events")).lastModified()
-        val key = java.lang.Long.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL) + s"_$srcMtime"
+        val key = Scratch.derivedKey(dir, "events")
         System.setProperty("derby.system.home", "/tmp/graft_derby_home")
         val url = s"jdbc:derby:/tmp/graft_derby_eo_$key/db;create=true"
-        val agg = eventsStream(s, dir)
+        val agg = Tables.stream(s, dir, "events")
           .groupBy(col("user_id"))
           .agg(count(lit(1)).as("n_events"),
             sum(round(col("value") * 1000).cast("long")).as("sum_millis"))
-        val ckpt = java.nio.file.Files
-          .createTempDirectory("graft_eo_ckpt").toString
         StreamPartitions.around(s) {
-          val q = graft.sources.AvroJdbc.startUpsertSink(agg, url, "user_agg_t",
-            "user_id", Seq("n_events", "sum_millis"), ckpt)
-          try q.processAllAvailable() finally q.stop()
+          Scratch.drain("qdp")(r => graft.sources.AvroJdbc.startUpsertSink(agg, url,
+            "user_agg_t", "user_id", Seq("n_events", "sum_millis"), r.ckpt))
         }
         graft.sources.AvroJdbc.jdbc(s, url, "\"user_agg_t\"")
           .select(col("user_id"), col("n_events"), col("sum_millis"))
           .orderBy(col("user_id"))
       },
-      Some("""SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
-          CAST(sum(CAST(round(value*1000) AS BIGINT)) AS BIGINT) AS sum_millis
-        FROM events GROUP BY user_id ORDER BY user_id"""))
+      Some(OUserEventAgg))
 
   /** events.parquet → Kafka-framed topic directory (cached per source
     * mtime, multiBatchEvents' layout discipline): 2 files = 2 fetch
     * batches split by event-time half, partition = user_id % 2, offsets
     * per-partition monotonic in (ts, event_id) order. */
-  private def kafkaTopicFromEvents(s: SparkSession, dir: String): String = {
-    val srcMtime = new java.io.File(graft.Tables.path(dir, "events")).lastModified()
-    val key = java.lang.Long.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL) + s"_$srcMtime"
-    val topicDir = new java.io.File(s"/tmp/graft_kafka_topic_$key")
-    graft.sources.AtomicPublish.once(topicDir) { staging =>
+  private def kafkaTopicFromEvents(s: SparkSession, dir: String): String =
+    Scratch.derived(dir, "events", "kafka_topic") { staging =>
       val e = graft.Tables.events(s, dir)
       val framed = e.select(
           col("user_id").cast("string").cast("binary").as("key"),
@@ -666,20 +646,9 @@ object StreamQueries {
           col("ts").as("timestamp"), lit(0).as("timestampType"),
           unix_micros(col("ts")).as("_ts_us"))
       val midUs = e.agg(avg(unix_micros(col("ts")))).head().getDouble(0).toLong
-      Seq(col("_ts_us") <= midUs, col("_ts_us") > midUs).zipWithIndex.foreach {
-        case (cond, i) =>
-          val tmp = s"$staging/stage_$i"
+      Scratch.orderedBatches(staging,
+        Seq(col("_ts_us") <= midUs, col("_ts_us") > midUs).map(cond =>
           framed.filter(cond).drop("_ts_us")
-            .select(graft.sources.KafkaShaped.schema.fieldNames.map(col).toIndexedSeq: _*)
-            .coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(_.getName.endsWith(".parquet")).get
-          val dst = new java.io.File(staging, f"batch_$i%02d.parquet")
-          java.nio.file.Files.move(part.toPath, dst.toPath,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          dst.setLastModified(1700000000000L + i * 60000L)
-          org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-      }
+            .select(graft.sources.KafkaShaped.schema.fieldNames.map(col).toIndexedSeq: _*)))
     }
-  }
 }

@@ -1,7 +1,8 @@
 package graft.streaming
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.queries.Scratch
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -42,116 +43,44 @@ object QueryableState {
   /** Update-mode output row (also what the sink would see). */
   case class KeyAgg(key: Long, n: Long, sumMillis: Long)
 
-  /** Checkpoint cache dir, keyed by source-dir hash + events mtime (a
-    * regenerated fixture gets a fresh checkpoint, distinct dirs never
-    * collide — same regime as StatefulStreamQueries.multiBatchEvents). */
   /** Bumped when the operator's state schema changes (AggState fields, key
     * type, RunningAgg's acc layout) — embedded in the checkpoint cache dir
     * so a newer build can never read a stale-layout checkpoint. */
   private val StateLayoutVersion = 1
 
-  def checkpointDir(srcDir: String): java.io.File = {
-    val mtime = new java.io.File(Tables.path(srcDir, "events")).lastModified()
-    val key = java.lang.Long.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(srcDir).toLong & 0xffffffffL) +
-      s"_$mtime"
-    new java.io.File(s"/tmp/graft_qstate_v${StateLayoutVersion}_$key")
-  }
+  /** Checkpoint cache dir, keyed by source-dir hash + events mtime (a
+    * regenerated fixture gets a fresh checkpoint, distinct dirs never
+    * collide — the [[Scratch.derivedKey]] regime). */
+  def checkpointDir(srcDir: String): java.io.File = new java.io.File(
+    s"/tmp/graft_qstate_v${StateLayoutVersion}_${Scratch.derivedKey(srcDir, "events")}")
 
-  private def doneMarker(ckpt: java.io.File) = new java.io.File(ckpt, "_QS_DONE")
-
-  /** Run the stateful query to completion against a persistent checkpoint
-    * (idempotent: a completed checkpoint is reused; a partial one — crash
-    * mid-run — is discarded and rebuilt, `_QS_DONE` being the only
-    * completeness signal). Returns the checkpoint path. */
-  def materialize(s: SparkSession, dir: String): String = synchronized {
-    val ckpt = checkpointDir(dir)
-    if (doneMarker(ckpt).exists()) return ckpt.getPath
-    if (ckpt.exists()) org.apache.commons.io.FileUtils.deleteDirectory(ckpt)
-
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    import s.implicits._
-    val schema = Tables.eventsSchema(s, dir)
-    val src = s.readStream.schema(schema).parquet(s"$dir/events*.parquet")
-      .select(col("user_id").as("key"),
-        round(col("value") * 1000).cast("long").as("valueMillis"))
-      .as[(Long, Long)]
-
-    StreamPartitions.around(s) {
-      val out = src.groupByKey(_._1)
-        .flatMapGroupsWithState[AggState, KeyAgg](
-          OutputMode.Update, GroupStateTimeout.NoTimeout) {
-          (key: Long, rows: Iterator[(Long, Long)], state: GroupState[AggState]) =>
-            val prev = state.getOption.getOrElse(AggState(0L, 0L))
-            var n = prev.n; var sm = prev.sumMillis
-            rows.foreach { r => n += 1; sm += r._2 }
-            state.update(AggState(n, sm))
-            Iterator.single(KeyAgg(key, n, sm))
-        }
-      val q = out.writeStream.outputMode("update").format("noop")
-        .option("checkpointLocation", ckpt.getPath).start()
-      try q.processAllAvailable() finally q.stop()
+  /** Builds the checkpoint `ckpt` once (idempotent: a completed checkpoint
+    * is reused; a partial one — crash mid-run — is discarded and rebuilt,
+    * `_QS_DONE` being the only completeness signal). Returns its path. */
+  private def once(ckpt: java.io.File)(build: => Unit): String = synchronized {
+    val done = new java.io.File(ckpt, "_QS_DONE")
+    if (!done.exists()) {
+      if (ckpt.exists()) org.apache.commons.io.FileUtils.deleteDirectory(ckpt)
+      build
+      done.createNewFile()
     }
-
-    doneMarker(ckpt).createNewFile()
     ckpt.getPath
   }
 
-  /** events split into 4 parquet files by EXPLICIT event-id quarter
-    * thresholds (t_i = i·max_id/4, integer division; batch i = ids in
-    * (t_i, t_{i+1}], last batch takes the remainder) with strictly
-    * increasing mtimes — unlike the quantile-based multi-batch split, the
-    * boundary formula is replayable in SQL, which the time-travel oracle
-    * needs. Cached by source mtime; staged + atomic-renamed. */
-  def ttSourceDir(s: SparkSession, dir: String): String = {
-    val mtime = new java.io.File(Tables.path(dir, "events")).lastModified()
-    val key = java.lang.Long.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL) + s"_$mtime"
-    val ttDir = new java.io.File(s"/tmp/graft_tt_src_$key")
-    graft.sources.AtomicPublish.once(ttDir) { staging =>
-      val base = Tables.events(s, dir).select(col("event_id"),
-        col("ts").cast("timestamp").as("ts"), col("user_id"), col("value"))
-      val maxId = base.agg(max("event_id")).head().getLong(0)
-      def t(i: Int) = i * maxId / 4
-      (0 until 4).foreach { i =>
-        val hi = if (i == 3) Long.MaxValue else t(i + 1)
-        // first batch is unbounded below: event ids may start at 0
-        val lo = if (i == 0) Long.MinValue else t(i)
-        val tmp = s"$staging/stage_$i"
-        base.filter(col("event_id") > lo && col("event_id") <= hi)
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        val dst = new java.io.File(staging, f"batch_$i%02d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        dst.setLastModified(1700000000000L + i * 60000L)
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-      }
-    }
+  /** `(user_id, millis-quantized value)` rows of an events frame. */
+  private def keyMillis(s: SparkSession, events: DataFrame): Dataset[(Long, Long)] = {
+    import s.implicits._
+    events.select(col("user_id").as("key"),
+        round(col("value") * 1000).cast("long").as("valueMillis"))
+      .as[(Long, Long)]
   }
 
-  /** [[materialize]] against the 4-batch split with `maxFilesPerTrigger=1`:
-    * four committed batches, each leaving the per-key running aggregate
-    * over an id-prefix of the corpus — the substrate for TIME-TRAVEL state
-    * reads. Returns the checkpoint path. */
-  def materializeTimeline(s: SparkSession, dir: String): String = synchronized {
-    val ckpt = new java.io.File(checkpointDir(dir).getPath + "_tt")
-    if (doneMarker(ckpt).exists()) return ckpt.getPath
-    if (ckpt.exists()) org.apache.commons.io.FileUtils.deleteDirectory(ckpt)
-
-    val src = ttSourceDir(s, dir)
+  /** Drains the per-key running aggregate (`flatMapGroupsWithState`,
+    * state [[AggState]]) over `rows` into the checkpoint `ckpt`. */
+  private def runningAgg(s: SparkSession, rows: Dataset[(Long, Long)], ckpt: java.io.File): Unit = {
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     import s.implicits._
-    val schema = s.read.parquet(s"$src/batch_00.parquet").schema
-    val rows = s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-      .parquet(s"$src/batch_*.parquet")
-      .select(col("user_id").as("key"),
-        round(col("value") * 1000).cast("long").as("valueMillis"))
-      .as[(Long, Long)]
-
     StreamPartitions.around(s) {
       val out = rows.groupByKey(_._1)
         .flatMapGroupsWithState[AggState, KeyAgg](
@@ -167,52 +96,64 @@ object QueryableState {
         .option("checkpointLocation", ckpt.getPath).start()
       try q.processAllAvailable() finally q.stop()
     }
+  }
 
-    doneMarker(ckpt).createNewFile()
-    ckpt.getPath
+  /** Run the stateful query to completion against a persistent checkpoint
+    * (built [[once]]). Returns the checkpoint path. */
+  def materialize(s: SparkSession, dir: String): String = {
+    val ckpt = checkpointDir(dir)
+    once(ckpt)(runningAgg(s, keyMillis(s, Tables.stream(s, dir, "events")), ckpt))
+  }
+
+  /** events split into 4 parquet files by EXPLICIT event-id quarter
+    * thresholds (t_i = i·max_id/4, integer division; batch i = ids in
+    * (t_i, t_{i+1}], last batch takes the remainder) with strictly
+    * increasing mtimes — unlike the quantile-based multi-batch split, the
+    * boundary formula is replayable in SQL, which the time-travel oracle
+    * needs. Cached by source mtime; staged + atomic-renamed. */
+  def ttSourceDir(s: SparkSession, dir: String): String =
+    Scratch.derived(dir, "events", "tt_src") { staging =>
+      val base = Tables.events(s, dir).select(col("event_id"),
+        col("ts").cast("timestamp").as("ts"), col("user_id"), col("value"))
+      val maxId = base.agg(max("event_id")).head().getLong(0)
+      def t(i: Int) = i * maxId / 4
+      Scratch.orderedBatches(staging, (0 until 4).map { i =>
+        val hi = if (i == 3) Long.MaxValue else t(i + 1)
+        // first batch is unbounded below: event ids may start at 0
+        val lo = if (i == 0) Long.MinValue else t(i)
+        base.filter(col("event_id") > lo && col("event_id") <= hi)
+      })
+    }
+
+  /** The [[ttSourceDir]] batches as a stream, one file per trigger. */
+  private def timelineRows(s: SparkSession, dir: String): Dataset[(Long, Long)] = {
+    val src = ttSourceDir(s, dir)
+    val schema = s.read.parquet(s"$src/batch_00.parquet").schema
+    keyMillis(s, s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+      .parquet(s"$src/batch_*.parquet"))
+  }
+
+  /** [[materialize]] against the 4-batch split with `maxFilesPerTrigger=1`:
+    * four committed batches, each leaving the per-key running aggregate
+    * over an id-prefix of the corpus — the substrate for TIME-TRAVEL state
+    * reads. Returns the checkpoint path. */
+  def materializeTimeline(s: SparkSession, dir: String): String = {
+    val ckpt = new java.io.File(checkpointDir(dir).getPath + "_tt")
+    once(ckpt)(runningAgg(s, timelineRows(s, dir), ckpt))
   }
 
   /** [[materializeTimeline]] with RocksDB CHANGELOG checkpointing — the
     * changelog is what the change-feed reader replays, so this variant
     * keeps its own checkpoint (the plain timeline measures the default
     * provider the bench A/B chose). */
-  def materializeChangelog(s: SparkSession, dir: String): String = synchronized {
+  def materializeChangelog(s: SparkSession, dir: String): String = {
     val ckpt = new java.io.File(checkpointDir(dir).getPath + "_cdc")
-    if (doneMarker(ckpt).exists()) return ckpt.getPath
-    if (ckpt.exists()) org.apache.commons.io.FileUtils.deleteDirectory(ckpt)
-
-    val src = ttSourceDir(s, dir)
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    s.conf.set("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-    import s.implicits._
-    try {
-      val schema = s.read.parquet(s"$src/batch_00.parquet").schema
-      val rows = s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(s"$src/batch_*.parquet")
-        .select(col("user_id").as("key"),
-          round(col("value") * 1000).cast("long").as("valueMillis"))
-        .as[(Long, Long)]
-      StreamPartitions.around(s) {
-        val out = rows.groupByKey(_._1)
-          .flatMapGroupsWithState[AggState, KeyAgg](
-            OutputMode.Update, GroupStateTimeout.NoTimeout) {
-            (key: Long, rs: Iterator[(Long, Long)], state: GroupState[AggState]) =>
-              val prev = state.getOption.getOrElse(AggState(0L, 0L))
-              var n = prev.n; var sm = prev.sumMillis
-              rs.foreach { r => n += 1; sm += r._2 }
-              state.update(AggState(n, sm))
-              Iterator.single(KeyAgg(key, n, sm))
-          }
-        val q = out.writeStream.outputMode("update").format("noop")
-          .option("checkpointLocation", ckpt.getPath).start()
-        try q.processAllAvailable() finally q.stop()
-      }
-    } finally s.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "false")
-
-    doneMarker(ckpt).createNewFile()
-    ckpt.getPath
+    once(ckpt) {
+      val rows = timelineRows(s, dir)
+      s.conf.set("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
+      try runningAgg(s, rows, ckpt) finally s.conf.set(
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "false")
+    }
   }
 
   /** State CHANGE FEED: every state mutation between two committed batches
@@ -258,33 +199,26 @@ object QueryableState {
     * The offline reader then addresses the variable by name
     * (`option("stateVarName", "acc")`), which is exactly Flink's
     * `asQueryableState("name")` addressing model. */
-  def materializeTws(s: SparkSession, dir: String): String = synchronized {
+  def materializeTws(s: SparkSession, dir: String): String = {
     val ckpt = new java.io.File(checkpointDir(dir).getPath + "_tws")
-    if (doneMarker(ckpt).exists()) return ckpt.getPath
-    if (ckpt.exists()) org.apache.commons.io.FileUtils.deleteDirectory(ckpt)
-
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    import s.implicits._
-    val schema = Tables.eventsSchema(s, dir)
-    val src = Tables.normalizeTs(
-        s.readStream.schema(schema).parquet(s"$dir/events*.parquet"))
-      .withWatermark("ts", "0 seconds")
-      .select(col("user_id").as("key"), col("event_id").as("eventId"),
-        org.apache.spark.sql.functions.unix_micros(col("ts")).as("tsUs"),
-        col("event_type").as("eventType"),
-        round(col("value") * 1000).cast("long").as("valueMillis"))
-      .as[StatefulOps.KeyedEvent]
-
-    StreamPartitions.around(s) {
-      val out = StatefulOps.run(src, new StatefulOps.RunningAgg)
-      val q = out.writeStream.outputMode("append").format("noop")
-        .option("checkpointLocation", ckpt.getPath).start()
-      try q.processAllAvailable() finally q.stop()
+    once(ckpt) {
+      s.conf.set("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      import s.implicits._
+      val src = Tables.stream(s, dir, "events")
+        .withWatermark("ts", "0 seconds")
+        .select(col("user_id").as("key"), col("event_id").as("eventId"),
+          org.apache.spark.sql.functions.unix_micros(col("ts")).as("tsUs"),
+          col("event_type").as("eventType"),
+          round(col("value") * 1000).cast("long").as("valueMillis"))
+        .as[StatefulOps.KeyedEvent]
+      StreamPartitions.around(s) {
+        val out = StatefulOps.run(src, new StatefulOps.RunningAgg)
+        val q = out.writeStream.outputMode("append").format("noop")
+          .option("checkpointLocation", ckpt.getPath).start()
+        try q.processAllAvailable() finally q.stop()
+      }
     }
-
-    doneMarker(ckpt).createNewFile()
-    ckpt.getPath
   }
 
   /** Named-state-variable read of the transformWithState checkpoint: the

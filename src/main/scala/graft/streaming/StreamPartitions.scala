@@ -13,10 +13,7 @@ object StreamPartitions {
     * and restore the session's value afterwards. A value that is not a
     * positive integer fails before `body` runs, naming the env var. */
   def around[A](s: SparkSession)(body: => A): A = {
-    val n = sys.env.get("SPARK_GRAFT_STREAM_PARTITIONS").fold(8) { v =>
-      v.trim.toIntOption.filter(_ >= 1).getOrElse(throw new IllegalArgumentException(
-        s"SPARK_GRAFT_STREAM_PARTITIONS must be a positive integer, got '$v'"))
-    }
+    val n = graft.Knobs.envPositiveInt("SPARK_GRAFT_STREAM_PARTITIONS", 8)
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", n.toString)
     try body finally s.conf.set("spark.sql.shuffle.partitions", prev)

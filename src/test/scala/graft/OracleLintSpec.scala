@@ -25,8 +25,11 @@ import scala.jdk.CollectionConverters._
   *     bare column reference (conservative: bare doubles must either
   *     carry an explicit outer CAST too, or be allowlisted below).
   *
-  * One source lint rides along: `src/main` builds SparkSessions only in
-  * GraftSession.scala, so every main shares one set of session settings.
+  * Two source lints ride along: `src/main` builds SparkSessions only in
+  * GraftSession.scala, so every main shares one set of session settings;
+  * and the registry's queries and QueryableState hash dir tags, place
+  * scratch files under `java.io.tmpdir` and publish derived fixtures only
+  * through `graft.queries.Scratch`.
   */
 class OracleLintSpec extends AnyFunSuite {
 
@@ -136,23 +139,55 @@ class OracleLintSpec extends AnyFunSuite {
 
   private val sessionBuilder = "SparkSession\\s*\\.\\s*builder".r
 
-  test("src/main builds a SparkSession only in GraftSession.scala") {
-    val root = java.nio.file.Paths.get("src/main/scala")
-    require(java.nio.file.Files.isDirectory(root), s"run from the repository root: no $root")
-    val files = java.nio.file.Files.walk(root)
-    val bad = try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
-      .filter { f =>
-        val src = new String(java.nio.file.Files.readAllBytes(f),
-          java.nio.charset.StandardCharsets.UTF_8)
-        f.getFileName.toString != "GraftSession.scala" &&
-          sessionBuilder.findFirstIn(src).isDefined
-      }.map(root.relativize(_).toString).sorted
+  private val root = java.nio.file.Paths.get("src/main/scala")
+
+  private def read(f: java.nio.file.Path): String =
+    new String(java.nio.file.Files.readAllBytes(f), java.nio.charset.StandardCharsets.UTF_8)
+
+  /** Every .scala file under `dir`, relative to [[root]], with its text. */
+  private def sources(dir: java.nio.file.Path): Seq[(String, String)] = {
+    require(java.nio.file.Files.isDirectory(dir), s"run from the repository root: no $dir")
+    val files = java.nio.file.Files.walk(dir)
+    try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+      .map(f => root.relativize(f).toString -> read(f))
     finally files.close()
+  }
+
+  test("src/main builds a SparkSession only in GraftSession.scala") {
+    val bad = sources(root).collect {
+      case (f, src) if !f.endsWith("/GraftSession.scala") &&
+        sessionBuilder.findFirstIn(src).isDefined => f
+    }.sorted
     assert(bad.isEmpty, s"\nSparkSession.builder outside GraftSession.scala:\n${bad.mkString("\n")}")
     // not vacuous: the one builder matches, and so does a split call
-    val one = new String(java.nio.file.Files.readAllBytes(
-      root.resolve("graft/GraftSession.scala")), java.nio.charset.StandardCharsets.UTF_8)
-    assert(sessionBuilder.findFirstIn(one).isDefined)
+    assert(sessionBuilder.findFirstIn(read(root.resolve("graft/GraftSession.scala"))).isDefined)
     assert(sessionBuilder.findFirstIn("SparkSession\n      .builder()").isDefined)
+  }
+
+  private val scratchDecision =
+    ("MurmurHash3\\s*\\.\\s*stringHash\\s*\\(" +
+      "|System\\s*\\.\\s*getProperty\\s*\\(\\s*\"java\\.io\\.tmpdir\"\\s*\\)" +
+      "|AtomicPublish\\s*\\.\\s*once\\s*\\(").r
+
+  test("dir tags, java.io.tmpdir and derived-fixture publishing live only in Scratch.scala") {
+    val scoped = sources(root.resolve("graft/queries")) ++
+      sources(root.resolve("graft/streaming")).filter(_._1.endsWith("/QueryableState.scala"))
+    val bad = scoped.collect {
+      case (f, src) if !f.endsWith("/Scratch.scala") =>
+        scratchDecision.findAllIn(src).toSeq.distinct.map(m => s"$f: $m")
+    }.flatten.sorted
+    assert(bad.isEmpty, s"\nuse graft.queries.Scratch instead:\n${bad.mkString("\n")}")
+    // not vacuous: QueryableState is in scope, Scratch itself holds all
+    // three, and a planted copy split over lines is caught
+    assert(scoped.exists(_._1.endsWith("/QueryableState.scala")))
+    assert(scratchDecision.findAllIn(read(root.resolve("graft/queries/Scratch.scala")))
+      .map(_.takeWhile(_ != '.')).toSet == Set("MurmurHash3", "System", "AtomicPublish"))
+    val planted = """val tag = java.lang.Long.toHexString(
+      scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL)
+    val base = new java.io.File(
+      System.getProperty( "java.io.tmpdir"), s"graft_qfc_$tag")
+    graft.sources.AtomicPublish
+      .once(fix) { staging => () }"""
+    assert(scratchDecision.findAllIn(planted).size == 3)
   }
 }
