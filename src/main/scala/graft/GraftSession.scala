@@ -3,8 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one SparkSession builder for graft's mains: `local[cpus]`, one
-  * shuffle partition per core, UTC session time zone, no UI, and the given
-  * log level. `confs` are applied last, so they override any of these. */
+  * shuffle partition per core, UTC session time zone, no UI, the given
+  * log level, and local checkpoint files written through graft's
+  * [[graft.io.LocalFs]]. `confs` are applied last, so they override any of
+  * these (a `confs` binding of the local filesystem included). */
 object GraftSession {
 
   /** Core count: SPARK_GRAFT_CPUS, else the main's own default; either
@@ -21,6 +23,7 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
     val spark = confs.foldLeft(base) { case (b, (k, v)) => b.config(k, v) }.getOrCreate()
     spark.sparkContext.setLogLevel(logLevel)
+    graft.io.LocalFs.bind(spark)
     spark
   }
 }

@@ -71,14 +71,17 @@ object Tables {
     }
   }
 
-  /** Every file under `path` (a file, directory or glob). */
-  private def leafFiles(spark: SparkSession, path: String): Seq[FileStatus] = {
+  /** Every file under `path` (a file, directory or glob), hidden files
+    * included: the files `listFiles(_, recursive = true)` yields. It walks
+    * `listStatus` instead, since each located status `listFiles` builds
+    * reads its file's permission, which forks `ls -ld` per file on a local
+    * filesystem without Hadoop's native library. */
+  private[graft] def leafFiles(spark: SparkSession, path: String): Seq[FileStatus] = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Option(fs.globStatus(p)).getOrElse(Array.empty).toSeq.flatMap { root =>
-      val it = fs.listFiles(root.getPath, true)
-      Iterator.continually(it).takeWhile(_.hasNext).map(_.next()).toSeq
-    }
+    def under(dir: Path): Seq[FileStatus] =
+      fs.listStatus(dir).toSeq.flatMap(s => if (s.isFile) Seq(s) else under(s.getPath))
+    Option(fs.globStatus(p)).getOrElse(Array.empty).toSeq.flatMap(root => under(root.getPath))
   }
 
   /** Whether a parquet file under `path` has a TIMESTAMP(NANOS) column,

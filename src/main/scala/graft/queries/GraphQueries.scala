@@ -212,8 +212,7 @@ object GraphQueries {
         val w = ued.select(col("a").as("src"), col("b").as("dst"),
           expr("(a + b) % 7 + 1").as("wt"))
         val root = ued.agg(min(col("a"))).head().getLong(0)
-        val work = java.nio.file.Files.createTempDirectory("qe8_iter")
-          .toFile.getAbsolutePath
+        val work = Scratch.run("qe8_iter").dir.getAbsolutePath
         val out = graft.streaming.IterateStream.ssspToFixpoint(w, root, work)
         ued.unpersist()
         out
@@ -246,8 +245,7 @@ object GraphQueries {
     // driver jobs to feedback micro-batches, results identical.
     Entry("qeb_stream_cc_fixpoint",
       (s, dir) => {
-        val work = java.nio.file.Files.createTempDirectory("qeb_iter")
-          .toFile.getAbsolutePath
+        val work = Scratch.run("qeb_iter").dir.getAbsolutePath
         graft.streaming.IterateStream.connectedComponentsStream(
           GraphOps.undirected(sparseEdges(s, dir)), work)
       },
@@ -264,8 +262,7 @@ object GraphQueries {
     // pin the capability at half the 10-round sweep weight).
     Entry("qec_stream_pagerank",
       (s, dir) => {
-        val work = java.nio.file.Files.createTempDirectory("qec_iter")
-          .toFile.getAbsolutePath
+        val work = Scratch.run("qec_iter").dir.getAbsolutePath
         graft.streaming.IterateStream.pageRankStream(
           sparseEdges(s, dir), iters = 5, work)
       },

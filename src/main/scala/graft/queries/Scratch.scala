@@ -74,11 +74,14 @@ object Scratch {
     d
   }
 
-  /** Starts a stream in a fresh, empty [[Run]] directory for `name`,
-    * drains what is available, stops it and returns the run, whose files
-    * stay for the caller to read. */
+  /** A fresh, empty [[Run]] directory for `name` under the per-JVM root. */
+  def run(name: String): Run = Run(Files.createTempDirectory(root.toPath, s"${name}_").toFile)
+
+  /** Starts a stream in a fresh [[run]] directory for `name`, drains what
+    * is available, stops it and returns the run, whose files stay for the
+    * caller to read. */
   def drain(name: String)(start: Run => StreamingQuery): Run = {
-    val run = Run(Files.createTempDirectory(root.toPath, s"${name}_").toFile)
+    val run = this.run(name)
     val q = start(run)
     try q.processAllAvailable() finally q.stop()
     run

@@ -129,11 +129,14 @@ object EventTimeOps {
   }
 
   /** Run an [[OrderedProcessor]] over a keyed stream (event-time mode;
-    * requires an upstream `withWatermark`). */
+    * requires an upstream `withWatermark`). Every graft event-time operator
+    * starts here, so this binds the caller's session to
+    * [[graft.io.LocalFs]] before its checkpoint is first written. */
   def ordered[K: Encoder, I: Encoder, O: Encoder](
       ds: Dataset[I], keyFn: I => K,
       p: OrderedProcessor[K, I, O]): Dataset[O] = {
     import ds.sparkSession.implicits._
+    graft.io.LocalFs.bind(ds.sparkSession)
     ds.groupByKey(keyFn)
       .transformWithState(p, TimeMode.EventTime(), OutputMode.Append())
   }

@@ -29,7 +29,8 @@ import scala.jdk.CollectionConverters._
   * GraftSession.scala, so every main shares one set of session settings;
   * and the registry's queries and QueryableState hash dir tags, place
   * scratch files under `java.io.tmpdir` and publish derived fixtures only
-  * through `graft.queries.Scratch`.
+  * through `graft.queries.Scratch`, and the queries make temp directories
+  * only there.
   */
 class OracleLintSpec extends AnyFunSuite {
 
@@ -189,5 +190,20 @@ class OracleLintSpec extends AnyFunSuite {
     graft.sources.AtomicPublish
       .once(fix) { staging => () }"""
     assert(scratchDecision.findAllIn(planted).size == 3)
+  }
+
+  private val tempDirectory = "createTempDirectory\\s*\\(".r
+
+  test("the registry's queries make temp directories only in Scratch.scala") {
+    val bad = sources(root.resolve("graft/queries")).collect {
+      case (f, src) if !f.endsWith("/Scratch.scala") && tempDirectory.findFirstIn(src).isDefined => f
+    }.sorted
+    assert(bad.isEmpty, s"\nuse Scratch.run, whose directories go at JVM exit:\n${bad.mkString("\n")}")
+    // not vacuous: Scratch makes its root and runs this way, and a
+    // planted gate-local work dir split over lines is caught
+    assert(tempDirectory.findAllIn(read(root.resolve("graft/queries/Scratch.scala"))).size == 2)
+    val planted = """val work = java.nio.file.Files.createTempDirectory(
+      "qe8_iter").toFile.getAbsolutePath"""
+    assert(tempDirectory.findFirstIn(planted).isDefined)
   }
 }

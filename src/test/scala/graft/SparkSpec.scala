@@ -23,6 +23,8 @@ object SparkSpec {
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    // as GraftSession does, so no spec's filesystem depends on test order
+    graft.io.LocalFs.bind(s)
     s
   }
 

@@ -114,4 +114,27 @@ class TablesSpec extends SparkSpec {
         .toSeq === Seq(1700000000000000L))
     }
   }
+
+  test("leafFiles yields the (path, length, mtime) of every file that " +
+    "globStatus plus a recursive listFiles yields, hidden and _ files included") {
+    import org.apache.hadoop.fs.Path
+    val d = tmpDir("leaves")
+    Seq(1, 2).toDF("a").write.parquet(s"$d/t/k=1")
+    Seq(3).toDF("a").write.parquet(s"$d/t/k=2/deep")
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$d/t/.hidden"), Array[Byte](1))
+    val fs = new Path(d).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def key(st: Seq[org.apache.hadoop.fs.FileStatus]) =
+      st.map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted
+    def listed(p: String) = key(Option(fs.globStatus(new Path(p))).toSeq.flatten.flatMap { root =>
+      val it = fs.listFiles(root.getPath, true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next()).toSeq
+    })
+    val part = new java.io.File(s"$d/t/k=1").listFiles().map(_.getPath)
+      .find(_.endsWith(".parquet")).get
+    for (p <- Seq(s"$d/t", s"$d/t/k=*", part, s"$d/none"))
+      assert(key(Tables.leafFiles(spark, p)) === listed(p), p)
+    val names = key(Tables.leafFiles(spark, s"$d/t")).map(_._1.split('/').last)
+    assert(names.contains(".hidden") && names.count(_ == "_SUCCESS") == 2 &&
+      names.count(_.endsWith(".parquet")) >= 2, names)
+  }
 }
